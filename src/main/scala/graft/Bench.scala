@@ -24,39 +24,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle scratch on the fastest local storage available (r18,
-    // guide §2.1: local disk bandwidth for shuffle files is often the
-    // binding limit — measured here, a tiny one-exchange action went
-    // 0.385 s → 0.234 s median moving scratch off the VM's disk).
-    // Parameterized via SPARK_GRAFT_LOCAL_DIR; defaults to a
-    // RAM-backed dir when one exists (bench-scale shuffles are MBs),
-    // stock otherwise. On a real cluster this is the NVMe-local-disk
-    // placement decision; scratch placement changes where temp bytes
-    // live, never what is computed.
-    val localDir = sys.env.get("SPARK_GRAFT_LOCAL_DIR")
-      .filter(_.nonEmpty) match {
-      case Some("stock") => None // explicit opt-out: Spark's default dir
-      case Some(d) => Some(d)
-      case None =>
-        // r18 advice #1: only default to tmpfs when it has real
-        // headroom (bench-scale shuffles are MBs; 8 GiB of slack keeps
-        // an unexpectedly large spill from ENOSPC-ing mid-suite), and
-        // clear a stale graft-shuffle left by a crashed run so dead
-        // shuffle files don't occupy RAM across sessions.
-        val shm = new java.io.File("/dev/shm")
-        if (shm.isDirectory && shm.canWrite &&
-            shm.getUsableSpace > 8L * 1024 * 1024 * 1024) {
-          val dir = new java.io.File(shm, "graft-shuffle")
-          def rm(f: java.io.File): Unit = {
-            val kids = f.listFiles()
-            if (kids != null) kids.foreach(rm)
-            f.delete(); ()
-          }
-          try if (dir.exists) rm(dir)
-          catch { case scala.util.control.NonFatal(_) => () }
-          Some(dir.getPath)
-        } else None
-    }
+    // Shuffle scratch: SPARK_GRAFT_LOCAL_DIR, else a per-process tmpfs
+    // dir when /dev/shm has headroom, else stock (engine.ScratchDir).
+    val localDir = graft.engine.ScratchDir.resolve()
     val builder0 = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -1,7 +1,11 @@
 package graft.engine
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, BooleanType, CharType, DataType,
+  DateType, NumericType, StringType, TimestampNTZType, TimestampType, VarcharType}
 
 /** Table registry over the driver-generated parquet testdata
   * (TESTDATA.md). Mirrors the reference's catalog bootstrap — the
@@ -242,6 +246,21 @@ object Tables {
     * bearing relational tables, temp views for the rewrite-needing
     * ones. Enables CBO + join reorder on the session. Idempotent per
     * (session, sfDir).
+    *
+    * Concurrency: each catalog table costs ~3 one-task Spark jobs
+    * (footer schema inference, then the stats aggregate's map and
+    * result stages), so registering them one after another keeps one
+    * core busy. They run instead on a short-lived pool of daemon
+    * threads — `defaultParallelism` of them, capped at the table
+    * count — that pull tables largest file first (`lineitem` is the
+    * long pole) and are joined before this returns, so no pool thread
+    * outlives the call. Each table's statistics come from its own
+    * DROP/CREATE/ANALYZE and are identical to a sequential run.
+    *
+    * The `events` temp view stays on the calling thread and runs
+    * after the pool is joined: [[load]] sets the session-global
+    * `spark.sql.legacy.parquet.nanosAsLong` conf, and no CREATE may
+    * infer a schema while that conf is changed under it.
     */
   def registerAll(spark: SparkSession, sfDir: String): Unit = synchronized {
     if (registered.get(spark) == sfDir) return
@@ -278,55 +297,113 @@ object Tables {
     // fallback, not a cliff.
     spark.conf.set(
       "spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "32768")
-    // Per-table containment: one unreadable/mis-typed table must fail
-    // only the queries that reference it, never the other nine (r8:
-    // an events-loader analysis exception inside this loop took down
-    // 38 queries that never touched events). A failed table is logged
-    // and skipped — its own queries then fail at resolution with a
-    // clear TABLE_OR_VIEW_NOT_FOUND, which is the correct blast
-    // radius. Registration is only memoized when ALL tables landed,
-    // so a transiently-broken table is retried on the next call.
-    var allOk = true
-    names.foreach { t =>
-      try {
-        if (viewOnly(t)) {
-          load(spark, sfDir, t).createOrReplaceTempView(t)
-        } else {
-          spark.sql(s"DROP TABLE IF EXISTS $t")
-          // Unmanaged (LOCATION) table: DROP never touches the
-          // read-only testdata; schema comes from the parquet footer.
-          spark.sql(
-            s"CREATE TABLE $t USING parquet LOCATION '${path(sfDir, t)}'")
-          // Column NDV/min/max feed CBO joinReorder; fall back to
-          // table-level stats for tables with non-analyzable columns
-          // (e.g. embeddings.embedding ARRAY<FLOAT>).
-          try spark.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR ALL COLUMNS")
-          catch { case _: Exception =>
-            spark.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS")
-          }
-        }
-      } catch { case e: Exception =>
-        allOk = false
-        // Drop any stale registration of the failed name: a temp view
-        // left over from an earlier sfDir would silently serve WRONG
-        // data, which is worse than a loud resolution failure.
-        try {
-          if (viewOnly(t)) spark.catalog.dropTempView(t)
-          else spark.sql(s"DROP TABLE IF EXISTS $t")
-        } catch { case _: Exception => () }
-        System.err.println(
-          s"[graft] Tables.registerAll: failed to register '$t' from " +
-            s"${path(sfDir, t)} — queries on other tables continue. " +
-            s"Cause: ${e.getClass.getSimpleName}: ${e.getMessage}")
-      }
-    }
-    if (allOk) registered.put(spark, sfDir)
+    val tablesOk = registerCatalogTables(spark, sfDir)
+    val viewsOk = names.filter(viewOnly).map { t =>
+      contained(spark, sfDir, t)(load(spark, sfDir, t).createOrReplaceTempView(t))
+    }.forall(identity)
+    if (tablesOk && viewsOk) registered.put(spark, sfDir)
     // Partial failure: the catalog now points (mostly) at THIS sfDir,
     // so a stale memo naming the previous sfDir would make a later
     // registerAll(prevSfDir) no-op and silently serve the wrong
     // dataset. Clear it — the next call for ANY sfDir re-registers.
     else registered.remove(spark)
   }
+
+  /** Per-table containment: one unreadable/mis-typed table must fail
+    * only the queries that reference it, never the other nine (r8: an
+    * events-loader analysis exception inside registration took down
+    * 38 queries that never touched events). A failed table is logged
+    * and skipped — its own queries then fail at resolution with a
+    * clear TABLE_OR_VIEW_NOT_FOUND, which is the correct blast radius.
+    * Returns whether `t` registered; registration is only memoized
+    * when ALL tables landed, so a transiently-broken table is retried
+    * on the next call. */
+  private def contained(spark: SparkSession, sfDir: String, t: String)(
+      register: => Unit): Boolean =
+    try { register; true }
+    catch { case e: Exception =>
+      // Drop any stale registration of the failed name: a temp view
+      // left over from an earlier sfDir would silently serve WRONG
+      // data, which is worse than a loud resolution failure.
+      try {
+        if (viewOnly(t)) spark.catalog.dropTempView(t)
+        else spark.sql(s"DROP TABLE IF EXISTS $t")
+      } catch { case _: Exception => () }
+      System.err.println(
+        s"[graft] Tables.registerAll: failed to register '$t' from " +
+          s"${path(sfDir, t)} — queries on other tables continue. " +
+          s"Cause: ${e.getClass.getSimpleName}: ${e.getMessage}")
+      false
+    }
+
+  /** DROP/CREATE/ANALYZE every catalog table on the registration pool
+    * (see [[registerAll]]); true when all of them registered. */
+  private def registerCatalogTables(spark: SparkSession, sfDir: String): Boolean = {
+    val tables = names.filterNot(viewOnly).sortBy(t => -fileBytes(spark, sfDir, t))
+    val queue = new java.util.concurrent.ConcurrentLinkedQueue[String](tables.asJava)
+    val allOk = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val fatal = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val workers = (1 to math.min(spark.sparkContext.defaultParallelism, tables.size)).map { i =>
+      val worker = new Thread(() =>
+        try {
+          var t = queue.poll()
+          while (t != null && fatal.get == null) {
+            if (!contained(spark, sfDir, t)(registerCatalogTable(spark, sfDir, t)))
+              allOk.set(false)
+            t = queue.poll()
+          }
+        } catch { case e: Throwable => fatal.compareAndSet(null, e) },
+        s"graft-register-$i")
+      worker.setDaemon(true)
+      worker.start()
+      worker
+    }
+    try workers.foreach(_.join())
+    catch { case e: InterruptedException =>
+      // hand out no more tables, cut the in-flight ones short, and
+      // still outlive every worker
+      queue.clear()
+      workers.foreach(_.interrupt())
+      workers.foreach(_.join())
+      throw e
+    }
+    Option(fatal.get).foreach(e => throw e)
+    allOk.get
+  }
+
+  private def registerCatalogTable(spark: SparkSession, sfDir: String, t: String): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    // Unmanaged (LOCATION) table: DROP never touches the read-only
+    // testdata; schema comes from the parquet footer.
+    spark.sql(s"CREATE TABLE $t USING parquet LOCATION '${path(sfDir, t)}'")
+    // Column NDV/min/max feed CBO joinReorder. ANALYZE rejects a whole
+    // FOR ALL COLUMNS run when any column has a type it keeps no stats
+    // for (today only embeddings.embedding ARRAY<FLOAT>), so such
+    // tables get table-level stats. Any failure of the ANALYZE itself
+    // (I/O, cancel) goes to the containment: falling back on it would
+    // silently drop column stats and change CBO's join order.
+    val scope =
+      if (spark.table(t).schema.forall(f => analyzable(f.dataType))) " FOR ALL COLUMNS"
+      else ""
+    spark.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS$scope")
+  }
+
+  /** Column types `ANALYZE ... FOR ALL COLUMNS` computes stats for
+    * (Spark's `AnalyzeColumnCommand.supportsType`). */
+  private def analyzable(dt: DataType): Boolean = dt match {
+    case _: NumericType | BooleanType | DateType | TimestampType |
+         TimestampNTZType | BinaryType => true
+    case _: StringType | _: CharType | _: VarcharType => true
+    case _ => false
+  }
+
+  /** Bytes under a table's path, for largest-first scheduling; 0 when
+    * unreadable (the CREATE then fails inside the containment). */
+  private def fileBytes(spark: SparkSession, sfDir: String, t: String): Long =
+    try {
+      val p = new org.apache.hadoop.fs.Path(path(sfDir, t))
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
+    } catch { case _: Exception => 0L }
 
   /** Run reference-shaped SQL (comma-FROM implicit joins included —
     * Spark's parser handles them natively; Catalyst's ReorderJoin /

@@ -26,13 +26,14 @@ object ProbeMain {
     val names = args.lift(2).map(_.split(",").toSeq)
       .getOrElse(Seq("pr2_pagerank_converged"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
+    val builder = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      .config("spark.local.dir", "/dev/shm/graft-shuffle")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .config("spark.ui.enabled", "false")
+    val spark = graft.engine.ScratchDir.resolve()
+      .fold(builder)(d => builder.config("spark.local.dir", d)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.engine.Tables.registerAll(spark, sfDir)
     def reset(): Unit = {

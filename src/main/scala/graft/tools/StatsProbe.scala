@@ -13,13 +13,14 @@ object StatsProbe {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(9)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
+    val builder = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      .config("spark.local.dir", "/dev/shm/graft-shuffle")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .config("spark.ui.enabled", "false")
+    val spark = graft.engine.ScratchDir.resolve()
+      .fold(builder)(d => builder.config("spark.local.dir", d)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.engine.Tables.registerAll(spark, sfDir)
 
