@@ -1,8 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. A query that
+  * fails is named on stderr and the others still run; the process then
+  * exits 1, after every other output and oracle_sql.json is written. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: sfDir outDir [comma-separated name filter — local debugging
@@ -18,15 +20,30 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val failed = run(spark, sfDir, outDir,
+      SparkEntry.queries.filter { case (name, _) => only.forall(_.contains(name)) })
+    spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Write each query's result to `outDir/<name>` and the oracle SQL to
+    * `outDir/oracle_sql.json`; returns the names of the queries that
+    * failed, in run order. */
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+          queries: Map[String, (SparkSession, String) => DataFrame]): Seq[String] = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val failed = queries.toSeq.flatMap { case (name, fn) =>
+      val err =
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
+        }
       // drop per-query sketch materializations (see Dedup persists) so
       // 60+ queries in one JVM don't accumulate cached partitions;
       // localCheckpoint blocks (dd6/dd8's CC loop) are RDD-level and
@@ -34,6 +51,7 @@ object Verify {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
+      err
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -50,6 +68,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    failed
   }
 }

@@ -1,7 +1,5 @@
 package graft.engine
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, BooleanType, CharType, DataType,
@@ -340,34 +338,12 @@ object Tables {
     * (see [[registerAll]]); true when all of them registered. */
   private def registerCatalogTables(spark: SparkSession, sfDir: String): Boolean = {
     val tables = names.filterNot(viewOnly).sortBy(t => -fileBytes(spark, sfDir, t))
-    val queue = new java.util.concurrent.ConcurrentLinkedQueue[String](tables.asJava)
     val allOk = new java.util.concurrent.atomic.AtomicBoolean(true)
-    val fatal = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val workers = (1 to math.min(spark.sparkContext.defaultParallelism, tables.size)).map { i =>
-      val worker = new Thread(() =>
-        try {
-          var t = queue.poll()
-          while (t != null && fatal.get == null) {
-            if (!contained(spark, sfDir, t)(registerCatalogTable(spark, sfDir, t)))
-              allOk.set(false)
-            t = queue.poll()
-          }
-        } catch { case e: Throwable => fatal.compareAndSet(null, e) },
-        s"graft-register-$i")
-      worker.setDaemon(true)
-      worker.start()
-      worker
+    WorkerThreads.run("graft-register", spark.sparkContext.defaultParallelism,
+        tables.size)(()) { (_, i) =>
+      if (!contained(spark, sfDir, tables(i))(registerCatalogTable(spark, sfDir, tables(i))))
+        allOk.set(false)
     }
-    try workers.foreach(_.join())
-    catch { case e: InterruptedException =>
-      // hand out no more tables, cut the in-flight ones short, and
-      // still outlive every worker
-      queue.clear()
-      workers.foreach(_.interrupt())
-      workers.foreach(_.join())
-      throw e
-    }
-    Option(fatal.get).foreach(e => throw e)
     allOk.get
   }
 

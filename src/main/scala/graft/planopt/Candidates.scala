@@ -43,14 +43,10 @@ object Candidates {
       "spark.sql.adaptive.enabled" -> "false")
 
     /** The physical-planning subset of [[confs]] — what the in-engine
-      * strategy applies. It must NOT override optimizer-time confs:
-      * its nested planning re-optimizes an ALREADY-OPTIMIZED plan, and
-      * forcing e.g. joinReorder=true in a session that runs with it
-      * disabled would reorder the sweep's candidates while the
-      * choice-cache fast path (which plans the incoming optimized
-      * query directly) keeps the session's join order — the executed
-      * plan on a cache hit would silently differ from the plan the
-      * model scored on the miss. */
+      * strategy applies, only around the physical planning of an
+      * ALREADY-OPTIMIZED plan (the incoming query or a pinned join-order
+      * variant), where an optimizer-time conf like joinReorder would be
+      * inert. Join order comes from [[JoinOrders.variants]] instead. */
     def physicalConfs: Seq[(String, String)] =
       confs.filterNot(_._1 == "spark.sql.cbo.joinReorder.enabled")
     def label: String =
@@ -95,9 +91,12 @@ object Candidates {
   def canonicalKey(p: org.apache.spark.sql.catalyst.plans.QueryPlan[_]): String =
     p.canonicalized.toString.replaceAll("plan_id=\\d+", "plan_id=*")
 
-  /** Run `body` with `confs` set, restoring previous values after. */
+  /** Run `body` with `confs` set, restoring previous values after. A
+    * key that was not set is unset again (`getOption` would return its
+    * default, and restoring that would leave the key set). */
   def withConfs[T](spark: SparkSession, confs: Seq[(String, String)])(body: => T): T = {
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val set = spark.conf.getAll
+    val saved = confs.map { case (k, _) => k -> set.get(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally saved.foreach {
@@ -150,7 +149,7 @@ object Candidates {
     orderVariants(spark, build).zipWithIndex.drop(1).foreach { case (vq, vIdx) =>
       knobGrid.filter(k => k.joinReorder && k.preferSortMergeJoin).foreach { knobs =>
         withConfs(spark, knobs.confs ++ JoinOrders.pinOrderConfs) {
-          val plan = org.apache.spark.sql.graft.GraftDataset.ofRows(spark, vq)
+          val plan = org.apache.spark.sql.execution.graft.SparkInternals.ofRows(spark, vq)
             .queryExecution.executedPlan
           val canonical = canonicalKey(plan)
           if (!seen.contains(canonical))
@@ -191,7 +190,7 @@ object Candidates {
     else {
       val vq = variants(c.variantIdx)
       withConfs(spark, c.knobs.confs ++ JoinOrders.pinOrderConfs) {
-        val df = org.apache.spark.sql.graft.GraftDataset.ofRows(spark, vq)
+        val df = org.apache.spark.sql.execution.graft.SparkInternals.ofRows(spark, vq)
         val t0 = System.nanoTime()
         val n = df.count()
         Some((n, (System.nanoTime() - t0) / 1e6))

@@ -7,6 +7,9 @@ import org.apache.spark.sql.catalyst.QueryPlanningTracker
 import org.apache.spark.sql.catalyst.plans.logical.{Command, Join, LogicalPlan, ReturnAnswer}
 import org.apache.spark.sql.execution.{CommandExecutionMode, QueryExecution, SparkPlan, SparkStrategy}
 
+import org.apache.spark.sql.execution.graft.SparkInternals
+
+import graft.engine.WorkerThreads
 import graft.planopt.{Candidates, JoinOrders, LeroModelPairWise, PlanFeatures}
 
 /** In-engine learned plan choice (SURVEY §7.4; selection semantics of
@@ -15,30 +18,24 @@ import graft.planopt.{Candidates, JoinOrders, LeroModelPairWise, PlanFeatures}
   * `spark.sql.extensions=graft.engine.GraftExtensions` that makes a
   * session *transparently* execute the model-chosen physical variant —
   * the user writes ordinary DataFrame/SQL code and the learned
-  * comparator picks the plan.
+  * comparator picks the plan. This object holds the installed model
+  * and gate, the per-query choice cache and the observability
+  * counters; [[LearnedPlanStrategy]] is the strategy itself.
   *
-  * How it works: extra planning strategies run BEFORE Catalyst's
-  * built-ins, so for a matching root plan (contains a join, model
-  * installed) this strategy re-plans the query under the
-  * [[Candidates.knobGrid]] knob sweep (nested `QueryExecution`s with a
-  * re-entrancy guard — planning only, no data touched), dedupes by
-  * canonical plan string, featurizes each candidate, scores them with
-  * the pairwise comparator, and returns the argmin candidate's
-  * physical plan. Returning a fully-planned tree from a strategy is
-  * the supported way to take over whole-query planning (no
-  * `planLater` placeholders remain, so built-in strategies never
-  * fire). The outer `QueryExecution` still applies its normal
-  * preparations (EnsureRequirements, codegen collapse) exactly once,
-  * on the nested UNPREPARED plan.
-  *
-  * Scale note: the sweep costs `|grid|` driver-side plannings per
-  * query — milliseconds against catalog stats, independent of data
-  * size; nothing here touches executors until the chosen plan runs.
-  * The sweep temporarily flips session confs during planning
-  * (restored in a finally); sessions running concurrent queries on
-  * the same SparkSession should serialize planning or use
+  * Scale note: a first-seen join query costs one nested
+  * `QueryExecution` for the session-native plan, one optimization per
+  * extra join-order variant (variant 0 is the incoming, already
+  * optimized plan) and one physical planning per knob point —
+  * milliseconds against catalog stats, independent of data size. The
+  * planning groups run in parallel on session clones, and nothing here
+  * touches executors until the chosen plan runs. A repeat plans only
+  * the remembered winner. That re-plan of the winner, on the first
+  * sight and on repeats, temporarily sets the knob confs on the live
+  * session (restored in a finally); sessions running concurrent
+  * queries on the same SparkSession should serialize planning or use
   * `newSession()` per thread — the standard caveat for any
   * conf-sweeping extension.
+  * The sweep itself never writes the live session's conf.
   * AQE can still refine the chosen plan's shuffles at runtime (its
   * runtime re-plan composes with — and can override — the static
   * choice; disable AQE for a strictly pinned plan, as the labeling
@@ -123,8 +120,8 @@ object PlanChoice {
       })
 
   // guards against self-recursion while the strategy replans the same
-  // query under swept knobs (nested planning uses the same session
-  // planner, hence the same strategy instance)
+  // query (nested planning runs the session's or a clone's planner,
+  // whose strategies include this one); each sweep thread sets it too
   private[plans] val replanning: ThreadLocal[java.lang.Boolean] =
     ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
 
@@ -178,7 +175,35 @@ object PlanChoice {
   def gate: Option[(graft.planopt.BayesianModelPairWise, Double, Double)] = gateInstalled
 }
 
+/** The planner strategy behind [[PlanChoice]]. Extra planning
+  * strategies run BEFORE Catalyst's built-ins, so for a matching root
+  * plan (contains a join, model installed) this strategy either plans
+  * the whole query itself or declines with `Nil`.
+  *
+  * A first-seen query is swept: the session-native plan (a nested
+  * `QueryExecution`, so an AQE session's native candidate is the plan
+  * it would run), the [[Candidates.knobGrid]] points of the incoming
+  * optimized plan (physical planning only), and the
+  * [[JoinOrders.variants]] rewrites (each optimized once with the
+  * reorder rules pinned off, then physically planned per broadcast
+  * knob). The planning groups run on short-lived `graft-sweep-<i>`
+  * threads, each with its own session clone, so the live session's
+  * conf is never touched. Candidates dedupe by canonical plan string
+  * in a fixed order (native, variant 0's grid, variants 1..k), are
+  * featurized from their prepared plans and scored by the pairwise
+  * comparator; the margin gate may decline the argmin.
+  *
+  * The sweep only decides: it records a [[PlanChoice.Remembered]]
+  * entry, and the same code that serves a choice-cache hit plans the
+  * winner on the live session. The executed plan is therefore planned
+  * exactly like the scored candidate, on the first sight and on every
+  * repeat. Returning a fully-planned tree (no `planLater`
+  * placeholders) is the supported way to take over whole-query
+  * planning; the outer `QueryExecution` applies its preparations
+  * (EnsureRequirements, codegen collapse) once, on that unprepared
+  * plan. */
 case class LearnedPlanStrategy(session: SparkSession) extends SparkStrategy {
+  import LearnedPlanStrategy._
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = {
     val modelOpt = PlanChoice.current
@@ -190,12 +215,12 @@ case class LearnedPlanStrategy(session: SparkSession) extends SparkStrategy {
     // plans the whole query and fragments never reach us.
     //
     // NEVER fire on a Command (e.g. a v2 write): a nested
-    // QueryExecution would EAGERLY EXECUTE the command once per knob
-    // during "planning" — the write would run k times and the
-    // featurized plan would be the constant CommandResult. Declining
-    // here is safe: the built-in write strategy plans the command
-    // node with planLater(query), so the planner re-enters with the
-    // bare query subtree and the sweep runs on that.
+    // QueryExecution would EAGERLY EXECUTE the command during
+    // "planning" — the write would run and the featurized plan would
+    // be the constant CommandResult. Declining here is safe: the
+    // built-in write strategy plans the command node with
+    // planLater(query), so the planner re-enters with the bare query
+    // subtree and the sweep runs on that.
     //
     // The Command check must run on the UNWRAPPED plan: the planner
     // offers ReturnAnswer(OverwriteByExpression(...)) for a v2 write,
@@ -229,151 +254,165 @@ case class LearnedPlanStrategy(session: SparkSession) extends SparkStrategy {
     }
 
     val (model, gen) = modelOpt.get
-    val classic = session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     PlanChoice.replanning.set(true)
     try {
       val cacheKey = Candidates.canonicalKey(query)
-      // steady-state fast path: a repeat query re-plans ONCE under the
-      // remembered knobs instead of sweeping the grid (and skips the
-      // prepared-plan canonicalization — planning only)
       val gateOn =
         session.conf.get(PlanChoice.GateEnabledKey, "true") != "false"
-      val remembered = PlanChoice.choiceCache.get(cacheKey)
-      if (remembered != null &&
-          remembered.variantIdx == PlanChoice.Remembered.Declined) {
-        // the margin gate declined this query — native planning,
-        // zero routing cost on repeats. A cached decline is a GATE
-        // decision, so the gate kill-switch bypasses it (fall through
-        // to a fresh, ungated sweep that overwrites the entry).
-        if (gateOn) {
-          PlanChoice.gateDeclineCount.incrementAndGet()
-          return Nil
+      // A cached decline is a GATE decision, so the gate kill-switch
+      // bypasses it (a fresh, ungated sweep overwrites the entry).
+      Option(PlanChoice.choiceCache.get(cacheKey))
+        .filterNot(r => r.variantIdx == PlanChoice.Remembered.Declined && !gateOn)
+        .flatMap(planRemembered(query, _))
+        .getOrElse {
+          val (remembered, choice) = sweep(query, model, gen, gateOn)
+          PlanChoice.choiceCache.put(cacheKey, remembered)
+          // the variant list is deterministic per query, so the
+          // winner's index always resolves here
+          val planned = planRemembered(query, remembered).getOrElse(Nil)
+          choice.foreach(c => PlanChoice.lastChoice.set(Some(c)))
+          planned
         }
-      }
-      if (remembered != null && remembered.variantIdx == 0) {
-        return Candidates.withConfs(session,
-          remembered.knobs.map(_.physicalConfs).getOrElse(Nil)) {
-          // `query` is already optimized (strategies see the optimized
-          // plan) and the remembered knobs are physical-planning-time
-          // only, so skip the nested QueryExecution's re-analysis +
-          // re-optimization (CBO join-reorder DP re-ran on every hit —
-          // ~60 ms/query on 7-way joins, the r3 "routing tax") and go
-          // straight to physical planning, exactly like
-          // QueryExecution.createSparkPlan does.
-          val planned = classic.sessionState.planner
-            .plan(ReturnAnswer(query)).next()
-          PlanChoice.lastChoice.set(Some(PlanChoice.Choice(
-            remembered.knobs.map(_.label).getOrElse("session-default"),
-            1, "", Nil)))
-          Seq(planned)
-        }
-      }
-      if (remembered != null && remembered.knobs.isDefined) {
-        // remembered JOIN-ORDER variant: reconstruct it by index and
-        // re-plan through a nested QueryExecution with the reorder
-        // rules pinned off, so the executed plan is the one that was
-        // scored (a raw physical planning of the un-re-optimized
-        // rewrite could differ from the scored candidate)
-        val vs = JoinOrders.variants(query)
-        if (remembered.variantIdx < vs.size) {
-          return Candidates.withConfs(session,
-            remembered.knobs.get.physicalConfs ++ JoinOrders.pinOrderConfs) {
-            val qe = new QueryExecution(classic, vs(remembered.variantIdx),
-              new QueryPlanningTracker, CommandExecutionMode.SKIP)
-            PlanChoice.lastChoice.set(Some(PlanChoice.Choice(
-              remembered.knobs.get.label, 1, "", Nil)))
-            Seq(qe.sparkPlan)
-          }
-        }
-        // fall through to a fresh sweep if the variant no longer exists
-      }
-      // enumerate: nested planning under each knob assignment (same
-      // sweep as Candidates.enumerate, but from a LogicalPlan instead
-      // of a DataFrame). Keep the UNPREPARED sparkPlan to hand back to
-      // the outer planner; featurize the prepared executedPlan so
-      // features match what the model was trained on.
-      //
-      // The plan handed to a planner strategy is already OPTIMIZED, so
-      // optimizer-time knobs (cbo.joinReorder) are inert here — join
-      // ORDER is fixed by the time we see the plan, and sweeping that
-      // dimension would only re-plan duplicates. The order CHOICE
-      // space comes from JoinOrders.variants instead: alternative
-      // connected left-deep rewrites of the join region, re-planned
-      // with the reorder rules pinned off so the optimizer cannot
-      // undo the permutation. Variant 0 sweeps the physical knob grid
-      // (6 plannings, dedupe usually to 2-3); later variants sweep
-      // the broadcast-threshold axis only, keeping the total planning
-      // cost bounded.
-      val variantPlans = JoinOrders.variants(query)
-      val seen = scala.collection.mutable.LinkedHashMap[String, (SparkPlan, PlanFeatures.PlanNode, Option[Candidates.Knobs], Int)]()
-      // SESSION-NATIVE plan FIRST (knobs = None): the plan the session
-      // would run without this strategy — the margin gate's baseline
-      // and its no-lose fallback. Under stock confs it dedupes into
-      // the grid's default point; under a defensive deployment (e.g.
-      // autoBroadcastJoinThreshold=-1) it is the plan that conf
-      // produces, NOT the stock-knob plan — so a gate decline always
-      // means "what the user configured", never "Spark's defaults".
-      locally {
-        val qe = new QueryExecution(classic, query,
-          new QueryPlanningTracker, CommandExecutionMode.SKIP)
-        seen(Candidates.canonicalKey(qe.executedPlan)) = (qe.sparkPlan,
-          PlanFeatures.fromSparkPlan(qe.executedPlan), None, 0)
-      }
-      variantPlans.zipWithIndex.foreach { case (vq, vIdx) =>
-        val grid =
-          if (vIdx == 0) Candidates.knobGrid.filter(_.joinReorder)
-          else Candidates.knobGrid.filter(k => k.joinReorder && k.preferSortMergeJoin)
-        val pin = if (vIdx == 0) Nil else JoinOrders.pinOrderConfs
-        grid.foreach { knobs =>
-          Candidates.withConfs(session, knobs.physicalConfs ++ pin) {
-            // SKIP mode: belt-and-braces against eager command execution
-            val qe = new QueryExecution(classic, vq,
-              new QueryPlanningTracker, CommandExecutionMode.SKIP)
-            val canonical = Candidates.canonicalKey(qe.executedPlan)
-            if (!seen.contains(canonical)) {
-              seen(canonical) = (qe.sparkPlan,
-                PlanFeatures.fromSparkPlan(qe.executedPlan), Some(knobs), vIdx)
-            }
-          }
-        }
-      }
-      val cands = seen.values.toSeq
-      if (cands.isEmpty) Nil
-      else {
-        val scores = model.predict(cands.map(c => gen.transform(c._2)))
-        val bestIdx = scores.indices.minBy(scores)
-        val (bestPlan, bestNode, knobsOpt, vIdx) = cands(bestIdx)
-        // MARGIN GATE (r17 verdict #2): with a calibrated gate
-        // installed, deviate from the session-native plan only when
-        // the Bayesian head's predicted gain clears its own
-        // uncertainty — z = (P(native slower) − 0.5)/σ > threshold.
-        // Otherwise DECLINE: cache the decision and return Nil so the
-        // built-in strategies plan natively (repeats cost one cache
-        // lookup). A best pick that IS the native plan declines too —
-        // routing to it would only re-plan what the session already
-        // produces.
-        val declined = gateOn && PlanChoice.gate.exists { case (bm, thr, gapThr) =>
-          bestIdx == 0 || scores(0) - scores(bestIdx) <= gapThr || {
-            val (p, v) = bm.predictPair(
-              gen.transform(cands.head._2), gen.transform(bestNode))
-            val z = (p - 0.5) / math.sqrt(math.max(v, 1e-12))
-            z <= thr
-          }
-        }
-        if (declined) {
-          PlanChoice.choiceCache.put(cacheKey,
-            PlanChoice.Remembered(PlanChoice.Remembered.Declined, None))
-          PlanChoice.gateDeclineCount.incrementAndGet()
-          Nil
-        } else {
-          PlanChoice.choiceCache.put(cacheKey, PlanChoice.Remembered(vIdx, knobsOpt))
-          PlanChoice.lastChoice.set(Some(PlanChoice.Choice(
-            knobsOpt.map(_.label).getOrElse("session-default"),
-            cands.size, seen.keys.toSeq(bestIdx), scores.toSeq,
-            nOrders = cands.map(_._4).distinct.size)))
-          Seq(bestPlan)
-        }
-      }
     } finally PlanChoice.replanning.set(false)
   }
+
+  /** Plan `query` under a remembered choice on the live session: Nil
+    * for a gate decline (the built-in strategies then plan natively at
+    * zero routing cost), else the chosen variant under its knobs —
+    * planned exactly as the sweep planned the scored candidate. None
+    * when the remembered join-order variant no longer exists. */
+  private def planRemembered(query: LogicalPlan,
+                             r: PlanChoice.Remembered): Option[Seq[SparkPlan]] = {
+    val label = r.knobs.map(_.label).getOrElse("session-default")
+    def hit(p: SparkPlan): Option[Seq[SparkPlan]] = {
+      PlanChoice.lastChoice.set(Some(PlanChoice.Choice(label, 1, "", Nil)))
+      Some(Seq(p))
+    }
+    if (r.variantIdx == PlanChoice.Remembered.Declined) {
+      PlanChoice.gateDeclineCount.incrementAndGet()
+      Some(Nil)
+    } else if (r.variantIdx == 0) hit(planUnder(session, query, r.knobs)(p => p))
+    else JoinOrders.variants(query).lift(r.variantIdx).flatMap { vq =>
+      hit(optimizePinned(session, vq)(planUnder(session, _, r.knobs)(p => p)))
+    }
+  }
+
+  /** Score every candidate plan of a first-seen `query` and decide:
+    * the remembered choice, plus the observability record when the
+    * choice routes. */
+  private def sweep(query: LogicalPlan, model: LeroModelPairWise,
+                    gen: PlanFeatures.FeatureGenerator,
+                    gateOn: Boolean): (PlanChoice.Remembered, Option[PlanChoice.Choice]) = {
+    // The plan handed to a planner strategy is already OPTIMIZED, so
+    // optimizer-time knobs (cbo.joinReorder) are inert here — join
+    // ORDER is fixed by the time we see the plan. The order CHOICE
+    // space comes from JoinOrders.variants instead: alternative
+    // connected left-deep and bushy rewrites of the join region,
+    // optimized with the reorder rules pinned off so the optimizer
+    // cannot undo the permutation. Variant 0 sweeps the physical knob
+    // grid (6 physical plannings, dedupe usually to 2-3); later
+    // variants sweep the broadcast-threshold axis only (one
+    // optimization and 3 physical plannings each), keeping the total
+    // planning cost bounded.
+    val grid = Candidates.knobGrid.filter(_.joinReorder)
+    val orderGrid = grid.filter(_.preferSortMergeJoin)
+    def prepared(s: SparkSession, knobs: Candidates.Knobs, vIdx: Int)(
+        p: SparkPlan): Point = point(SparkInternals.prepareForExecution(s, p), Some(knobs), vIdx)
+    // planning groups in merge order: the SESSION-NATIVE plan FIRST
+    // (knobs = None) — the plan the session would run without this
+    // strategy, the margin gate's baseline and its no-lose fallback.
+    // Under stock confs it dedupes into the grid's default point;
+    // under a defensive deployment (e.g. autoBroadcastJoinThreshold=-1)
+    // it is the plan that conf produces, NOT the stock-knob plan — so
+    // a gate decline always means "what the user configured", never
+    // "Spark's defaults". SKIP mode: belt-and-braces against eager
+    // command execution.
+    val native: SparkSession => Seq[Point] = s => Seq(point(
+      new QueryExecution(classic(s), query.clone(), new QueryPlanningTracker,
+        CommandExecutionMode.SKIP).executedPlan, None, 0))
+    // groups run on several threads, so each plans its own clone of
+    // the shared incoming plan
+    val points = grid.map(k => (s: SparkSession) =>
+      Seq(planUnder(s, query.clone(), Some(k))(prepared(s, k, 0))))
+    val orders = JoinOrders.variants(query).zipWithIndex.drop(1).map { case (vq, vIdx) =>
+      (s: SparkSession) => optimizePinned(s, vq.clone()) { optimized =>
+        orderGrid.map(k => planUnder(s, optimized, Some(k))(prepared(s, k, vIdx)))
+      }
+    }
+    val groups = (native +: points) ++ orders
+    // hand out the groups that optimize (native, variants) before the
+    // single physical plannings
+    val handOut = (0 +: (1 + points.size until groups.size)) ++ (1 to points.size)
+    val results = new Array[Seq[Point]](groups.size)
+    WorkerThreads.run("graft-sweep", session.sparkContext.defaultParallelism,
+        groups.size) {
+      PlanChoice.replanning.set(true)
+      SparkInternals.cloneSession(session)
+    } { (clone, i) =>
+      val g = handOut(i)
+      results(g) = SparkInternals.withActive(clone)(groups(g)(clone))
+    }
+    val seen = scala.collection.mutable.LinkedHashMap[String, Point]()
+    results.iterator.flatten.foreach(p => if (!seen.contains(p.key)) seen(p.key) = p)
+    val cands = seen.values.toIndexedSeq
+    val trees = cands.map(c => gen.transform(c.node))
+    val scores = model.predict(trees)
+    val bestIdx = scores.indices.minBy(scores)
+    val best = cands(bestIdx)
+    // MARGIN GATE (r17 verdict #2): with a calibrated gate installed,
+    // deviate from the session-native plan only when the Bayesian
+    // head's predicted gain clears its own uncertainty —
+    // z = (P(native slower) − 0.5)/σ > threshold. Otherwise DECLINE:
+    // cache the decision so the built-in strategies plan natively
+    // (repeats cost one cache lookup). A best pick that IS the native
+    // plan declines too — routing to it would only re-plan what the
+    // session already produces.
+    val declined = gateOn && PlanChoice.gate.exists { case (bm, thr, gapThr) =>
+      bestIdx == 0 || scores(0) - scores(bestIdx) <= gapThr || {
+        val (p, v) = bm.predictPair(trees.head, trees(bestIdx))
+        val z = (p - 0.5) / math.sqrt(math.max(v, 1e-12))
+        z <= thr
+      }
+    }
+    if (declined) (PlanChoice.Remembered(PlanChoice.Remembered.Declined, None), None)
+    else (PlanChoice.Remembered(best.vIdx, best.knobs), Some(PlanChoice.Choice(
+      best.knobs.map(_.label).getOrElse("session-default"),
+      cands.size, best.key, scores.toSeq,
+      nOrders = cands.map(_.vIdx).distinct.size)))
+  }
+}
+
+object LearnedPlanStrategy {
+
+  /** One swept candidate: its executed plan's canonical key and
+    * features, and the knobs (None = session-native) and join-order
+    * variant that plan it. */
+  private final case class Point(key: String, node: PlanFeatures.PlanNode,
+                                 knobs: Option[Candidates.Knobs], vIdx: Int)
+
+  private def point(executed: SparkPlan, knobs: Option[Candidates.Knobs], vIdx: Int): Point =
+    Point(Candidates.canonicalKey(executed), PlanFeatures.fromSparkPlan(executed), knobs, vIdx)
+
+  private def classic(s: SparkSession) = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+
+  /** Physical planning of the optimized plan `optimized` on `s` under
+    * `knobs`' physical confs (None: the session's own), handing the
+    * unprepared plan to `f` while the confs are still set. No nested
+    * QueryExecution: its re-analysis and re-optimization of an
+    * optimized plan (the CBO join-reorder DP alone cost ~60 ms per
+    * 7-way join) were most of each sweep point's time. */
+  private def planUnder[T](s: SparkSession, optimized: LogicalPlan,
+                           knobs: Option[Candidates.Knobs])(f: SparkPlan => T): T =
+    Candidates.withConfs(s, knobs.toSeq.flatMap(_.physicalConfs)) {
+      f(SparkInternals.createSparkPlan(s, optimized))
+    }
+
+  /** Join-order variant `vq` analyzed and optimized once on `s` with the
+    * reorder rules pinned off ([[JoinOrders.pinOrderConfs]]); `f` runs
+    * while the pin is still set. */
+  private def optimizePinned[T](s: SparkSession, vq: LogicalPlan)(f: LogicalPlan => T): T =
+    Candidates.withConfs(s, JoinOrders.pinOrderConfs) {
+      f(new QueryExecution(classic(s), vq, new QueryPlanningTracker,
+        CommandExecutionMode.SKIP).optimizedPlan)
+    }
 }

@@ -306,6 +306,30 @@ class PlannerInjectionSpec extends AnyFunSuite {
     } finally PlanChoice.uninstall()
   }
 
+  test("a fresh sweep leaves the live conf and no sweep thread behind; hit plan = cold plan") {
+    val build = (s: SparkSession) => Relational.defs("j1_join_7way")(s, sf)
+    val cands = Candidates.enumerate(spark, build)
+    val gen = PlanFeatures.FeatureGenerator.fit(cands.map(_.plan))
+    PlanChoice.install(new LeroModelPairWise(gen.featureDim, seed = 13), gen)
+    try withExtensionSession { s2 =>
+      graft.engine.Tables.registerAll(s2, sf)
+      val confBefore = s2.conf.getAll
+      PlanChoice.lastChoice.set(None)
+      val cold = build(s2).queryExecution.executedPlan
+      val choice = PlanChoice.lastChoice.get()
+      assert(choice.exists(_.nCandidates > 1), "no fresh sweep ran")
+      assert(s2.conf.getAll == confBefore, "the sweep changed the live session's conf")
+      val sweepThreads = Thread.getAllStackTraces.keySet.toArray
+        .collect { case t: Thread if t.getName.startsWith("graft-sweep-") && t.isAlive => t.getName }
+      assert(sweepThreads.isEmpty, s"sweep threads outlived planning: ${sweepThreads.mkString(",")}")
+      PlanChoice.lastChoice.set(None)
+      val hit = build(s2).queryExecution.executedPlan
+      assert(PlanChoice.lastChoice.get().exists(_.nCandidates == 1), "expected a choice-cache hit")
+      assert(Candidates.canonicalKey(hit) == Candidates.canonicalKey(cold))
+      assert(Candidates.canonicalKey(cold) == choice.get.canonical)
+    } finally PlanChoice.uninstall()
+  }
+
   test("non-join queries bypass the strategy") {
     val build = (s: SparkSession) => Relational.defs("j1_join_2way")(s, sf)
     val cands = Candidates.enumerate(spark, build)

@@ -9,12 +9,13 @@ import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.CatalogStatistics
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{ScratchDir, Tables}
+import graft.engine.{ScratchDir, Tables, WorkerThreads}
 
-/** `Tables.registerAll` registers the catalog tables on a short-lived
-  * thread pool. These pin what that must not change: the statistics
-  * CBO reads, per-table failure containment on a pooled (not only the
-  * calling-thread events) table, and no thread left behind. */
+/** `Tables.registerAll` registers the catalog tables on short-lived
+  * worker threads ([[graft.engine.WorkerThreads]]). These pin what that
+  * must not change: the statistics CBO reads, per-table failure
+  * containment on a pooled (not only the calling-thread events) table,
+  * and no thread left behind. */
 class RegisterAllSpec extends AnyFunSuite {
   import SparkTestSession.{spark, sf}
 
@@ -98,6 +99,26 @@ class RegisterAllSpec extends AnyFunSuite {
       val n = spark.sql("SELECT count(*) FROM lineitem").collect()(0).getLong(0)
       assert(n == Tables.load(spark, sf, "lineitem").count())
     } finally Tables.registerAll(spark, sf)
+  }
+
+  test("worker threads: per-thread state, and a task's Throwable is rethrown after all exit") {
+    val inits = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val ran = new java.util.concurrent.atomic.AtomicInteger(0)
+    val err = intercept[IllegalStateException] {
+      WorkerThreads.run("graft-worker-test", 3, 8) {
+        inits.add(Thread.currentThread.getName)
+        Thread.currentThread.getName
+      } { (name, i) =>
+        if (name != Thread.currentThread.getName) throw new AssertionError(s"$name state on another thread")
+        ran.incrementAndGet()
+        if (i == 2) throw new IllegalStateException("task 2")
+        Thread.sleep(50)
+      }
+    }
+    assert(err.getMessage == "task 2")
+    assert(inits.asScala == Set("graft-worker-test-1", "graft-worker-test-2", "graft-worker-test-3"))
+    assert(ran.get < 8, "the hand-out went on after a failure")
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(_.getName.startsWith("graft-worker-test-")))
   }
 
   test("scratch dir: per-process, headroom-gated, and only dead pids are removed") {

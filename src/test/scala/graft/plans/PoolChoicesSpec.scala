@@ -1,0 +1,128 @@
+package graft.plans
+
+import java.io.File
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
+import java.util.Locale
+
+import org.apache.spark.sql.SparkSession
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkTestSession
+import graft.engine.Tables
+import graft.planopt.Candidates
+
+/** What the learned planner decides on a fixed slice of the r14 pool,
+  * one TSV row per query: the first 15 5-way and 15 7-way join queries
+  * of `results/r14_pool/train_pool.txt` at sf0.01, served with the
+  * model and margin gate of `results/r18_stable_1000/stable_model`,
+  * the size bypass off and AQE off.
+  *
+  * Columns: the root decision (`routed`/`declined`) and the gate
+  * declines the first planning counted (fragments included); the
+  * root's remembered knob label and join-order variant; the last
+  * routed choice's candidate and order counts and scores (6 decimals;
+  * `-` when nothing routed); SHA-256 of the first (sweep) and the
+  * second (choice-cache hit) executed plan's canonical key, with the
+  * data directory replaced by `<data>`.
+  *
+  * Regenerate with
+  * `sbt "Test/runMain graft.plans.PoolChoices src/test/resources/planchoice/pool_choices.tsv"`
+  * only when a change to the planner's choices is intended. */
+object PoolChoices {
+  val Header = "query\tdecision\tdeclines\tknob\tvariant\tcandidates\torders\tscores\tcold_sha\thit_sha"
+
+  /** sf0.01, beside the sf0.001 tables the rest of the suite uses. */
+  val dataDir: String = new File(new File(SparkTestSession.sf).getParentFile, "sf0.01").getPath
+
+  /** Pool lines joining 5 and 7 tables, first 15 of each in file
+    * order, as `<n>way_<line index>` -> SQL. */
+  def queries: Seq[(String, String)] = {
+    val src = scala.io.Source.fromFile("results/r14_pool/train_pool.txt", "UTF-8")
+    val lines = try src.getLines().map(_.trim).toVector finally src.close()
+    val from = """(?i)\bFROM\s+(.*?)\s+WHERE\b""".r
+    val tagged = lines.zipWithIndex.filter(_._1.nonEmpty).distinctBy(_._1).flatMap { case (sql, i) =>
+      from.findFirstMatchIn(sql).map(m => (m.group(1).split(",").length, i, sql.stripSuffix(";")))
+    }
+    Seq(5, 7).flatMap(n => tagged.filter(_._1 == n).take(15).map { case (_, i, sql) => (s"${n}way_$i", sql) })
+  }
+
+  private def sha(plan: org.apache.spark.sql.catalyst.plans.QueryPlan[_]): String = {
+    val dir = new File(dataDir).getCanonicalPath
+    val key = Candidates.canonicalKey(plan).replace(dir, "<data>")
+    MessageDigest.getInstance("SHA-256").digest(key.getBytes(StandardCharsets.UTF_8))
+      .map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  /** Plan every query twice in a fresh GraftExtensions session whose
+    * tables live in their own database (the shared default database
+    * keeps the suite's sf0.001 tables), and return the header and rows. */
+  def rows(): Seq[String] = {
+    val base = SparkTestSession.spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.adaptive.enabled", "false")
+      .config(PlanChoice.MinInputBytesKey, "0")
+      .withExtensions(new graft.engine.GraftExtensions)
+      .getOrCreate()
+    try {
+      s.sql("CREATE DATABASE IF NOT EXISTS graft_pool_choices")
+      s.catalog.setCurrentDatabase("graft_pool_choices")
+      Tables.registerAll(s, dataDir)
+      PlanChoice.installFrom("results/r18_stable_1000/stable_model")
+      Header +: queries.map { case (name, sql) =>
+        PlanChoice.lastChoice.set(None)
+        val d0 = PlanChoice.gateDeclineCount.get()
+        val cold = s.sql(sql).queryExecution
+        val coldPlan = cold.executedPlan
+        val declines = PlanChoice.gateDeclineCount.get() - d0
+        val choice = PlanChoice.lastChoice.get()
+        val root = Option(PlanChoice.choiceCache.get(Candidates.canonicalKey(cold.optimizedPlan)))
+        val hitPlan = s.sql(sql).queryExecution.executedPlan
+        val decision = root.map(r =>
+          if (r.variantIdx == PlanChoice.Remembered.Declined) "declined" else "routed")
+        val routed = root.filter(_.variantIdx != PlanChoice.Remembered.Declined)
+        Seq(name, decision.getOrElse("-"), declines.toString,
+          routed.map(_.knobs.map(_.label).getOrElse("session-default")).getOrElse("-"),
+          routed.map(_.variantIdx.toString).getOrElse("-"),
+          choice.map(_.nCandidates.toString).getOrElse("-"),
+          choice.map(_.nOrders.toString).getOrElse("-"),
+          choice.map(_.scores.map("%.6f".formatLocal(Locale.ROOT, _)).mkString(",")).getOrElse("-"),
+          sha(coldPlan), sha(hitPlan)).mkString("\t")
+      }
+    } finally {
+      PlanChoice.uninstall()
+      s.sql("DROP DATABASE IF EXISTS graft_pool_choices CASCADE")
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      SparkSession.setDefaultSession(base)
+      SparkSession.setActiveSession(base)
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val out = new File(args(0))
+    out.getParentFile.mkdirs()
+    java.nio.file.Files.write(out.toPath,
+      rows().mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+  }
+}
+
+/** The pinned choices in `planchoice/pool_choices.tsv` reproduce
+  * exactly: decisions, candidate sets, scores and executed plans. */
+class PoolChoicesSpec extends AnyFunSuite {
+
+  test("the learned planner reproduces the pinned pool choices") {
+    val src = scala.io.Source.fromResource("planchoice/pool_choices.tsv", getClass.getClassLoader)
+    val want = try src.getLines().toVector finally src.close()
+    val got = PoolChoices.rows()
+    assert(want.headOption.contains(PoolChoices.Header), "pinned file header")
+    assert(got.size == want.size, s"${got.size} rows vs ${want.size} pinned")
+    got.zip(want).foreach { case (g, w) => assert(g == w, s"\ngot:    $g\npinned: $w") }
+  }
+}
