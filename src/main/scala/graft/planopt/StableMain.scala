@@ -304,10 +304,10 @@ private[planopt] object E2EPhases {
       }
       val bypassed = graft.plans.PlanChoice.bypassCount.get() - bypassBefore
       val declined = graft.plans.PlanChoice.gateDeclineCount.get() - declBefore
-      // bypass/decline count strategy INVOCATIONS (a declined root
-      // re-offers join-bearing fragments), not queries
+      // bypass/decline count queries: the strategy decides once, at
+      // the root, and plans the whole query
       log.info(s"$label: routed=$routed of ${testQ.size} queries; " +
-        s"bypass invocations=$bypassed; gate declines=$declined")
+        s"bypassed=$bypassed; gate declines=$declined")
       total
     }
     // Two passes each: the first pass on a fresh session pays one-time

@@ -67,7 +67,7 @@ object PlanChoice {
     * the Bayesian head's z-score clears the calibrated threshold. */
   val GateEnabledKey = "spark.graft.planChoice.gate.enabled"
 
-  /** Strategy invocations the margin gate DECLINED (fresh sweeps and
+  /** Query plannings the margin gate DECLINED (fresh sweeps and
     * cached declines both count) — the complement of `routed` in the
     * E2E logs. */
   val gateDeclineCount = new java.util.concurrent.atomic.AtomicLong(0)
@@ -98,20 +98,20 @@ object PlanChoice {
     *
     * `knobs` None = the session-native plan (no conf overrides);
     * `variantIdx` == [[Remembered.Declined]] = the margin gate
-    * declined this query — repeats return Nil immediately and the
-    * built-in strategies plan natively at zero routing cost. */
+    * declined this query — repeats skip the sweep and the strategy
+    * plans the whole query natively, at the cost of one native
+    * planning. */
   final case class Remembered(variantIdx: Int, knobs: Option[Candidates.Knobs])
   object Remembered { val Declined: Int = -1 }
-  // Sized for DECLINE entries too (r18): a gate-declined ROOT returns
-  // Nil, so the planner re-offers its join-bearing fragments and each
-  // caches its own Declined entry — a 300-query workload with ~150
-  // declines floods well past the old 1024 LRU bound, evicting the
-  // ROUTED entries and forcing a full re-sweep of every routed query
-  // on every repeat (measured: the r18 E2E replay's injected arm ran
-  // 2x default purely from this thrash). Entries are a small case
-  // class keyed by canonical plan strings; 16k of them is a few MB.
+  // One entry per distinct join query, routed or declined: every
+  // decision plans the whole query at the root, so fragments never
+  // add entries of their own. The bound keeps a large repeated-template
+  // workload's ROUTED entries from being evicted (an evicted entry
+  // re-pays the full sweep on its next repeat). Entries are a small
+  // case class keyed by canonical plan strings; 16k of them is a few
+  // MB.
   private val MaxChoiceCache = 16384
-  private[plans] val choiceCache =
+  private[graft] val choiceCache =
     java.util.Collections.synchronizedMap(
       new java.util.LinkedHashMap[String, Remembered](64, 0.75f, true) {
         override def removeEldestEntry(
@@ -177,8 +177,10 @@ object PlanChoice {
 
 /** The planner strategy behind [[PlanChoice]]. Extra planning
   * strategies run BEFORE Catalyst's built-ins, so for a matching root
-  * plan (contains a join, model installed) this strategy either plans
-  * the whole query itself or declines with `Nil`.
+  * plan (contains a join, model installed) this strategy plans the
+  * whole query itself: natively under the size bypass or a gate
+  * decline, else the chosen candidate. Its fragments are never
+  * offered to it.
   *
   * A first-seen query is swept: the session-native plan (a nested
   * `QueryExecution`, so an AQE session's native candidate is the plan
@@ -211,8 +213,9 @@ case class LearnedPlanStrategy(session: SparkSession) extends SparkStrategy {
       session.conf.get(PlanChoice.EnabledKey, "true") != "false" &&
       !PlanChoice.replanning.get()
     // fire only for plans the knob sweep can actually vary (joins);
-    // the root is always offered to strategies first, so a hit here
-    // plans the whole query and fragments never reach us.
+    // the root is always offered to strategies first, and every
+    // outcome below (bypass, gate decline, routed choice) plans the
+    // whole query, so fragments never reach us.
     //
     // NEVER fire on a Command (e.g. a v2 write): a nested
     // QueryExecution would EAGERLY EXECUTE the command during
@@ -245,17 +248,18 @@ case class LearnedPlanStrategy(session: SparkSession) extends SparkStrategy {
     val minBytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       session.conf.get(PlanChoice.MinInputBytesKey,
         PlanChoice.DefaultMinInputBytes.toString))
-    if (minBytes > 0) {
-      val inputBytes = query.collectLeaves().map(_.stats.sizeInBytes).sum
-      if (inputBytes < minBytes) {
-        PlanChoice.bypassCount.incrementAndGet()
-        return Nil
-      }
-    }
+    val bypass = minBytes > 0 &&
+      query.collectLeaves().map(_.stats.sizeInBytes).sum < minBytes
 
     val (model, gen) = modelOpt.get
     PlanChoice.replanning.set(true)
     try {
+      // a bypassed root plans natively here, once: its fragments read
+      // a subset of its leaves, so none of them could route either
+      if (bypass) {
+        PlanChoice.bypassCount.incrementAndGet()
+        return Seq(planUnder(session, query, None)(p => p))
+      }
       val cacheKey = Candidates.canonicalKey(query)
       val gateOn =
         session.conf.get(PlanChoice.GateEnabledKey, "true") != "false"
@@ -276,11 +280,12 @@ case class LearnedPlanStrategy(session: SparkSession) extends SparkStrategy {
     } finally PlanChoice.replanning.set(false)
   }
 
-  /** Plan `query` under a remembered choice on the live session: Nil
-    * for a gate decline (the built-in strategies then plan natively at
-    * zero routing cost), else the chosen variant under its knobs —
-    * planned exactly as the sweep planned the scored candidate. None
-    * when the remembered join-order variant no longer exists. */
+  /** Plan `query` under a remembered choice on the live session: the
+    * session-native plan for a gate decline, else the chosen variant
+    * under its knobs — planned exactly as the sweep planned the scored
+    * candidate. Either way the whole query is planned here, so its
+    * fragments never reach the strategy. None when the remembered
+    * join-order variant no longer exists. */
   private def planRemembered(query: LogicalPlan,
                              r: PlanChoice.Remembered): Option[Seq[SparkPlan]] = {
     val label = r.knobs.map(_.label).getOrElse("session-default")
@@ -290,7 +295,7 @@ case class LearnedPlanStrategy(session: SparkSession) extends SparkStrategy {
     }
     if (r.variantIdx == PlanChoice.Remembered.Declined) {
       PlanChoice.gateDeclineCount.incrementAndGet()
-      Some(Nil)
+      Some(Seq(planUnder(session, query, None)(p => p)))
     } else if (r.variantIdx == 0) hit(planUnder(session, query, r.knobs)(p => p))
     else JoinOrders.variants(query).lift(r.variantIdx).flatMap { vq =>
       hit(optimizePinned(session, vq)(planUnder(session, _, r.knobs)(p => p)))
@@ -363,10 +368,9 @@ case class LearnedPlanStrategy(session: SparkSession) extends SparkStrategy {
     // deviate from the session-native plan only when the Bayesian
     // head's predicted gain clears its own uncertainty —
     // z = (P(native slower) − 0.5)/σ > threshold. Otherwise DECLINE:
-    // cache the decision so the built-in strategies plan natively
-    // (repeats cost one cache lookup). A best pick that IS the native
-    // plan declines too — routing to it would only re-plan what the
-    // session already produces.
+    // cache the decision and plan the session-native plan (repeats
+    // cost one cache lookup and one native planning). A best pick that
+    // IS the native plan declines too — it is the same plan.
     val declined = gateOn && PlanChoice.gate.exists { case (bm, thr, gapThr) =>
       bestIdx == 0 || scores(0) - scores(bestIdx) <= gapThr || {
         val (p, v) = bm.predictPair(trees.head, trees(bestIdx))

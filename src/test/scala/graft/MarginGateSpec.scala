@@ -192,6 +192,39 @@ class MarginGateSpec extends AnyFunSuite {
     } finally PlanChoice.uninstall()
   }
 
+  test("a gate decline plans the whole query natively, once per query") {
+    val build = (s: SparkSession) => Relational.defs("j1_join_7way")(s, sf)
+    val cands = Candidates.enumerate(spark, build)
+    val gen = PlanFeatures.FeatureGenerator.fit(cands.map(_.plan))
+    val base = build(spark).collect()(0).getLong(0)
+    // prohibitive threshold: the gate declines every query
+    PlanChoice.install(new LeroModelPairWise(gen.featureDim, seed = 13), gen)
+    PlanChoice.installGate(new BayesianModelPairWise(gen.featureDim, seed = 5), 1e9)
+    try withExtensionSession { s2 =>
+      graft.engine.Tables.registerAll(s2, sf)
+      s2.conf.set(PlanChoice.EnabledKey, "false")
+      val native = Candidates.canonicalKey(build(s2).queryExecution.executedPlan)
+      s2.conf.unset(PlanChoice.EnabledKey)
+      // first sight: one sweep, decided once at the root — no fragment
+      // is offered to the strategy, so no fragment entry or decline
+      val (entries, declines) = (PlanChoice.choiceCache.size, PlanChoice.gateDeclineCount.get())
+      PlanChoice.lastChoice.set(None)
+      val cold = build(s2)
+      assert(cold.collect()(0).getLong(0) == base)
+      assert(PlanChoice.lastChoice.get().isEmpty, "routed despite a prohibitive gate threshold")
+      assert(PlanChoice.choiceCache.size == entries + 1, "first sight must cache one entry")
+      assert(PlanChoice.gateDeclineCount.get() == declines + 1, "first sight must decline once")
+      // repeat: the cached decline, again once, and no new entry
+      val hit = build(s2)
+      assert(hit.collect()(0).getLong(0) == base)
+      assert(PlanChoice.choiceCache.size == entries + 1, "the repeat added a cache entry")
+      assert(PlanChoice.gateDeclineCount.get() == declines + 2, "the repeat must decline once")
+      // the declined query runs the kill-switched session's plan
+      assert(Candidates.canonicalKey(cold.queryExecution.executedPlan) == native)
+      assert(Candidates.canonicalKey(hit.queryExecution.executedPlan) == native)
+    } finally PlanChoice.uninstall()
+  }
+
   test("installFrom restores the gate alongside the model") {
     val build = (s: SparkSession) => Relational.defs("j1_join_2way")(s, sf)
     val cands = Candidates.enumerate(spark, build)

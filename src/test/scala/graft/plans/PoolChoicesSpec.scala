@@ -18,13 +18,18 @@ import graft.planopt.Candidates
   * model and margin gate of `results/r18_stable_1000/stable_model`,
   * the size bypass off and AQE off.
   *
-  * Columns: the root decision (`routed`/`declined`) and the gate
-  * declines the first planning counted (fragments included); the
-  * root's remembered knob label and join-order variant; the last
-  * routed choice's candidate and order counts and scores (6 decimals;
-  * `-` when nothing routed); SHA-256 of the first (sweep) and the
-  * second (choice-cache hit) executed plan's canonical key, with the
-  * data directory replaced by `<data>`.
+  * Columns: the decision (`routed`/`declined`) and the gate declines
+  * the first planning counted; the remembered knob label and
+  * join-order variant; the routed choice's candidate and order counts
+  * and scores (6 decimals; `-` when nothing routed); SHA-256 of the
+  * first (sweep) and the second (choice-cache hit) executed plan's
+  * canonical key, with the data directory replaced by `<data>`.
+  *
+  * A declined query runs the session-native plan: [[rows]] also plans
+  * each query with the strategy switched off and fails when a
+  * `declined` row's cold or hit hash differs from that native hash,
+  * so neither a re-pin nor [[PoolChoicesSpec]] accepts a non-native
+  * decline.
   *
   * Regenerate with
   * `sbt "Test/runMain graft.plans.PoolChoices src/test/resources/planchoice/pool_choices.tsv"`
@@ -56,7 +61,8 @@ object PoolChoices {
 
   /** Plan every query twice in a fresh GraftExtensions session whose
     * tables live in their own database (the shared default database
-    * keeps the suite's sf0.001 tables), and return the header and rows. */
+    * keeps the suite's sf0.001 tables), then once with the strategy
+    * switched off, and return the header and rows. */
   def rows(): Seq[String] = {
     val base = SparkTestSession.spark
     SparkSession.clearActiveSession()
@@ -75,7 +81,8 @@ object PoolChoices {
       s.catalog.setCurrentDatabase("graft_pool_choices")
       Tables.registerAll(s, dataDir)
       PlanChoice.installFrom("results/r18_stable_1000/stable_model")
-      Header +: queries.map { case (name, sql) =>
+      val nonNative = scala.collection.mutable.ArrayBuffer[String]()
+      val planned = queries.map { case (name, sql) =>
         PlanChoice.lastChoice.set(None)
         val d0 = PlanChoice.gateDeclineCount.get()
         val cold = s.sql(sql).queryExecution
@@ -87,14 +94,23 @@ object PoolChoices {
         val decision = root.map(r =>
           if (r.variantIdx == PlanChoice.Remembered.Declined) "declined" else "routed")
         val routed = root.filter(_.variantIdx != PlanChoice.Remembered.Declined)
+        s.conf.set(PlanChoice.EnabledKey, "false")
+        val nativeSha = try sha(s.sql(sql).queryExecution.executedPlan)
+          finally s.conf.unset(PlanChoice.EnabledKey)
+        val (coldSha, hitSha) = (sha(coldPlan), sha(hitPlan))
+        if (decision.contains("declined") && (coldSha != nativeSha || hitSha != nativeSha))
+          nonNative += name
         Seq(name, decision.getOrElse("-"), declines.toString,
           routed.map(_.knobs.map(_.label).getOrElse("session-default")).getOrElse("-"),
           routed.map(_.variantIdx.toString).getOrElse("-"),
           choice.map(_.nCandidates.toString).getOrElse("-"),
           choice.map(_.nOrders.toString).getOrElse("-"),
           choice.map(_.scores.map("%.6f".formatLocal(Locale.ROOT, _)).mkString(",")).getOrElse("-"),
-          sha(coldPlan), sha(hitPlan)).mkString("\t")
+          coldSha, hitSha).mkString("\t")
       }
+      require(nonNative.isEmpty,
+        s"declined queries not planned natively: ${nonNative.mkString(", ")}")
+      Header +: planned
     } finally {
       PlanChoice.uninstall()
       s.sql("DROP DATABASE IF EXISTS graft_pool_choices CASCADE")
@@ -114,7 +130,8 @@ object PoolChoices {
 }
 
 /** The pinned choices in `planchoice/pool_choices.tsv` reproduce
-  * exactly: decisions, candidate sets, scores and executed plans. */
+  * exactly: decisions, candidate sets, scores and executed plans, with
+  * every declined query on its native plan. */
 class PoolChoicesSpec extends AnyFunSuite {
 
   test("the learned planner reproduces the pinned pool choices") {
