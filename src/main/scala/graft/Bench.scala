@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.engine.GraftSession
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line to stdout.
@@ -23,35 +23,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle scratch: SPARK_GRAFT_LOCAL_DIR, else a per-process tmpfs
-    // dir when /dev/shm has headroom, else stock (engine.ScratchDir).
-    val localDir = graft.engine.ScratchDir.resolve()
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // 51 queries × 2 passes blow through the default 100-entry
-      // generated-class cache, so the "warm" pass was recompiling
-      // every stage (warm ≈ cold on codegen-heavy queries, and the
-      // tail of the run measured compilation, not execution)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // Synchronous shuffle-file cleanup: the ContextCleaner's async
-      // queue lagged behind a 51-query suite, so dead shuffle files
-      // from early queries accumulated on local disk and the heaviest
-      // late queries (dd2/dd3) paid for it (r4: 28.9s in-suite vs 5.5s
-      // isolated). Blocking cleanup bounds that backlog at one query.
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-    val spark = localDir
-      .fold(builder0)(d => builder0.config("spark.local.dir", d))
-      .getOrCreate()
+    val spark = GraftSession.create()
     // Provenance stamp (r18 verdict #2): WHICH scratch mode produced
     // these numbers rides in the output JSON, so cross-round
     // comparisons can see when the measurement environment — not the
     // engine — moved. "stock" = Spark's default local dir.
-    val localDirStamp = localDir.getOrElse("stock")
-    spark.sparkContext.setLogLevel("ERROR")
+    val localDirStamp = GraftSession.scratchDir.getOrElse("stock")
     val diag = new BenchDiag
     spark.sparkContext.addSparkListener(diag)
 

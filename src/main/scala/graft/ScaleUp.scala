@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.engine.GraftSession
 
 /** Scale-up derivation tool: replicate a driver-generated testdata
   * directory K× with disjoint key spaces, producing an sf≈K×source
@@ -83,13 +85,7 @@ object ScaleUp {
     require(args.length >= 2, "usage: ScaleUp srcDir destDir [factor]")
     val (src, dest) = (args(0), args(1))
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
     // events.ts is parquet TIMESTAMP(NANOS); read it as a raw long and
     // keep it int64 in the output (Tables.load handles both identically

@@ -2,10 +2,10 @@ package graft.engine
 
 import java.io.File
 
-/** Where a graft main puts Spark's shuffle/spill scratch
-  * (`spark.local.dir`). Shared by `graft.Bench`, `ProbeMain` and
-  * `StatsProbe`, so every JVM that places scratch on tmpfs gets the
-  * same headroom check, its own directory and the same fallback.
+/** Where a graft session puts Spark's shuffle/spill scratch
+  * (`spark.local.dir`). [[GraftSession]] resolves it once per JVM, so
+  * every JVM that places scratch on tmpfs gets the same headroom
+  * check, its own directory and the same fallback.
   *
   * Shuffle scratch goes on the fastest local storage available (r18,
   * guide §2.1: local disk bandwidth for shuffle files is often the

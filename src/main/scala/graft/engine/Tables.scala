@@ -262,15 +262,7 @@ object Tables {
     */
   def registerAll(spark: SparkSession, sfDir: String): Unit = synchronized {
     if (registered.get(spark) == sfDir) return
-    graft.functions.CosineSimilarity.register(spark) // native fn library
-    graft.functions.DotProduct.register(spark)
-    graft.functions.HyperplaneBands.register(spark)
-    graft.functions.CollectCappedLongs.register(spark)
-    graft.functions.SortedIntersectCount.register(spark)
-    graft.functions.MinHashSketch.register(spark)
-    graft.functions.SimHashSketch.register(spark)
-    graft.functions.TopKPairs.register(spark)
-    graft.functions.SrpBandSigs.register(spark)
+    graft.functions.Catalog.register(spark)
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     spark.conf.set("spark.sql.cbo.enabled", "true")
     spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")

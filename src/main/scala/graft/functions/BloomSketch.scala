@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, XXH64}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -123,10 +121,4 @@ object BloomSketch {
     BloomSketch(children.head, BuilderArgs.intLit(name, children(1), "words"),
       BuilderArgs.intLit(name, children(2), "k"))
   }
-
-  /** Idempotent per-session registration (same pattern as
-    * [[MinHashSketch]]). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name), info, builder)
 }

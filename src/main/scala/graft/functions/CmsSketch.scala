@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, XXH64}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -146,10 +144,4 @@ object CmsSketch {
     CmsSketch(children.head, BuilderArgs.intLit(name, children(1), "depth"),
       BuilderArgs.intLit(name, children(2), "width"))
   }
-
-  /** Idempotent per-session registration (same pattern as
-    * [[BloomSketch]]). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name), info, builder)
 }

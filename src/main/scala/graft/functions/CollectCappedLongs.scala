@@ -4,8 +4,6 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -119,10 +117,4 @@ object CollectCappedLongs {
     CollectCappedLongs(children.head,
       BuilderArgs.intLit(name, children(1), "limit"))
   }
-
-  /** Idempotent per-session registration (same pattern as
-    * [[CosineSimilarity]] / [[HyperplaneBands]]). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name), info, builder)
 }

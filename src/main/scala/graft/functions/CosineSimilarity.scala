@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native cosine-similarity over two double arrays — a codegen'd
@@ -133,10 +131,4 @@ object CosineSimilarity {
     CosineSimilarity(Cast(children(0), ArrayType(DoubleType)),
       Cast(children(1), ArrayType(DoubleType)))
   }
-
-  /** Idempotent per-session registration (fallback path for sessions
-    * built without `spark.sql.extensions`). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name), info, builder)
 }

@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Random-hyperplane (SimHash-family) banded LSH signatures over a
@@ -160,12 +158,6 @@ object HyperplaneBands {
       BuilderArgs.intLit(name, children(2), "nBands"),
       BuilderArgs.longLit(name, children(3), "seed"))
   }
-
-  /** Idempotent per-session registration (fallback for sessions built
-    * without `spark.sql.extensions`). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name), info, builder)
 
   /** Pick (bitsPerBand, nBands) for a cosine threshold `tau` so the
     * probability of missing a true pair is below `maxMiss`, using at

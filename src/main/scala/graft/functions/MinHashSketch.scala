@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, XXH64}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -110,10 +108,4 @@ object MinHashSketch {
     require(children.length == 2, s"$name expects (col, k)")
     MinHashSketch(children.head, BuilderArgs.intLit(name, children(1), "k"))
   }
-
-  /** Idempotent per-session registration (same pattern as
-    * [[CosineSimilarity]] / [[HyperplaneBands]]). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name), info, builder)
 }

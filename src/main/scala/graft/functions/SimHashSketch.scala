@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -86,10 +84,4 @@ object SimHashSketch {
     require(children.length == 1, s"$name expects (col)")
     SimHashSketch(children.head)
   }
-
-  /** Idempotent per-session registration (same pattern as
-    * [[CosineSimilarity]] / [[HyperplaneBands]]). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name), info, builder)
 }

@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** `|A ∩ B|` of two SORTED, DISTINCT long arrays as a single merge
@@ -138,10 +136,4 @@ object SortedIntersectCount {
     require(children.length == 2, s"$name expects 2 arguments")
     SortedIntersectCount(children(0), children(1))
   }
-
-  /** Idempotent per-session registration (fallback path for sessions
-    * built without `spark.sql.extensions`). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name), info, builder)
 }

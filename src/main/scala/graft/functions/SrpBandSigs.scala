@@ -2,8 +2,6 @@ package graft.functions
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -147,10 +145,4 @@ object SrpBandSigs {
     SrpBandSigs(children.head, BuilderArgs.intLit(name, children(1), "bands"),
       BuilderArgs.intLit(name, children(2), "bits"))
   }
-
-  /** Idempotent per-session registration (same pattern as
-    * [[HyperplaneBands]]). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name), info, builder)
 }

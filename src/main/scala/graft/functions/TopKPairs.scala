@@ -2,8 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -200,10 +198,4 @@ object TopKPairs {
     TopKPairs(children(0), children(1),
       BuilderArgs.intLit(name, children(2), "k"))
   }
-
-  /** Idempotent per-session registration (same pattern as
-    * [[CollectCappedLongs]]). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name), info, builder)
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
-import graft.functions.DotProduct
 
 /** Embedding-space clustering + cluster-scoped semantic dedup — the
   * SemDeDup curation verb (Abbas et al. 2023: k-means the corpus
@@ -438,7 +437,6 @@ object Clustering {
     * chunk broadcast — so driver state is O(chunk·dim), not
     * O(k·dim) with k = n/625 ∝ n. */
   private[graft] def kmeans(spark: SparkSession, corpus: DataFrame): DataFrame = {
-    DotProduct.register(spark)
     val k = kFor(corpus.count())
     if (k <= CentroidChunk) {
       val (q, centroids) = kmeansModel(spark, corpus, Some(k))
@@ -473,7 +471,6 @@ object Clustering {
     * unbounded-k form is [[kmeansFitChunked]]. */
   private[graft] def kmeansModel(spark: SparkSession, corpus: DataFrame,
       kOpt: Option[Long] = None): (DataFrame, Seq[(Long, Array[Long])]) = {
-    DotProduct.register(spark)
     val q = quantized(corpus)
     val k = kOpt.getOrElse(kFor(corpus.count()))
     // deterministic seeds: k rows, rank = position in (md5, vec_id)
@@ -570,7 +567,6 @@ object Clustering {
   private[graft] def kmeansFitChunked(spark: SparkSession, corpus: DataFrame,
       kOpt: Option[Long] = None, chunk: Long = CentroidChunk)
       : (DataFrame, DataFrame) = {
-    DotProduct.register(spark)
     val q = quantized(corpus)
     val k = kOpt.getOrElse(kFor(corpus.count()))
     // rank = row_number in (md5, vec_id) order, distributed:
@@ -642,7 +638,6 @@ object Clustering {
   private[graft] def probeBatchSemanticTracked(batch: DataFrame,
       centroids: Seq[(Long, Array[Long])], members: DataFrame)
       : (DataFrame, DataFrame) = {
-    DotProduct.register(batch.sparkSession)
     val ba = withAssignment(batch
         .select(col("vec_id"), qvCol.as("qv"))
         .withColumn("qvd", expr("transform(qv, x -> cast(x as double))"))

@@ -524,7 +524,6 @@ object CorpusIO {
     * xxhash64(contentHash). F bitmap rows — metadata-sized. */
   private[graft] def bloomIndex(spark: SparkSession,
                                 dir: String): Array[(String, Array[Long])] = {
-    graft.functions.BloomSketch.register(spark)
     spark.read.parquet(dir)
       .select(col("_metadata.file_path").as("file"),
         xxhash64(contentHash(col("text"))).as("fp"))

@@ -117,9 +117,6 @@ object Dedup {
     * cache manager dedupes by plan so repeated calls share one
     * materialization. */
   private[graft] def shingleSets(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.CollectCappedLongs.register(spark)
-    graft.functions.SortedIntersectCount.register(spark)
-    graft.functions.MinHashSketch.register(spark)
     ngramHashSets(spark, sfDir, 3).persist()
   }
 
@@ -167,7 +164,6 @@ object Dedup {
     * in corpus size.
     */
   private[graft] def cappedCandidates(ex: DataFrame): DataFrame = {
-    graft.functions.CollectCappedLongs.register(ex.sparkSession) // idempotent
     ex.groupBy(col("h"))
       .agg(expr(s"graft_collect_capped(doc_id, ${MaxShingleDf + 1})").as("docs"))
       .filter(size(col("docs")).between(2, MaxShingleDf))
@@ -222,9 +218,6 @@ object Dedup {
     */
   private[graft] def verifiedPairs(sets: DataFrame, cand: DataFrame,
                                    threshold: Double): DataFrame = {
-    // idempotent; callers may supply their own `sets` frame without
-    // going through shingleSets' registrations
-    graft.functions.SortedIntersectCount.register(sets.sparkSession)
     val sizes = sets.select(col("doc_id"), size(col("hs")).as("n"))
     // The size joins are explicit broadcasts — both the intended
     // physical plan (the comment above: a doc-count projection of two
@@ -275,9 +268,6 @@ object Dedup {
     * the same min shingle.
     */
   private[graft] def minhashSignatures(ex: DataFrame): DataFrame = {
-    // idempotent; keeps the sketch usable when a caller reaches the
-    // banded path without going through shingleSets' registrations
-    graft.functions.MinHashSketch.register(ex.sparkSession)
     ex.groupBy(col("doc_id"))
       .agg(expr(s"graft_minhash(h, $NumHashes)").as("sig"))
   }
@@ -350,7 +340,6 @@ object Dedup {
     * fingerprint bits 60..63 are always 0 in both forms).
     */
   private[graft] def simhashes(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.SimHashSketch.register(spark)
     tokenStream(spark, sfDir)
       .select(col("doc_id"), expr(simhashTokenHashSql).as("h"))
       .groupBy(col("doc_id"))

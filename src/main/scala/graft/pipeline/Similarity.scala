@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
 
 import graft.engine.Tables
-import graft.functions.{CosineSimilarity, DotProduct, HyperplaneBands, SrpBandSigs, TopKPairs}
+import graft.functions.HyperplaneBands
 
 /** Similarity search + embedding near-dup over the `embeddings`
   * table (64-dim FLOAT vectors). Exact paths are the oracle-checked
@@ -286,11 +286,6 @@ object Similarity {
 
   /** embeddings as double arrays: (vec_id, v). */
   private[graft] def vecs(spark: SparkSession, sfDir: String): DataFrame = {
-    CosineSimilarity.register(spark)
-    DotProduct.register(spark)
-    HyperplaneBands.register(spark)
-    TopKPairs.register(spark)
-    SrpBandSigs.register(spark)
     Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(x as double))").as("v"))

@@ -636,7 +636,6 @@ object TextAnalysis {
     // hash on the flag columns.
     "cms1_heavy_hitters" -> ((spark, sfDir) => {
       import graft.functions.CmsSketch
-      CmsSketch.register(spark)
       val terms = termStream(docs(spark, sfDir))
       val sketch = terms
         .select(xxhash64(col("term")).as("k"))

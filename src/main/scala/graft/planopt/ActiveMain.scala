@@ -3,7 +3,7 @@ package graft.planopt
 import breeze.linalg.DenseMatrix
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.engine.Tables
+import graft.engine.{GraftSession, Tables}
 import graft.queries.Relational
 import graft.workload.{Harvester, WorkloadGen}
 
@@ -44,14 +44,7 @@ object ActiveMain {
     val epochs = args.lift(3).map(_.toInt).getOrElse(60)
     val outDir = args.lift(4).getOrElse("results/r7_active")
     val poolFile = args.lift(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.create()
     val log = new Pipelines.Logger(Some(s"$outDir/log.txt"))
     Tables.registerAll(spark, sfDir)
 

@@ -1,8 +1,6 @@
 package graft.planopt
 
-import org.apache.spark.sql.SparkSession
-
-import graft.engine.Tables
+import graft.engine.{GraftSession, Tables}
 
 /** Post-hoc OVERHEAD-AWARE recalibration of a saved margin gate
   * (r18): the golden's first calibration maximized label-time net
@@ -29,14 +27,7 @@ object GateRecalMain {
     val poolFile = args.lift(3).getOrElse("results/r14_pool/train_pool.txt")
     val nCalib = args.lift(4).map(_.toInt).getOrElse(200)
     val overheadMs = args.lift(5).map(_.toDouble).getOrElse(40.0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.create()
     val log = new Pipelines.Logger(Some(s"$artDir/gate_recal.log"))
     Tables.registerAll(spark, sfDir)
 

@@ -2,7 +2,7 @@ package graft.planopt
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.engine.Tables
+import graft.engine.{GraftSession, Tables}
 import graft.queries.Relational
 import graft.workload.{Harvester, WorkloadGen}
 
@@ -47,14 +47,7 @@ object StableMain {
     val epochs = args.lift(2).map(_.toInt).getOrElse(60)
     val outDir = args.lift(3).getOrElse("results/r7_stable")
     val poolFile = args.lift(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.create()
     val log = new Pipelines.Logger(Some(s"$outDir/log.txt"))
     Tables.registerAll(spark, sfDir)
 
@@ -213,7 +206,7 @@ object StableMain {
     ModelIO.saveGate(modelDir, gateModel, gateCal)
     log.info(s"saved model artifact (+ margin gate, threshold=" +
       f"${gateCal.threshold}%.4f) to $modelDir")
-    E2EPhases.run(spark, sfDir, cpus, testQ, modelDir, log)
+    E2EPhases.run(spark, sfDir, testQ, modelDir, log)
     log.close()
     spark.stop()
   }
@@ -250,7 +243,7 @@ object StableMain {
   * JVM — the r14-verdict contention-attribution discipline applied to
   * the E2E numbers, not just the bench). */
 private[planopt] object E2EPhases {
-  def run(spark: SparkSession, sfDir: String, cpus: String,
+  def run(spark: SparkSession, sfDir: String,
           testQ: Seq[(String, SparkSession => DataFrame)],
           modelDir: String, log: Pipelines.Logger): Unit = {
     graft.plans.PlanChoice.installFrom(modelDir)
@@ -271,16 +264,8 @@ private[planopt] object E2EPhases {
     def extSession(extra: Seq[(String, String)]): SparkSession = {
       org.apache.spark.sql.SparkSession.clearActiveSession()
       org.apache.spark.sql.SparkSession.clearDefaultSession()
-      val b = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "false") // pin chosen plans
-        .withExtensions(new graft.engine.GraftExtensions)
-      extra.foreach { case (k, v) => b.config(k, v) }
-      val s = b.getOrCreate()
-      s.sparkContext.setLogLevel("ERROR")
+      val s = GraftSession.create(_.config("spark.sql.adaptive.enabled", "false") // pin chosen plans
+        .config(extra.toMap).withExtensions(new graft.engine.GraftExtensions))
       Tables.registerAll(s, sfDir)
       s
     }
@@ -392,21 +377,14 @@ object StableE2EMain {
     val numGen = args.lift(1).map(_.toInt).getOrElse(300)
     val artDir = args.lift(2).getOrElse("results/r15_stable_300")
     val poolFile = args.lift(3).getOrElse("results/r14_pool/train_pool.txt")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.create()
     val log = new Pipelines.Logger(Some(s"$artDir/e2e_clean.log"))
     Tables.registerAll(spark, sfDir)
     val (_, testQ) = StableMain.assembleWorkload(sfDir,
       StableMain.poolSample(poolFile, numGen, log))
     log.info(s"replaying E2E phases over ${testQ.size} held-out queries " +
       s"against $artDir/stable_model (clean JVM)")
-    E2EPhases.run(spark, sfDir, cpus, testQ, s"$artDir/stable_model", log)
+    E2EPhases.run(spark, sfDir, testQ, s"$artDir/stable_model", log)
     log.close()
     spark.stop()
   }

@@ -34,7 +34,6 @@ object CmsStream {
     * row per trigger carrying the running sketch + term count. */
   def sketchStream(spark: SparkSession, sfDir: String,
                    docsDir: String): DataFrame = {
-    graft.functions.CmsSketch.register(spark)
     val schema = Tables.load(spark, sfDir, "documents").schema
     val docs = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(docsDir)

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
+import graft.engine.GraftSession
 import graft.pipeline.Similarity
 
 /** Diagnostic: measures dd10's adaptive-banding claim at a given
@@ -34,14 +34,7 @@ object AdaptiveScaleMain {
     val (fixedBits, fixedBands) =
       if (args.length >= 3) (args(1).toInt, args(2).toInt) else (7, 17)
     val replicate = args.lift(3).map(_.toInt).getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.create()
 
     import org.apache.spark.sql.functions.{col, expr, lit}
     val base = Similarity.plantedVecs(spark, sfDir)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit dump + MECHANICAL checklist over the whole query surface
   * (r9 verdict #3).
   *
@@ -180,17 +178,10 @@ object ExplainMain {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("PLANS.md")
     val pin = args.contains("--pin")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ReadSchema/PushedFilters in the formatted explain are clipped
-      // at 100 chars by default — the field-count check needs them whole
-      .config("spark.sql.maxMetadataStringLength", "100000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // ReadSchema/PushedFilters in the formatted explain are clipped
+    // at 100 chars by default — the field-count check needs them whole
+    val spark = graft.engine.GraftSession.create(
+      _.config("spark.sql.maxMetadataStringLength", "100000"))
     graft.engine.Tables.registerAll(spark, sfDir)
     val tableWidths = graft.engine.Tables.names.map { t =>
       t -> graft.engine.Tables.load(spark, sfDir, t).schema.length

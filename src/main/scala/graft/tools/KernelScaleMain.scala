@@ -2,9 +2,9 @@ package graft.tools
 
 import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.engine.GraftSession
 import graft.pipeline.Clustering
 
 /** Measures the r14 verdict-#2 claim that motivates the
@@ -32,15 +32,7 @@ object KernelScaleMain {
     val timeoutSec = args.lift(2).map(_.toInt).getOrElse(300)
     val outJson = args.lift(3).getOrElse("results/r15_kernel/kernel_scale.json")
     val dim = 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.DotProduct.register(spark)
+    val spark = GraftSession.create()
 
     // synthetic corpus with the clu1 column contract (qvd exact-int
     // doubles, qn = |q|²): values in clu1's quantized range

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `explain("formatted")` for a named subset of SparkEntry
   * queries into per-query files — the before/after plan evidence the
   * optimization rounds commit under `plans/r<N>/`.
@@ -17,15 +15,8 @@ object PlanDumpMain {
     val outDir = args(1)
     val suffix = args(2)
     val names = args(3).split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.maxMetadataStringLength", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.engine.GraftSession.create(
+      _.config("spark.sql.maxMetadataStringLength", "10000"))
     graft.engine.Tables.registerAll(spark, sfDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Scratch probe — rewritten per investigation; not part of any gate.
   *
@@ -25,16 +25,7 @@ object ProbeMain {
     val reps = args.lift(1).map(_.toInt).getOrElse(11)
     val names = args.lift(2).map(_.split(",").toSeq)
       .getOrElse(Seq("pr2_pagerank_converged"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = graft.engine.ScratchDir.resolve()
-      .fold(builder)(d => builder.config("spark.local.dir", d)).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.engine.GraftSession.create()
     graft.engine.Tables.registerAll(spark, sfDir)
     def reset(): Unit = {
       spark.catalog.clearCache()

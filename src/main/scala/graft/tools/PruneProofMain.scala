@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
+
+import graft.engine.GraftSession
 
 /** Partition-pruning PROOF at an arbitrary scale factor (r17 verdict
   * #6 — widen the sf10 spot-certification with an io-layout pruning
@@ -25,14 +26,7 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 object PruneProofMain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.create()
     val df = graft.pipeline.CorpusIO.partitionedRead(spark, sfDir)
     val scan = df.queryExecution.executedPlan.collectLeaves()
       .collectFirst { case f: FileSourceScanExec => f }

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.engine.GraftSession
 import graft.pipeline.Clustering
 
 /** Measures the r15 verdict-#2 claim that motivates the chunked
@@ -32,15 +32,7 @@ object RefitScaleMain {
     val nRows = args.lift(1).map(_.toInt).getOrElse(262144)
     val outJson = args.lift(2).getOrElse("results/r16_kernel/refit_scale.json")
     val dim = 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.DotProduct.register(spark)
+    val spark = GraftSession.create()
 
     // clustered corpus (KernelScaleMain's qc shape): centroid term
     // plus hash noise three orders of magnitude below the value range

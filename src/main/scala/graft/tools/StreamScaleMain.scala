@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{GraftSession, Tables}
 import graft.pipeline.Dedup
 import graft.streaming.{BotFilterStream, FunnelStream, IngestDedupStream,
   SessionizeStream}
@@ -52,17 +51,9 @@ object StreamScaleMain {
     val dataDir = args(0)
     val outFile = args(1)
     val nBatches = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // keep every micro-batch's progress object (default cap is 100)
-      .config("spark.sql.streaming.numRecentProgressUpdates",
-        (nBatches + 16).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // keep every micro-batch's progress object (default cap is 100)
+    val spark = GraftSession.create(
+      _.config("spark.sql.streaming.numRecentProgressUpdates", (nBatches + 16).toString))
 
     val sb = new StringBuilder
     sb ++= s"""{"data_dir":"$dataDir","n_batches":$nBatches"""

@@ -2,7 +2,7 @@ package graft.workload
 
 import org.apache.spark.sql.SparkSession
 
-import graft.engine.Tables
+import graft.engine.{GraftSession, Tables}
 
 /** Workload-scale parity artifact (r13 verdict #5): the reference
   * ships 20k-query pools (`create_sql.py:96` num_sql=20000;
@@ -38,14 +38,7 @@ object PoolMain {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.001")
     val numSql = args.lift(1).map(_.toInt).getOrElse(20000)
     val outDir = args.lift(2).getOrElse("results/r14_pool")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.create()
     Tables.registerAll(spark, sfDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
 

@@ -22,7 +22,6 @@ class ClusteringChunkedSpec extends AnyFunSuite {
   test("one chunked Lloyd refit round is bit-identical to the legacy " +
     "collect-based refit at an engaged k (RefitScaleMain's contract)") {
     import graft.pipeline.Clustering
-    graft.functions.DotProduct.register(spark)
     val k = 256
     val nRows = 2048
     val dim = 8

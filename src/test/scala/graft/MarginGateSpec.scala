@@ -110,31 +110,6 @@ class MarginGateSpec extends AnyFunSuite {
 
   // ---- in-engine behavior ----
 
-  private def withExtensionSession[T](body: SparkSession => T): T = {
-    spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "false")
-        .config(PlanChoice.MinInputBytesKey, "0")
-        .withExtensions(new graft.engine.GraftExtensions)
-        .getOrCreate()
-      try body(s2)
-      finally {
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-      }
-    } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
-    }
-  }
-
   test("gate declines routing below threshold, routes above, caches declines") {
     val build = (s: SparkSession) => Relational.defs("j1_join_2way")(s, sf)
     val cands = Candidates.enumerate(spark, build)

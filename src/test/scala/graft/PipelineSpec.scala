@@ -48,7 +48,6 @@ class PipelineSpec extends AnyFunSuite {
 
   test("collect_capped buffers never exceed the limit and mark overflow") {
     import spark.implicits._
-    graft.functions.CollectCappedLongs.register(spark)
     val df = Seq.tabulate(100)(i => (i % 3).toLong -> i.toLong)
       .toDF("k", "v")
       .repartition(8)
@@ -538,7 +537,6 @@ class PipelineSpec extends AnyFunSuite {
     }
     val sets = rows.toDF("doc_id", "hs")
     val ex = sets.select(col("doc_id"), explode(col("hs")).as("h"))
-    graft.functions.CollectCappedLongs.register(spark)
     assert(Dedup.cappedCandidates(ex).count() == 0,
       "capped generation unexpectedly produced candidates for a hot cluster")
     val banded = Dedup.verifiedPairs(sets, Dedup.bandedCandidates(ex), 0.8)
@@ -608,8 +606,6 @@ class PipelineSpec extends AnyFunSuite {
     }
     import spark.implicits._
     val e = rows.toDF("vec_id", "v")
-    graft.functions.CosineSimilarity.register(spark)
-    graft.functions.HyperplaneBands.register(spark)
     val exact = Similarity.knnJoinExact(e, 5).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     val blocked = Similarity.knnJoinBlocked(e, 5, bits = 10, bands = 60)
@@ -658,8 +654,6 @@ class PipelineSpec extends AnyFunSuite {
     }
     import spark.implicits._
     val e = rows.toDF("vec_id", "v")
-    graft.functions.CosineSimilarity.register(spark)
-    graft.functions.HyperplaneBands.register(spark)
     val exact = Similarity.knnJoinExact(e, 5).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     val auto = Similarity.knnJoinBlockedAuto(e, 5, tauFloor = 0.9)
@@ -691,9 +685,6 @@ class PipelineSpec extends AnyFunSuite {
     }
     import spark.implicits._
     val e = rows.toDF("vec_id", "v")
-    graft.functions.CosineSimilarity.register(spark)
-    graft.functions.DotProduct.register(spark)
-    graft.functions.HyperplaneBands.register(spark)
     // (1) cap ≥ every bucket (30 members max) is PROVABLY a no-op —
     // byte-identical result to the uncapped path (this is the dormancy
     // argument that lets sim6 share sim5's exact oracle at gate scale)
@@ -1056,12 +1047,10 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("hyperplane band signatures: codegen equals interpreted eval") {
-    import graft.functions.HyperplaneBands
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    HyperplaneBands.register(spark)
     // codegen'd path through SQL
     val sql = spark.sql(
       "SELECT graft_hyperplane_bands(array(0.3D, -1.2D, 0.7D, 2.5D), 4, 8, 42) AS s")
@@ -1093,7 +1082,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("graft_hyperplane_bands raises on null elements") {
-    graft.functions.HyperplaneBands.register(spark)
     val err = intercept[Exception] {
       spark.sql(
         "SELECT graft_hyperplane_bands(array(1.0D, cast(null as double)), 4, 8, 42) AS s")
@@ -1104,7 +1092,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("graft_cosine raises on length mismatch and null elements") {
-    graft.functions.CosineSimilarity.register(spark)
     val mismatch = intercept[Exception] {
       spark.sql("SELECT graft_cosine(array(1.0D, 2.0D), array(1.0D)) AS c")
         .head()
@@ -1121,7 +1108,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("native graft_cosine matches the composable HOF formulation") {
-    graft.functions.CosineSimilarity.register(spark)
     val both = Tables.load(spark, sf, "embeddings").limit(50)
       .select(
         expr("graft_cosine(embedding, embedding)").as("self"),
@@ -1136,7 +1122,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("graft_cosine resolves in SQL and rejects bad arity/types") {
-    graft.functions.CosineSimilarity.register(spark)
     val v = spark.sql(
       "SELECT graft_cosine(array(1.0D, 0.0D), array(0.0D, 1.0D)) AS c")
       .head().getDouble(0)

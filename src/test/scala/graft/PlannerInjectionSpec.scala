@@ -14,38 +14,6 @@ import graft.queries.Relational
 class PlannerInjectionSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  /** A fresh session wired through GraftExtensions on the shared
-    * SparkContext (builder path a user would configure with
-    * `spark.sql.extensions=graft.engine.GraftExtensions`). */
-  private def withExtensionSession[T](body: SparkSession => T): T = {
-    spark // force base session (and its SparkContext) first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        // pin plans for deterministic assertions (AQE may re-plan)
-        .config("spark.sql.adaptive.enabled", "false")
-        // sf0.001 inputs are far below the default 4 MB size bypass;
-        // these tests exercise routing itself, so disable the bypass
-        // (its own behavior has a dedicated test below)
-        .config(PlanChoice.MinInputBytesKey, "0")
-        .withExtensions(new graft.engine.GraftExtensions)
-        .getOrCreate()
-      try body(s2)
-      finally {
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-      }
-    } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
-    }
-  }
-
   test("extension session executes the model-chosen physical variant") {
     // train-side artifacts from the BASE session (no extensions — the
     // strategy must not fire during enumeration)

@@ -3,17 +3,37 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.Tables
+import graft.engine.{GraftExtensions, GraftSession, Tables}
+import graft.plans.PlanChoice
 import graft.queries.Relational
 
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.create()
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Run `body` on the session `build` makes on the shared context
+    * (active and default for the duration); the shared session is the
+    * active and default one again afterwards. */
+  def withSession[T](build: => SparkSession)(body: SparkSession => T): T = {
+    spark // force the shared session (and its SparkContext) first
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try body(build)
+    finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
+
+  /** A learned-planner session, as a user configures one with
+    * `spark.sql.extensions=graft.engine.GraftExtensions`: AQE off to pin
+    * plans for deterministic assertions, and the input-size bypass off,
+    * because sf0.001 inputs are far below its default 4 MB (the bypass
+    * has its own test). */
+  def withExtensionSession[T](body: SparkSession => T): T =
+    withSession(GraftSession.create(_.config("spark.sql.adaptive.enabled", "false")
+      .config(PlanChoice.MinInputBytesKey, "0")
+      .withExtensions(new GraftExtensions)))(body)
 }
 
 class RelationalSpec extends AnyFunSuite {

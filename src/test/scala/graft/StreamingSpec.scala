@@ -40,7 +40,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming count-min sketch drains to the bit-identical batch sketch") {
     import org.apache.spark.sql.functions._
-    graft.functions.CmsSketch.register(spark)
     // batch ground truth: one-pass sketch over the whole corpus
     val batchRow = graft.pipeline.TextAnalysis.termStream(
         graft.engine.Tables.load(spark, sf, "documents"))

@@ -5,7 +5,6 @@ import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 import java.util.Locale
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -63,19 +62,7 @@ object PoolChoices {
     * tables live in their own database (the shared default database
     * keeps the suite's sf0.001 tables), then once with the strategy
     * switched off, and return the header and rows. */
-  def rows(): Seq[String] = {
-    val base = SparkTestSession.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config(PlanChoice.MinInputBytesKey, "0")
-      .withExtensions(new graft.engine.GraftExtensions)
-      .getOrCreate()
+  def rows(): Seq[String] = SparkTestSession.withExtensionSession { s =>
     try {
       s.sql("CREATE DATABASE IF NOT EXISTS graft_pool_choices")
       s.catalog.setCurrentDatabase("graft_pool_choices")
@@ -114,10 +101,6 @@ object PoolChoices {
     } finally {
       PlanChoice.uninstall()
       s.sql("DROP DATABASE IF EXISTS graft_pool_choices CASCADE")
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
     }
   }
 
