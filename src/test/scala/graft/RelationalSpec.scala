@@ -29,9 +29,12 @@ object SparkTestSession {
     * `spark.sql.extensions=graft.engine.GraftExtensions`: AQE off to pin
     * plans for deterministic assertions, and the input-size bypass off,
     * because sf0.001 inputs are far below its default 4 MB (the bypass
-    * has its own test). */
+    * has its own test). Shuffle partitions stay at 4 whatever the core
+    * count: a hash exchange prints its partition count, and the plan
+    * hashes in `planchoice/pool_choices.tsv` were pinned at 4. */
   def withExtensionSession[T](body: SparkSession => T): T =
     withSession(GraftSession.create(_.config("spark.sql.adaptive.enabled", "false")
+      .config("spark.sql.shuffle.partitions", "4")
       .config(PlanChoice.MinInputBytesKey, "0")
       .withExtensions(new GraftExtensions)))(body)
 }

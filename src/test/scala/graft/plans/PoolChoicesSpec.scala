@@ -15,7 +15,7 @@ import graft.planopt.Candidates
   * one TSV row per query: the first 15 5-way and 15 7-way join queries
   * of `results/r14_pool/train_pool.txt` at sf0.01, served with the
   * model and margin gate of `results/r18_stable_1000/stable_model`,
-  * the size bypass off and AQE off.
+  * the size bypass off, AQE off and 4 shuffle partitions.
   *
   * Columns: the decision (`routed`/`declined`) and the gate declines
   * the first planning counted; the remembered knob label and
