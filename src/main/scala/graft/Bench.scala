@@ -80,10 +80,6 @@ object Bench {
         .foreach(_.unpersist(blocking = true))
       System.gc()
     }
-    // Optional subset for local iteration (driver never sets this):
-    // SPARK_GRAFT_ONLY=dd2_ngram_jaccard,dd3_minhash_lsh
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // per-(pass, query) diagnostics JSON objects for bench_diag.json,
     // plus the warm pass's structured metrics for the contention
     // classifier (BenchEnv)
@@ -91,9 +87,7 @@ object Bench {
     val warmMetrics = scala.collection.mutable.Map[String, BenchDiag#Snap]()
     val coldMetrics = scala.collection.mutable.Map[String, BenchDiag#Snap]()
     def timeAll(pass: String, recordErrors: Boolean): Seq[(String, Double)] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.forall(_.contains(name)) }
-        .map { case (name, fn) =>
+      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
         resetState()
         diag.snapshotDelta(spark.sparkContext) // reset the delta window
         val t0 = System.nanoTime()
@@ -118,10 +112,8 @@ object Bench {
     // primary (cold) pass — the round-over-round comparable number;
     // second (warm) pass reports steady-state with codegen/JIT caches
     // hot, which is what amortized cluster throughput looks like
-    val coldRuns = scala.collection.mutable.LinkedHashMap(
-      timeAll("cold", recordErrors = true): _*)
-    val warmRuns = scala.collection.mutable.LinkedHashMap(
-      timeAll("warm", recordErrors = false): _*)
+    val results = timeAll("cold", recordErrors = true)
+    val warm = timeAll("warm", recordErrors = false)
     // contention self-attribution (r14 verdict #6 + r15 verdict #1):
     // one pass slower than the other at zero GC/spill and identical
     // shuffle volume is the hypervisor-contention signature — stamp
@@ -129,71 +121,16 @@ object Bench {
     // instead of needing forensic comparison against a clean re-record.
     // BOTH directions are tested: the r15 driver run was descheduled
     // during the COLD pass and the warm-only rule stamped it "clean".
-    def buildSamples(): Map[String, BenchEnv.Sample] = coldRuns.toSeq.collect {
-      case (name, cold) if warmRuns.contains(name) =>
-        val wm = warmMetrics.get(name)
-        val cm = coldMetrics.get(name)
-        name -> BenchEnv.Sample(cold, warmRuns(name),
-          wm.map(_.jvmGcMs).getOrElse(0L),
-          wm.map(x => x.memSpill + x.diskSpill).getOrElse(0L),
-          cm.map(_.jvmGcMs).getOrElse(0L),
-          cm.map(x => x.memSpill + x.diskSpill).getOrElse(0L),
-          cm.map(x => x.shuffleWrite + x.shuffleRead).getOrElse(-1L),
-          wm.map(x => x.shuffleWrite + x.shuffleRead).getOrElse(-1L))
+    // Every sample is reported as measured: a flagged run is labelled,
+    // never re-run and substituted.
+    val samples = results.zip(warm).map {
+      case ((name, cold), (_, warmSec)) =>
+        val (cm, wm) = (coldMetrics(name), warmMetrics(name))
+        name -> BenchEnv.Sample(cold, warmSec,
+          wm.jvmGcMs, wm.memSpill + wm.diskSpill,
+          cm.jvmGcMs, cm.memSpill + cm.diskSpill,
+          cm.shuffleWrite + cm.shuffleRead, wm.shuffleWrite + wm.shuffleRead)
     }.toMap
-    // Anomaly RE-MEASUREMENT (r16 verdict #2): ~8 s of the r16
-    // headline was self-attributed hypervisor noise the artifact could
-    // have excluded. Any query the classifier flags on either side is
-    // re-run once under the identical reset+diag protocol and the
-    // flagged side keeps min(original, re-measured) — a descheduled
-    // sample is replaced by a real one; a genuinely slow query keeps
-    // its number (the re-run can only confirm, never inflate). Every
-    // substitution is recorded in env.remeasured (orig + new + kept)
-    // so the headline stays honest about what was measured when. Note
-    // a cold-side substitution runs in a now-warm JVM, so it excludes
-    // one-time compile cost along with the contention — the recorded
-    // `orig` preserves the raw sample for anyone who wants it back.
-    val remeasured = scala.collection.mutable.ArrayBuffer[String]()
-    // PRE-substitution snapshot: the contention verdict and anomaly
-    // lists are derived from (and stamped for) THESE samples — a
-    // substitution changes a sample's provenance (re-run in a warm
-    // JVM), so classifying post-substitution data could fabricate
-    // flags that were never measured or erase the verdict that
-    // triggered the re-measurement (r17 advice #1).
-    val preSamples = buildSamples()
-    val rawColdTotal = coldRuns.values.sum
-    val rawWarmTotal = warmRuns.values.sum
-    locally {
-      val (_, warmAnoms, coldAnoms) = BenchEnv.verdictFull(preSamples)
-      val flagged = warmAnoms.map(_ -> "warm") ++ coldAnoms.map(_ -> "cold")
-      flagged.foreach { case (name, side) =>
-        SparkEntry.queries.get(name).foreach { fn =>
-          resetState()
-          diag.snapshotDelta(spark.sparkContext)
-          val t0 = System.nanoTime()
-          // a THROWING re-run measures time-to-exception, not the
-          // query — it must never substitute (a transient failure
-          // would smuggle a near-zero sample into the headline)
-          val ran =
-            try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-            catch { case scala.util.control.NonFatal(_) => false }
-          val sec = (System.nanoTime() - t0) / 1e9
-          val m = diag.snapshotDelta(spark.sparkContext)
-          diagRows += s"""{"pass":"remeasure","query":"$name","sec":${num3(sec)},""" +
-            s""""ok":$ran,"m":${m.toJson}}"""
-          val orig = if (side == "warm") warmRuns(name) else coldRuns(name)
-          val kept = if (ran) math.min(orig, sec) else orig
-          if (ran && sec < orig) {
-            if (side == "warm") { warmRuns(name) = sec; warmMetrics(name) = m }
-            else { coldRuns(name) = sec; coldMetrics(name) = m }
-          }
-          remeasured += s"""{"query":"$name","side":"$side","orig":${num3(orig)},""" +
-            s""""new":${num3(sec)},"ok":$ran,"kept":${num3(kept)}}"""
-        }
-      }
-    }
-    val results = coldRuns.toSeq
-    val warm = warmRuns.toSeq
     def toJson(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + num3(v) }
         .mkString("{", ",", "}")
@@ -201,20 +138,17 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val warmTotal = warm.map(_._2).sum
-    // value_raw/warm_total_raw (r17 advice #3): the UNSUBSTITUTED
-    // totals — a cold-side substitution runs in a warm JVM and
-    // excludes compile cost, so the substituted headline quietly
-    // changes meaning between rounds with and without substitutions;
-    // the raw totals keep cross-round comparisons one field away.
-    val envVerdict = BenchEnv.envJson(preSamples, remeasured.toSeq,
-      postContention = Some(BenchEnv.verdict(buildSamples())._1))
+    // value_raw/warm_total_raw equal value/warm_total: the keys stay so
+    // readers of earlier artifacts (where a re-measure substitution
+    // could lower `value`) parse every round the same way.
+    val envVerdict = BenchEnv.envJson(samples)
     val json =
       "{" +
         "\"metric\":\"total\",\"value\":" + num3(total) + "," +
-        "\"value_raw\":" + num3(rawColdTotal) + "," +
+        "\"value_raw\":" + num3(total) + "," +
         "\"unit\":\"sec\",\"queries\":" + toJson(results) + "," +
         "\"warm_total\":" + num3(warmTotal) + "," +
-        "\"warm_total_raw\":" + num3(rawWarmTotal) + "," +
+        "\"warm_total_raw\":" + num3(warmTotal) + "," +
         "\"queries_warm\":" + toJson(warm) + "," +
         "\"errors\":" + errJson + "," +
         "\"env\":" + envVerdict + "," +
@@ -237,14 +171,14 @@ object Bench {
     val stdoutJson =
       "{" +
         "\"metric\":\"total\",\"value\":" + num3(total) + "," +
-        "\"value_raw\":" + num3(rawColdTotal) + "," +
+        "\"value_raw\":" + num3(total) + "," +
         "\"unit\":\"sec\"," +
         "\"n_queries\":" + results.size + "," +
         "\"queries\":" + toJson(results.filter(r => headline(r._1))) + "," +
         "\"warm_total\":" + num3(warmTotal) + "," +
-        "\"warm_total_raw\":" + num3(rawWarmTotal) + "," +
+        "\"warm_total_raw\":" + num3(warmTotal) + "," +
         "\"errors\":" + errJson + "," +
-        "\"env_contention\":\"" + BenchEnv.verdictFull(preSamples)._1 + "\"," +
+        "\"env_contention\":\"" + BenchEnv.verdictFull(samples)._1 + "\"," +
         "\"local_dir\":\"" + localDirStamp + "\"," +
         "\"full\":\"bench_out.json\"," +
         "\"sf\":\"" + sfDir + "\"}"

@@ -101,27 +101,13 @@ object BenchEnv {
     (v, (w ++ c).distinct)
   }
 
-  /** The `env` block for bench_out.json. `remeasured` is a list of
-    * pre-rendered JSON objects recording anomaly re-measurement
-    * substitutions (Bench re-runs flagged queries once and keeps the
-    * faster sample) — stamped into the artifact so a substituted
-    * headline stays honest about what was measured when.
-    *
-    * `samples` must be the PRE-substitution measurements (r17 advice:
-    * classifying the post-substitution samples let a cold-side
-    * substitution fabricate warm-side anomaly flags that were never
-    * measured — mixed-provenance artifacts); `postContention`, when
-    * given, additionally records the verdict of the post-substitution
-    * samples so both states are visible. */
-  def envJson(samples: Map[String, Sample],
-              remeasured: Seq[String] = Nil,
-              postContention: Option[String] = None): String = {
+  /** The `env` block for bench_out.json: the verdict and both anomaly
+    * lists, computed from the samples exactly as measured. */
+  def envJson(samples: Map[String, Sample]): String = {
     val (v, w, c) = verdictFull(samples)
     def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString(",")
     s"""{"contention":"$v",""" +
-      postContention.map(p => s""""contention_post":"$p",""").getOrElse("") +
       s""""warm_regressions":${w.size},""" +
-      s""""remeasured":[${remeasured.mkString(",")}],""" +
       s""""anomalous":[${arr(w)}],""" +
       s""""cold_regressions":${c.size},"anomalous_cold":[${arr(c)}],""" +
       s""""rule":"warm: warm>=${WarmRegressionRatio}x cold, cold>=${MinColdSec}s, """ +

@@ -148,19 +148,12 @@ object Clustering {
   private[graft] def withAssignment(df: DataFrame,
       centroids: Seq[(Long, Array[Long])],
       forceKernel: Boolean = false): DataFrame =
-    if (!forceKernel && centroids.size <= LiteralKMax)
-      literalAssign(df, centroids)
-    else kernelAssign(df, centroids)
-
-  /** The literal-expression arm of [[withAssignment]], callable
-    * directly so tools can measure it PAST the dispatch threshold
-    * (KernelScaleMain's k=1024 planning-failure evidence). */
-  private[graft] def literalAssign(df: DataFrame,
-      centroids: Seq[(Long, Array[Long])]): DataFrame = {
-    val fin = assignExpr(centroids)
-    df.withColumn("cluster", fin.getField("c"))
-      .withColumn("distd", fin.getField("d"))
-  }
+    if (forceKernel || centroids.size > LiteralKMax) kernelAssign(df, centroids)
+    else {
+      val fin = assignExpr(centroids)
+      df.withColumn("cluster", fin.getField("c"))
+        .withColumn("distd", fin.getField("d"))
+    }
 
   /** Below this k the kernel skips the two-level bound machinery —
     * √k groups would be a handful and the bound pass itself costs

@@ -42,9 +42,8 @@ import graft.engine.Tables
   */
 object CorpusIO {
 
-  /** Shared recursive delete (also used by StreamScaleMain and the
-    * layout specs — one implementation instead of four drifting
-    * copies). */
+  /** Shared recursive delete (also used by the layout and streaming
+    * specs — one implementation instead of drifting copies). */
   private[graft] def deleteRec(f: java.io.File): Unit = {
     Option(f.listFiles).foreach(_.foreach(deleteRec))
     f.delete(); ()

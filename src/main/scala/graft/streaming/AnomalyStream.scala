@@ -22,11 +22,11 @@ import graft.engine.Tables
   *
   * A window closes when a later-hour event for the type arrives
   * (events are sorted within each micro-batch; cross-batch order is
-  * the file-source's event-time order, the StreamScaleMain staging
-  * contract). The final open window per type stays in state — the
-  * sessionizer's open-session semantics. `CurationSpec`'s streaming
-  * test reconciles the emitted flags against a plain-Scala prefix
-  * recompute over the same corpus.
+  * the file-source's event-time order, the staging contract of the
+  * `results/r11_streaming/` scale runs). The final open window per
+  * type stays in state — the sessionizer's open-session semantics.
+  * `CurationSpec`'s streaming test reconciles the emitted flags
+  * against a plain-Scala prefix recompute over the same corpus.
   */
 object AnomalyStream {
 

@@ -2,21 +2,14 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 
-/** Scratch probe — rewritten per investigation; not part of any gate.
-  *
-  * r19 form: median-of-N single-JVM repetitions per named query (the
+/** Timing probe for named queries; not part of any gate, writes no
+  * files. Median-of-N single-JVM repetitions per named query (the
   * r18 protocol — isolated single-run timings are noise-bound ±30-50%
-  * on this box; contention is additive so the MEDIAN of many
-  * same-JVM reps is the stable estimator).
-  * Usage: ProbeMain [sfDir] [reps] q1,q2,...
+  * on a shared 4-core box; contention is additive so the MEDIAN of
+  * many same-JVM reps is the stable estimator).
+  * Usage: runMain graft.tools.ProbeMain [sfDir] [reps] q1,q2,...
   */
 object ProbeMain {
-  def t[A](label: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val r = f
-    println(f"TIMER $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    r
-  }
   def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 

@@ -15,6 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * cross-chunk carry rule is on the compared path). CurationSpec pins
   * the multi-round FIT end to end; this pins the single-round REFIT
   * the measurement certifies, so a refit regression localizes here.
+  * The test name keeps the name of the main that took the measurement
+  * (`RefitScaleMain`, removed; git history has it).
   */
 class ClusteringChunkedSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -27,8 +29,9 @@ class ClusteringChunkedSpec extends AnyFunSuite {
     val dim = 8
     val chunk = 32L // 8 chunks — chunking genuinely engaged
 
-    // RefitScaleMain's clustered corpus: centroid term (vec_id % k)
-    // plus hash noise three orders of magnitude below the value range
+    // the clustered corpus of results/r16_kernel/refit_scale.json:
+    // centroid term (vec_id % k) plus hash noise three orders of
+    // magnitude below the value range
     val q = spark.range(nRows.toLong).toDF("vec_id")
       .withColumn("qv", expr(
         s"transform(sequence(1, $dim), i -> " +

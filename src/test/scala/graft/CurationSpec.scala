@@ -661,18 +661,39 @@ class CurationSpec extends AnyFunSuite {
     assert(EntityResolution.d2Verified(noDirty, cust).count() == 0L)
   }
 
+  test("er2 router: names containing a literal '*' (the wildcard " +
+    "sentinel) take FastSS and stay exact end to end") {
+    import graft.pipeline.EntityResolution
+    import spark.implicits._
+    // short mixed lengths (3..5): '*'-free, this shape would take the
+    // del+wildcard route, whose pattern keys spell wildcards as '*'
+    val cust = Seq((1L, "ab**"), (2L, "abcd"), (3L, "ab*"), (4L, "a*cde"),
+      (5L, "xy*"), (6L, "pqrs"))
+    val dirty = Seq(
+      (101L, "**cd"),  // wc2 key "****" also matches ab** (lev 4)
+      (102L, "a*c"),   // wc1 key "a**" also matches ab*'s (lev 2, not 1)
+      (103L, "abcde"), (104L, "xyz"), (105L, "pqr*s"))
+    val want = (for {
+      (did, dn) <- dirty; (ck, cn) <- cust
+      d = lev(dn, cn) if d <= 2
+    } yield (did, ck, d.toLong)).toSet
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val custDf = cust.toDF("c_custkey", "c_name")
+    val dirtyDf = dirty.toDF("dirty_id", "dirty_name")
+    assert(pairs(EntityResolution.d2Verified(dirtyDf, custDf)) == want)
+    // the guard is what keeps it exact: the del+wildcard scheme alone
+    // reports a lev-4 pair and a lev-2 pair at distance 1
+    val dwc = pairs(EntityResolution.delWildcardD2Verified(dirtyDf, custDf))
+    assert(!want.exists(p => p._1 == 101L && p._2 == 1L))
+    assert(dwc.contains((101L, 1L, 2L)), dwc)
+    assert(want.contains((102L, 3L, 2L)) && dwc.contains((102L, 3L, 1L)), dwc)
+  }
+
   test("er2 equal-length fast path: constant-position pruning is exact " +
     "(r18 — arm A emits C(V,2) wildcard pairs over the varying set)") {
     import graft.pipeline.EntityResolution
     import spark.implicits._
-    def lev(a: String, b: String): Int = {
-      val d = Array.tabulate(a.length + 1, b.length + 1) { (i, j) =>
-        if (i == 0) j else if (j == 0) i else 0 }
-      for (i <- 1 to a.length; j <- 1 to b.length)
-        d(i)(j) = math.min(math.min(d(i - 1)(j) + 1, d(i)(j - 1) + 1),
-          d(i - 1)(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
-      d(a.length)(b.length)
-    }
     // long shared constant prefix (the pruning's target shape): only
     // the last 4 positions vary — V = 4 of L = 12
     val cust = (1 to 200).map(k => (k.toLong, f"PREFIX##$k%04d"))

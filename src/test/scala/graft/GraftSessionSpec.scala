@@ -65,4 +65,29 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(sites("registerFunction", "injectFunction") ==
       Set("graft/functions/Catalog.scala", "graft/engine/GraftExtensions.scala"))
   }
+
+  test("README names every main in src/main, and every runMain it lists exists") {
+    val root = Paths.get("src/main/scala")
+    val TopObject = """(?:private\[\w+\] )?object (\w+).*""".r
+    // fully qualified names of the top-level objects that define main
+    val mains = Files.walk(root).iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .flatMap { f =>
+        val lines = Files.readAllLines(f).asScala
+        val pkg = lines.collectFirst { case l if l.startsWith("package ") => l.drop(8).trim }
+        var obj = Option.empty[String]
+        lines.flatMap {
+          case TopObject(name) => obj = Some(name); None
+          case l if l.trim.startsWith("def main(") => obj.map(o => s"${pkg.get}.$o")
+          case _ => None
+        }
+      }.toSet
+    assert(mains.contains("graft.Bench") && mains.contains("graft.planopt.StableE2EMain"), mains)
+    val readme = new String(Files.readAllBytes(Paths.get("README.md")), "UTF-8")
+    val unlisted = mains.filterNot(m => s"\\b${java.util.regex.Pattern.quote(m)}\\b".r
+      .findFirstIn(readme).isDefined)
+    assert(unlisted.isEmpty, s"mains missing from README.md: $unlisted")
+    val listed = """runMain (graft[\w.]*)""".r.findAllMatchIn(readme).map(_.group(1)).toSet
+    assert(listed.nonEmpty)
+    assert((listed -- mains).isEmpty, s"README runs mains that do not exist: ${listed -- mains}")
+  }
 }
