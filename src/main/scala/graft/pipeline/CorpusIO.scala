@@ -49,6 +49,15 @@ object CorpusIO {
     f.delete(); ()
   }
 
+  /** Home of a persisted per-corpus index or layout:
+    * `<GRAFT_INDEX_DIR, else java.io.tmpdir/graft-index>/<kind>_<sfDir
+    * with every char outside [A-Za-z0-9.] as '_'>_<key>`. */
+  private[pipeline] def indexPath(kind: String, sfDir: String, key: String): String = {
+    val base = sys.env.getOrElse("GRAFT_INDEX_DIR",
+      sys.props("java.io.tmpdir") + "/graft-index")
+    s"$base/${kind}_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}_$key"
+  }
+
   private def tempDir(prefix: String): String = {
     val dir = sys.env.get("GRAFT_IO_DIR") match {
       case Some(base) => Files.createTempDirectory(Paths.get(base), prefix)
@@ -219,9 +228,7 @@ object CorpusIO {
     val l = new java.io.File(s"$sfDir/lineitem.parquet")
     val key = s"${o.lastModified}_${o.length}_${l.lastModified}_${l.length}" +
       s"_b$BucketCount"
-    val base = sys.env.getOrElse("GRAFT_INDEX_DIR",
-      sys.props("java.io.tmpdir") + "/graft-index")
-    s"$base/bkt_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}_$key"
+    indexPath("bkt", sfDir, key)
   }
 
   /** Write the bucketed layout into a tmp sibling and atomically

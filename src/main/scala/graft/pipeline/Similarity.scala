@@ -335,9 +335,7 @@ object Similarity {
     // rotates the key via both the file identity and k.
     val key = s"${f.getName}_${f.lastModified}_${f.length}" +
       s"_k${cells}_s${IvfSeed}_i$IvfIters"
-    val base = sys.env.getOrElse("GRAFT_INDEX_DIR",
-      sys.props("java.io.tmpdir") + "/graft-index")
-    s"$base/ivf_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}_$key"
+    CorpusIO.indexPath("ivf", sfDir, key)
   }
 
   /** Load the persisted quantizer if one matches the corpus; fit (and
@@ -380,9 +378,7 @@ object Similarity {
     val f = new java.io.File(s"$sfDir/embeddings.parquet")
     val key = s"${f.getName}_${f.lastModified}_${f.length}" +
       s"_t${LshTables}_b${LshBucketLen}_s$LshSeed"
-    val base = sys.env.getOrElse("GRAFT_INDEX_DIR",
-      sys.props("java.io.tmpdir") + "/graft-index")
-    s"$base/lsh_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}_$key"
+    CorpusIO.indexPath("lsh", sfDir, key)
   }
 
   /** Load the persisted hyperplanes if they match the corpus; fit and

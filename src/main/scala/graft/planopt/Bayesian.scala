@@ -93,8 +93,6 @@ final class BayesianModelPairWise(val featureDim: Int, seed: Long = 23L,
     require(x1.length == x2.length && x1.length == y1.length && y1.length == y2.length)
     val labels = y1.indices.map(i => if (y1(i) >= y2(i)) 1.0 else 0.0)
     val alphas = y1.indices.map(i => Bayesian.pairAlpha(y1(i), y2(i), gamma, deltaThreshold))
-    val p1 = x1.map(t => TreeConv.prepareTrees(Seq(t)))
-    val p2 = x2.map(t => TreeConv.prepareTrees(Seq(t)))
     val opt = new Adam(net.paramGrads ++ head.paramGrads)
     val losses = scala.collection.mutable.ArrayBuffer[Double]()
     for (_ <- 0 until epochs) {
@@ -105,13 +103,7 @@ final class BayesianModelPairWise(val featureDim: Int, seed: Long = 23L,
         val bSize = batch.length
         // both pair sides through ONE batched trunk pass (same scheme
         // as LeroModelPairWise.fit)
-        val nodesArr = new Array[breeze.linalg.DenseMatrix[Double]](2 * bSize)
-        val idxesArr = new Array[Array[Int]](2 * bSize)
-        batch.zipWithIndex.foreach { case (i, j) =>
-          nodesArr(2 * j) = p1(i).nodes(0); idxesArr(2 * j) = p1(i).idxes(0)
-          nodesArr(2 * j + 1) = p2(i).nodes(0); idxesArr(2 * j + 1) = p2(i).idxes(0)
-        }
-        val (_, feats, bcache) = net.forwardBatch(nodesArr, idxesArr)
+        val (_, feats, bcache) = net.forwardTrees(batch.flatMap(i => Seq(x1(i), x2(i))))
         var batchLoss = 0.0
         val dPooled = new Array[DenseVector[Double]](2 * bSize)
         batch.zipWithIndex.foreach { case (i, j) =>
@@ -132,12 +124,13 @@ final class BayesianModelPairWise(val featureDim: Int, seed: Long = 23L,
     losses.toSeq
   }
 
-  /** (P(plan1 slower), predictive variance) for a pair. */
+  /** (P(plan1 slower), predictive variance) for a pair. Each side
+    * runs in its own one-tree forward: a stacked pair past
+    * `ParGemm.SliceRows` rows would be sliced differently, and the
+    * deployed gate's z could move in the last bit. */
   def predictPair(t1: FeatTree, t2: FeatTree): (Double, Double) = {
-    val pp1 = TreeConv.prepareTrees(Seq(t1))
-    val pp2 = TreeConv.prepareTrees(Seq(t2))
-    val (_, fea1, _) = net.forward(pp1.nodes(0), pp1.idxes(0))
-    val (_, fea2, _) = net.forward(pp2.nodes(0), pp2.idxes(0))
+    val fea1 = net.forwardTrees(Seq(t1))._2(0)
+    val fea2 = net.forwardTrees(Seq(t2))._2(0)
     val (prob, logVar, _) = head.forward(fea1, fea2)
     (prob, math.exp(logVar))
   }

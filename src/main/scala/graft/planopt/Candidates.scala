@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.planopt.PlanFeatures.PlanNode
 
-/** Candidate physical-plan generator + learned chooser (SURVEY.md
+/** Candidate physical-plan generator + labeler (SURVEY.md
   * §7.4) — the Spark-native replacement for the Lero PostgreSQL patch
   * that produced plan variants by scaling cardinality estimates (that
   * component is absent from the reference repo; plans arrive
@@ -127,25 +127,17 @@ object Candidates {
     * matches what [[graft.plans.LearnedPlanStrategy]] routes over —
     * before this, the tail joins (10-way/17-relation) labeled only 2
     * knob-distinct plans while the strategy scored order variants the
-    * comparator had never trained on. Variant 0 sweeps the full knob
-    * grid (identical to [[enumerate]]); later variants are planned
-    * with the reorder rules pinned off and sweep the
-    * broadcast-threshold axis only (the strategy's own bounded grid).
+    * comparator had never trained on. Variant 0 is [[enumerate]]'s
+    * full knob sweep; later variants are planned with the reorder
+    * rules pinned off and sweep the broadcast-threshold axis only
+    * (the strategy's own bounded grid).
     * Variants are derived from the DEFAULT-knob optimized plan, which
     * is deterministic per session state — [[executeOrdered]] rebuilds
     * them identically. */
   def enumerateOrdered(spark: SparkSession,
                        build: SparkSession => DataFrame): Seq[Candidate] = {
-    val seen = scala.collection.mutable.LinkedHashMap[String, Candidate]()
-    knobGrid.foreach { knobs =>
-      withConfs(spark, knobs.confs) {
-        val plan = build(spark).queryExecution.executedPlan
-        val canonical = canonicalKey(plan)
-        if (!seen.contains(canonical))
-          seen(canonical) =
-            Candidate(knobs, canonical, PlanFeatures.fromSparkPlan(plan), 0)
-      }
-    }
+    val seen = scala.collection.mutable.LinkedHashMap(
+      enumerate(spark, build).map(c => c.canonical -> c): _*)
     orderVariants(spark, build).zipWithIndex.drop(1).foreach { case (vq, vIdx) =>
       knobGrid.filter(k => k.joinReorder && k.preferSortMergeJoin).foreach { knobs =>
         withConfs(spark, knobs.confs ++ JoinOrders.pinOrderConfs) {
@@ -167,8 +159,8 @@ object Candidates {
     * labeling loop can derive the list ONCE per query instead of once
     * per candidate (each derivation is a full build + optimize +
     * rewrite — pure driver-side waste when repeated). */
-  private[planopt] def orderVariants(spark: SparkSession,
-                                     build: SparkSession => DataFrame) =
+  private[graft] def orderVariants(spark: SparkSession,
+                                   build: SparkSession => DataFrame) =
     withConfs(spark, knobGrid.head.confs) {
       JoinOrders.variants(build(spark).queryExecution.optimizedPlan)
     }
@@ -197,17 +189,11 @@ object Candidates {
       }
     }
 
-  /** Single-candidate convenience (tests): derives the variant list
-    * itself. */
-  def executeOrdered(spark: SparkSession, build: SparkSession => DataFrame,
-                     c: Candidate): Option[(Long, Double)] =
-    executeOrdered(spark, build, c,
-      if (c.variantIdx == 0) Nil else orderVariants(spark, build))
-
-  /** [[labelCandidates]] for order-aware candidates. The variant list
-    * is derived ONCE for the query; a candidate whose variant index no
-    * longer resolves (drift) is DROPPED from the labeled set (logged),
-    * never mislabeled with a different plan's latency.
+  /** Label every candidate by timed execution (optionally after one
+    * untimed warmup run). The variant list is derived ONCE for the
+    * query; a candidate whose variant index no longer resolves (drift)
+    * is DROPPED from the labeled set (logged), never mislabeled with a
+    * different plan's latency.
     *
     * `repeats` > 1 labels each candidate as the MIN of `repeats`
     * timed executions (r16 verdict #1 — single-sample labels at
@@ -403,38 +389,4 @@ object Candidates {
       val n = df.count()
       (n, (System.nanoTime() - t0) / 1e6)
     }
-
-  /** Label every candidate by execution (optionally with warmup runs
-    * for timing stability); `repeats` > 1 takes the MIN of that many
-    * timed executions per candidate (see [[labelCandidatesOrdered]]
-    * for why min, not median). */
-  def labelCandidates(spark: SparkSession, build: SparkSession => DataFrame,
-                      candidates: Seq[Candidate], warmup: Boolean = false,
-                      repeats: Int = 1): Seq[(Candidate, Double)] =
-    candidates.map { c =>
-      if (warmup) execute(spark, build, c.knobs)
-      val runs = (1 to math.max(1, repeats)).map(_ => execute(spark, build, c.knobs)._2)
-      (c, runs.min)
-    }
-
-  /** The learned chooser (M12 applied to live candidates): featurize
-    * every candidate with `gen`, score with `model`, execute the
-    * argmin (`lero_test.py:40,97` semantics: lower score = predicted
-    * faster). Returns the chosen candidate and its result. */
-  def chooseAndExecute(spark: SparkSession, build: SparkSession => DataFrame,
-                       model: LeroModelPairWise,
-                       gen: PlanFeatures.FeatureGenerator): (Candidate, DataFrame) = {
-    val cands = enumerate(spark, build)
-    val scores = model.predict(cands.map(c => gen.transform(c.plan)))
-    val best = cands(scores.indices.minBy(scores))
-    val df = withConfs(spark, best.knobs.confs) {
-      val d = build(spark)
-      d.queryExecution.executedPlan // force physical planning under the knobs
-      d
-    }
-    // NOTE: consume via collect()/write on THIS frame (its
-    // QueryExecution is pinned); derived actions like .count() build a
-    // new plan under whatever confs are then current.
-    (best, df)
-  }
 }

@@ -119,9 +119,9 @@ object DynamicMain {
     // one entry PER BATCH like lero_dynamic_latency_list. Both
     // protocol variants share the labels paid above.
     val modes = Seq(
-      "scratch" -> Pipelines.deploymentLoopResultsFull(labeled, epochs,
+      "scratch" -> Pipelines.deploymentLoop(labeled, epochs,
         seed = 17L, log = log, bootstrap = true),
-      "accum" -> Pipelines.deploymentLoopResultsFull(labeled, epochs,
+      "accum" -> Pipelines.deploymentLoop(labeled, epochs,
         seed = 17L, log = log, bootstrap = true, accumulate = true))
 
     modes.foreach { case (mode, full) =>

@@ -46,7 +46,7 @@ object GateRecalMain {
       s"adaptive_max=${Pipelines.LabelAdaptiveMax})")
     val labeled = Pipelines.labelWorkload(spark, calib, log)
     val pairs = Pipelines.gatePairs(labeled, fg, model, bm)
-    val (thr, gapThr, net) = Pipelines.calibrateThreshold2(pairs, overheadMs)
+    val (thr, gapThr, net) = Pipelines.calibrateThreshold(pairs, overheadMs)
     val cal = Pipelines.GateCalibration(thr, pairs.size,
       pairs.count(t => t._1 > thr && t._2 > gapThr), net,
       pairs.map(_._3).sum, gapThr)

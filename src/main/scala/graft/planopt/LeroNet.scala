@@ -12,7 +12,7 @@ import graft.planopt.TreeConv._
   *
   * Architecture (`model.py:329-347`): TreeConv D→256→128→64 with
   * TreeLayerNorm + LeakyReLU between convs, LayerNorm + DynamicPooling
-  * after the last, then FC 64→32→1 with LeakyReLU. `forward` returns
+  * after the last, then FC 64→32→1 with LeakyReLU. `forwardTrees` returns
   * (score, 64-d pooled feature) — the intermediate feature feeds the
   * Bayesian head (M15).
   *
@@ -32,52 +32,22 @@ final class LeroNet(val inputFeatureDim: Int, seed: Long = 17L) {
   val fc1 = new LinearLayer(64, 32, rng)
   val fc2 = new LinearLayer(32, 1, rng)
 
-  /** Forward one prepared tree; returns (score, interFea64) and a
-    * cache for backward. */
-  def forward(nodes: DenseMatrix[Double], idx: Array[Int]): (Double, DenseVector[Double], LeroNet.Cache) = {
-    val (c1, cc1) = conv1.forward(nodes, idx)
-    val (n1, ln1) = LayerNorm.forward(c1)
-    val a1 = LeakyReLU.forward(n1)
-    val (c2, cc2) = conv2.forward(a1, idx)
-    val (n2, ln2) = LayerNorm.forward(c2)
-    val a2 = LeakyReLU.forward(n2)
-    val (c3, cc3) = conv3.forward(a2, idx)
-    val (n3, ln3) = LayerNorm.forward(c3)
-    val (pooled, argmax) = DynamicPooling.forward(n3)
-    val h1 = fc1.forward(pooled)
-    val a3 = h1.map(v => if (v > 0) v else LeakyReLU.Slope * v)
-    val out = fc2.forward(a3)
-    (out(0), pooled,
-      LeroNet.Cache(cc1, cc2, cc3, n1, ln1, n2, ln2, ln3, argmax, n3.rows, pooled, h1, a3))
+  /** Forward `trees`; returns (score, interFea64) per tree and a
+    * cache for [[backwardBatch]]. Each tree is prepared ON ITS OWN:
+    * padding rows take part in layer norm and pooling, so trees
+    * padded together would score differently from the same trees
+    * scored apart. Every caller goes through here. */
+  def forwardTrees(trees: Seq[FeatTree])
+  : (Array[Double], Array[DenseVector[Double]], LeroNet.BatchCache) = {
+    val ps = trees.map(t => TreeConv.prepareTrees(Seq(t)))
+    forwardBatch(ps.map(_.nodes(0)).toArray, ps.map(_.idxes(0)).toArray)
   }
 
-  /** Backward from dScore (+ optional gradient on the pooled feature,
-    * for the Bayesian head); accumulates parameter grads. */
-  def backward(dScore: Double, cache: LeroNet.Cache,
-               dPooledExtra: Option[DenseVector[Double]] = None): Unit = {
-    val dOut = DenseVector(dScore)
-    val dA3 = fc2.backward(cache.a3, dOut)
-    val dH1 = DenseVector.tabulate(dA3.length)(i =>
-      if (cache.h1(i) > 0) dA3(i) else LeakyReLU.Slope * dA3(i))
-    var dPooled = fc1.backward(cache.pooled, dH1)
-    dPooledExtra.foreach(extra => dPooled = dPooled + extra)
-    val dN3 = DynamicPooling.backward(dPooled, cache.argmax, cache.n3rows)
-    val dC3 = LayerNorm.backward(dN3, cache.ln3)
-    val dA2 = conv3.backward(dC3, cache.cc3)
-    val dN2 = LeakyReLU.backward(dA2, cache.n2)
-    val dC2 = LayerNorm.backward(dN2, cache.ln2)
-    val dA1 = conv2.backward(dC2, cache.cc2)
-    val dN1 = LeakyReLU.backward(dA1, cache.n1)
-    val dC1 = LayerNorm.backward(dN1, cache.ln1)
-    conv1.backward(dC1, cache.cc1) // dNodes discarded (inputs are constants)
-  }
-
-  /** Batched forward (training hot path): the three conv layers run
+  /** Batched forward over prepared trees: the three conv layers run
     * as ONE gemm per layer over the whole batch's stacked gather rows
     * (`ConvLayer.forwardBatch`); the per-tree pieces (layer norm,
-    * pooling, FCs — all O(K·C) with no matmul) stay per-tree, so
-    * results equal the per-tree `forward` to BLAS rounding. */
-  def forwardBatch(nodesArr: Array[DenseMatrix[Double]], idxesArr: Array[Array[Int]])
+    * pooling, FCs — all O(K·C) with no matmul) stay per-tree. */
+  private def forwardBatch(nodesArr: Array[DenseMatrix[Double]], idxesArr: Array[Array[Int]])
   : (Array[Double], Array[DenseVector[Double]], LeroNet.BatchCache) = {
     val nT = nodesArr.length
     // per-tree loops write disjoint slot i and read only shared
@@ -177,13 +147,6 @@ final class LeroNet(val inputFeatureDim: Int, seed: Long = 17L) {
 }
 
 object LeroNet {
-  final case class Cache(cc1: ConvCache, cc2: ConvCache, cc3: ConvCache,
-                         n1: DenseMatrix[Double], ln1: LNCache,
-                         n2: DenseMatrix[Double], ln2: LNCache,
-                         ln3: LNCache, argmax: Array[Int], n3rows: Int,
-                         pooled: DenseVector[Double],
-                         h1: DenseVector[Double], a3: DenseVector[Double])
-
   final case class BatchCache(bc1: BatchConvCache, bc2: BatchConvCache,
                               bc3: BatchConvCache,
                               n1s: Array[DenseMatrix[Double]], ln1s: Array[LNCache],
@@ -229,10 +192,11 @@ final class LeroModelPointWise(val featureDim: Int, seed: Long = 17L) {
   val net = new LeroNet(featureDim, seed)
   private val shuffleRng = new scala.util.Random(seed ^ 0x9019)
 
+  /** Batched MSE fit: one forward/backward per batch, d MSE / d sᵢ =
+    * 2·(sᵢ − yᵢ)/|batch|. Returns per-epoch mean losses. */
   def fit(x: IndexedSeq[FeatTree], y: IndexedSeq[Double],
           epochs: Int = 100, batchSize: Int = 64): Seq[Double] = {
     require(x.length == y.length && x.nonEmpty)
-    val prepared = x.map(t => TreeConv.prepareTrees(Seq(t)))
     val opt = new Adam(net.paramGrads)
     val losses = scala.collection.mutable.ArrayBuffer[Double]()
     for (_ <- 0 until epochs) {
@@ -240,15 +204,11 @@ final class LeroModelPointWise(val featureDim: Int, seed: Long = 17L) {
       var lossAccum = 0.0; var nBatches = 0
       order.grouped(batchSize).foreach { batch =>
         net.zeroGrad()
-        var batchLoss = 0.0
-        batch.foreach { i =>
-          val (s, _, cache) = net.forward(prepared(i).nodes(0), prepared(i).idxes(0))
-          val diff = s - y(i)
-          batchLoss += diff * diff
-          net.backward(2.0 * diff / batch.length, cache) // d MSE / d s
-        }
+        val (scores, _, cache) = net.forwardTrees(batch.map(x))
+        val diffs = batch.indices.map(j => scores(j) - y(batch(j)))
+        net.backwardBatch(diffs.map(2.0 * _ / batch.length).toArray, cache)
         opt.step()
-        lossAccum += batchLoss / batch.length
+        lossAccum += diffs.map(d => d * d).sum / batch.length
         nBatches += 1
       }
       losses += lossAccum / math.max(1, nBatches)
@@ -257,14 +217,11 @@ final class LeroModelPointWise(val featureDim: Int, seed: Long = 17L) {
   }
 
   def predict(trees: Seq[FeatTree]): Array[Double] =
-    trees.map { t =>
-      val p = TreeConv.prepareTrees(Seq(t))
-      net.forward(p.nodes(0), p.idxes(0))._1
-    }.toArray
+    if (trees.isEmpty) Array.empty else net.forwardTrees(trees)._1
 }
 
 /** Pairwise comparator model (M11/M12): fit on (plan1, plan2, y1, y2)
-  * tuples, predict scores, select argmin. */
+  * tuples, predict scores. */
 final class LeroModelPairWise(val featureDim: Int, seed: Long = 17L) {
   val net = new LeroNet(featureDim, seed)
   private val shuffleRng = new scala.util.Random(seed ^ 0x5eed)
@@ -278,9 +235,6 @@ final class LeroModelPairWise(val featureDim: Int, seed: Long = 17L) {
           epochs: Int = 100, batchSize: Int = 64): Seq[Double] = {
     require(x1.length == x2.length && y1.length == y2.length && x1.length == y1.length)
     val labels = y1.indices.map(i => if (y1(i) >= y2(i)) 1.0 else 0.0)
-    // precompute layouts once (trees are immutable)
-    val p1 = x1.map(t => TreeConv.prepareTrees(Seq(t)))
-    val p2 = x2.map(t => TreeConv.prepareTrees(Seq(t)))
     val losses = scala.collection.mutable.ArrayBuffer[Double]()
     val opt = new Adam(net.paramGrads)
     for (_ <- 0 until epochs) {
@@ -291,13 +245,7 @@ final class LeroModelPairWise(val featureDim: Int, seed: Long = 17L) {
         net.zeroGrad()
         val bSize = batch.length
         // interleave (x1_i, x2_i) so one batched call covers both sides
-        val nodesArr = new Array[breeze.linalg.DenseMatrix[Double]](2 * bSize)
-        val idxesArr = new Array[Array[Int]](2 * bSize)
-        batch.zipWithIndex.foreach { case (i, j) =>
-          nodesArr(2 * j) = p1(i).nodes(0); idxesArr(2 * j) = p1(i).idxes(0)
-          nodesArr(2 * j + 1) = p2(i).nodes(0); idxesArr(2 * j + 1) = p2(i).idxes(0)
-        }
-        val (scores, _, bcache) = net.forwardBatch(nodesArr, idxesArr)
+        val (scores, _, bcache) = net.forwardTrees(batch.flatMap(i => Seq(x1(i), x2(i))))
         var batchLoss = 0.0
         val dScores = new Array[Double](2 * bSize)
         batch.zipWithIndex.foreach { case (i, j) =>
@@ -318,23 +266,12 @@ final class LeroModelPairWise(val featureDim: Int, seed: Long = 17L) {
     losses.toSeq
   }
 
-  /** Batch score (M12, `model.py:199-213`): lower = predicted faster. */
-  def predict(trees: Seq[FeatTree]): Array[Double] = {
-    if (trees.isEmpty) return Array.empty
-    val ps = trees.map(t => TreeConv.prepareTrees(Seq(t)))
-    net.forwardBatch(ps.map(_.nodes(0)).toArray, ps.map(_.idxes(0)).toArray)._1
-  }
+  /** Batch score (M12, `model.py:199-213`): lower = predicted faster;
+    * selection is the argmin (`lero_test.py:97`). */
+  def predict(trees: Seq[FeatTree]): Array[Double] =
+    if (trees.isEmpty) Array.empty else net.forwardTrees(trees)._1
 
   /** Pooled 64-d intermediate features (for the Bayesian head). */
-  def interFeatures(trees: Seq[FeatTree]): Array[DenseVector[Double]] = {
-    if (trees.isEmpty) return Array.empty
-    val ps = trees.map(t => TreeConv.prepareTrees(Seq(t)))
-    net.forwardBatch(ps.map(_.nodes(0)).toArray, ps.map(_.idxes(0)).toArray)._2
-  }
-
-  /** Plan selection: argmin of predicted score (`lero_test.py:97`). */
-  def selectBest(candidates: Seq[FeatTree]): Int = {
-    val scores = predict(candidates)
-    scores.indices.minBy(scores)
-  }
+  def interFeatures(trees: Seq[FeatTree]): Array[DenseVector[Double]] =
+    if (trees.isEmpty) Array.empty else net.forwardTrees(trees)._2
 }

@@ -1,7 +1,7 @@
 package graft.planopt
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, FileInputStream, FileOutputStream}
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
@@ -55,15 +55,7 @@ object ModelIO {
     Files.write(Paths.get(dir, MetaFile),
       mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
 
-    val out = new DataOutputStream(new BufferedOutputStream(
-      new FileOutputStream(Paths.get(dir, WeightsFile).toFile)))
-    try {
-      model.net.paramGrads.foreach { case (param, _) =>
-        out.writeInt(param.length)
-        var i = 0
-        while (i < param.length) { out.writeDouble(param(i)); i += 1 }
-      }
-    } finally out.close()
+    writeWeights(Paths.get(dir, WeightsFile), model.net.paramGrads)
   }
 
   /** Persist the calibrated Bayesian margin gate next to the main
@@ -86,15 +78,7 @@ object ModelIO {
     root.put("calibration_ungated_gain_ms", cal.gainAllMs)
     Files.write(Paths.get(dir, GateMetaFile),
       mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
-    val out = new DataOutputStream(new BufferedOutputStream(
-      new FileOutputStream(Paths.get(dir, GateWeightsFile).toFile)))
-    try {
-      (bm.net.paramGrads ++ bm.head.paramGrads).foreach { case (param, _) =>
-        out.writeInt(param.length)
-        var i = 0
-        while (i < param.length) { out.writeDouble(param(i)); i += 1 }
-      }
-    } finally out.close()
+    writeWeights(Paths.get(dir, GateWeightsFile), bm.net.paramGrads ++ bm.head.paramGrads)
   }
 
   /** Load the margin gate if the artifact carries one; None for
@@ -116,19 +100,7 @@ object ModelIO {
     val gapThr = Option(root.get("score_gap_threshold"))
       .map(_.asDouble()).getOrElse(0.0)
     val bm = new BayesianModelPairWise(dim)
-    val in = new DataInputStream(new BufferedInputStream(
-      new FileInputStream(weights.toFile)))
-    try {
-      (bm.net.paramGrads ++ bm.head.paramGrads).foreach { case (param, _) =>
-        val n = in.readInt()
-        require(n == param.length,
-          s"gate weight block length $n != expected ${param.length} " +
-            "(architecture/dim mismatch)")
-        var i = 0
-        while (i < n) { param(i) = in.readDouble(); i += 1 }
-      }
-      require(in.read() == -1, s"trailing bytes in $GateWeightsFile")
-    } finally in.close()
+    readWeights(weights, bm.net.paramGrads ++ bm.head.paramGrads)
     Some((bm, thr, gapThr))
   }
 
@@ -163,19 +135,37 @@ object ModelIO {
       s"persisted input_feature_dim $dim != reconstructed featurizer dim ${gen.featureDim}")
 
     val model = new LeroModelPairWise(dim)
-    val in = new DataInputStream(new BufferedInputStream(
-      new FileInputStream(Paths.get(dir, WeightsFile).toFile)))
+    readWeights(Paths.get(dir, WeightsFile), model.net.paramGrads)
+    (model, gen)
+  }
+
+  /** One `int32 length` + `length` raw `float64`s block per parameter,
+    * in `params` order. */
+  private def writeWeights(file: Path, params: Seq[(Array[Double], Array[Double])]): Unit = {
+    val out = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(file.toFile)))
     try {
-      model.net.paramGrads.foreach { case (param, _) =>
+      params.foreach { case (param, _) =>
+        out.writeInt(param.length)
+        var i = 0
+        while (i < param.length) { out.writeDouble(param(i)); i += 1 }
+      }
+    } finally out.close()
+  }
+
+  /** Fill `params` from a [[writeWeights]] file; a block of the wrong
+    * length or bytes past the last block fail loudly. */
+  private def readWeights(file: Path, params: Seq[(Array[Double], Array[Double])]): Unit = {
+    val in = new DataInputStream(new BufferedInputStream(new FileInputStream(file.toFile)))
+    try {
+      params.foreach { case (param, _) =>
         val n = in.readInt()
         require(n == param.length,
-          s"weight block length $n != expected ${param.length} " +
+          s"weight block length $n != expected ${param.length} in ${file.getFileName} " +
             "(architecture/dim mismatch)")
         var i = 0
         while (i < n) { param(i) = in.readDouble(); i += 1 }
       }
-      require(in.read() == -1, s"trailing bytes in $WeightsFile")
+      require(in.read() == -1, s"trailing bytes in ${file.getFileName}")
     } finally in.close()
-    (model, gen)
   }
 }

@@ -4,9 +4,9 @@ import java.util.concurrent.{Callable, Executors, ThreadFactory}
 
 import breeze.linalg.DenseMatrix
 
-/** Deterministic slice-parallel GEMM for the training hot path.
+/** Deterministic slice-parallel GEMM for the comparator net.
   *
-  * The pairwise trainer funnels ~95% of its flops through three
+  * Training and scoring funnel ~95% of their flops through three
   * batched matmuls per conv layer (`TreeConv.ConvLayer.forwardBatch` /
   * `backwardBatch`); Breeze executes each as one single-threaded BLAS
   * call, which left a 32-core box 31/32 idle during the 45-minute
@@ -28,9 +28,13 @@ import breeze.linalg.DenseMatrix
   * result is bit-identical at any thread count (ParGemmSpec pins this
   * on the exact shapes the net uses, plus a full-fit equality check).
   *
+  * A product of at most [[SliceRows]] rows is ONE plain gemm — a
+  * one-tree forward of a plan of ≤ 128 nodes (the deployed margin
+  * gate scores each side that way) multiplies exactly that tree's
+  * gather matrix.
+  *
   * `threads` defaults to 1 (same bits, sequential); long-running
-  * trainer mains opt in via the SPARK_GRAFT_TRAIN_THREADS env var or
-  * -Dgraft.train.threads.
+  * trainer mains opt in via the SPARK_GRAFT_TRAIN_THREADS env var.
   */
 object ParGemm {
 
@@ -39,8 +43,7 @@ object ParGemm {
   val SliceRows = 128
 
   @volatile var threads: Int =
-    sys.props.get("graft.train.threads")
-      .orElse(sys.env.get("SPARK_GRAFT_TRAIN_THREADS")) match {
+    sys.env.get("SPARK_GRAFT_TRAIN_THREADS") match {
       case Some(v) => v.trim.toIntOption match {
         case Some(n) => n
         case None =>
@@ -49,8 +52,7 @@ object ParGemm {
           // ExceptionInInitializerError at first ParGemm touch points
           // nowhere near the bad setting)
           System.err.println(s"[graft] unparsable train-thread count " +
-            s"'$v' (graft.train.threads / SPARK_GRAFT_TRAIN_THREADS); " +
-            "falling back to 1 (sequential)")
+            s"'$v' (SPARK_GRAFT_TRAIN_THREADS); falling back to 1 (sequential)")
           1
       }
       case None => 1

@@ -52,9 +52,6 @@ object Pipelines {
   /** One query with its labeled candidate plans. */
   final case class LabeledQuery(qid: String, plans: Seq[PlanNode], latenciesMs: Seq[Double])
 
-  /** Enumerate + label candidates for each query (the cluster-side
-    * step; at 100 TB you run this at a sampled SF, like the reference
-    * labels on a training DB). */
   /** Per-query labeled-candidate cap — see
     * [[Candidates.capCandidates]]. 6 keeps one knob-plan for each of
     * the ≤4 order variants plus two knob alternates of the default
@@ -67,28 +64,28 @@ object Pipelines {
     * loss to its own relabel noise floor; latency noise is one-sided,
     * so min is the robust estimator — see Candidates.
     * labelCandidatesOrdered). Process-wide via
-    * SPARK_GRAFT_LABEL_REPEATS or -Dgraft.label.repeats so BOTH
-    * passes of every noise-floor protocol (stable and dynamic) label
-    * identically — a floor measured under a cheaper protocol than the
-    * labels would understate the labels' noise. */
+    * SPARK_GRAFT_LABEL_REPEATS so BOTH passes of every noise-floor
+    * protocol (stable and dynamic) label identically — a floor
+    * measured under a cheaper protocol than the labels would
+    * understate the labels' noise. */
   val LabelRepeats: Int =
-    sys.props.get("graft.label.repeats")
-      .orElse(sys.env.get("SPARK_GRAFT_LABEL_REPEATS"))
+    sys.env.get("SPARK_GRAFT_LABEL_REPEATS")
       .flatMap(_.trim.toIntOption).filter(_ >= 1).getOrElse(1)
 
   /** Adaptive-escalation ceiling (r17 verdict #1 — push the same-pass
     * floor toward ≤0.15): candidates in an ambiguous pair (relative
     * gap inside Candidates.DefaultGapLo/Hi) are re-sampled up to this
     * many runs per label vector. Defaults to LabelRepeats (escalation
-    * off); SPARK_GRAFT_LABEL_ADAPTIVE_MAX=k or
-    * -Dgraft.label.adaptiveMax=k engages it. Process-wide like
-    * LabelRepeats, and for the same reason: every pass of every
+    * off); SPARK_GRAFT_LABEL_ADAPTIVE_MAX=k engages it. Process-wide
+    * like LabelRepeats, and for the same reason: every pass of every
     * noise-floor protocol must label under the protocol it measures. */
   def LabelAdaptiveMax: Int =
-    sys.props.get("graft.label.adaptiveMax")
-      .orElse(sys.env.get("SPARK_GRAFT_LABEL_ADAPTIVE_MAX"))
+    sys.env.get("SPARK_GRAFT_LABEL_ADAPTIVE_MAX")
       .flatMap(_.trim.toIntOption).filter(_ >= 1).getOrElse(LabelRepeats)
 
+  /** Enumerate + label candidates for each query (the cluster-side
+    * step; at 100 TB you run this at a sampled SF, like the reference
+    * labels on a training DB). */
   def labelWorkload(spark: SparkSession,
                     queries: Seq[(String, SparkSession => DataFrame)],
                     log: Logger): Seq[LabeledQuery] =
@@ -311,37 +308,21 @@ object Pipelines {
                                    gainAllMs: Double,
                                    scoreGapThreshold: Double = 0.0)
 
-  /** Pick the gate threshold maximizing the REALIZED net routing gain
-    * on the train split: pairs is (z, gainMs) per query where the main
-    * comparator proposes a non-default plan; threshold t routes
-    * exactly the pairs with z > t. `overheadMs` is charged per routed
-    * query — the engine-side cost of routing itself (replan under the
-    * remembered choice on every repeat; the r18 E2E(A) measured it at
-    * ~40 ms/routed query at sf0.1) — so a pick whose predicted gain
-    * does not clear BOTH the model's uncertainty and the routing cost
-    * declines; without it the r17/r18 stock-conf arm routed hundreds
-    * of ~20 ms-gain queries and paid ~40 ms each (the "routing tax").
-    * Ties prefer the LARGER t (route less — the no-lose direction);
-    * t is clamped ≥ 0 so the gate never routes on a sub-coin-flip
-    * prediction. Pure; unit-tested. */
-  private[graft] def calibrateThreshold(pairs: Seq[(Double, Double)],
-                                        overheadMs: Double = 0.0)
-      : (Double, Double) = {
-    if (pairs.isEmpty) return (0.0, 0.0)
-    val cands = (0.0 +: pairs.map(_._1).filter(_ > 0)).distinct
-    cands.map { t =>
-      (t, pairs.collect { case (z, g) if z > t => g - overheadMs }.sum)
-    }.maxBy { case (t, net) => (net, t) }
-  }
-
-  /** Two-axis gate calibration over (z, scoreGap, gainMs) triples:
-    * jointly pick the (zThr, gapThr) maximizing the overhead-charged
-    * net gain of routing exactly the pairs clearing BOTH. Candidate
-    * thresholds are 0 plus the observed values on each axis; ties
-    * prefer the more conservative (larger) pair. The gap axis is what
+  /** Gate calibration over (z, scoreGap, gainMs) triples: jointly
+    * pick the (zThr, gapThr) maximizing the REALIZED net routing gain
+    * of routing exactly the pairs clearing BOTH, on the train split.
+    * `overheadMs` is charged per routed query — the engine-side cost
+    * of routing itself (replan under the remembered choice on every
+    * repeat; the r18 E2E(A) measured ~40 ms/routed query at sf0.1) —
+    * so a pick whose predicted gain does not clear BOTH the model's
+    * uncertainty and the routing cost declines. Candidate thresholds
+    * are 0 plus the observed values on each axis, so neither is ever
+    * negative and the gate never routes on a sub-coin-flip
+    * prediction; ties prefer the more conservative (larger) pair —
+    * route less, the no-lose direction. The gap axis is what
     * transfers across deployment confs — see [[GateCalibration]].
     * Pure; unit-tested. */
-  private[graft] def calibrateThreshold2(
+  private[graft] def calibrateThreshold(
       triples: Seq[(Double, Double, Double)], overheadMs: Double = 0.0)
       : (Double, Double, Double) = {
     if (triples.isEmpty) return (0.0, 0.0, 0.0)
@@ -355,28 +336,6 @@ object Pipelines {
     }).maxBy { case (zt, gt, net) => (net, zt + gt) }
     best
   }
-
-  /** Train the uncertainty-aware pairwise comparator (M15) on the same
-    * labeled corpus as the main model and calibrate the margin gate's
-    * threshold against the main model's own routing proposals: for
-    * each train query where the main comparator's argmin is NOT the
-    * default plan, score the (default, proposed) pair with the
-    * Bayesian head, form z = (P(default slower) − 0.5)/σ, and choose
-    * the threshold that maximizes realized net gain. Deployed via
-    * [[ModelIO.saveGate]] → `plans.PlanChoice`: the in-engine strategy
-    * routes only when z clears the threshold, otherwise it declines
-    * and the session plans natively — the no-lose guarantee at stock
-    * conf that the r17 E2E(A) arm lacked. */
-  /** Per-routed-query overhead charged during gate calibration
-    * (SPARK_GRAFT_GATE_OVERHEAD_MS / -Dgraft.gate.overheadMs). The
-    * r18 E2E(A) measured ~40 ms of replanning per routed repeat at
-    * sf0.1; at production input sizes the same 40 ms is noise against
-    * seconds-scale queries, so the constant is a per-deployment knob,
-    * not a universal truth. */
-  def GateOverheadMs: Double =
-    sys.props.get("graft.gate.overheadMs")
-      .orElse(sys.env.get("SPARK_GRAFT_GATE_OVERHEAD_MS"))
-      .flatMap(_.trim.toDoubleOption).filter(_ >= 0).getOrElse(0.0)
 
   /** The (z, scoreGap, gainMs) calibration triples for the gate: for
     * each labeled query where `mainModel`'s argmin is NOT the default
@@ -399,6 +358,18 @@ object Pipelines {
       }
     }
 
+  /** Train the uncertainty-aware pairwise comparator (M15) on the same
+    * labeled corpus as the main model and calibrate the margin gate's
+    * threshold against the main model's own routing proposals: for
+    * each train query where the main comparator's argmin is NOT the
+    * default plan, score the (default, proposed) pair with the
+    * Bayesian head, form z = (P(default slower) − 0.5)/σ, and choose
+    * the thresholds that maximize realized net gain, charging no
+    * routing overhead (`GateRecalMain` re-calibrates with one).
+    * Deployed via [[ModelIO.saveGate]] → `plans.PlanChoice`: the
+    * in-engine strategy routes only when z clears the threshold,
+    * otherwise it declines and the session plans natively — the
+    * no-lose guarantee at stock conf that the r17 E2E(A) arm lacked. */
   def trainBayesGate(labeled: Seq[LabeledQuery], fg: FeatureGenerator,
                      mainModel: LeroModelPairWise, epochs: Int = 60,
                      seed: Long = 23L, log: Logger = new Logger(None))
@@ -409,14 +380,12 @@ object Pipelines {
     val bm = new BayesianModelPairWise(fg.featureDim, seed)
     bm.fit(x1, x2, y1, y2, epochs = epochs)
     val pairs = gatePairs(trainable, fg, mainModel, bm)
-    val overhead = GateOverheadMs
-    val (thr, gapThr, net) = calibrateThreshold2(pairs, overhead)
+    val (thr, gapThr, net) = calibrateThreshold(pairs)
     val cal = GateCalibration(thr, pairs.size,
       pairs.count(t => t._1 > thr && t._2 > gapThr), net,
       pairs.map(_._3).sum, gapThr)
     log.info(f"bayes gate calibration: z threshold=${cal.threshold}%.4f, " +
-      f"score-gap threshold=${cal.scoreGapThreshold}%.5f " +
-      f"(overhead charge ${overhead}%.1fms/routed) routes " +
+      f"score-gap threshold=${cal.scoreGapThreshold}%.5f routes " +
       f"${cal.nRouted}/${cal.nPairs} proposed deviations on train " +
       f"(net gain ${cal.netGainMs}%.1fms gated vs ${cal.gainAllMs}%.1fms ungated)")
     (bm, cal)
@@ -471,25 +440,17 @@ object Pipelines {
                                    testFloorLabels: Seq[LabeledQuery] = Nil)
 
   /** M30 stable pipeline (`stable.py:13-30`): label, train on the
-    * train split, evaluate on the test split. */
+    * train split, evaluate on the test split; returns the result with
+    * the trained model for deployment. With `dualTestFloor` the test
+    * split is labeled via [[labelWorkloadDual]] and the second
+    * (same-pass) label vectors ride in `testFloorLabels` so the caller
+    * can state the labeling protocol's own noise floor. */
   def stable(spark: SparkSession,
              trainQueries: Seq[(String, SparkSession => DataFrame)],
              testQueries: Seq[(String, SparkSession => DataFrame)],
              epochs: Int = 100, seed: Long = 17L,
-             log: Logger = new Logger(None)): EvalResult =
-    stableWithModel(spark, trainQueries, testQueries, epochs, seed, log).result
-
-  /** `stable` variant returning the trained model for deployment.
-    * With `dualTestFloor` the test split is labeled via
-    * [[labelWorkloadDual]] and the second (same-pass) label vectors
-    * ride in `testFloorLabels` so the caller can state the labeling
-    * protocol's own noise floor. */
-  def stableWithModel(spark: SparkSession,
-                      trainQueries: Seq[(String, SparkSession => DataFrame)],
-                      testQueries: Seq[(String, SparkSession => DataFrame)],
-                      epochs: Int = 100, seed: Long = 17L,
-                      log: Logger = new Logger(None),
-                      dualTestFloor: Boolean = false): StableArtifacts = {
+             log: Logger = new Logger(None),
+             dualTestFloor: Boolean = false): StableArtifacts = {
     val trainLabeled = labelWorkload(spark, trainQueries, log)
     val (testLabeled, testFloor) =
       if (dualTestFloor) labelWorkloadDual(spark, testQueries, log)
@@ -551,17 +512,12 @@ object Pipelines {
 
   /** M30 deployment/dynamic loop (`deployment.py:20-43`,
     * `dynamic.py:27-50`): per batch i, retrain FROM SCRATCH on batch
-    * i and evaluate on batch i+1; returns per-batch selected-plan
-    * totals (the reference's lero_latency_list). */
-  def deploymentLoop(batches: Seq[Seq[LabeledQuery]], epochs: Int = 100,
-                     seed: Long = 17L,
-                     log: Logger = new Logger(None)): Seq[Double] =
-    deploymentLoopResults(batches, epochs, seed, log).map(_.selectedTotalSec)
-
-  /** [[deploymentLoop]] with the full per-batch evaluations (loss and
-    * default totals alongside the selected totals) — what an E2E
-    * driver reports; the reference's lero_latency_list keeps only the
-    * selected sums.
+    * i and evaluate on batch i+1. Returns each batch's full evaluation
+    * (loss and default totals alongside the selected totals — the
+    * reference's lero_latency_list keeps only the selected sums) with
+    * its trained artifacts, so a driver can re-score the batch under a
+    * different evaluation metric (the r18 resolution-qualified loss)
+    * without retraining.
     *
     * With `bootstrap = true` (the dynamic mode, `Lero/dynamic.py:27-38`)
     * the list additionally starts with a model_0 entry: a model trained
@@ -581,23 +537,11 @@ object Pipelines {
     * exploration run in that mode, so the Spark-native analog is a
     * growing flatten of the labeled batches (labels are still paid
     * once per batch; only training re-runs). */
-  def deploymentLoopResults(batches: Seq[Seq[LabeledQuery]],
-                            epochs: Int = 100, seed: Long = 17L,
-                            log: Logger = new Logger(None),
-                            bootstrap: Boolean = false,
-                            accumulate: Boolean = false): Seq[EvalResult] =
-    deploymentLoopResultsFull(batches, epochs, seed, log, bootstrap,
-      accumulate).map(_._1)
-
-  /** [[deploymentLoopResults]] additionally returning each batch's
-    * trained artifacts, so a driver can re-score the batch under a
-    * different evaluation metric (the r18 resolution-qualified loss)
-    * without retraining. */
-  def deploymentLoopResultsFull(batches: Seq[Seq[LabeledQuery]],
-                                epochs: Int = 100, seed: Long = 17L,
-                                log: Logger = new Logger(None),
-                                bootstrap: Boolean = false,
-                                accumulate: Boolean = false)
+  def deploymentLoop(batches: Seq[Seq[LabeledQuery]],
+                     epochs: Int = 100, seed: Long = 17L,
+                     log: Logger = new Logger(None),
+                     bootstrap: Boolean = false,
+                     accumulate: Boolean = false)
       : Seq[(EvalResult, FeatureGenerator, LeroModelPairWise)] = {
     val boot = if (bootstrap && batches.nonEmpty && batches.head.nonEmpty) {
       val (fg0, model0) = train(batches.head.take(1), epochs, seed)

@@ -79,7 +79,7 @@ object StableMain {
       s"epochs=$epochs; label_repeats=${Pipelines.LabelRepeats} " +
       "(min-of-k timed executions per candidate, both floor passes included)")
 
-    val art = Pipelines.stableWithModel(spark, trainQ, testQ, epochs = epochs,
+    val art = Pipelines.stable(spark, trainQ, testQ, epochs = epochs,
       seed = 17L, log = log, dualTestFloor = true)
     val res = art.result
     Pipelines.writeLeroDict(res, s"$outDir/lero_dict.json")

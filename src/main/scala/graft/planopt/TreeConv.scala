@@ -30,12 +30,6 @@ object TreeConv {
 
   final class TreeConvolutionError(msg: String) extends RuntimeException(msg)
 
-  /** Per-forward conv cache (gather matrix + layout) — returned
-    * rather than stored on the layer, so interleaved forwards
-    * (pairwise training forwards BOTH trees before backward) can't
-    * clobber each other's state. */
-  final case class ConvCache(gather: DenseMatrix[Double], idx: Array[Int], inRows: Int)
-
   /** Flattened batch: per-tree node matrices ((maxN+1) × C, row 0 =
     * sentinel zero) and index triples (3·maxK, zero-padded). */
   final case class PreparedTrees(nodes: Array[DenseMatrix[Double]],
@@ -122,71 +116,18 @@ object TreeConv {
     val dW: DenseMatrix[Double] = DenseMatrix.zeros(3 * inC, outC)
     val dB: DenseVector[Double] = DenseVector.zeros(outC)
 
-    /** nodes ((P × inC), row 0 sentinel) + idx (3K) → (K+1 × outC)
-      * with fresh zero row 0 (`tcnn.py:14-26`). */
-    def forward(nodes: DenseMatrix[Double], idx: Array[Int]): (DenseMatrix[Double], ConvCache) = {
-      val k = idx.length / 3
-      val g = DenseMatrix.zeros[Double](k, 3 * inC)
-      var t = 0
-      while (t < k) {
-        var s = 0
-        while (s < 3) {
-          val src = idx(3 * t + s)
-          var c = 0
-          while (c < inC) { g(t, s * inC + c) = nodes(src, c); c += 1 }
-          s += 1
-        }
-        t += 1
-      }
-      val conv = g * w // (K × outC)
-      val out = DenseMatrix.zeros[Double](k + 1, outC)
-      var r = 0
-      while (r < k) {
-        var c = 0
-        while (c < outC) { out(r + 1, c) = conv(r, c) + b(c); c += 1 }
-        r += 1
-      }
-      (out, ConvCache(g, idx, nodes.rows))
-    }
-
-    /** dOut (K+1 × outC) → dNodes (P × inC); accumulates dW/dB. */
-    def backward(dOut: DenseMatrix[Double], cache: ConvCache): DenseMatrix[Double] = {
-      val k = cache.idx.length / 3
-      val dConv = dOut(1 to k, ::).toDenseMatrix // drop sentinel row grad
-      dW += cache.gather.t * dConv
-      var r = 0
-      while (r < k) {
-        var c = 0
-        while (c < outC) { dB(c) += dConv(r, c); c += 1 }
-        r += 1
-      }
-      val dG = dConv * w.t // (K × 3 inC)
-      val dNodes = DenseMatrix.zeros[Double](cache.inRows, inC)
-      var t = 0
-      while (t < k) {
-        var s = 0
-        while (s < 3) {
-          val src = cache.idx(3 * t + s)
-          var c = 0
-          while (c < inC) { dNodes(src, c) += dG(t, s * inC + c); c += 1 }
-          s += 1
-        }
-        t += 1
-      }
-      dNodes
-    }
-
-    def params: Seq[(DenseMatrix[Double], DenseMatrix[Double])] = Seq((w, dW))
     def zeroGrad(): Unit = { dW := 0.0; dB := 0.0 }
 
-    // --- batched variants: stack every tree's gather rows into ONE
-    // matrix so each layer costs one gemm per batch instead of one
-    // tiny matmul per tree (the per-tree calls were overhead-bound:
-    // K≈15 rows each). Per-element math is identical to forward/
-    // backward — same gathers, same dot products — so results match
-    // the per-tree path to BLAS rounding.
+    // every tree's gather rows are stacked into ONE matrix, so each
+    // layer costs one gemm per batch instead of one tiny matmul per
+    // tree (K≈15 rows each). A one-tree batch of at most
+    // ParGemm.SliceRows nodes is one plain `g * w` on that tree's own
+    // gather matrix.
 
-    /** Per-tree gather offsets into the stacked matrices. */
+    /** nodes ((P × inC) per tree, row 0 sentinel) + idx (3K per tree)
+      * → per-tree (K+1 × outC) with a fresh zero row 0
+      * (`tcnn.py:14-26`); the cache records each tree's row offset
+      * into the stacked gather matrix. */
     def forwardBatch(nodesArr: Array[DenseMatrix[Double]],
                      idxesArr: Array[Array[Int]]): (Array[DenseMatrix[Double]], BatchConvCache) = {
       val nT = nodesArr.length

@@ -89,7 +89,7 @@ class CoresetPipelineSpec extends AnyFunSuite {
       .map(n => n -> ((s: org.apache.spark.sql.SparkSession) =>
         Relational.defs(n)(s, sf)))
     val res = Pipelines.stable(spark, qs.take(4), qs.drop(4),
-      epochs = 8, seed = 31)
+      epochs = 8, seed = 31).result
     // ranking loss defined (at least one test query with >=2 cands)
     assert(res.rankingLoss.forall(l => l >= 0.0 && l <= 2.0))
     assert(res.leroDict.nonEmpty)
@@ -111,7 +111,7 @@ class CoresetPipelineSpec extends AnyFunSuite {
       (1 to 4).map(i => q(s"a$i", 1.0 + i * 0.1)),
       (1 to 3).map(i => q(s"b$i", 1.2 + i * 0.1)),
       (1 to 3).map(i => q(s"c$i", 0.9 + i * 0.1)))
-    val sums = Pipelines.deploymentLoop(batches, epochs = 10, seed = 41)
+    val sums = Pipelines.deploymentLoop(batches, epochs = 10, seed = 41).map(_._1.selectedTotalSec)
     assert(sums.length == 2 && sums.forall(_ > 0))
   }
 
@@ -134,9 +134,9 @@ class CoresetPipelineSpec extends AnyFunSuite {
       (1 to 2).map(i => q(s"b$i", deepFast = true, 1.1 + i * 0.05)).map(x =>
         x.copy(latenciesMs = x.latenciesMs.reverse)), // deep slow here
       (1 to 2).map(i => q(s"c$i", deepFast = true, 1.0 + i * 0.05)))
-    val scratch = Pipelines.deploymentLoopResults(batches, epochs = 40, seed = 41)
-    val accum = Pipelines.deploymentLoopResults(batches, epochs = 40, seed = 41,
-      accumulate = true)
+    val scratch = Pipelines.deploymentLoop(batches, epochs = 40, seed = 41).map(_._1)
+    val accum = Pipelines.deploymentLoop(batches, epochs = 40, seed = 41,
+      accumulate = true).map(_._1)
     assert(scratch.length == 2 && accum.length == 2)
     // batch-1 evals are identical (both train on batch 0 only)
     assert(math.abs(scratch.head.selectedTotalSec - accum.head.selectedTotalSec) < 1e-9)

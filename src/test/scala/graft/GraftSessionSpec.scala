@@ -90,4 +90,28 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(listed.nonEmpty)
     assert((listed -- mains).isEmpty, s"README runs mains that do not exist: ${listed -- mains}")
   }
+
+  test("every env var src/main reads is read at one site and named in README.md; no -D graft. twin") {
+    val root = Paths.get("src/main/scala")
+    val Read = """(?:sys\.env\.get|sys\.env\.getOrElse|sys\.env|System\.getenv)\(\s*"(\w+)"""".r
+    // (variable, file:line) for every read on a code line
+    val reads = Files.walk(root).iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        Files.readAllLines(f).asScala.zipWithIndex
+          .filterNot { case (l, _) => Seq("*", "//", "/*").exists(l.trim.startsWith) }
+          .flatMap { case (l, i) =>
+            Read.findAllMatchIn(l).map(m => m.group(1) -> s"${root.relativize(f)}:${i + 1}") }
+      }
+    val sites = reads.groupBy(_._1).map { case (v, rs) => v -> rs.map(_._2) }
+    assert(sites.contains("SPARK_GRAFT_CPUS") && sites.contains("GRAFT_INDEX_DIR"), sites.keySet)
+    val repeated = sites.filter(_._2.size > 1)
+    assert(repeated.isEmpty, s"env vars read at more than one site: $repeated")
+    val readme = new String(Files.readAllBytes(Paths.get("README.md")), "UTF-8")
+    val unnamed = sites.keySet.filterNot(v => s"\\b$v\\b".r.findFirstIn(readme).isDefined)
+    assert(unnamed.isEmpty, s"env vars missing from README.md: $unnamed")
+    val propTwins = Files.walk(root).iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .filter(f => new String(Files.readAllBytes(f), "UTF-8").contains("sys.props.get(\"graft."))
+      .map(root.relativize(_).toString).toSeq
+    assert(propTwins.isEmpty, s"-D graft.* settings left in: $propTwins")
+  }
 }

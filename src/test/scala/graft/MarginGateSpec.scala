@@ -31,23 +31,31 @@ class MarginGateSpec extends AnyFunSuite {
 
   test("calibrateThreshold maximizes realized net gain, ties to larger t") {
     // two confident wins (z=3, gain +100), one confident loss (z=0.5,
-    // gain -80): best threshold excludes the loss
-    val pairs = Seq((3.0, 100.0), (3.0, 100.0), (0.5, -80.0))
-    val (t, net) = Pipelines.calibrateThreshold(pairs)
-    assert(net == 200.0)
-    assert(t >= 0.5 && t < 3.0, s"threshold $t should exclude the z=0.5 loss")
-    // all-negative: route nothing (threshold at/above the max z)
-    val (t2, net2) = Pipelines.calibrateThreshold(Seq((1.0, -5.0), (2.0, -5.0)))
-    assert(net2 == 0.0 && t2 >= 2.0)
+    // gain -80): the best thresholds exclude the loss
+    val mixed = Seq((3.0, 0.3, 100.0), (3.0, 0.3, 100.0), (0.5, 0.05, -80.0))
+    val (zm, gm, netm) = Pipelines.calibrateThreshold(mixed)
+    assert(netm == 200.0)
+    assert(!(0.5 > zm && 0.05 > gm) && 3.0 > zm && 0.3 > gm,
+      s"thresholds (zt=$zm gt=$gm) should route both wins and exclude the loss")
+    // ties pick the more conservative pair: routing everything and
+    // routing only the first triple both net 100, so the larger
+    // thresholds that drop the zero-gain triple win
+    assert(Pipelines.calibrateThreshold(Seq((3.0, 0.3, 100.0), (1.0, 0.1, 0.0))) ==
+      (1.0, 0.1, 100.0))
+    // all-negative: route nothing
+    val losers = Seq((1.0, 0.1, -5.0), (2.0, 0.2, -5.0))
+    val (zl, gl, netl) = Pipelines.calibrateThreshold(losers)
+    assert(netl == 0.0 && losers.forall { case (z, g, _) => !(z > zl && g > gl) },
+      s"an all-negative set routed something (zt=$zl gt=$gl)")
     // empty: conservative default
-    assert(Pipelines.calibrateThreshold(Nil) == (0.0, 0.0))
-    // negative-z winners are never routed (clamp at 0): with only a
-    // sub-coin-flip winner the best non-negative threshold keeps net 0
-    val (t3, net3) = Pipelines.calibrateThreshold(Seq((-1.0, 50.0)))
-    assert(t3 >= 0.0 && net3 == 0.0)
+    assert(Pipelines.calibrateThreshold(Nil) == (0.0, 0.0, 0.0))
+    // z < 0 never routes: the z threshold is never negative, so a
+    // sub-coin-flip winner stays declined however large its gain
+    val (zn, _, netn) = Pipelines.calibrateThreshold(Seq((-1.0, 0.5, 50.0)))
+    assert(zn >= 0.0 && netn == 0.0)
   }
 
-  test("calibrateThreshold2 separates gain axis from uncertainty axis") {
+  test("calibrateThreshold separates gain axis from uncertainty axis") {
     // stock-conf shape: small-gap small-gain pairs lose once overhead
     // is charged; one defensive-conf-shaped pair (moderate z, BIG
     // predicted gap, big gain) must survive — a z-only threshold
@@ -55,14 +63,14 @@ class MarginGateSpec extends AnyFunSuite {
     val triples = Seq(
       (2.0, 0.005, 20.0), (2.5, 0.004, 15.0), (1.8, 0.006, 25.0), // small wins
       (0.6, 0.090, 400.0))                                        // broadcast win
-    val (zt, gt, net) = Pipelines.calibrateThreshold2(triples, overheadMs = 40.0)
+    val (zt, gt, net) = Pipelines.calibrateThreshold(triples, overheadMs = 40.0)
     // routing only the big-gap pair nets 360; routing everything nets
     // 300; routing none nets 0
     assert(net == 360.0, s"net=$net (zt=$zt gt=$gt)")
     assert(zt < 0.6 && gt >= 0.006 && gt < 0.09,
       s"thresholds (zt=$zt gt=$gt) should route only the big-gap pair")
     // empty: conservative default
-    assert(Pipelines.calibrateThreshold2(Nil) == (0.0, 0.0, 0.0))
+    assert(Pipelines.calibrateThreshold(Nil) == (0.0, 0.0, 0.0))
   }
 
   test("snapResolutionTies merges sub-resolution groups, keeps resolved order") {
@@ -86,6 +94,40 @@ class MarginGateSpec extends AnyFunSuite {
     assert(rawFloor == 2.0, "a flipped 2-candidate query costs full loss")
     assert(snapFloor.isEmpty || snapFloor.get == 0.0,
       "snapped tie still penalized")
+  }
+
+  // ---- the deployed gate's numbers ----
+
+  test("deployed r18 gate and comparator score three join trees bit for bit") {
+    import PlanFeatures.PlanNode
+    def scan(rel: String, rows: Double, width: Int) = PlanNode("FileScan", rows, width, Some(rel), Nil)
+    def op(name: String, rows: Double, width: Int, kids: PlanNode*) = PlanNode(name, rows, width, None, kids)
+    def shuffle(c: PlanNode) = op("ShuffleExchange", c.rowsEst, c.width, c)
+    def sorted(c: PlanNode) = op("Sort", c.rowsEst, c.width, shuffle(c))
+    val orders = op("Filter", 7500, 16, scan("orders", 15000, 16))
+    val customer = scan("customer", 1500, 8)
+    // the native sort-merge plan, its broadcast rewrite, and a 3-way join
+    val smj = op("HashAggregate", 1, 8, op("HashAggregate", 1, 8,
+      op("SortMergeJoin", 7500, 24, sorted(orders), sorted(customer))))
+    val bhj = op("HashAggregate", 1, 8, op("HashAggregate", 1, 8,
+      op("BroadcastHashJoin", 7500, 24, orders, op("BroadcastExchange", 1500, 8, customer))))
+    val threeWay = op("HashAggregate", 1, 8, op("HashAggregate", 1, 8,
+      op("BroadcastHashJoin", 30000, 32,
+        op("SortMergeJoin", 30000, 24, sorted(scan("lineitem", 60000, 16)), sorted(orders)),
+        op("BroadcastExchange", 10, 8, scan("supplier", 10, 8)))))
+    val dir = "results/r18_stable_1000/stable_model"
+    val (model, gen) = ModelIO.load(dir)
+    val (bm, _, _) = ModelIO.loadGate(dir).get
+    val trees = Seq(smj, bhj, threeWay).map(gen.transform)
+    val scores = model.predict(trees).toSeq
+    val pairs = Seq(bm.predictPair(trees(0), trees(1)), bm.predictPair(trees(0), trees(2)))
+    val got = (scores ++ pairs.flatMap(pv => Seq(pv._1, pv._2))).map(java.lang.Double.doubleToLongBits)
+    // captured while predictPair still ran a separate per-tree
+    // forward; the order is the three scores, then (p, v) of
+    // (smj, bhj) and of (smj, threeWay)
+    val expected = Seq(0x3ff52cb5fab7f476L, 0xc00d712c0682436dL, 0x3fef79558b495002L,
+      0x3fef8a5f75b493bdL, 0x3ff0000006870cb5L, 0x3f7631539b643747L, 0x3ff0000000e2e523L)
+    assert(got == expected, got.map(b => f"0x$b%016xL").mkString(", "))
   }
 
   // ---- gate persistence ----

@@ -55,74 +55,59 @@ class PlanOptSpec extends AnyFunSuite {
 
   test("LeroNet forward: finite score + 64-d pooled feature") {
     val net = new LeroNet(2, seed = 7)
-    val p = prepareTrees(Seq(tree1, tree2))
-    val (s1, f1, _) = net.forward(p.nodes(0), p.idxes(0))
-    val (s2, f2, _) = net.forward(p.nodes(1), p.idxes(1))
-    assert(!s1.isNaN && !s2.isNaN && s1 != s2)
-    assert(f1.length == 64 && f2.length == 64)
+    val (scores, feats, _) = net.forwardTrees(Seq(tree1, tree2))
+    assert(!scores(0).isNaN && !scores(1).isNaN && scores(0) != scores(1))
+    assert(feats(0).length == 64 && feats(1).length == 64)
     // deterministic under fixed seed
     val net2 = new LeroNet(2, seed = 7)
-    val (s1b, _, _) = net2.forward(p.nodes(0), p.idxes(0))
-    assert(s1 == s1b)
+    assert(net2.forwardTrees(Seq(tree1, tree2))._1.sameElements(scores))
   }
 
-  test("batched forward/backward equal the per-tree path") {
+  test("a 2-tree batch equals two single-tree batches: scores, pooled features, grads") {
     val net = new LeroNet(2, seed = 13)
-    val p = prepareTrees(Seq(tree1, tree2))
-    // forward parity
-    val (sA, fA, _) = net.forward(p.nodes(0), p.idxes(0))
-    val (sB, fB, _) = net.forward(p.nodes(1), p.idxes(1))
-    val (scores, feats, bcache) = net.forwardBatch(p.nodes, p.idxes)
-    assert(math.abs(scores(0) - sA) < 1e-9 && math.abs(scores(1) - sB) < 1e-9)
-    assert(breeze.linalg.norm(feats(0) - fA) < 1e-9)
-    assert(breeze.linalg.norm(feats(1) - fB) < 1e-9)
-    // backward parity: batched grads == sum of per-tree grads
-    net.zeroGrad()
-    net.backwardBatch(Array(0.7, -0.3), bcache)
-    val batchedGrads = net.paramGrads.map(_._2.clone())
-    net.zeroGrad()
-    val (_, _, c1) = net.forward(p.nodes(0), p.idxes(0))
-    val (_, _, c2) = net.forward(p.nodes(1), p.idxes(1))
-    net.backward(0.7, c1)
-    net.backward(-0.3, c2)
-    val perTreeGrads = net.paramGrads.map(_._2)
-    batchedGrads.zip(perTreeGrads).foreach { case (bg, pg) =>
-      bg.indices.foreach { i =>
-        assert(math.abs(bg(i) - pg(i)) < 1e-9, s"grad mismatch at $i")
-      }
-    }
-    // pooled-feature gradient path (Bayesian head) parity
+    val dScores = Array(0.7, -0.3)
     val extra = Array(DenseVector.fill(64)(0.3), DenseVector.fill(64)(-0.2))
     net.zeroGrad()
-    val (_, _, bc2) = net.forwardBatch(p.nodes, p.idxes)
-    net.backwardBatch(Array(0.0, 0.0), bc2, Some(extra))
-    val batchedExtra = net.paramGrads.map(_._2.clone())
+    val (scores, feats, cache) = net.forwardTrees(Seq(tree1, tree2))
+    net.backwardBatch(dScores, cache, Some(extra))
+    val batchedGrads = net.paramGrads.map(_._2.clone())
     net.zeroGrad()
-    val (_, _, e1) = net.forward(p.nodes(0), p.idxes(0))
-    val (_, _, e2) = net.forward(p.nodes(1), p.idxes(1))
-    net.backward(0.0, e1, Some(extra(0)))
-    net.backward(0.0, e2, Some(extra(1)))
-    batchedExtra.zip(net.paramGrads.map(_._2)).foreach { case (bg, pg) =>
+    Seq(tree1, tree2).zipWithIndex.foreach { case (t, i) =>
+      val (s, f, c) = net.forwardTrees(Seq(t))
+      assert(math.abs(s(0) - scores(i)) < 1e-9, s"score mismatch on tree $i")
+      assert(breeze.linalg.norm(f(0) - feats(i)) < 1e-9, s"pooled mismatch on tree $i")
+      net.backwardBatch(Array(dScores(i)), c, Some(Array(extra(i))))
+    }
+    batchedGrads.zip(net.paramGrads.map(_._2)).foreach { case (bg, sg) =>
       bg.indices.foreach { i =>
-        assert(math.abs(bg(i) - pg(i)) < 1e-9, s"pooled-grad mismatch at $i")
+        assert(math.abs(bg(i) - sg(i)) < 1e-9, s"grad mismatch at $i")
       }
     }
   }
 
   test("backprop matches finite differences") {
+    // objective over a 2-tree batch: a weighted sum of both scores
+    // plus a linear term on each pooled feature, so the dPooledExtra
+    // path the Bayesian head drives is checked as well
     val net = new LeroNet(2, seed = 11)
-    val p = prepareTrees(Seq(tree1))
-    def score(): Double = net.forward(p.nodes(0), p.idxes(0))._1
+    val trees = Seq(tree1, tree2)
+    val dScores = Array(1.0, -0.5)
+    val extra = Array(DenseVector.tabulate(64)(i => 0.01 * (i % 7 - 3)),
+      DenseVector.tabulate(64)(i => 0.02 * (i % 5 - 2)))
+    def objective(): Double = {
+      val (s, f, _) = net.forwardTrees(trees)
+      trees.indices.map(i => dScores(i) * s(i) + (extra(i) dot f(i))).sum
+    }
     net.zeroGrad()
-    val (_, _, cache) = net.forward(p.nodes(0), p.idxes(0))
-    net.backward(1.0, cache) // dScore = 1 -> grads = dScore/dParam
+    val (_, _, cache) = net.forwardTrees(trees)
+    net.backwardBatch(dScores, cache, Some(extra)) // grads = dObjective/dParam
     val eps = 1e-6
     val rng = new scala.util.Random(3)
     for ((param, grad) <- net.paramGrads; _ <- 0 until 3) {
       val i = rng.nextInt(param.length)
       val orig = param(i)
-      param(i) = orig + eps; val up = score()
-      param(i) = orig - eps; val dn = score()
+      param(i) = orig + eps; val up = objective()
+      param(i) = orig - eps; val dn = objective()
       param(i) = orig
       val numeric = (up - dn) / (2 * eps)
       assert(math.abs(numeric - grad(i)) <= 1e-4 * math.max(1.0, math.abs(numeric)),
@@ -151,7 +136,9 @@ class PlanOptSpec extends AnyFunSuite {
     val sSlow = model.predict(Seq(slow()))(0)
     val sFast = model.predict(Seq(fast()))(0)
     assert(sFast < sSlow, s"fast=$sFast slow=$sSlow")
-    assert(model.selectBest(Seq(slow(), fast(), slow())) == 1)
+    // selection is the argmin score (lero_test.py:97)
+    val scores = model.predict(Seq(slow(), fast(), slow()))
+    assert(scores.indices.minBy(scores) == 1)
   }
 
   test("pointwise MSE training regresses toward targets (M10)") {
