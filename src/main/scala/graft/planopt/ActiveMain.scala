@@ -83,11 +83,11 @@ object ActiveMain {
     // seed labeled set: first 5 pool queries
     val (seedQ, unlabeled) = pool.splitAt(5)
     log.info(s"pool=${pool.length} seed=${seedQ.length} budget=$budget test=${testQ.length}")
-    val seedLabeled = Pipelines.labelWorkload(spark, seedQ, log)
+    val seedLabeled = Pipelines.labelWorkload(spark, seedQ, log).head
     val (fg0, m0) = Pipelines.train(seedLabeled, epochs = epochs / 2, seed = 53L)
 
-    // enumerate candidates once per unlabeled query (planning only)
-    val uCands = unlabeled.map { case (_, b) => Candidates.enumerate(spark, b) }
+    // sweep candidates once per unlabeled query (planning only)
+    val uCands = unlabeled.map { case (_, b) => Candidates.ofQuery(spark, b) }
 
     // 64-d query features: pooled tree-conv feature of the DEFAULT
     // candidate plan under the seed model (get_inter_fea analog).
@@ -114,14 +114,14 @@ object ActiveMain {
       .take(budget)
     log.info(s"coreset picked ${picked.length}: ${picked.sorted.mkString(",")}")
     val coresetLabeled = Pipelines.labelWorkload(
-      spark, picked.map(unlabeled), log)
+      spark, picked.map(unlabeled), log).head
     val (fgC, mC) = Pipelines.train(seedLabeled ++ coresetLabeled, epochs, seed = 53L)
 
     // arm 2: random labeling at the same budget
     val rnd = new scala.util.Random(7)
     val randomIdx = rnd.shuffle(unlabeled.indices.toVector).take(picked.length)
     val randomLabeled = Pipelines.labelWorkload(
-      spark, randomIdx.map(unlabeled), log)
+      spark, randomIdx.map(unlabeled), log).head
     val (fgR, mR) = Pipelines.train(seedLabeled ++ randomLabeled, epochs, seed = 53L)
 
     // arm 3: uncertainty sampling via the Bayesian pairwise head
@@ -155,11 +155,11 @@ object ActiveMain {
       s"${uncertainIdx.sorted.mkString(",")} " +
       f"(var range ${variance.min}%.4f..${variance.max}%.4f)")
     val uncertainLabeled = Pipelines.labelWorkload(
-      spark, uncertainIdx.map(unlabeled), log)
+      spark, uncertainIdx.map(unlabeled), log).head
     val (fgU, mU) = Pipelines.train(seedLabeled ++ uncertainLabeled, epochs, seed = 53L)
 
     // evaluate all arms on the same held-out test set
-    val testLabeled = Pipelines.labelWorkload(spark, testQ, log)
+    val testLabeled = Pipelines.labelWorkload(spark, testQ, log).head
     val resC = Pipelines.evaluate(fgC, mC, testLabeled)
     val resR = Pipelines.evaluate(fgR, mR, testLabeled)
     val resU = Pipelines.evaluate(fgU, mU, testLabeled)

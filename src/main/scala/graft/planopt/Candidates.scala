@@ -1,7 +1,12 @@
 package graft.planopt
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{CommandExecutionMode, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.graft.SparkInternals
 
+import graft.engine.WorkerThreads
 import graft.planopt.PlanFeatures.PlanNode
 
 /** Candidate physical-plan generator + labeler (SURVEY.md
@@ -11,76 +16,62 @@ import graft.planopt.PlanFeatures.PlanNode
   * pre-computed in its data files, `lero_test.py:15-23`).
   *
   * Catalyst doesn't expose "give me k plans", but it re-plans under
-  * session knobs. The sweep varies exactly the decisions the learned
+  * session knobs. [[sweep]] varies exactly the decisions the learned
   * comparator is supposed to rank (SURVEY §2.1 J2 — physical join
   * variant choice, and join order):
-  *  - `autoBroadcastJoinThreshold`: −1 (never broadcast) / default /
+  *  - `autoBroadcastJoinThreshold`: default / −1 (never broadcast) /
   *    huge (broadcast everything that fits);
   *  - `join.preferSortMergeJoin`: SMJ vs shuffled-hash;
-  *  - `cbo.joinReorder.enabled`: stats-driven vs FROM-order joins.
+  *  - join order: the [[JoinOrders.variants]] rewrites of the
+  *    optimized plan.
   *
-  * AQE is disabled during BOTH enumeration and candidate execution
-  * (SURVEY §7 risk note): the featurized static plan must be the plan
-  * that runs, otherwise labels describe a different plan than the one
-  * the model scored. Dedupe is by the canonicalized plan string
-  * (exprIds normalized), so knob combinations that collapse to the
-  * same physical plan count once.
+  * ONE sweep serves both sides of Lero: the in-engine strategy
+  * ([[graft.plans.LearnedPlanStrategy]]) scores its candidates, and
+  * labeling times the same candidates, so the comparator trains on
+  * exactly the plans it will rank. Labeling sweeps and executes with
+  * AQE off (SURVEY §7 risk note): the featurized static plan must be
+  * the plan that runs, otherwise labels describe a different plan than
+  * the one the model scored. Dedupe is by [[canonicalKey]], so knob
+  * combinations that collapse to the same physical plan count once.
   *
-  * Scale note: enumeration is driver-side planning only (no data
+  * Scale note: the sweep is driver-side planning only (no data
   * touched); labeling executes candidates — at 100 TB you label on a
   * sampled fraction or a smaller SF, exactly like the reference
   * labels on its training DB, not production.
   */
 object Candidates {
 
-  /** One knob assignment of the sweep grid. */
-  final case class Knobs(broadcastThreshold: String, preferSortMergeJoin: Boolean,
-                         joinReorder: Boolean) {
+  private val AqeOff = Seq("spark.sql.adaptive.enabled" -> "false")
+
+  /** One physical-planning point of the sweep grid. Every point plans
+    * a plan the optimizer has already join-reordered (CBO reorder is on
+    * in every `Tables.registerAll` session), so the label keeps its
+    * `reorder=true` suffix; join order itself is a candidate's
+    * `variantIdx`, not a knob. */
+  final case class Knobs(broadcastThreshold: String, preferSortMergeJoin: Boolean) {
     def confs: Seq[(String, String)] = Seq(
       "spark.sql.autoBroadcastJoinThreshold" -> broadcastThreshold,
-      "spark.sql.join.preferSortMergeJoin" -> preferSortMergeJoin.toString,
-      "spark.sql.cbo.joinReorder.enabled" -> joinReorder.toString,
-      "spark.sql.adaptive.enabled" -> "false")
-
-    /** The physical-planning subset of [[confs]] — what the in-engine
-      * strategy applies, only around the physical planning of an
-      * ALREADY-OPTIMIZED plan (the incoming query or a pinned join-order
-      * variant), where an optimizer-time conf like joinReorder would be
-      * inert. Join order comes from [[JoinOrders.variants]] instead. */
-    def physicalConfs: Seq[(String, String)] =
-      confs.filterNot(_._1 == "spark.sql.cbo.joinReorder.enabled")
+      "spark.sql.join.preferSortMergeJoin" -> preferSortMergeJoin.toString) ++ AqeOff
     def label: String =
-      s"bcast=$broadcastThreshold,smj=$preferSortMergeJoin,reorder=$joinReorder"
+      s"bcast=$broadcastThreshold,smj=$preferSortMergeJoin,reorder=true"
   }
 
-  /** The sweep grid: 3 × 2 × 2 = 12 assignments (typically 2–6
-    * distinct plans after dedupe — the reference corpus runs 2–3
-    * candidates per query, SURVEY §6).
-    *
-    * ORDER CONTRACT: the FIRST assignment is the engine-default
-    * configuration (bcast=10 MB Spark default, preferSortMergeJoin
-    * default true, joinReorder true as `Tables.registerAll` enables
-    * it), so candidate 0 of every enumerated list IS the plan the
-    * session would run natively. `Pipelines.evaluate` reports
-    * `latenciesMs.head` as the default baseline exactly like the
-    * reference's `get_pg_dict` reports candidate 0 (`lero_test.py:
-    * 56-78`, where candidate 0 is PG's default plan) — with a
-    * non-default assignment first (the pre-r10 "-1" ordering), every
-    * selected-vs-default golden was benchmarked against the
-    * never-broadcast plan instead of the engine's own choice,
-    * overstating the win on broadcast-favorable workloads. */
+  /** The physical grid: 3 × 2 = 6 points. Join-order variants sweep
+    * only its `preferSortMergeJoin` points (the broadcast axis), which
+    * keeps the total planning cost bounded. */
   val knobGrid: Seq[Knobs] = for {
     bcast <- Seq("10485760", "-1", "536870912")
     smj <- Seq(true, false)
-    reorder <- Seq(true, false)
-  } yield Knobs(bcast, smj, reorder)
+  } yield Knobs(bcast, smj)
 
-  /** A deduped candidate: the knobs that produce it, its canonical
-    * plan string, the featurizable plan IR snapshot, and (for
-    * order-aware enumeration) which [[JoinOrders.variants]] index it
-    * was planned from — 0 is the optimizer's own order. */
-  final case class Candidate(knobs: Knobs, canonical: String, plan: PlanNode,
-                             variantIdx: Int = 0)
+  /** A deduped candidate: the knobs that plan it (None = the
+    * session-native plan), the [[JoinOrders.variants]] index it is
+    * planned from (0 is the optimizer's own order), its canonical plan
+    * string and the featurizable plan IR snapshot. */
+  final case class Candidate(knobs: Option[Knobs], variantIdx: Int, canonical: String,
+                             plan: PlanNode) {
+    def knobLabel: String = knobs.fold("session-default")(_.label)
+  }
 
   /** THE canonical-plan key used for candidate dedupe, the routing
     * choice cache, and the spec's executed-plan comparison — one
@@ -105,128 +96,177 @@ object Candidates {
     }
   }
 
-  /** Enumerate distinct physical plans for a query by re-planning
-    * under the knob grid. Planning only — no execution. */
-  def enumerate(spark: SparkSession, build: SparkSession => DataFrame): Seq[Candidate] = {
-    val seen = scala.collection.mutable.LinkedHashMap[String, Candidate]()
-    knobGrid.foreach { knobs =>
-      withConfs(spark, knobs.confs) {
-        val df = build(spark)
-        val plan = df.queryExecution.executedPlan
-        val canonical = canonicalKey(plan)
-        if (!seen.contains(canonical)) {
-          seen(canonical) = Candidate(knobs, canonical, PlanFeatures.fromSparkPlan(plan))
-        }
-      }
-    }
-    seen.values.toSeq
-  }
-
-  /** ORDER-AWARE enumeration (r14): the knob sweep above plus the
-    * [[JoinOrders.variants]] rewrites, so the LABELED candidate space
-    * matches what [[graft.plans.LearnedPlanStrategy]] routes over —
-    * before this, the tail joins (10-way/17-relation) labeled only 2
-    * knob-distinct plans while the strategy scored order variants the
-    * comparator had never trained on. Variant 0 is [[enumerate]]'s
-    * full knob sweep; later variants are planned with the reorder
-    * rules pinned off and sweep the broadcast-threshold axis only
-    * (the strategy's own bounded grid).
-    * Variants are derived from the DEFAULT-knob optimized plan, which
-    * is deterministic per session state — [[executeOrdered]] rebuilds
-    * them identically. */
-  def enumerateOrdered(spark: SparkSession,
-                       build: SparkSession => DataFrame): Seq[Candidate] = {
-    val seen = scala.collection.mutable.LinkedHashMap(
-      enumerate(spark, build).map(c => c.canonical -> c): _*)
-    orderVariants(spark, build).zipWithIndex.drop(1).foreach { case (vq, vIdx) =>
-      knobGrid.filter(k => k.joinReorder && k.preferSortMergeJoin).foreach { knobs =>
-        withConfs(spark, knobs.confs ++ JoinOrders.pinOrderConfs) {
-          val plan = org.apache.spark.sql.execution.graft.SparkInternals.ofRows(spark, vq)
-            .queryExecution.executedPlan
-          val canonical = canonicalKey(plan)
-          if (!seen.contains(canonical))
-            seen(canonical) =
-              Candidate(knobs, canonical, PlanFeatures.fromSparkPlan(plan), vIdx)
-        }
-      }
-    }
-    seen.values.toSeq
-  }
-
-  /** The join-order rewrites of the DEFAULT-knob optimized plan
-    * (variant 0 = the plan itself) — shared by [[enumerateOrdered]]
-    * and [[executeOrdered]] so both walk the same list. Exposed so a
-    * labeling loop can derive the list ONCE per query instead of once
-    * per candidate (each derivation is a full build + optimize +
-    * rewrite — pure driver-side waste when repeated). */
-  private[graft] def orderVariants(spark: SparkSession,
-                                   build: SparkSession => DataFrame) =
-    withConfs(spark, knobGrid.head.confs) {
-      JoinOrders.variants(build(spark).queryExecution.optimizedPlan)
-    }
-
-  /** Execute an order-aware candidate: variant 0 re-plans the build
-    * under its knobs (exactly [[execute]]); later variants execute the
-    * rewritten logical plan with the order pinned. `variants` is the
-    * per-query [[orderVariants]] list (derived once by the caller); a
-    * list that SHRANK between enumerate and execute (session-state
-    * drift) returns None — the knob-plan fallback would pair a
-    * different tree's latency with the variant candidate's features,
-    * silently mislabeling the training data. */
-  def executeOrdered(spark: SparkSession, build: SparkSession => DataFrame,
-                     c: Candidate,
-                     variants: Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan])
-      : Option[(Long, Double)] =
-    if (c.variantIdx == 0) Some(execute(spark, build, c.knobs))
-    else if (c.variantIdx >= variants.size) None
-    else {
-      val vq = variants(c.variantIdx)
-      withConfs(spark, c.knobs.confs ++ JoinOrders.pinOrderConfs) {
-        val df = org.apache.spark.sql.execution.graft.SparkInternals.ofRows(spark, vq)
-        val t0 = System.nanoTime()
-        val n = df.count()
-        Some((n, (System.nanoTime() - t0) / 1e6))
-      }
-    }
-
-  /** Label every candidate by timed execution (optionally after one
-    * untimed warmup run). The variant list is derived ONCE for the
-    * query; a candidate whose variant index no longer resolves (drift)
-    * is DROPPED from the labeled set (logged), never mislabeled with a
-    * different plan's latency.
+  /** Every distinct candidate plan of the optimized plan `query` on
+    * `session`, in a fixed merge order:
+    *  1. the SESSION-NATIVE plan (knobs None, a nested `QueryExecution`,
+    *     so an AQE session's native candidate is the plan it would run)
+    *     — the margin gate's baseline and the labels' default baseline
+    *     (`Pipelines.evaluate` reads `latenciesMs.head`, like the
+    *     reference's candidate 0 in `lero_test.py:56-78`). Under stock
+    *     confs it dedupes the grid's default point; under a defensive
+    *     deployment (e.g. autoBroadcastJoinThreshold=-1) it is the plan
+    *     that conf produces, so a gate decline means "what the user
+    *     configured", never "Spark's defaults";
+    *  2. `query` physically planned at each [[knobGrid]] point;
+    *  3. each [[JoinOrders.variants]] rewrite, optimized once with the
+    *     reorder rules pinned off (else the optimizer undoes the
+    *     permutation), then physically planned per broadcast point.
     *
-    * `repeats` > 1 labels each candidate as the MIN of `repeats`
-    * timed executions (r16 verdict #1 — single-sample labels at
-    * sub-second latencies carry enough timer/JIT noise that the
-    * trained comparator's ranking loss converged onto the relabel
-    * noise floor). Min, not median: wall-clock noise on a fixed plan
-    * is one-sided — descheduling, GC, code-cache misses only ever ADD
+    * The planning groups run on short-lived `graft-sweep-<i>` threads,
+    * each on its own session clone, so `session`'s conf is never
+    * touched. Grid points plan `query` directly: a nested
+    * QueryExecution's re-analysis and re-optimization of an optimized
+    * plan (the CBO join-reorder DP alone cost ~60 ms per 7-way join)
+    * were most of each point's time. */
+  def sweep(session: SparkSession, query: LogicalPlan): Seq[Candidate] = {
+    def prepared(s: SparkSession, knobs: Knobs, vIdx: Int)(p: SparkPlan): Candidate =
+      candidate(SparkInternals.prepareForExecution(s, p), Some(knobs), vIdx)
+    // SKIP mode: belt-and-braces against eager command execution
+    val native: SparkSession => Seq[Candidate] = s => Seq(candidate(
+      new QueryExecution(classic(s), query.clone(), new QueryPlanningTracker,
+        CommandExecutionMode.SKIP).executedPlan, None, 0))
+    // groups run on several threads, so each plans its own clone of
+    // the shared incoming plan
+    val points = knobGrid.map(k => (s: SparkSession) =>
+      Seq(planUnder(s, query.clone(), Some(k))(prepared(s, k, 0))))
+    val orderGrid = knobGrid.filter(_.preferSortMergeJoin)
+    val orders = JoinOrders.variants(query).zipWithIndex.drop(1).map { case (vq, vIdx) =>
+      (s: SparkSession) => optimizePinned(s, vq.clone()) { optimized =>
+        orderGrid.map(k => planUnder(s, optimized, Some(k))(prepared(s, k, vIdx)))
+      }
+    }
+    val groups = (native +: points) ++ orders
+    // hand out the groups that optimize (native, variants) before the
+    // single physical plannings
+    val handOut = (0 +: (1 + points.size until groups.size)) ++ (1 to points.size)
+    val results = new Array[Seq[Candidate]](groups.size)
+    WorkerThreads.run("graft-sweep", session.sparkContext.defaultParallelism,
+        groups.size) {
+      // nested planning runs the clone's planner, whose strategies may
+      // include the learned one
+      graft.plans.PlanChoice.replanning.set(true)
+      SparkInternals.cloneSession(session)
+    } { (clone, i) =>
+      val g = handOut(i)
+      results(g) = SparkInternals.withActive(clone)(groups(g)(clone))
+    }
+    val seen = scala.collection.mutable.LinkedHashMap[String, Candidate]()
+    results.iterator.flatten.foreach(c => if (!seen.contains(c.canonical)) seen(c.canonical) = c)
+    seen.values.toIndexedSeq
+  }
+
+  /** [[sweep]] of `build`'s optimized plan as labeling plans it: with
+    * AQE off, so every candidate is the static plan that runs. */
+  def ofQuery(spark: SparkSession, build: SparkSession => DataFrame): Seq[Candidate] =
+    withConfs(spark, AqeOff)(sweep(spark, build(spark).queryExecution.optimizedPlan))
+
+  private def candidate(executed: SparkPlan, knobs: Option[Knobs], vIdx: Int): Candidate =
+    Candidate(knobs, vIdx, canonicalKey(executed), PlanFeatures.fromSparkPlan(executed))
+
+  private def classic(s: SparkSession) = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+
+  /** Physical planning of the optimized plan `optimized` on `s` under
+    * `knobs`' confs (None: the session's own), handing the unprepared
+    * plan to `f` while the confs are still set. */
+  private[graft] def planUnder[T](s: SparkSession, optimized: LogicalPlan,
+                                  knobs: Option[Knobs])(f: SparkPlan => T): T =
+    withConfs(s, knobs.toSeq.flatMap(_.confs)) {
+      f(SparkInternals.createSparkPlan(s, optimized))
+    }
+
+  /** Join-order variant `vq` analyzed and optimized once on `s` with the
+    * reorder rules pinned off ([[JoinOrders.pinOrderConfs]]); `f` runs
+    * while the pin is still set. */
+  private[graft] def optimizePinned[T](s: SparkSession, vq: LogicalPlan)(
+      f: LogicalPlan => T): T =
+    withConfs(s, JoinOrders.pinOrderConfs) {
+      f(new QueryExecution(classic(s), vq, new QueryPlanningTracker,
+        CommandExecutionMode.SKIP).optimizedPlan)
+    }
+
+  /** Run `body` on the DataFrame that executes candidate `c`, under
+    * the confs that plan it (AQE off): variant 0 re-plans `build`, a
+    * later variant is `variants(c.variantIdx)` with the order pinned.
+    * `variants` is the query's [[JoinOrders.variants]] list; None when
+    * it no longer reaches `c.variantIdx` (session-state drift) — a
+    * fallback plan would pair a different tree's latency with the
+    * candidate's features, silently mislabeling the training data. */
+  private[graft] def onCandidate[T](spark: SparkSession, build: SparkSession => DataFrame,
+                                    c: Candidate, variants: Seq[LogicalPlan])(
+      body: DataFrame => T): Option[T] = {
+    val confs = c.knobs.fold(AqeOff)(_.confs)
+    if (c.variantIdx == 0) Some(withConfs(spark, confs)(body(build(spark))))
+    else variants.lift(c.variantIdx).map { vq =>
+      withConfs(spark, confs ++ JoinOrders.pinOrderConfs)(body(SparkInternals.ofRows(spark, vq)))
+    }
+  }
+
+  /** Execute candidate `c`, returning (rowCount, wallClockMs) — the
+    * labeling step (Spark-native stand-in for the reference's
+    * `Execution Time` from EXPLAIN ANALYZE). See [[onCandidate]]. */
+  def executeOrdered(spark: SparkSession, build: SparkSession => DataFrame,
+                     c: Candidate, variants: Seq[LogicalPlan]): Option[(Long, Double)] =
+    onCandidate(spark, build, c, variants) { df =>
+      val t0 = System.nanoTime()
+      val n = df.count()
+      (n, (System.nanoTime() - t0) / 1e6)
+    }
+
+  /** Label every candidate by timed execution into `vectors` (1 or 2)
+    * label vectors, returned one per vector. The variant list is
+    * derived ONCE for the query; a candidate whose variant index no
+    * longer resolves (drift) is DROPPED from every vector (logged),
+    * never mislabeled with a different plan's latency.
+    *
+    * Each vector labels a candidate as the MIN of its `repeats` timed
+    * executions (r16 verdict #1 — single-sample labels at sub-second
+    * latencies carry enough timer/JIT noise that the trained
+    * comparator's ranking loss converged onto the relabel noise
+    * floor). Min, not median: wall-clock noise on a fixed plan is
+    * one-sided — descheduling, GC, code-cache misses only ever ADD
     * time — so the minimum is the standard robust estimator of the
     * plan's intrinsic latency, and it additionally discards the first
     * run's one-time codegen compile, which is not a property of the
-    * plan being ranked. */
-  def labelCandidatesOrdered(spark: SparkSession,
-                             build: SparkSession => DataFrame,
-                             candidates: Seq[Candidate],
-                             warmup: Boolean = false,
-                             repeats: Int = 1,
-                             adaptiveMaxRepeats: Int = 0,
-                             gapLo: Double = DefaultGapLo,
-                             gapHi: Double = DefaultGapHi): Seq[(Candidate, Double)] = {
+    * plan being ranked.
+    *
+    * Two vectors serve the same-pass noise floor: each candidate runs
+    * 2·`repeats` times with executions ASSIGNED ALTERNATELY to the two
+    * vectors, so both sample the identical JVM state and the floor
+    * computed between them measures the labeling protocol's own
+    * reproducibility. The r17 golden measured why this matters: a
+    * relabel pass taken 90 minutes later (post-training JVM) ran ~30%
+    * faster systematically and put the cross-phase floor at 0.2397
+    * while the labels' tie structure predicts ~0.05 — the old floor
+    * was mostly JVM drift, not label noise. */
+  def label(spark: SparkSession,
+            build: SparkSession => DataFrame,
+            candidates: Seq[Candidate],
+            vectors: Int = 1,
+            repeats: Int = 1,
+            adaptiveMaxRepeats: Int = 0): Seq[Seq[(Candidate, Double)]] = {
+    require(vectors == 1 || vectors == 2, s"vectors must be 1 or 2, got $vectors")
     val k = math.max(1, repeats)
     val kMax = math.max(k, adaptiveMaxRepeats)
     val variants =
-      if (candidates.exists(_.variantIdx > 0)) orderVariants(spark, build)
+      if (candidates.exists(_.variantIdx > 0))
+        JoinOrders.variants(build(spark).queryExecution.optimizedPlan)
       else Nil
+    def run(c: Candidate): Option[Double] = executeOrdered(spark, build, c, variants).map(_._2)
     val base = candidates.flatMap { c =>
-      if (warmup) executeOrdered(spark, build, c, variants)
-      val runs = (1 to k).flatMap(_ =>
-        executeOrdered(spark, build, c, variants).map(_._2))
-      if (runs.length == k)
-        Some((c, scala.collection.mutable.ArrayBuffer(runs: _*)))
+      // with two vectors at k == 1 the alternate assignment is
+      // systematic — run 0 (the one carrying one-time codegen/JIT
+      // compile) always lands in vector 1 — so a single UNTIMED warmup
+      // execution absorbs the compile cost first; at k >= 2 the
+      // per-vector min discards the compile-bearing sample on its own
+      // and the warmup would be wasted wall-clock.
+      if (vectors == 2 && k == 1) run(c)
+      val runs = (0 until vectors * k).flatMap(_ => run(c))
+      if (runs.length == vectors * k)
+        Some((c, IndexedSeq.tabulate(vectors)(v =>
+          scala.collection.mutable.ArrayBuffer(runs.indices.filter(_ % vectors == v).map(runs): _*))))
       else {
         System.err.println(s"[graft] dropping candidate variantIdx=" +
-          s"${c.variantIdx} [${c.knobs.label}]: variant list shrank to " +
+          s"${c.variantIdx} [${c.knobLabel}]: variant list shrank to " +
           s"${variants.size} between enumerate and execute")
         None
       }
@@ -235,24 +275,31 @@ object Candidates {
     // residual flips live in pairs whose relative gap is small enough
     // that min-of-k samples still cross under scheduling variance):
     // any candidate participating in a pair whose gap falls inside
-    // (gapLo, gapHi) gets one more timed run per round, up to kMax
-    // samples. Near-ties BELOW gapLo are left alone (their flips are
-    // genuine ties no sample count resolves), clear wins ABOVE gapHi
-    // never flip — escalating only the ambiguous band buys the floor
-    // reduction of min-of-kMax at a fraction of its labeling cost.
+    // (DefaultGapLo, DefaultGapHi) gets one more timed run per vector
+    // per round, up to kMax samples. Near-ties BELOW the band are left
+    // alone (their flips are genuine ties no sample count resolves),
+    // clear wins ABOVE it never flip — escalating only the ambiguous
+    // band buys the floor reduction of min-of-kMax at a fraction of its
+    // labeling cost. With two vectors the vector receiving the FIRST
+    // of a round's executions alternates by round, so neither vector
+    // systematically samples earlier JVM state than the other.
+    var round = 0
     var changed = true
-    while (changed && base.exists(_._2.length < kMax)) {
+    while (changed && base.exists(_._2.head.length < kMax)) {
       changed = false
-      val amb = ambiguousIdxs(base.map(_._2.min), gapLo, gapHi)
-      base.zipWithIndex.foreach { case ((c, buf), i) =>
-        if (amb(i) && buf.length < kMax) {
-          executeOrdered(spark, build, c, variants).foreach { r =>
-            buf += r._2; changed = true
+      val amb = ambiguousIdxs(base.map(_._2.map(_.min).min), DefaultGapLo, DefaultGapHi)
+      base.zipWithIndex.foreach { case ((c, bufs), i) =>
+        if (amb(i) && bufs.head.length < kMax) {
+          val rs = (0 until vectors).map(_ => run(c))
+          if (rs.forall(_.isDefined)) {
+            rs.indices.foreach(j => bufs((j + round) % vectors) += rs(j).get)
+            changed = true
           }
         }
       }
+      round += 1
     }
-    base.map { case (c, buf) => (c, buf.min) }
+    Seq.tabulate(vectors)(v => base.map { case (c, bufs) => (c, bufs(v).min) })
   }
 
   /** Lower/upper bounds of the "ambiguous gap" band the adaptive
@@ -285,9 +332,9 @@ object Candidates {
     * r14 widening bought (the comparator must train on the join-order
     * rewrites the in-engine strategy scores), so the cap keeps one
     * knob-plan per variant before a second of any. Candidate 0 (the
-    * engine-default plan — [[knobGrid]]'s ORDER CONTRACT) always
-    * survives as element 0: `Pipelines.evaluate` reads
-    * `latenciesMs.head` as the default baseline. */
+    * session-native plan, [[sweep]]'s first) always survives as
+    * element 0: `Pipelines.evaluate` reads `latenciesMs.head` as the
+    * default baseline. */
   def capCandidates(cands: Seq[Candidate], cap: Int): Seq[Candidate] =
     if (cands.size <= cap) cands
     else {
@@ -301,92 +348,5 @@ object Candidates {
         depth += 1
       }
       out.toSeq
-    }
-
-  /** [[labelCandidatesOrdered]] producing TWO independent label
-    * vectors from ONE pass, for the same-pass noise floor: each
-    * candidate runs 2·`repeats` times with executions ASSIGNED
-    * ALTERNATELY to the two vectors, each vector reduced by min — so
-    * both vectors sample the identical JVM state and the floor
-    * computed between them measures the labeling protocol's own
-    * reproducibility. The r17 golden measured why this matters: a
-    * relabel pass taken 90 minutes later (post-training JVM) ran ~30%
-    * faster systematically and put the cross-phase floor at 0.2397
-    * while the labels' tie structure predicts ~0.05 — the old floor
-    * was mostly JVM drift, not label noise. */
-  def labelCandidatesDual(spark: SparkSession,
-                          build: SparkSession => DataFrame,
-                          candidates: Seq[Candidate],
-                          repeats: Int = 1,
-                          adaptiveMaxRepeats: Int = 0,
-                          gapLo: Double = DefaultGapLo,
-                          gapHi: Double = DefaultGapHi)
-      : (Seq[(Candidate, Double)], Seq[(Candidate, Double)]) = {
-    val k = math.max(1, repeats)
-    val kMax = math.max(k, adaptiveMaxRepeats)
-    val variants =
-      if (candidates.exists(_.variantIdx > 0)) orderVariants(spark, build)
-      else Nil
-    val both = candidates.flatMap { c =>
-      // at k == 1 the alternate assignment is systematic — run 0 (the
-      // one carrying one-time codegen/JIT compile) always lands in
-      // vector 1 — so a single UNTIMED warmup execution absorbs the
-      // compile cost first; at k >= 2 the per-vector min discards the
-      // compile-bearing sample on its own and the warmup would be
-      // wasted wall-clock.
-      if (k == 1) executeOrdered(spark, build, c, variants)
-      val runs = (0 until 2 * k).flatMap(_ =>
-        executeOrdered(spark, build, c, variants).map(_._2))
-      if (runs.length == 2 * k) {
-        val (r1, r2) = runs.zipWithIndex.partition(_._2 % 2 == 0)
-        Some((c,
-          scala.collection.mutable.ArrayBuffer(r1.map(_._1): _*),
-          scala.collection.mutable.ArrayBuffer(r2.map(_._1): _*)))
-      } else {
-        System.err.println(s"[graft] dropping candidate variantIdx=" +
-          s"${c.variantIdx} [${c.knobs.label}]: variant list shrank to " +
-          s"${variants.size} between enumerate and execute")
-        None
-      }
-    }
-    // Adaptive escalation, SYMMETRIC across the two vectors: each
-    // escalation round appends one run to EACH vector of every
-    // ambiguous candidate (see labelCandidatesOrdered for the band
-    // rationale), with the vector receiving the FIRST of the two
-    // executions alternating by round so neither vector systematically
-    // samples earlier JVM state than the other.
-    var round = 0
-    var changed = true
-    while (changed && both.exists(_._2.length < kMax)) {
-      changed = false
-      val amb = ambiguousIdxs(
-        both.map(t => math.min(t._2.min, t._3.min)), gapLo, gapHi)
-      both.zipWithIndex.foreach { case ((c, b1, b2), i) =>
-        if (amb(i) && b1.length < kMax) {
-          val r1 = executeOrdered(spark, build, c, variants).map(_._2)
-          val r2 = executeOrdered(spark, build, c, variants).map(_._2)
-          (r1, r2) match {
-            case (Some(a), Some(b)) =>
-              if (round % 2 == 0) { b1 += a; b2 += b } else { b1 += b; b2 += a }
-              changed = true
-            case _ => ()
-          }
-        }
-      }
-      round += 1
-    }
-    (both.map(t => (t._1, t._2.min)), both.map(t => (t._1, t._3.min)))
-  }
-
-  /** Execute the query under a candidate's knobs, returning (rowCount,
-    * wallClockMs) — the labeling step (Spark-native stand-in for the
-    * reference's `Execution Time` from EXPLAIN ANALYZE). */
-  def execute(spark: SparkSession, build: SparkSession => DataFrame,
-              knobs: Knobs): (Long, Double) =
-    withConfs(spark, knobs.confs) {
-      val df = build(spark)
-      val t0 = System.nanoTime()
-      val n = df.count()
-      (n, (System.nanoTime() - t0) / 1e6)
     }
 }

@@ -18,7 +18,7 @@ import graft.workload.{Harvester, WorkloadGen}
   * Labels (the expensive step: candidate enumeration + timed
   * execution) are paid once per batch and shared by both variants.
   * Each batch's labels are collected as TWO same-pass interleaved
-  * vectors (Candidates.labelCandidatesDual) and the run1-vs-run2
+  * vectors (Candidates.label) and the run1-vs-run2
   * ranking loss logged as that batch's noise floor — a batch loss is
   * a model statement only when it exceeds its floor.
   * Reports the reference's lero_latency_list (per-batch selected-plan
@@ -84,7 +84,8 @@ object DynamicMain {
     // because of that drift).
     val labeledBoth = batches.zipWithIndex.map { case (b, i) =>
       log.info(s"labeling batch $i (${b.length} queries, dual-pass)")
-      Pipelines.labelWorkloadDual(spark, b, log)
+      val Seq(l1, l2) = Pipelines.labelWorkload(spark, b, log, vectors = 2)
+      (l1, l2)
     }
     val labeled = labeledBoth.map(_._1)
     // Per-batch SAME-PASS noise floor: a batch ranking loss above its

@@ -44,7 +44,7 @@ object GateRecalMain {
       f"$overheadMs%.1fms/routed query " +
       s"(label_repeats=${Pipelines.LabelRepeats}, " +
       s"adaptive_max=${Pipelines.LabelAdaptiveMax})")
-    val labeled = Pipelines.labelWorkload(spark, calib, log)
+    val labeled = Pipelines.labelWorkload(spark, calib, log).head
     val pairs = Pipelines.gatePairs(labeled, fg, model, bm)
     val (thr, gapThr, net) = Pipelines.calibrateThreshold(pairs, overheadMs)
     val cal = Pipelines.GateCalibration(thr, pairs.size,

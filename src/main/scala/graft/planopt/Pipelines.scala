@@ -2,6 +2,7 @@ package graft.planopt
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.planopt.Candidates.Candidate
 import graft.planopt.PlanFeatures.{FeatureGenerator, PlanNode}
 
 /** End-to-end pipelines (SURVEY.md §2.2 M19/M30/M31): the Spark-
@@ -11,8 +12,8 @@ import graft.planopt.PlanFeatures.{FeatureGenerator, PlanNode}
   * (M19) and `setup_logger` (M31).
   *
   * Where the reference consumes pre-computed PostgreSQL plan files,
-  * this pipeline GENERATES its own candidates (knob sweep,
-  * `Candidates`) and labels them by timed execution — the step that
+  * this pipeline GENERATES its own candidates (knob and join-order
+  * sweep, `Candidates`) and labels them by timed execution — the step that
   * fans out to the cluster; everything else is driver-side model
   * work. Evaluation mirrors `lero_test.py:82-155`: Spearman ranking
   * loss over per-query candidate scores, argmin selection, and
@@ -62,12 +63,11 @@ object Pipelines {
   /** Timed executions per candidate label, reduced by MIN (r16
     * verdict #1: single-sample labels pinned the golden's ranking
     * loss to its own relabel noise floor; latency noise is one-sided,
-    * so min is the robust estimator — see Candidates.
-    * labelCandidatesOrdered). Process-wide via
-    * SPARK_GRAFT_LABEL_REPEATS so BOTH passes of every noise-floor
-    * protocol (stable and dynamic) label identically — a floor
-    * measured under a cheaper protocol than the labels would
-    * understate the labels' noise. */
+    * so min is the robust estimator — see Candidates.label).
+    * Process-wide via SPARK_GRAFT_LABEL_REPEATS so BOTH passes of
+    * every noise-floor protocol (stable and dynamic) label
+    * identically — a floor measured under a cheaper protocol than the
+    * labels would understate the labels' noise. */
   val LabelRepeats: Int =
     sys.env.get("SPARK_GRAFT_LABEL_REPEATS")
       .flatMap(_.trim.toIntOption).filter(_ >= 1).getOrElse(1)
@@ -83,50 +83,31 @@ object Pipelines {
     sys.env.get("SPARK_GRAFT_LABEL_ADAPTIVE_MAX")
       .flatMap(_.trim.toIntOption).filter(_ >= 1).getOrElse(LabelRepeats)
 
-  /** Enumerate + label candidates for each query (the cluster-side
+  /** Sweep + label candidates for each query (the cluster-side
     * step; at 100 TB you run this at a sampled SF, like the reference
-    * labels on a training DB). */
+    * labels on a training DB), returning one labeled workload per label
+    * vector (see [[Candidates.label]]): the first is the label set; a
+    * second (`vectors` = 2) comes from the same interleaved pass and
+    * exists ONLY for the same-pass noise floor. The candidates are
+    * [[Candidates.sweep]]'s, so the comparator trains on exactly the
+    * plans the in-engine strategy scores (join-order rewrites
+    * included: 10-way/17-rel joins would otherwise label only 2
+    * knob-distinct plans). */
   def labelWorkload(spark: SparkSession,
                     queries: Seq[(String, SparkSession => DataFrame)],
-                    log: Logger): Seq[LabeledQuery] =
-    queries.map { case (qid, build) =>
-      // ORDER-AWARE since r14: the labeled space includes the
-      // JoinOrders rewrites the in-engine strategy routes over, so
-      // the comparator trains on the candidates it will score (the
-      // r13 verdict's >2-candidates-at-the-tail item: 10-way/17-rel
-      // joins previously labeled only 2 knob-distinct plans)
-      val cands = Candidates.capCandidates(
-        Candidates.enumerateOrdered(spark, build), MaxLabeledPerQuery)
-      val labeled = Candidates.labelCandidatesOrdered(spark, build, cands,
+                    log: Logger, vectors: Int = 1): Seq[Seq[LabeledQuery]] = {
+    val perQuery = queries.map { case (qid, build) =>
+      val cands = Candidates.capCandidates(Candidates.ofQuery(spark, build), MaxLabeledPerQuery)
+      val labeled = Candidates.label(spark, build, cands, vectors,
         repeats = LabelRepeats, adaptiveMaxRepeats = LabelAdaptiveMax)
+      def ms(l: Seq[(Candidate, Double)]) = l.map(x => f"${x._2}%.1f").mkString(",")
       log.info(s"$qid: ${cands.length} candidates " +
         s"(${cands.map(_.variantIdx).distinct.length} order variant(s)), " +
-        s"latencies=${labeled.map(l => f"${l._2}%.1f").mkString(",")}ms")
-      LabeledQuery(qid, labeled.map(_._1.plan), labeled.map(_._2))
+        s"latencies=${ms(labeled.head)}ms" +
+        labeled.tail.map(l => s" (floor pass: ${ms(l)}ms)").mkString)
+      labeled.map(l => LabeledQuery(qid, l.map(_._1.plan), l.map(_._2)))
     }
-
-  /** [[labelWorkload]] producing TWO label vectors per query from one
-    * interleaved pass (see Candidates.labelCandidatesDual): `_1` is
-    * the label set (identical protocol and cost to labelWorkload with
-    * the same LabelRepeats budget would need two passes); `_2` exists
-    * ONLY for the same-pass noise floor. */
-  def labelWorkloadDual(spark: SparkSession,
-                        queries: Seq[(String, SparkSession => DataFrame)],
-                        log: Logger)
-      : (Seq[LabeledQuery], Seq[LabeledQuery]) = {
-    val both = queries.map { case (qid, build) =>
-      val cands = Candidates.capCandidates(
-        Candidates.enumerateOrdered(spark, build), MaxLabeledPerQuery)
-      val (l1, l2) = Candidates.labelCandidatesDual(spark, build, cands,
-        repeats = LabelRepeats, adaptiveMaxRepeats = LabelAdaptiveMax)
-      log.info(s"$qid: ${cands.length} candidates " +
-        s"(${cands.map(_.variantIdx).distinct.length} order variant(s)), " +
-        s"latencies=${l1.map(l => f"${l._2}%.1f").mkString(",")}ms " +
-        s"(floor pass: ${l2.map(l => f"${l._2}%.1f").mkString(",")}ms)")
-      (LabeledQuery(qid, l1.map(_._1.plan), l1.map(_._2)),
-        LabeledQuery(qid, l2.map(_._1.plan), l2.map(_._2)))
-    }
-    (both.map(_._1), both.map(_._2))
+    Seq.tabulate(vectors)(v => perQuery.map(_(v)))
   }
 
   /** All-ordered-pairs training tensors for `labeled` under a FIXED
@@ -213,7 +194,7 @@ object Pipelines {
     self + p.children.map(planCost).sum
   }
 
-  /** Enumerate candidates and label them with [[planCost]] — planning
+  /** Sweep candidates and label them with [[planCost]] — planning
     * only, NO execution (the cluster never runs a query). The result
     * reuses [[LabeledQuery]] with cost units in `latenciesMs`, so
     * [[train]] and [[evaluate]] consume it unchanged — exactly the
@@ -223,7 +204,7 @@ object Pipelines {
                    queries: Seq[(String, SparkSession => DataFrame)],
                    log: Logger = new Logger(None)): Seq[LabeledQuery] =
     queries.map { case (qid, build) =>
-      // DELIBERATELY knob-only (not enumerateOrdered): the analytic
+      // DELIBERATELY knob-only (variant 0 of the sweep): the analytic
       // cost discriminates PHYSICAL operator choice, but ranking
       // join-ORDER variants is cardinality-driven and the gate-SF
       // estimates are too flat to order them (measured r14: cost
@@ -231,7 +212,7 @@ object Pipelines {
       // Spearman loss 1.4 — worse than random init). Cold-start
       // covers the knob axis; order discrimination is owned by the
       // runtime-label path (labelWorkload, order-aware).
-      val cands = Candidates.enumerate(spark, build)
+      val cands = Candidates.ofQuery(spark, build).filter(_.variantIdx == 0)
       val costs = cands.map(c => planCost(c.plan))
       log.info(s"$qid: ${cands.length} candidates, " +
         s"costs=${costs.map(c => f"$c%.0f").mkString(",")}")
@@ -442,8 +423,8 @@ object Pipelines {
   /** M30 stable pipeline (`stable.py:13-30`): label, train on the
     * train split, evaluate on the test split; returns the result with
     * the trained model for deployment. With `dualTestFloor` the test
-    * split is labeled via [[labelWorkloadDual]] and the second
-    * (same-pass) label vectors ride in `testFloorLabels` so the caller
+    * split is labeled into two vectors by [[labelWorkload]] and the
+    * second (same-pass) one rides in `testFloorLabels` so the caller
     * can state the labeling protocol's own noise floor. */
   def stable(spark: SparkSession,
              trainQueries: Seq[(String, SparkSession => DataFrame)],
@@ -451,10 +432,9 @@ object Pipelines {
              epochs: Int = 100, seed: Long = 17L,
              log: Logger = new Logger(None),
              dualTestFloor: Boolean = false): StableArtifacts = {
-    val trainLabeled = labelWorkload(spark, trainQueries, log)
-    val (testLabeled, testFloor) =
-      if (dualTestFloor) labelWorkloadDual(spark, testQueries, log)
-      else (labelWorkload(spark, testQueries, log), Nil)
+    val trainLabeled = labelWorkload(spark, trainQueries, log).head
+    val testVectors = labelWorkload(spark, testQueries, log, if (dualTestFloor) 2 else 1)
+    val (testLabeled, testFloor) = (testVectors.head, testVectors.lift(1).getOrElse(Nil))
     val (fg, model) = train(trainLabeled, epochs, seed)
     val res = evaluate(fg, model, testLabeled)
     log.info(s"ranking loss: ${res.rankingLoss}")

@@ -90,7 +90,7 @@ object StableMain {
     // SAME-PASS noise floor of the ranking-loss metric (the honest
     // bound a model loss is judged against): the test split's labels
     // were collected as TWO interleaved vectors in one pass
-    // (Candidates.labelCandidatesDual — both vectors sample the same
+    // (Candidates.label with two vectors — both sample the same
     // JVM state), and the floor is the ranking loss of vector 2
     // scored as predictions of vector 1. A model at or under this
     // floor ranks as well as the labeling protocol reproduces itself.
@@ -141,7 +141,7 @@ object StableMain {
         "JVM-phase drift, not label noise)")
     } else {
       val relabeled = Pipelines.labelWorkload(spark, testQ,
-        new Pipelines.Logger(None)) // second pass: no per-query log spam
+        new Pipelines.Logger(None)).head // second pass: no per-query log spam
       val byQid = relabeled.map(r => r.qid -> r.latenciesMs).toMap
       // Positional pairing: drop (and log) any qid whose re-enumeration
       // yielded a different candidate count — a diagnostic must never

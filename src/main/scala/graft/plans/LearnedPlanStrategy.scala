@@ -3,13 +3,9 @@ package graft.plans
 import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.QueryPlanningTracker
 import org.apache.spark.sql.catalyst.plans.logical.{Command, Join, LogicalPlan, ReturnAnswer}
-import org.apache.spark.sql.execution.{CommandExecutionMode, QueryExecution, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
-import org.apache.spark.sql.execution.graft.SparkInternals
-
-import graft.engine.WorkerThreads
 import graft.planopt.{Candidates, JoinOrders, LeroModelPairWise, PlanFeatures}
 
 /** In-engine learned plan choice (SURVEY §7.4; selection semantics of
@@ -79,10 +75,11 @@ object PlanChoice {
     * double the fast path's cost). `nOrders` counts the distinct
     * join-ORDER variants that contributed surviving candidates (r4
     * verdict item 8: the comparator needs a real order choice, not
-    * just exchange variants). */
+    * just exchange variants). `keys` are the scored candidates'
+    * canonical keys in score order (empty on a hit). */
   final case class Choice(knobLabel: String, nCandidates: Int,
                           canonical: String, scores: Seq[Double],
-                          nOrders: Int = 1)
+                          nOrders: Int = 1, keys: Seq[String] = Nil)
 
   @volatile private var installed: Option[(LeroModelPairWise, PlanFeatures.FeatureGenerator)] = None
   @volatile private var gateInstalled: Option[(graft.planopt.BayesianModelPairWise, Double, Double)] = None
@@ -122,7 +119,7 @@ object PlanChoice {
   // guards against self-recursion while the strategy replans the same
   // query (nested planning runs the session's or a clone's planner,
   // whose strategies include this one); each sweep thread sets it too
-  private[plans] val replanning: ThreadLocal[java.lang.Boolean] =
+  private[graft] val replanning: ThreadLocal[java.lang.Boolean] =
     ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
 
   /** Install the trained comparator + featurizer (JVM-global, like a
@@ -182,18 +179,13 @@ object PlanChoice {
   * decline, else the chosen candidate. Its fragments are never
   * offered to it.
   *
-  * A first-seen query is swept: the session-native plan (a nested
-  * `QueryExecution`, so an AQE session's native candidate is the plan
-  * it would run), the [[Candidates.knobGrid]] points of the incoming
-  * optimized plan (physical planning only), and the
-  * [[JoinOrders.variants]] rewrites (each optimized once with the
-  * reorder rules pinned off, then physically planned per broadcast
-  * knob). The planning groups run on short-lived `graft-sweep-<i>`
-  * threads, each with its own session clone, so the live session's
-  * conf is never touched. Candidates dedupe by canonical plan string
-  * in a fixed order (native, variant 0's grid, variants 1..k), are
+  * A first-seen query is swept by [[Candidates.sweep]] — the
+  * session-native plan, the physical knob grid and the
+  * [[JoinOrders.variants]] rewrites, planned on session clones so the
+  * live session's conf is never touched — and its candidates are
   * featurized from their prepared plans and scored by the pairwise
-  * comparator; the margin gate may decline the argmin.
+  * comparator; the margin gate may decline the argmin. Labeling
+  * trains the comparator on the same sweep's candidates.
   *
   * The sweep only decides: it records a [[PlanChoice.Remembered]]
   * entry, and the same code that serves a choice-cache hit plans the
@@ -205,7 +197,7 @@ object PlanChoice {
   * (EnsureRequirements, codegen collapse) once, on that unprepared
   * plan. */
 case class LearnedPlanStrategy(session: SparkSession) extends SparkStrategy {
-  import LearnedPlanStrategy._
+  import Candidates.{optimizePinned, planUnder}
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = {
     val modelOpt = PlanChoice.current
@@ -302,65 +294,14 @@ case class LearnedPlanStrategy(session: SparkSession) extends SparkStrategy {
     }
   }
 
-  /** Score every candidate plan of a first-seen `query` and decide:
-    * the remembered choice, plus the observability record when the
-    * choice routes. */
+  /** Score every [[Candidates.sweep]] candidate of a first-seen
+    * `query` and decide: the remembered choice, plus the observability
+    * record when the choice routes. */
   private def sweep(query: LogicalPlan, model: LeroModelPairWise,
                     gen: PlanFeatures.FeatureGenerator,
                     gateOn: Boolean): (PlanChoice.Remembered, Option[PlanChoice.Choice]) = {
-    // The plan handed to a planner strategy is already OPTIMIZED, so
-    // optimizer-time knobs (cbo.joinReorder) are inert here — join
-    // ORDER is fixed by the time we see the plan. The order CHOICE
-    // space comes from JoinOrders.variants instead: alternative
-    // connected left-deep and bushy rewrites of the join region,
-    // optimized with the reorder rules pinned off so the optimizer
-    // cannot undo the permutation. Variant 0 sweeps the physical knob
-    // grid (6 physical plannings, dedupe usually to 2-3); later
-    // variants sweep the broadcast-threshold axis only (one
-    // optimization and 3 physical plannings each), keeping the total
-    // planning cost bounded.
-    val grid = Candidates.knobGrid.filter(_.joinReorder)
-    val orderGrid = grid.filter(_.preferSortMergeJoin)
-    def prepared(s: SparkSession, knobs: Candidates.Knobs, vIdx: Int)(
-        p: SparkPlan): Point = point(SparkInternals.prepareForExecution(s, p), Some(knobs), vIdx)
-    // planning groups in merge order: the SESSION-NATIVE plan FIRST
-    // (knobs = None) — the plan the session would run without this
-    // strategy, the margin gate's baseline and its no-lose fallback.
-    // Under stock confs it dedupes into the grid's default point;
-    // under a defensive deployment (e.g. autoBroadcastJoinThreshold=-1)
-    // it is the plan that conf produces, NOT the stock-knob plan — so
-    // a gate decline always means "what the user configured", never
-    // "Spark's defaults". SKIP mode: belt-and-braces against eager
-    // command execution.
-    val native: SparkSession => Seq[Point] = s => Seq(point(
-      new QueryExecution(classic(s), query.clone(), new QueryPlanningTracker,
-        CommandExecutionMode.SKIP).executedPlan, None, 0))
-    // groups run on several threads, so each plans its own clone of
-    // the shared incoming plan
-    val points = grid.map(k => (s: SparkSession) =>
-      Seq(planUnder(s, query.clone(), Some(k))(prepared(s, k, 0))))
-    val orders = JoinOrders.variants(query).zipWithIndex.drop(1).map { case (vq, vIdx) =>
-      (s: SparkSession) => optimizePinned(s, vq.clone()) { optimized =>
-        orderGrid.map(k => planUnder(s, optimized, Some(k))(prepared(s, k, vIdx)))
-      }
-    }
-    val groups = (native +: points) ++ orders
-    // hand out the groups that optimize (native, variants) before the
-    // single physical plannings
-    val handOut = (0 +: (1 + points.size until groups.size)) ++ (1 to points.size)
-    val results = new Array[Seq[Point]](groups.size)
-    WorkerThreads.run("graft-sweep", session.sparkContext.defaultParallelism,
-        groups.size) {
-      PlanChoice.replanning.set(true)
-      SparkInternals.cloneSession(session)
-    } { (clone, i) =>
-      val g = handOut(i)
-      results(g) = SparkInternals.withActive(clone)(groups(g)(clone))
-    }
-    val seen = scala.collection.mutable.LinkedHashMap[String, Point]()
-    results.iterator.flatten.foreach(p => if (!seen.contains(p.key)) seen(p.key) = p)
-    val cands = seen.values.toIndexedSeq
-    val trees = cands.map(c => gen.transform(c.node))
+    val cands = Candidates.sweep(session, query)
+    val trees = cands.map(c => gen.transform(c.plan))
     val scores = model.predict(trees)
     val bestIdx = scores.indices.minBy(scores)
     val best = cands(bestIdx)
@@ -379,44 +320,8 @@ case class LearnedPlanStrategy(session: SparkSession) extends SparkStrategy {
       }
     }
     if (declined) (PlanChoice.Remembered(PlanChoice.Remembered.Declined, None), None)
-    else (PlanChoice.Remembered(best.vIdx, best.knobs), Some(PlanChoice.Choice(
-      best.knobs.map(_.label).getOrElse("session-default"),
-      cands.size, best.key, scores.toSeq,
-      nOrders = cands.map(_.vIdx).distinct.size)))
+    else (PlanChoice.Remembered(best.variantIdx, best.knobs), Some(PlanChoice.Choice(
+      best.knobLabel, cands.size, best.canonical, scores.toSeq,
+      nOrders = cands.map(_.variantIdx).distinct.size, keys = cands.map(_.canonical))))
   }
-}
-
-object LearnedPlanStrategy {
-
-  /** One swept candidate: its executed plan's canonical key and
-    * features, and the knobs (None = session-native) and join-order
-    * variant that plan it. */
-  private final case class Point(key: String, node: PlanFeatures.PlanNode,
-                                 knobs: Option[Candidates.Knobs], vIdx: Int)
-
-  private def point(executed: SparkPlan, knobs: Option[Candidates.Knobs], vIdx: Int): Point =
-    Point(Candidates.canonicalKey(executed), PlanFeatures.fromSparkPlan(executed), knobs, vIdx)
-
-  private def classic(s: SparkSession) = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-
-  /** Physical planning of the optimized plan `optimized` on `s` under
-    * `knobs`' physical confs (None: the session's own), handing the
-    * unprepared plan to `f` while the confs are still set. No nested
-    * QueryExecution: its re-analysis and re-optimization of an
-    * optimized plan (the CBO join-reorder DP alone cost ~60 ms per
-    * 7-way join) were most of each sweep point's time. */
-  private def planUnder[T](s: SparkSession, optimized: LogicalPlan,
-                           knobs: Option[Candidates.Knobs])(f: SparkPlan => T): T =
-    Candidates.withConfs(s, knobs.toSeq.flatMap(_.physicalConfs)) {
-      f(SparkInternals.createSparkPlan(s, optimized))
-    }
-
-  /** Join-order variant `vq` analyzed and optimized once on `s` with the
-    * reorder rules pinned off ([[JoinOrders.pinOrderConfs]]); `f` runs
-    * while the pin is still set. */
-  private def optimizePinned[T](s: SparkSession, vq: LogicalPlan)(f: LogicalPlan => T): T =
-    Candidates.withConfs(s, JoinOrders.pinOrderConfs) {
-      f(new QueryExecution(classic(s), vq, new QueryPlanningTracker,
-        CommandExecutionMode.SKIP).optimizedPlan)
-    }
 }

@@ -9,12 +9,12 @@ import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
   * this object sits inside `org.apache.spark.sql.execution`; it only
   * delegates and modifies or shadows nothing.
   *
-  * The learned planner ([[graft.plans.LearnedPlanStrategy]]) plans
-  * candidates on session clones, so a sweep never writes the live
-  * session's conf, and plans an already-optimized tree the way
-  * `QueryExecution` does without re-running analysis and optimization.
-  * Order-aware labeling ([[graft.planopt.Candidates]]) executes a
-  * rewritten logical plan as a DataFrame. */
+  * The candidate sweep ([[graft.planopt.Candidates.sweep]], shared by
+  * the learned planner and labeling) plans candidates on session
+  * clones, so a sweep never writes the live session's conf, and plans
+  * an already-optimized tree the way `QueryExecution` does without
+  * re-running analysis and optimization. Labeling executes a
+  * join-order variant's rewritten logical plan as a DataFrame. */
 object SparkInternals {
 
   private def classic(spark: SparkSession) =

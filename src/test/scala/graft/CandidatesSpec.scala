@@ -15,10 +15,15 @@ class CandidatesSpec extends AnyFunSuite {
   private def build(name: String)(s: org.apache.spark.sql.SparkSession) =
     Relational.defs(name)(s, sf)
 
+  /** The join-order variants labeling executes `name`'s candidates from. */
+  private def variantsOf(name: String) =
+    JoinOrders.variants(build(name)(spark).queryExecution.optimizedPlan)
+
   test("knob sweep yields >=2 distinct physical plans for joins") {
     for (q <- Seq("j1_join_2way", "j1_join_5way", "j1_join_7way")) {
-      val cands = Candidates.enumerate(spark, build(q))
-      assert(cands.size >= 2, s"$q produced ${cands.size} distinct plans")
+      val cands = Candidates.ofQuery(spark, build(q))
+      val knobOnly = cands.filter(_.variantIdx == 0)
+      assert(knobOnly.size >= 2, s"$q produced ${knobOnly.size} distinct plans")
       // canonical strings really differ
       assert(cands.map(_.canonical).distinct.size == cands.size)
     }
@@ -26,11 +31,8 @@ class CandidatesSpec extends AnyFunSuite {
 
   test("every candidate returns identical results") {
     val q = "j1_join_2way"
-    val cands = Candidates.enumerate(spark, build(q))
-    val counts = cands.map { c =>
-      val (n, _) = Candidates.execute(spark, build(q), c.knobs)
-      n
-    }
+    val (cands, variants) = (Candidates.ofQuery(spark, build(q)), variantsOf(q))
+    val counts = cands.map(c => Candidates.executeOrdered(spark, build(q), c, variants).get._1)
     assert(counts.distinct.size == 1, s"variant results differ: $counts")
   }
 
@@ -54,23 +56,24 @@ class CandidatesSpec extends AnyFunSuite {
   }
 
   test("labeling produces positive wall-clock times") {
-    val cands = Candidates.enumerate(spark, build("j1_join_2way")).take(2)
-    val labeled = Candidates.labelCandidatesOrdered(spark, build("j1_join_2way"), cands)
+    val cands = Candidates.ofQuery(spark, build("j1_join_2way")).take(2)
+    val Seq(labeled) = Candidates.label(spark, build("j1_join_2way"), cands)
+    assert(labeled.map(_._1) == cands)
     assert(labeled.forall(_._2 > 0))
   }
 
   test("candidate cap keeps the default plan first and spreads across " +
     "order variants") {
-    val cands = Candidates.enumerateOrdered(spark, build("j1_join_5way"))
+    val cands = Candidates.ofQuery(spark, build("j1_join_5way"))
     assert(cands.size > Pipelines.MaxLabeledPerQuery,
       s"fixture too small (${cands.size}) to engage the cap")
     val capped = Candidates.capCandidates(cands, Pipelines.MaxLabeledPerQuery)
     assert(capped.size == Pipelines.MaxLabeledPerQuery)
-    // element 0 stays the engine-default candidate (the evaluate
+    // element 0 stays the session-native candidate (the evaluate
     // baseline contract: latenciesMs.head is the default plan)
     assert(capped.head == cands.head)
     assert(capped.head.variantIdx == 0)
-    assert(capped.head.knobs == Candidates.knobGrid.head)
+    assert(capped.head.knobs.isEmpty)
     // round-robin: every order variant that exists is represented
     // before any variant contributes a second plan
     val variantsAll = cands.map(_.variantIdx).distinct.sorted
@@ -86,7 +89,7 @@ class CandidatesSpec extends AnyFunSuite {
 
   test("a shrunk variant list drops the candidate instead of " +
     "mislabeling the knob plan") {
-    val cands = Candidates.enumerateOrdered(spark, build("j1_join_5way"))
+    val cands = Candidates.ofQuery(spark, build("j1_join_5way"))
     val variantCand = cands.find(_.variantIdx > 0).get
     // simulate session-state drift: the re-derived variant list no
     // longer reaches this candidate's index
@@ -94,8 +97,7 @@ class CandidatesSpec extends AnyFunSuite {
       variantCand, variants = Nil).isEmpty)
     // a labeling pass over [default, drifted] keeps only the default
     val drifted = Seq(cands.head.copy(variantIdx = 99), cands.head)
-    val labeled = Candidates.labelCandidatesOrdered(
-      spark, build("j1_join_5way"), drifted)
+    val Seq(labeled) = Candidates.label(spark, build("j1_join_5way"), drifted)
     assert(labeled.map(_._1) == Seq(cands.head))
   }
 
@@ -105,33 +107,78 @@ class CandidatesSpec extends AnyFunSuite {
     // knob-distinct plans while the in-engine strategy scored
     // JoinOrders variants the comparator never trained on
     for (q <- Seq("j1_join_10way", "j1_join_17rel")) {
-      val knobOnly = Candidates.enumerate(spark, build(q))
-      val ordered = Candidates.enumerateOrdered(spark, build(q))
+      val ordered = Candidates.ofQuery(spark, build(q))
+      val knobOnly = ordered.filter(_.variantIdx == 0)
       assert(ordered.size > knobOnly.size,
         s"$q: ordered ${ordered.size} <= knob-only ${knobOnly.size}")
       assert(ordered.size > 2, s"$q: only ${ordered.size} candidates")
       assert(ordered.map(_.variantIdx).distinct.size >= 2,
         s"$q: no order variant survived dedupe")
       assert(ordered.map(_.canonical).distinct.size == ordered.size)
-      // variant 0 candidates are EXACTLY the knob sweep (same space,
-      // same order) — the ordered path only ever widens
-      assert(ordered.filter(_.variantIdx == 0).map(_.canonical) ==
-        knobOnly.map(_.canonical))
+      // variant 0 candidates are the native plan plus the physical
+      // grid (same space, same order), each planned here from scratch
+      // under its confs — the order variants only ever widen
+      val native = Candidates.withConfs(spark, Seq("spark.sql.adaptive.enabled" -> "false")) {
+        Candidates.canonicalKey(build(q)(spark).queryExecution.executedPlan)
+      }
+      val grid = Candidates.knobGrid.map(k => Candidates.withConfs(spark, k.confs) {
+        Candidates.canonicalKey(build(q)(spark).queryExecution.executedPlan)
+      })
+      val expected = (native +: grid).distinct
+      assert(knobOnly.map(_.canonical) == expected)
+      assert(knobOnly.head.knobs.isEmpty)
+      assert(knobOnly.tail.map(_.knobs.get) ==
+        knobOnly.tail.map(c => Candidates.knobGrid(grid.indexOf(c.canonical))))
     }
     // result equality across order variants (correctness of the
     // rewrite + pinned re-plan), on the cheaper 5-way
-    val cands = Candidates.enumerateOrdered(spark, build("j1_join_5way"))
-    val variants = Candidates.orderVariants(spark, build("j1_join_5way"))
+    val (cands, variants) = (Candidates.ofQuery(spark, build("j1_join_5way")), variantsOf("j1_join_5way"))
     val counts = cands.map(c =>
       Candidates.executeOrdered(spark, build("j1_join_5way"), c, variants).get._1)
     assert(counts.distinct.size == 1, s"variant results differ: $counts")
     assert(cands.exists(_.variantIdx > 0), "5-way produced no order variant")
   }
 
+  test("labeling labels what serving scores: same candidates, same executed plans") {
+    // Lero trains on the candidates its plan explorer produces and
+    // ranks candidates from that same explorer: the labeling sweep
+    // must reproduce the strategy's scored set, and every labeled
+    // candidate must execute as the plan that was scored
+    graft.engine.Tables.registerAll(spark, sf)
+    val pool7 = graft.plans.PoolChoices.queries.find(_._1.startsWith("7way")).get._2
+    val queries = Seq[(String, org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame)](
+      "j1_join_5way" -> build("j1_join_5way"), "pool_7way" -> (s => s.sql(pool7)))
+    val gen = PlanFeatures.FeatureGenerator.fit(
+      queries.flatMap { case (_, b) => Candidates.ofQuery(spark, b).map(_.plan) })
+    graft.plans.PlanChoice.install(new LeroModelPairWise(gen.featureDim, seed = 13), gen)
+    try withExtensionSession { s2 =>
+      graft.engine.Tables.registerAll(s2, sf)
+      // a hash exchange prints its partition count
+      val partitions = Seq("spark.sql.shuffle.partitions" -> s2.conf.get("spark.sql.shuffle.partitions"))
+      queries.foreach { case (name, b) =>
+        graft.plans.PlanChoice.lastChoice.set(None)
+        b(s2).queryExecution.executedPlan
+        val scored = graft.plans.PlanChoice.lastChoice.get().map(_.keys)
+        assert(scored.exists(_.size >= 2), s"$name: the strategy did not sweep")
+        Candidates.withConfs(spark, partitions) {
+          val labeled = Candidates.ofQuery(spark, b)
+          assert(labeled.map(_.canonical) == scored.get, s"$name: labeled set != scored set")
+          val variants = JoinOrders.variants(b(spark).queryExecution.optimizedPlan)
+          labeled.foreach { c =>
+            val executed = Candidates.onCandidate(spark, b, c, variants)(df =>
+              Candidates.canonicalKey(df.queryExecution.executedPlan))
+            assert(executed.contains(c.canonical),
+              s"$name: [${c.knobLabel}] variant ${c.variantIdx} executes a different plan")
+          }
+        }
+      }
+    } finally graft.plans.PlanChoice.uninstall()
+  }
+
   test("planCost discriminates physical variants of one logical plan") {
     // the point of the analytic cost: same logical plan, different
     // physical operators → different costs (row counts alone tie)
-    val cands = Candidates.enumerate(spark, build("j1_join_5way"))
+    val cands = Candidates.ofQuery(spark, build("j1_join_5way")).filter(_.variantIdx == 0)
     assert(cands.size >= 2)
     val costs = cands.map(c => Pipelines.planCost(c.plan))
     assert(costs.forall(c => c > 0 && java.lang.Double.isFinite(c)))
@@ -154,8 +201,8 @@ class CandidatesSpec extends AnyFunSuite {
     // territory — the analytic cost cannot rank them at gate SF)
     val testNames = Seq("j1_join_2way", "j1_join_7way")
     val runtimeLabeled = testNames.map { n =>
-      val cands = Candidates.enumerate(spark, build(n))
-      val labeled = Candidates.labelCandidatesOrdered(spark, build(n), cands)
+      val cands = Candidates.ofQuery(spark, build(n)).filter(_.variantIdx == 0)
+      val Seq(labeled) = Candidates.label(spark, build(n), cands)
       Pipelines.LabeledQuery(n, labeled.map(_._1.plan), labeled.map(_._2))
     }
     def lossOf(m: LeroModelPairWise): Double =
@@ -188,7 +235,7 @@ class CandidatesSpec extends AnyFunSuite {
     ModelIO.save(dir, pretrained, fg)
 
     val runtimeFew = Pipelines.labelWorkload(spark,
-      Seq("j1_join_2way", "j1_join_7way").map(n => n -> build(n) _), log)
+      Seq("j1_join_2way", "j1_join_7way").map(n => n -> build(n) _), log).head
     def lossOn(m: LeroModelPairWise, set: Seq[Pipelines.LabeledQuery]): Double =
       Ranking.rankingLoss(
         set.map(q => m.predict(q.plans.map(fg.transform)).toSeq),

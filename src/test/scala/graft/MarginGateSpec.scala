@@ -22,11 +22,14 @@ class MarginGateSpec extends AnyFunSuite {
     assert(amb == Set(0, 1))
     assert(Candidates.ambiguousIdxs(Seq(100.0, 102.0), 0.04, 0.25).isEmpty)
     assert(Candidates.ambiguousIdxs(Seq(100.0, 400.0), 0.04, 0.25).isEmpty)
-    // the band is exclusive at both edges
-    assert(Candidates.ambiguousIdxs(Seq(100.0, 104.0), 0.04, 0.25).isEmpty ||
-      true) // 4/104 ≈ 0.0385 < lo → not flagged
+    // 4/104 ≈ 0.0385 < lo → not flagged; a lower lo flags it
+    assert(Candidates.ambiguousIdxs(Seq(100.0, 104.0), 0.04, 0.25).isEmpty)
     assert(Candidates.ambiguousIdxs(Seq(100.0, 104.0), 0.03, 0.25) ==
       Set(0, 1))
+    // the band is exclusive at both edges: gap == lo (4/100) and
+    // gap == hi (25/100) are not flagged
+    assert(Candidates.ambiguousIdxs(Seq(96.0, 100.0), 0.04, 0.25).isEmpty)
+    assert(Candidates.ambiguousIdxs(Seq(75.0, 100.0), 0.04, 0.25).isEmpty)
   }
 
   test("calibrateThreshold maximizes realized net gain, ties to larger t") {
@@ -134,7 +137,7 @@ class MarginGateSpec extends AnyFunSuite {
 
   test("ModelIO gate roundtrip is bit-exact and optional") {
     val build = (s: SparkSession) => Relational.defs("j1_join_2way")(s, sf)
-    val cands = Candidates.enumerate(spark, build)
+    val cands = Candidates.ofQuery(spark, build)
     val gen = PlanFeatures.FeatureGenerator.fit(cands.map(_.plan))
     val bm = new BayesianModelPairWise(gen.featureDim, seed = 77)
     val t1 = gen.transform(cands.head.plan)
@@ -154,7 +157,7 @@ class MarginGateSpec extends AnyFunSuite {
 
   test("gate declines routing below threshold, routes above, caches declines") {
     val build = (s: SparkSession) => Relational.defs("j1_join_2way")(s, sf)
-    val cands = Candidates.enumerate(spark, build)
+    val cands = Candidates.ofQuery(spark, build)
     val gen = PlanFeatures.FeatureGenerator.fit(cands.map(_.plan))
     // find a model seed whose ungated pick is NOT the session-native
     // plan, so the permissive-gate arm genuinely exercises routing
@@ -211,7 +214,7 @@ class MarginGateSpec extends AnyFunSuite {
 
   test("a gate decline plans the whole query natively, once per query") {
     val build = (s: SparkSession) => Relational.defs("j1_join_7way")(s, sf)
-    val cands = Candidates.enumerate(spark, build)
+    val cands = Candidates.ofQuery(spark, build)
     val gen = PlanFeatures.FeatureGenerator.fit(cands.map(_.plan))
     val base = build(spark).collect()(0).getLong(0)
     // prohibitive threshold: the gate declines every query
@@ -244,7 +247,7 @@ class MarginGateSpec extends AnyFunSuite {
 
   test("installFrom restores the gate alongside the model") {
     val build = (s: SparkSession) => Relational.defs("j1_join_2way")(s, sf)
-    val cands = Candidates.enumerate(spark, build)
+    val cands = Candidates.ofQuery(spark, build)
     val gen = PlanFeatures.FeatureGenerator.fit(cands.map(_.plan))
     val model = new LeroModelPairWise(gen.featureDim, seed = 13)
     val bm = new BayesianModelPairWise(gen.featureDim, seed = 9)
@@ -261,8 +264,8 @@ class MarginGateSpec extends AnyFunSuite {
 
   test("adaptive dual labeling keeps vector shape and respects kMax") {
     val build = (s: SparkSession) => Relational.defs("j1_join_2way")(s, sf)
-    val cands = Candidates.enumerate(spark, build).take(2)
-    val (l1, l2) = Candidates.labelCandidatesDual(spark, build, cands,
+    val cands = Candidates.ofQuery(spark, build).take(2)
+    val Seq(l1, l2) = Candidates.label(spark, build, cands, vectors = 2,
       repeats = 1, adaptiveMaxRepeats = 2)
     assert(l1.map(_._1) == cands && l2.map(_._1) == cands)
     assert(l1.forall(_._2 > 0) && l2.forall(_._2 > 0))

@@ -16,9 +16,9 @@ class PlannerInjectionSpec extends AnyFunSuite {
 
   test("extension session executes the model-chosen physical variant") {
     // train-side artifacts from the BASE session (no extensions — the
-    // strategy must not fire during enumeration)
+    // strategy must not fire during the labeling sweep)
     val build = (s: SparkSession) => Relational.defs("j1_join_2way")(s, sf)
-    val cands = Candidates.enumerate(spark, build)
+    val cands = Candidates.ofQuery(spark, build)
     assert(cands.size >= 2, "need plan diversity for a meaningful choice")
     val gen = PlanFeatures.FeatureGenerator.fit(cands.map(_.plan))
     val model = new LeroModelPairWise(gen.featureDim, seed = 29)
@@ -67,7 +67,7 @@ class PlannerInjectionSpec extends AnyFunSuite {
     // EXECUTE the write per knob and featurize the constant
     // CommandResult (identical scores for every candidate)
     val build = (s: SparkSession) => Relational.defs("j1_join_2way")(s, sf)
-    val cands = Candidates.enumerate(spark, build)
+    val cands = Candidates.ofQuery(spark, build)
     val gen = PlanFeatures.FeatureGenerator.fit(cands.map(_.plan))
     PlanChoice.install(new LeroModelPairWise(gen.featureDim, seed = 41), gen)
     try withExtensionSession { s2 =>
@@ -97,7 +97,7 @@ class PlannerInjectionSpec extends AnyFunSuite {
 
   test("size bypass skips the sweep for tiny inputs and is conf-tunable") {
     val build = (s: SparkSession) => Relational.defs("j1_join_2way")(s, sf)
-    val cands = Candidates.enumerate(spark, build)
+    val cands = Candidates.ofQuery(spark, build)
     val gen = PlanFeatures.FeatureGenerator.fit(cands.map(_.plan))
     PlanChoice.install(new LeroModelPairWise(gen.featureDim, seed = 7), gen)
     try withExtensionSession { s2 =>
@@ -125,7 +125,7 @@ class PlannerInjectionSpec extends AnyFunSuite {
 
   test("installFrom loads a saved model directory and routes with it") {
     val build = (s: SparkSession) => Relational.defs("j1_join_2way")(s, sf)
-    val cands = Candidates.enumerate(spark, build)
+    val cands = Candidates.ofQuery(spark, build)
     val gen = PlanFeatures.FeatureGenerator.fit(cands.map(_.plan))
     val model = new LeroModelPairWise(gen.featureDim, seed = 61)
     val dir = java.nio.file.Files.createTempDirectory("graft_install").toString
@@ -160,7 +160,7 @@ class PlannerInjectionSpec extends AnyFunSuite {
 
   test("kill-switch conf disables routing even with a model installed") {
     val build = (s: SparkSession) => Relational.defs("j1_join_2way")(s, sf)
-    val cands = Candidates.enumerate(spark, build)
+    val cands = Candidates.ofQuery(spark, build)
     val gen = PlanFeatures.FeatureGenerator.fit(cands.map(_.plan))
     PlanChoice.install(new LeroModelPairWise(gen.featureDim, seed = 3), gen)
     try withExtensionSession { s2 =>
@@ -187,7 +187,7 @@ class PlannerInjectionSpec extends AnyFunSuite {
     assert(heuristic.isInstanceOf[SimpleCost])
     assert(heuristic.asInstanceOf[SimpleCost].value > 0, "SMJ plan must count shuffles")
     // install a model: cost becomes the (deterministic) model score
-    val cands = Candidates.enumerate(spark,
+    val cands = Candidates.ofQuery(spark,
       s => Relational.defs("j1_join_2way")(s, sf))
     val gen = PlanFeatures.FeatureGenerator.fit(cands.map(_.plan))
     val model = new LeroModelPairWise(gen.featureDim, seed = 11)
@@ -254,7 +254,7 @@ class PlannerInjectionSpec extends AnyFunSuite {
     // drawn from >=2 distinct join orders, and the rewritten orders
     // preserve semantics
     val build = (s: SparkSession) => Relational.defs("j1_join_7way")(s, sf)
-    val cands = Candidates.enumerate(spark, build)
+    val cands = Candidates.ofQuery(spark, build)
     val gen = PlanFeatures.FeatureGenerator.fit(cands.map(_.plan))
     PlanChoice.install(new LeroModelPairWise(gen.featureDim, seed = 13), gen)
     try withExtensionSession { s2 =>
@@ -277,7 +277,7 @@ class PlannerInjectionSpec extends AnyFunSuite {
 
   test("a fresh sweep leaves the live conf and no sweep thread behind; hit plan = cold plan") {
     val build = (s: SparkSession) => Relational.defs("j1_join_7way")(s, sf)
-    val cands = Candidates.enumerate(spark, build)
+    val cands = Candidates.ofQuery(spark, build)
     val gen = PlanFeatures.FeatureGenerator.fit(cands.map(_.plan))
     PlanChoice.install(new LeroModelPairWise(gen.featureDim, seed = 13), gen)
     try withExtensionSession { s2 =>
@@ -301,7 +301,7 @@ class PlannerInjectionSpec extends AnyFunSuite {
 
   test("non-join queries bypass the strategy") {
     val build = (s: SparkSession) => Relational.defs("j1_join_2way")(s, sf)
-    val cands = Candidates.enumerate(spark, build)
+    val cands = Candidates.ofQuery(spark, build)
     val gen = PlanFeatures.FeatureGenerator.fit(cands.map(_.plan))
     PlanChoice.install(new LeroModelPairWise(gen.featureDim, seed = 5), gen)
     try withExtensionSession { s2 =>
