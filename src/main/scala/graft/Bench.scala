@@ -70,14 +70,7 @@ object Bench {
     // ContextCleaner reclaim dead broadcast blocks (it runs off GC of
     // the weak refs, so the gc() nudge is what actually frees them).
     def resetState(): Unit = {
-      spark.catalog.clearCache()
-      // localCheckpoint blocks (the CC loop in dd6/dd8) are RDD-level
-      // persists invisible to clearCache — drop them explicitly so
-      // they can't accumulate across the suite's 130+ query runs
-      // blocking: the removal must not overlap the next query's timed
-      // region (same rationale as the synchronous shuffle cleanup)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      GraftSession.clearCaches(spark)
       System.gc()
     }
     // per-(pass, query) diagnostics JSON objects for bench_diag.json,

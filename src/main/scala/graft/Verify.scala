@@ -40,12 +40,8 @@ object Verify {
           Some(name)
         }
       // drop per-query sketch materializations (see Dedup persists) so
-      // 60+ queries in one JVM don't accumulate cached partitions;
-      // localCheckpoint blocks (dd6/dd8's CC loop) are RDD-level and
-      // invisible to clearCache, so drop those too
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // 60+ queries in one JVM don't accumulate cached partitions
+      graft.engine.GraftSession.clearCaches(spark)
       err
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -44,4 +44,14 @@ object GraftSession {
     graft.functions.Catalog.register(spark)
     spark
   }
+
+  /** Drop what a query left cached on `spark` between per-query runs:
+    * cached relations, and the RDD-level persists `clearCache` cannot
+    * see (the localCheckpoint blocks of dd6/dd8's CC loop). Blocking,
+    * so the removal never overlaps the next query (the same reason as
+    * the synchronous shuffle cleanup above). */
+  def clearCaches(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+  }
 }

@@ -41,7 +41,7 @@ import graft.planopt.PlanFeatures.PlanNode
   */
 object Candidates {
 
-  private val AqeOff = Seq("spark.sql.adaptive.enabled" -> "false")
+  private[graft] val AqeOff = Seq("spark.sql.adaptive.enabled" -> "false")
 
   /** One physical-planning point of the sweep grid. Every point plans
     * a plan the optimizer has already join-reordered (CBO reorder is on
@@ -66,10 +66,11 @@ object Candidates {
 
   /** A deduped candidate: the knobs that plan it (None = the
     * session-native plan), the [[JoinOrders.variants]] index it is
-    * planned from (0 is the optimizer's own order), its canonical plan
-    * string and the featurizable plan IR snapshot. */
-  final case class Candidate(knobs: Option[Knobs], variantIdx: Int, canonical: String,
-                             plan: PlanNode) {
+    * planned from (0 is the optimizer's own order) with that variant's
+    * logical plan, its canonical plan string and the featurizable plan
+    * IR snapshot. Labeling executes `variant` under `knobs`. */
+  final case class Candidate(knobs: Option[Knobs], variantIdx: Int, variant: LogicalPlan,
+                             canonical: String, plan: PlanNode) {
     def knobLabel: String = knobs.fold("session-default")(_.label)
   }
 
@@ -96,49 +97,53 @@ object Candidates {
     }
   }
 
-  /** Every distinct candidate plan of the optimized plan `query` on
+  /** Every distinct candidate plan of the join-order `variants` of an
+    * optimized query (`variants.head` is the query itself) on
     * `session`, in a fixed merge order:
-    *  1. the SESSION-NATIVE plan (knobs None, a nested `QueryExecution`,
-    *     so an AQE session's native candidate is the plan it would run)
-    *     — the margin gate's baseline and the labels' default baseline
-    *     (`Pipelines.evaluate` reads `latenciesMs.head`, like the
-    *     reference's candidate 0 in `lero_test.py:56-78`). Under stock
-    *     confs it dedupes the grid's default point; under a defensive
-    *     deployment (e.g. autoBroadcastJoinThreshold=-1) it is the plan
-    *     that conf produces, so a gate decline means "what the user
-    *     configured", never "Spark's defaults";
-    *  2. `query` physically planned at each [[knobGrid]] point;
-    *  3. each [[JoinOrders.variants]] rewrite, optimized once with the
-    *     reorder rules pinned off (else the optimizer undoes the
-    *     permutation), then physically planned per broadcast point.
+    *  1. the query planned under the session's own confs (knobs None):
+    *     the SESSION-NATIVE plan, the margin gate's baseline and the
+    *     labels' default baseline (`Pipelines.evaluate` reads
+    *     `latenciesMs.head`, like the reference's candidate 0 in
+    *     `lero_test.py:56-78`). Under stock confs it dedupes the grid's
+    *     default point; under a defensive deployment (e.g.
+    *     autoBroadcastJoinThreshold=-1) it is the plan that conf
+    *     produces, so a gate decline means "what the user configured",
+    *     never "Spark's defaults";
+    *  2. the query physically planned at each [[knobGrid]] point;
+    *  3. each later variant, optimized once with the reorder rules
+    *     pinned off (else the optimizer undoes the permutation), then
+    *     physically planned per broadcast point.
     *
-    * The planning groups run on short-lived `graft-sweep-<i>` threads,
-    * each on its own session clone, so `session`'s conf is never
-    * touched. Grid points plan `query` directly: a nested
-    * QueryExecution's re-analysis and re-optimization of an optimized
-    * plan (the CBO join-reorder DP alone cost ~60 ms per 7-way join)
-    * were most of each point's time. */
-  def sweep(session: SparkSession, query: LogicalPlan): Seq[Candidate] = {
-    def prepared(s: SparkSession, knobs: Knobs, vIdx: Int)(p: SparkPlan): Candidate =
-      candidate(SparkInternals.prepareForExecution(s, p), Some(knobs), vIdx)
-    // SKIP mode: belt-and-braces against eager command execution
-    val native: SparkSession => Seq[Candidate] = s => Seq(candidate(
-      new QueryExecution(classic(s), query.clone(), new QueryPlanningTracker,
-        CommandExecutionMode.SKIP).executedPlan, None, 0))
+    * Every point is planned by [[planUnder]] and prepared the same
+    * way, without AQE, so a candidate is the static plan its recipe
+    * `(variant, knobs)` produces. The planning groups run on
+    * short-lived `graft-sweep-<i>` threads, each on its own session
+    * clone, so `session`'s conf is never touched. Variant 0 is planned
+    * directly: a nested QueryExecution's re-analysis and
+    * re-optimization of an optimized plan (the CBO join-reorder DP
+    * alone cost ~60 ms per 7-way join) were most of each point's
+    * time. */
+  def sweep(session: SparkSession, variants: Seq[LogicalPlan]): Seq[Candidate] = {
+    def planned(s: SparkSession, optimized: LogicalPlan, knobs: Option[Knobs], vIdx: Int) =
+      planUnder(s, optimized, knobs) { p =>
+        val executed = SparkInternals.prepareForExecution(s, p)
+        Candidate(knobs, vIdx, variants(vIdx), canonicalKey(executed),
+          PlanFeatures.fromSparkPlan(executed))
+      }
     // groups run on several threads, so each plans its own clone of
     // the shared incoming plan
-    val points = knobGrid.map(k => (s: SparkSession) =>
-      Seq(planUnder(s, query.clone(), Some(k))(prepared(s, k, 0))))
-    val orderGrid = knobGrid.filter(_.preferSortMergeJoin)
-    val orders = JoinOrders.variants(query).zipWithIndex.drop(1).map { case (vq, vIdx) =>
-      (s: SparkSession) => optimizePinned(s, vq.clone()) { optimized =>
-        orderGrid.map(k => planUnder(s, optimized, Some(k))(prepared(s, k, vIdx)))
+    val points = (None +: knobGrid.map(Some(_))).map(k => (s: SparkSession) =>
+      Seq(planned(s, variants.head.clone(), k, 0)))
+    val orderGrid = knobGrid.filter(_.preferSortMergeJoin).map(Some(_))
+    val orders = variants.indices.drop(1).map { vIdx =>
+      (s: SparkSession) => optimizePinned(s, variants(vIdx).clone()) { optimized =>
+        orderGrid.map(planned(s, optimized, _, vIdx))
       }
     }
-    val groups = (native +: points) ++ orders
-    // hand out the groups that optimize (native, variants) before the
-    // single physical plannings
-    val handOut = (0 +: (1 + points.size until groups.size)) ++ (1 to points.size)
+    val groups = points ++ orders
+    // hand out the variant groups, the only ones that optimize, before
+    // the single physical plannings
+    val handOut = groups.indices.drop(points.size) ++ points.indices
     val results = new Array[Seq[Candidate]](groups.size)
     WorkerThreads.run("graft-sweep", session.sparkContext.defaultParallelism,
         groups.size) {
@@ -155,13 +160,13 @@ object Candidates {
     seen.values.toIndexedSeq
   }
 
-  /** [[sweep]] of `build`'s optimized plan as labeling plans it: with
-    * AQE off, so every candidate is the static plan that runs. */
+  /** [[sweep]] of `build`'s optimized plan and its
+    * [[JoinOrders.variants]] as labeling plans them: with AQE off, so
+    * every candidate is the static plan that runs. */
   def ofQuery(spark: SparkSession, build: SparkSession => DataFrame): Seq[Candidate] =
-    withConfs(spark, AqeOff)(sweep(spark, build(spark).queryExecution.optimizedPlan))
-
-  private def candidate(executed: SparkPlan, knobs: Option[Knobs], vIdx: Int): Candidate =
-    Candidate(knobs, vIdx, canonicalKey(executed), PlanFeatures.fromSparkPlan(executed))
+    withConfs(spark, AqeOff) {
+      sweep(spark, JoinOrders.variants(build(spark).queryExecution.optimizedPlan))
+    }
 
   private def classic(s: SparkSession) = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
 
@@ -184,39 +189,20 @@ object Candidates {
         CommandExecutionMode.SKIP).optimizedPlan)
     }
 
-  /** Run `body` on the DataFrame that executes candidate `c`, under
-    * the confs that plan it (AQE off): variant 0 re-plans `build`, a
-    * later variant is `variants(c.variantIdx)` with the order pinned.
-    * `variants` is the query's [[JoinOrders.variants]] list; None when
-    * it no longer reaches `c.variantIdx` (session-state drift) — a
-    * fallback plan would pair a different tree's latency with the
-    * candidate's features, silently mislabeling the training data. */
-  private[graft] def onCandidate[T](spark: SparkSession, build: SparkSession => DataFrame,
-                                    c: Candidate, variants: Seq[LogicalPlan])(
-      body: DataFrame => T): Option[T] = {
-    val confs = c.knobs.fold(AqeOff)(_.confs)
-    if (c.variantIdx == 0) Some(withConfs(spark, confs)(body(build(spark))))
-    else variants.lift(c.variantIdx).map { vq =>
-      withConfs(spark, confs ++ JoinOrders.pinOrderConfs)(body(SparkInternals.ofRows(spark, vq)))
-    }
-  }
-
-  /** Execute candidate `c`, returning (rowCount, wallClockMs) — the
-    * labeling step (Spark-native stand-in for the reference's
-    * `Execution Time` from EXPLAIN ANALYZE). See [[onCandidate]]. */
-  def executeOrdered(spark: SparkSession, build: SparkSession => DataFrame,
-                     c: Candidate, variants: Seq[LogicalPlan]): Option[(Long, Double)] =
-    onCandidate(spark, build, c, variants) { df =>
-      val t0 = System.nanoTime()
-      val n = df.count()
-      (n, (System.nanoTime() - t0) / 1e6)
+  /** Run `body` on the DataFrame that executes candidate `c`: its
+    * variant under the confs that plan it (AQE off), with the join
+    * order pinned so re-optimization keeps the order the sweep
+    * planned. */
+  private[graft] def onCandidate[T](spark: SparkSession, c: Candidate)(body: DataFrame => T): T =
+    withConfs(spark, c.knobs.fold(AqeOff)(_.confs) ++ JoinOrders.pinOrderConfs) {
+      body(SparkInternals.ofRows(spark, c.variant))
     }
 
   /** Label every candidate by timed execution into `vectors` (1 or 2)
-    * label vectors, returned one per vector. The variant list is
-    * derived ONCE for the query; a candidate whose variant index no
-    * longer resolves (drift) is DROPPED from every vector (logged),
-    * never mislabeled with a different plan's latency.
+    * label vectors, returned one per vector. Each execution runs the
+    * candidate's own recipe ([[onCandidate]]) and times its `count()`
+    * (the Spark-native stand-in for the reference's `Execution Time`
+    * from EXPLAIN ANALYZE).
     *
     * Each vector labels a candidate as the MIN of its `repeats` timed
     * executions (r16 verdict #1 — single-sample labels at sub-second
@@ -239,7 +225,6 @@ object Candidates {
     * while the labels' tie structure predicts ~0.05 — the old floor
     * was mostly JVM drift, not label noise. */
   def label(spark: SparkSession,
-            build: SparkSession => DataFrame,
             candidates: Seq[Candidate],
             vectors: Int = 1,
             repeats: Int = 1,
@@ -247,12 +232,12 @@ object Candidates {
     require(vectors == 1 || vectors == 2, s"vectors must be 1 or 2, got $vectors")
     val k = math.max(1, repeats)
     val kMax = math.max(k, adaptiveMaxRepeats)
-    val variants =
-      if (candidates.exists(_.variantIdx > 0))
-        JoinOrders.variants(build(spark).queryExecution.optimizedPlan)
-      else Nil
-    def run(c: Candidate): Option[Double] = executeOrdered(spark, build, c, variants).map(_._2)
-    val base = candidates.flatMap { c =>
+    def run(c: Candidate): Double = onCandidate(spark, c) { df =>
+      val t0 = System.nanoTime()
+      df.count()
+      (System.nanoTime() - t0) / 1e6
+    }
+    val base = candidates.map { c =>
       // with two vectors at k == 1 the alternate assignment is
       // systematic — run 0 (the one carrying one-time codegen/JIT
       // compile) always lands in vector 1 — so a single UNTIMED warmup
@@ -260,16 +245,9 @@ object Candidates {
       // per-vector min discards the compile-bearing sample on its own
       // and the warmup would be wasted wall-clock.
       if (vectors == 2 && k == 1) run(c)
-      val runs = (0 until vectors * k).flatMap(_ => run(c))
-      if (runs.length == vectors * k)
-        Some((c, IndexedSeq.tabulate(vectors)(v =>
-          scala.collection.mutable.ArrayBuffer(runs.indices.filter(_ % vectors == v).map(runs): _*))))
-      else {
-        System.err.println(s"[graft] dropping candidate variantIdx=" +
-          s"${c.variantIdx} [${c.knobLabel}]: variant list shrank to " +
-          s"${variants.size} between enumerate and execute")
-        None
-      }
+      val runs = IndexedSeq.fill(vectors * k)(run(c))
+      (c, IndexedSeq.tabulate(vectors)(v =>
+        scala.collection.mutable.ArrayBuffer(runs.indices.filter(_ % vectors == v).map(runs): _*)))
     }
     // ADAPTIVE ESCALATION (r17 verdict #1 — the same-pass floor's
     // residual flips live in pairs whose relative gap is small enough
@@ -290,11 +268,8 @@ object Candidates {
       val amb = ambiguousIdxs(base.map(_._2.map(_.min).min), DefaultGapLo, DefaultGapHi)
       base.zipWithIndex.foreach { case ((c, bufs), i) =>
         if (amb(i) && bufs.head.length < kMax) {
-          val rs = (0 until vectors).map(_ => run(c))
-          if (rs.forall(_.isDefined)) {
-            rs.indices.foreach(j => bufs((j + round) % vectors) += rs(j).get)
-            changed = true
-          }
+          (0 until vectors).foreach(j => bufs((j + round) % vectors) += run(c))
+          changed = true
         }
       }
       round += 1

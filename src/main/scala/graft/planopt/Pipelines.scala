@@ -79,7 +79,7 @@ object Pipelines {
     * off); SPARK_GRAFT_LABEL_ADAPTIVE_MAX=k engages it. Process-wide
     * like LabelRepeats, and for the same reason: every pass of every
     * noise-floor protocol must label under the protocol it measures. */
-  def LabelAdaptiveMax: Int =
+  val LabelAdaptiveMax: Int =
     sys.env.get("SPARK_GRAFT_LABEL_ADAPTIVE_MAX")
       .flatMap(_.trim.toIntOption).filter(_ >= 1).getOrElse(LabelRepeats)
 
@@ -98,7 +98,7 @@ object Pipelines {
                     log: Logger, vectors: Int = 1): Seq[Seq[LabeledQuery]] = {
     val perQuery = queries.map { case (qid, build) =>
       val cands = Candidates.capCandidates(Candidates.ofQuery(spark, build), MaxLabeledPerQuery)
-      val labeled = Candidates.label(spark, build, cands, vectors,
+      val labeled = Candidates.label(spark, cands, vectors,
         repeats = LabelRepeats, adaptiveMaxRepeats = LabelAdaptiveMax)
       def ms(l: Seq[(Candidate, Double)]) = l.map(x => f"${x._2}%.1f").mkString(",")
       log.info(s"$qid: ${cands.length} candidates " +
@@ -204,19 +204,27 @@ object Pipelines {
                    queries: Seq[(String, SparkSession => DataFrame)],
                    log: Logger = new Logger(None)): Seq[LabeledQuery] =
     queries.map { case (qid, build) =>
-      // DELIBERATELY knob-only (variant 0 of the sweep): the analytic
-      // cost discriminates PHYSICAL operator choice, but ranking
-      // join-ORDER variants is cardinality-driven and the gate-SF
-      // estimates are too flat to order them (measured r14: cost
-      // labels over order variants ANTI-correlate with runtime,
-      // Spearman loss 1.4 — worse than random init). Cold-start
-      // covers the knob axis; order discrimination is owned by the
-      // runtime-label path (labelWorkload, order-aware).
-      val cands = Candidates.ofQuery(spark, build).filter(_.variantIdx == 0)
+      val cands = costCandidates(spark, build)
       val costs = cands.map(c => planCost(c.plan))
       log.info(s"$qid: ${cands.length} candidates, " +
         s"costs=${costs.map(c => f"$c%.0f").mkString(",")}")
       LabeledQuery(qid, cands.map(_.plan), costs)
+    }
+
+  /** The candidates [[costWorkload]] labels: the [[Candidates.sweep]]
+    * of `build`'s optimized plan alone, with AQE off as in
+    * [[Candidates.ofQuery]]. DELIBERATELY knob-only (no join-order
+    * variants): the analytic cost discriminates PHYSICAL operator
+    * choice, but ranking join-ORDER variants is cardinality-driven and
+    * the gate-SF estimates are too flat to order them (measured r14:
+    * cost labels over order variants ANTI-correlate with runtime,
+    * Spearman loss 1.4 — worse than random init). Cold-start covers
+    * the knob axis; order discrimination is owned by the runtime-label
+    * path (labelWorkload, order-aware). */
+  private[graft] def costCandidates(spark: SparkSession,
+                                    build: SparkSession => DataFrame): Seq[Candidate] =
+    Candidates.withConfs(spark, Candidates.AqeOff) {
+      Candidates.sweep(spark, Seq(build(spark).queryExecution.optimizedPlan))
     }
 
   /** Pointwise rank-score training (`training_with_rank_score`,

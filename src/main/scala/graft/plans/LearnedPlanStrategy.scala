@@ -18,19 +18,18 @@ import graft.planopt.{Candidates, JoinOrders, LeroModelPairWise, PlanFeatures}
   * and gate, the per-query choice cache and the observability
   * counters; [[LearnedPlanStrategy]] is the strategy itself.
   *
-  * Scale note: a first-seen join query costs one nested
-  * `QueryExecution` for the session-native plan, one optimization per
+  * Scale note: a first-seen join query costs one optimization per
   * extra join-order variant (variant 0 is the incoming, already
-  * optimized plan) and one physical planning per knob point —
-  * milliseconds against catalog stats, independent of data size. The
-  * planning groups run in parallel on session clones, and nothing here
-  * touches executors until the chosen plan runs. A repeat plans only
-  * the remembered winner. That re-plan of the winner, on the first
-  * sight and on repeats, temporarily sets the knob confs on the live
-  * session (restored in a finally); sessions running concurrent
-  * queries on the same SparkSession should serialize planning or use
-  * `newSession()` per thread — the standard caveat for any
-  * conf-sweeping extension.
+  * optimized plan) and one physical planning per candidate point, the
+  * session-native plan included — milliseconds against catalog stats,
+  * independent of data size. The planning groups run in parallel on
+  * session clones, and nothing here touches executors until the chosen
+  * plan runs. A repeat plans only the remembered winner. That re-plan
+  * of the winner, on the first sight and on repeats, temporarily sets
+  * the knob confs on the live session (restored in a finally);
+  * sessions running concurrent queries on the same SparkSession should
+  * serialize planning or use `newSession()` per thread — the standard
+  * caveat for any conf-sweeping extension.
   * The sweep itself never writes the live session's conf.
   * AQE can still refine the chosen plan's shuffles at runtime (its
   * runtime re-plan composes with — and can override — the static
@@ -179,10 +178,10 @@ object PlanChoice {
   * decline, else the chosen candidate. Its fragments are never
   * offered to it.
   *
-  * A first-seen query is swept by [[Candidates.sweep]] — the
-  * session-native plan, the physical knob grid and the
-  * [[JoinOrders.variants]] rewrites, planned on session clones so the
-  * live session's conf is never touched — and its candidates are
+  * A first-seen query is swept by [[Candidates.sweep]] over its
+  * [[JoinOrders.variants]] — the session-native plan, the physical
+  * knob grid and the join-order rewrites, planned on session clones so
+  * the live session's conf is never touched — and its candidates are
   * featurized from their prepared plans and scored by the pairwise
   * comparator; the margin gate may decline the argmin. Labeling
   * trains the comparator on the same sweep's candidates.
@@ -273,11 +272,11 @@ case class LearnedPlanStrategy(session: SparkSession) extends SparkStrategy {
   }
 
   /** Plan `query` under a remembered choice on the live session: the
-    * session-native plan for a gate decline, else the chosen variant
-    * under its knobs — planned exactly as the sweep planned the scored
-    * candidate. Either way the whole query is planned here, so its
-    * fragments never reach the strategy. None when the remembered
-    * join-order variant no longer exists. */
+    * session-native plan (variant 0, no knobs) for a gate decline, else
+    * the chosen variant under its knobs — either way planned exactly as
+    * the sweep planned the scored candidate. The whole query is planned
+    * here, so its fragments never reach the strategy. None when the
+    * remembered join-order variant no longer exists. */
   private def planRemembered(query: LogicalPlan,
                              r: PlanChoice.Remembered): Option[Seq[SparkPlan]] = {
     val label = r.knobs.map(_.label).getOrElse("session-default")
@@ -300,7 +299,7 @@ case class LearnedPlanStrategy(session: SparkSession) extends SparkStrategy {
   private def sweep(query: LogicalPlan, model: LeroModelPairWise,
                     gen: PlanFeatures.FeatureGenerator,
                     gateOn: Boolean): (PlanChoice.Remembered, Option[PlanChoice.Choice]) = {
-    val cands = Candidates.sweep(session, query)
+    val cands = Candidates.sweep(session, JoinOrders.variants(query))
     val trees = cands.map(c => gen.transform(c.plan))
     val scores = model.predict(trees)
     val bestIdx = scores.indices.minBy(scores)

@@ -20,9 +20,7 @@ object PlanDumpMain {
     graft.engine.Tables.registerAll(spark, sfDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      graft.engine.GraftSession.clearCaches(spark)
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)

@@ -20,15 +20,11 @@ object ProbeMain {
       .getOrElse(Seq("pr2_pagerank_converged"))
     val spark = graft.engine.GraftSession.create()
     graft.engine.Tables.registerAll(spark, sfDir)
-    def reset(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      System.gc()
-    }
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       val times = (1 to reps).map { i =>
-        reset()
+        graft.engine.GraftSession.clearCaches(spark)
+        System.gc()
         val t0 = System.nanoTime()
         noop(fn(spark, sfDir))
         val s = (System.nanoTime() - t0) / 1e9

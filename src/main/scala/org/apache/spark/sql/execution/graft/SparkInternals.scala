@@ -12,9 +12,10 @@ import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
   * The candidate sweep ([[graft.planopt.Candidates.sweep]], shared by
   * the learned planner and labeling) plans candidates on session
   * clones, so a sweep never writes the live session's conf, and plans
-  * an already-optimized tree the way `QueryExecution` does without
+  * every candidate, the session-native one included, from an
+  * already-optimized tree the way `QueryExecution` does without
   * re-running analysis and optimization. Labeling executes a
-  * join-order variant's rewritten logical plan as a DataFrame. */
+  * candidate's join-order variant as a DataFrame. */
 object SparkInternals {
 
   private def classic(spark: SparkSession) =

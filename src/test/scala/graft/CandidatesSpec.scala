@@ -15,10 +15,6 @@ class CandidatesSpec extends AnyFunSuite {
   private def build(name: String)(s: org.apache.spark.sql.SparkSession) =
     Relational.defs(name)(s, sf)
 
-  /** The join-order variants labeling executes `name`'s candidates from. */
-  private def variantsOf(name: String) =
-    JoinOrders.variants(build(name)(spark).queryExecution.optimizedPlan)
-
   test("knob sweep yields >=2 distinct physical plans for joins") {
     for (q <- Seq("j1_join_2way", "j1_join_5way", "j1_join_7way")) {
       val cands = Candidates.ofQuery(spark, build(q))
@@ -31,8 +27,8 @@ class CandidatesSpec extends AnyFunSuite {
 
   test("every candidate returns identical results") {
     val q = "j1_join_2way"
-    val (cands, variants) = (Candidates.ofQuery(spark, build(q)), variantsOf(q))
-    val counts = cands.map(c => Candidates.executeOrdered(spark, build(q), c, variants).get._1)
+    val cands = Candidates.ofQuery(spark, build(q))
+    val counts = cands.map(c => Candidates.onCandidate(spark, c)(_.count()))
     assert(counts.distinct.size == 1, s"variant results differ: $counts")
   }
 
@@ -57,7 +53,7 @@ class CandidatesSpec extends AnyFunSuite {
 
   test("labeling produces positive wall-clock times") {
     val cands = Candidates.ofQuery(spark, build("j1_join_2way")).take(2)
-    val Seq(labeled) = Candidates.label(spark, build("j1_join_2way"), cands)
+    val Seq(labeled) = Candidates.label(spark, cands)
     assert(labeled.map(_._1) == cands)
     assert(labeled.forall(_._2 > 0))
   }
@@ -85,20 +81,6 @@ class CandidatesSpec extends AnyFunSuite {
     assert(capped.forall(cands.contains))
     // under-cap lists pass through untouched
     assert(Candidates.capCandidates(cands.take(3), 6) == cands.take(3))
-  }
-
-  test("a shrunk variant list drops the candidate instead of " +
-    "mislabeling the knob plan") {
-    val cands = Candidates.ofQuery(spark, build("j1_join_5way"))
-    val variantCand = cands.find(_.variantIdx > 0).get
-    // simulate session-state drift: the re-derived variant list no
-    // longer reaches this candidate's index
-    assert(Candidates.executeOrdered(spark, build("j1_join_5way"),
-      variantCand, variants = Nil).isEmpty)
-    // a labeling pass over [default, drifted] keeps only the default
-    val drifted = Seq(cands.head.copy(variantIdx = 99), cands.head)
-    val Seq(labeled) = Candidates.label(spark, build("j1_join_5way"), drifted)
-    assert(labeled.map(_._1) == Seq(cands.head))
   }
 
   test("order-aware enumeration widens the tail joins beyond the knob " +
@@ -132,9 +114,8 @@ class CandidatesSpec extends AnyFunSuite {
     }
     // result equality across order variants (correctness of the
     // rewrite + pinned re-plan), on the cheaper 5-way
-    val (cands, variants) = (Candidates.ofQuery(spark, build("j1_join_5way")), variantsOf("j1_join_5way"))
-    val counts = cands.map(c =>
-      Candidates.executeOrdered(spark, build("j1_join_5way"), c, variants).get._1)
+    val cands = Candidates.ofQuery(spark, build("j1_join_5way"))
+    val counts = cands.map(c => Candidates.onCandidate(spark, c)(_.count()))
     assert(counts.distinct.size == 1, s"variant results differ: $counts")
     assert(cands.exists(_.variantIdx > 0), "5-way produced no order variant")
   }
@@ -163,12 +144,20 @@ class CandidatesSpec extends AnyFunSuite {
         Candidates.withConfs(spark, partitions) {
           val labeled = Candidates.ofQuery(spark, b)
           assert(labeled.map(_.canonical) == scored.get, s"$name: labeled set != scored set")
-          val variants = JoinOrders.variants(b(spark).queryExecution.optimizedPlan)
           labeled.foreach { c =>
-            val executed = Candidates.onCandidate(spark, b, c, variants)(df =>
+            val executed = Candidates.onCandidate(spark, c)(df =>
               Candidates.canonicalKey(df.queryExecution.executedPlan))
-            assert(executed.contains(c.canonical),
+            assert(executed == c.canonical,
               s"$name: [${c.knobLabel}] variant ${c.variantIdx} executes a different plan")
+          }
+          // cost labels train on the join-order-free part of the same
+          // set: the scored variant-0 candidates, in order
+          if (name == "j1_join_5way") {
+            val costCands = Pipelines.costCandidates(spark, b)
+            assert(costCands.forall(_.variantIdx == 0), s"$name: cost labels sweep a join-order variant")
+            assert(costCands.map(_.canonical) == labeled.filter(_.variantIdx == 0).map(_.canonical),
+              s"$name: cost-labeled set != scored variant-0 set")
+            assert(Pipelines.costWorkload(spark, Seq(name -> b)).head.plans == costCands.map(_.plan))
           }
         }
       }
@@ -202,7 +191,7 @@ class CandidatesSpec extends AnyFunSuite {
     val testNames = Seq("j1_join_2way", "j1_join_7way")
     val runtimeLabeled = testNames.map { n =>
       val cands = Candidates.ofQuery(spark, build(n)).filter(_.variantIdx == 0)
-      val Seq(labeled) = Candidates.label(spark, build(n), cands)
+      val Seq(labeled) = Candidates.label(spark, cands)
       Pipelines.LabeledQuery(n, labeled.map(_._1.plan), labeled.map(_._2))
     }
     def lossOf(m: LeroModelPairWise): Double =

@@ -242,6 +242,8 @@ class MarginGateSpec extends AnyFunSuite {
       // the declined query runs the kill-switched session's plan
       assert(Candidates.canonicalKey(cold.queryExecution.executedPlan) == native)
       assert(Candidates.canonicalKey(hit.queryExecution.executedPlan) == native)
+      // ...which is the native candidate the gate scored
+      assert(Candidates.ofQuery(s2, build).head.canonical == native)
     } finally PlanChoice.uninstall()
   }
 
@@ -265,7 +267,7 @@ class MarginGateSpec extends AnyFunSuite {
   test("adaptive dual labeling keeps vector shape and respects kMax") {
     val build = (s: SparkSession) => Relational.defs("j1_join_2way")(s, sf)
     val cands = Candidates.ofQuery(spark, build).take(2)
-    val Seq(l1, l2) = Candidates.label(spark, build, cands, vectors = 2,
+    val Seq(l1, l2) = Candidates.label(spark, cands, vectors = 2,
       repeats = 1, adaptiveMaxRepeats = 2)
     assert(l1.map(_._1) == cands && l2.map(_._1) == cands)
     assert(l1.forall(_._2 > 0) && l2.forall(_._2 > 0))
