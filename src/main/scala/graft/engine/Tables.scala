@@ -62,6 +62,7 @@ object Tables {
         spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(path(sfDir, table))
+      val tsType = raw.schema("ts").dataType
       // Confine the conf to the one case that needs it: a NANOS
       // footer's DataFrame decodes the column under this conf at
       // ACTION time, so there it must stay set (documented residual —
@@ -70,7 +71,7 @@ object Tables {
       // restore immediately and a later unrelated read of some OTHER
       // nanos parquet in the same session is not silently changed
       // (the batch-path twin of the r9 stream-probe fix).
-      if (raw.schema("ts").dataType != org.apache.spark.sql.types.LongType) {
+      if (tsType != org.apache.spark.sql.types.LongType) {
         priorNanos match {
           case Some(v) =>
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
@@ -78,29 +79,34 @@ object Tables {
             spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
         }
       }
-      raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          // Nanos-as-long → convert losslessly to a microsecond
-          // timestamp (the data carries no sub-us precision; integer
-          // `div` — double division would lose bits above 2^53).
-          // `div` TRUNCATES toward zero while the DuckDB oracles' `//`
-          // FLOORS: identical for the post-epoch data this corpus
-          // guarantees — if this loader ever meets pre-epoch data,
-          // switch to floor(ts / 1000) semantics here first.
-          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case org.apache.spark.sql.types.TimestampType => raw
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          // Only reachable if NTZ inference was re-enabled elsewhere;
-          // UTC session makes the cast value-identical.
-          raw.withColumn("ts",
-            col("ts").cast(org.apache.spark.sql.types.TimestampType))
-        case other => throw new IllegalStateException(
-          s"events.ts has unsupported parquet-derived type $other " +
-            s"(expected nanos-as-long, timestamp, or timestamp_ntz)")
-      }
+      tsAsTimestamp(raw, tsType, "events.ts")
     } else {
       spark.read.parquet(path(sfDir, table))
     }
+  }
+
+  /** `events` with its `ts` column (parquet-derived type `tsType`) as
+    * a microsecond timestamp, for the batch and the streaming loader
+    * alike; `source` names the input in the error for any other type. */
+  private def tsAsTimestamp(events: DataFrame, tsType: org.apache.spark.sql.types.DataType,
+                            source: String): DataFrame = tsType match {
+    case org.apache.spark.sql.types.LongType =>
+      // Nanos-as-long → convert losslessly to a microsecond timestamp
+      // (the data carries no sub-us precision; integer `div` — double
+      // division would lose bits above 2^53). `div` TRUNCATES toward
+      // zero while the DuckDB oracles' `//` FLOORS: identical for the
+      // post-epoch data this corpus guarantees — if this loader ever
+      // meets pre-epoch data, switch to floor(ts / 1000) semantics
+      // here first.
+      events.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    case org.apache.spark.sql.types.TimestampType => events
+    case org.apache.spark.sql.types.TimestampNTZType =>
+      // Only reachable if NTZ inference was re-enabled elsewhere; the
+      // UTC session makes the cast value-identical.
+      events.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
+    case other => throw new IllegalStateException(
+      s"$source has unsupported parquet-derived ts type $other " +
+        "(expected nanos-as-long, timestamp, or timestamp_ntz)")
   }
 
   /** Streaming twin of the events branch of [[load]]: read a parquet
@@ -190,17 +196,8 @@ object Tables {
     val reader = spark.readStream.schema(footer)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     val stream = reader.parquet(eventsDir)
-    val converted = footer("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        // same truncate-vs-floor caveat as the batch branch above
-        stream.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampType => stream
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        stream.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case other => throw new IllegalStateException(
-        s"events stream at $eventsDir has unsupported ts type $other")
-    }
+    val converted = tsAsTimestamp(stream, footer("ts").dataType,
+      s"events stream at $eventsDir")
     if (!assumedFallback) converted
     else {
       // First-batch drift validation for the ASSUMED schema: the

@@ -67,59 +67,9 @@ object JoinOrders {
       case other => (Seq(other), Nil)
     }
 
-  /** Greedy connected orders (as index sequences), one attempt per
-    * starting base, keeping the first `maxOrders` that complete
-    * without needing a cross product. */
-  private def connectedOrders(bases: Seq[LogicalPlan], conds: Seq[Expression],
-                              maxOrders: Int): Seq[Seq[Int]] = {
-    val n = bases.size
-    val out = mutable.LinkedHashSet[Seq[Int]]()
-    var start = 0
-    while (start < n && out.size < maxOrders) {
-      val order = mutable.ArrayBuffer(start)
-      val used = mutable.Set(start)
-      var acc = bases(start).outputSet
-      var ok = true
-      while (ok && order.size < n) {
-        val next = (0 until n).find { i =>
-          !used(i) && conds.exists { c =>
-            val bi = bases(i).outputSet
-            c.references.subsetOf(acc ++ bi) &&
-              c.references.intersect(bi).nonEmpty &&
-              c.references.intersect(acc).nonEmpty
-          }
-        }
-        next match {
-          case Some(i) =>
-            order += i; used += i; acc = acc ++ bases(i).outputSet
-          case None => ok = false
-        }
-      }
-      if (ok) out += order.toSeq
-      start += 1
-    }
-    out.toSeq
-  }
-
-  /** Left-deep rebuild of `order`, attaching each condition at the
-    * earliest join where all its references are in scope. Leftover
-    * conditions (impossible for connected orders) become a Filter. */
-  private def rebuild(bases: Seq[LogicalPlan], order: Seq[Int],
-                      conds: Seq[Expression]): LogicalPlan = {
-    var remaining = conds
-    var cur = bases(order.head)
-    order.tail.foreach { i =>
-      val nxt = bases(i)
-      val scope = AttributeSet(cur.output ++ nxt.output)
-      val (app, rest) = remaining.partition(_.references.subsetOf(scope))
-      remaining = rest
-      cur = Join(cur, nxt, Inner, app.reduceOption(And), JoinHint.NONE)
-    }
-    remaining.foldLeft(cur)((p, c) => Filter(c, p))
-  }
-
   /** Greedy connected re-sequencing of an index SUBSET (BFS from its
-    * first element, using only conditions fully inside the subset).
+    * first element, then the first unused index in `idxs` order that
+    * shares a condition fully inside the sequence so far plus itself).
     * None when the subset is not internally connected. */
   private def connectedSeq(bases: Seq[LogicalPlan], conds: Seq[Expression],
                            idxs: Seq[Int]): Option[Seq[Int]] = {
@@ -142,6 +92,23 @@ object JoinOrders {
     }
     Some(seq.toSeq)
   }
+
+  /** Left-deep join tree of `order`, attaching each of `conds` at the
+    * earliest join where all its references are in scope; also returns
+    * the conditions no join of the tree could take. */
+  private def leftDeep(bases: Seq[LogicalPlan], order: Seq[Int],
+                       conds: Seq[Expression]): (LogicalPlan, Seq[Expression]) =
+    order.tail.foldLeft((bases(order.head), conds)) { case ((cur, remaining), i) =>
+      val nxt = bases(i)
+      val scope = AttributeSet(cur.output ++ nxt.output)
+      val (app, rest) = remaining.partition(_.references.subsetOf(scope))
+      (Join(cur, nxt, Inner, app.reduceOption(And), JoinHint.NONE), rest)
+    }
+
+  /** `tree` with each leftover condition as a Filter on top (impossible
+    * for connected orders). */
+  private def withFilters(tree: LogicalPlan, leftover: Seq[Expression]): LogicalPlan =
+    leftover.foldLeft(tree)((p, c) => Filter(c, p))
 
   /** BUSHY rebuild: split a connected order into two internally
     * connected halves at the most balanced feasible point, build each
@@ -171,27 +138,16 @@ object JoinOrders {
         ro <- connectedSeq(bases, conds, order.drop(k))
       } yield (lo, ro)
     }.nextOption().map { case (lo, ro) =>
-      var remaining = conds
-      def buildHalf(ord: Seq[Int]): LogicalPlan = {
-        var cur = bases(ord.head)
-        ord.tail.foreach { i =>
-          val nxt = bases(i)
-          val scope = AttributeSet(cur.output ++ nxt.output)
-          val (app, rest) = remaining.partition(_.references.subsetOf(scope))
-          remaining = rest
-          cur = Join(cur, nxt, Inner, app.reduceOption(And), JoinHint.NONE)
-        }
-        cur
-      }
-      val left = buildHalf(lo)
-      val right = buildHalf(ro)
-      val (app, rest) = remaining.partition(
+      val (left, afterLeft) = leftDeep(bases, lo, conds)
+      val (right, afterRight) = leftDeep(bases, ro, afterLeft)
+      val (app, rest) = afterRight.partition(
         _.references.subsetOf(AttributeSet(left.output ++ right.output)))
-      val joined: LogicalPlan =
-        Join(left, right, Inner, app.reduceOption(And), JoinHint.NONE)
-      rest.foldLeft(joined)((p, c) => Filter(c, p))
+      withFilters(Join(left, right, Inner, app.reduceOption(And), JoinHint.NONE), rest)
     }
   }
+
+  /** At most this many variants per query, the original included. */
+  private val MaxVariants = 4
 
   /** Join-order variants of an optimized query plan. Index 0 is always
     * the original plan; later entries rewrite the topmost inner-join
@@ -199,7 +155,7 @@ object JoinOrders {
     * Project). Queries with fewer than 3 inner-joined bases return
     * only the original. Deterministic, so a cached choice can be
     * reconstructed by index. */
-  def variants(query: LogicalPlan, maxVariants: Int = 4): Seq[LogicalPlan] = {
+  def variants(query: LogicalPlan): Seq[LogicalPlan] = {
     val topJoin = query.collectFirst {
       case j @ Join(_, _, Inner, _, JoinHint.NONE) => j
     }
@@ -208,23 +164,29 @@ object JoinOrders {
       case Some(j) =>
         val (bases, conds) = flatten(j)
         if (bases.size < 3) return Seq(query)
-        val orders = connectedOrders(bases, conds, maxVariants)
+        // connected orders, one greedy attempt per starting base, the
+        // first MaxVariants that complete without a cross product
+        val orders = bases.indices.iterator.flatMap { start =>
+          connectedSeq(bases, conds, start +: bases.indices.filter(_ != start))
+        }.take(MaxVariants).toSeq
         // drop the in-order rebuild (it reproduces the original tree
         // shape for left-deep plans; for bushy originals it is still a
         // genuine variant, and canonical dedupe downstream is the
         // final arbiter either way)
-        val leftDeep = orders.filterNot(_ == bases.indices.toSeq)
-          .map(ord => rebuild(bases, ord, conds))
+        val reordered = orders.filterNot(_ == bases.indices.toSeq).map { ord =>
+          val (t, rest) = leftDeep(bases, ord, conds)
+          withFilters(t, rest)
+        }
         // bushy shapes: one per enumerated order (incl. the original
         // in-order — its bushy split differs from the original tree
         // even when the left-deep rebuild would not)
         val bushy = orders.flatMap(ord => rebuildBushy(bases, ord, conds))
-        // interleave so a small maxVariants still carries both a
+        // interleave so the MaxVariants cap still carries both a
         // reordered left-deep AND a bushy tree; dedupe canonically
         // (two orders can bushy-split into the same tree)
         val interleaved = {
           val buf = mutable.ArrayBuffer[LogicalPlan]()
-          val it1 = leftDeep.iterator
+          val it1 = reordered.iterator
           val it2 = bushy.iterator
           while (it1.hasNext || it2.hasNext) {
             if (it1.hasNext) buf += it1.next()
@@ -238,7 +200,7 @@ object JoinOrders {
             case node if node eq j => Project(j.output, t)
           }
         }
-        (query +: rebuilt).take(maxVariants)
+        (query +: rebuilt).take(MaxVariants)
     }
   }
 }

@@ -132,37 +132,28 @@ object StableMain {
     // labels' own tie structure predicts ~0.05 — so it is NOT the
     // bound model quality is judged against; it documents how much
     // the deployment-time latency ORDERING drifts across JVM phases.
-    // SPARK_GRAFT_SKIP_DRIFT_DIAG=1 skips it (a ~17-minute timed pass
-    // whose r17 measurement stands; the SAME-PASS floor above is the
-    // one the model is judged against and is never skippable).
-    if (sys.env.get("SPARK_GRAFT_SKIP_DRIFT_DIAG").exists(_ == "1")) {
-      log.info("cross-phase relabel drift diagnostic SKIPPED " +
-        "(SPARK_GRAFT_SKIP_DRIFT_DIAG=1; r17 measured it at 0.2397 — " +
-        "JVM-phase drift, not label noise)")
-    } else {
-      val relabeled = Pipelines.labelWorkload(spark, testQ,
-        new Pipelines.Logger(None)).head // second pass: no per-query log spam
-      val byQid = relabeled.map(r => r.qid -> r.latenciesMs).toMap
-      // Positional pairing: drop (and log) any qid whose re-enumeration
-      // yielded a different candidate count — a diagnostic must never
-      // kill the run (r9 advice).
-      val floorPairs = art.testLabeled.filter { q =>
-        byQid.get(q.qid) match {
-          case Some(l2) if l2.length == q.latenciesMs.length => true
-          case Some(l2) =>
-            log.info(s"noise-floor: dropping qid=${q.qid} — relabel " +
-              s"yielded ${l2.length} candidates vs ${q.latenciesMs.length} " +
-              "on the first pass (positional pairing impossible)")
-            false
-          case None => false
-        }
+    val relabeled = Pipelines.labelWorkload(spark, testQ,
+      new Pipelines.Logger(None)).head // second pass: no per-query log spam
+    val byQid = relabeled.map(r => r.qid -> r.latenciesMs).toMap
+    // Positional pairing: drop (and log) any qid whose re-enumeration
+    // yielded a different candidate count — a diagnostic must never
+    // kill the run (r9 advice).
+    val floorPairs = art.testLabeled.filter { q =>
+      byQid.get(q.qid) match {
+        case Some(l2) if l2.length == q.latenciesMs.length => true
+        case Some(l2) =>
+          log.info(s"noise-floor: dropping qid=${q.qid} — relabel " +
+            s"yielded ${l2.length} candidates vs ${q.latenciesMs.length} " +
+            "on the first pass (positional pairing impossible)")
+          false
+        case None => false
       }
-      val floor = Ranking.rankingLoss(
-        floorPairs.map(q => byQid(q.qid)), floorPairs.map(_.latenciesMs))
-      log.info(f"cross-phase relabel drift (post-training re-label vs " +
-        f"run-1 labels; NOT the model's floor): " +
-        f"${floor.getOrElse(Double.NaN)}%.4f over ${floorPairs.size} queries")
     }
+    val floor = Ranking.rankingLoss(
+      floorPairs.map(q => byQid(q.qid)), floorPairs.map(_.latenciesMs))
+    log.info(f"cross-phase relabel drift (post-training re-label vs " +
+      f"run-1 labels; NOT the model's floor): " +
+      f"${floor.getOrElse(Double.NaN)}%.4f over ${floorPairs.size} queries")
 
     // Bayesian margin gate (r17 verdict #2): trained on the SAME train
     // labels and calibrated against the main model's own routing

@@ -57,11 +57,6 @@ object PlanChoice {
     * last install — observability for the E2E logs and specs. */
   val bypassCount = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Margin-gate kill switch (session conf): with a gate installed and
-    * this not "false", the strategy routes a non-native plan only when
-    * the Bayesian head's z-score clears the calibrated threshold. */
-  val GateEnabledKey = "spark.graft.planChoice.gate.enabled"
-
   /** Query plannings the margin gate DECLINED (fresh sweeps and
     * cached declines both count) — the complement of `routed` in the
     * E2E logs. */
@@ -84,21 +79,25 @@ object PlanChoice {
   @volatile private var gateInstalled: Option[(graft.planopt.BayesianModelPairWise, Double, Double)] = None
   val lastChoice = new AtomicReference[Option[Choice]](None)
 
-  /** Remembered (join-order variant, knobs) choice per canonical
-    * logical plan: a repeat query re-plans ONCE under the remembered
-    * choice instead of sweeping the grid — routing overhead drops from
-    * |grid| plannings to one for the steady-state (repeated-template)
-    * workload. The variant index reconstructs deterministically via
-    * [[graft.planopt.JoinOrders.variants]]. Bounded LRU; cleared on
-    * (un)install since choices are model-specific.
-    *
-    * `knobs` None = the session-native plan (no conf overrides);
-    * `variantIdx` == [[Remembered.Declined]] = the margin gate
-    * declined this query — repeats skip the sweep and the strategy
-    * plans the whole query natively, at the cost of one native
-    * planning. */
-  final case class Remembered(variantIdx: Int, knobs: Option[Candidates.Knobs])
-  object Remembered { val Declined: Int = -1 }
+  /** The strategy's decision for one query, remembered per canonical
+    * logical plan: a repeat query plans ONCE under it instead of
+    * sweeping the grid — routing overhead drops from |grid| plannings
+    * to one for the steady-state (repeated-template) workload. Bounded
+    * LRU; cleared on (un)install since decisions are model- and
+    * gate-specific. */
+  sealed trait Remembered
+  object Remembered {
+
+    /** The margin gate declined the query: it plans the whole query
+      * natively, at the cost of one native planning per repeat. */
+    case object Declined extends Remembered
+
+    /** The query routes to join-order variant `variantIdx` (0 is the
+      * optimizer's own order; the variant reconstructs
+      * deterministically via [[graft.planopt.JoinOrders.variants]])
+      * planned under `knobs` (None = the session's own confs). */
+    final case class Routed(variantIdx: Int, knobs: Option[Candidates.Knobs]) extends Remembered
+  }
   // One entry per distinct join query, routed or declined: every
   // decision plans the whole query at the root, so fragments never
   // add entries of their own. The bound keeps a large repeated-template
@@ -138,8 +137,9 @@ object PlanChoice {
     * the gate's z-score (P(native slower) − 0.5)/σ exceeds
     * `threshold` AND the main comparator's predicted-gain score delta
     * exceeds `scoreGapThreshold` (the conf-invariant gain axis — see
-    * Pipelines.GateCalibration). Choices are gate-specific, so the
-    * cache clears. */
+    * Pipelines.GateCalibration). The gate applies exactly while it is
+    * installed; [[install]] without this call serves the model
+    * ungated. Choices are gate-specific, so the cache clears. */
   def installGate(bm: graft.planopt.BayesianModelPairWise,
                   threshold: Double,
                   scoreGapThreshold: Double = 0.0): Unit = {
@@ -187,16 +187,19 @@ object PlanChoice {
   * trains the comparator on the same sweep's candidates.
   *
   * The sweep only decides: it records a [[PlanChoice.Remembered]]
-  * entry, and the same code that serves a choice-cache hit plans the
-  * winner on the live session. The executed plan is therefore planned
-  * exactly like the scored candidate, on the first sight and on every
-  * repeat. Returning a fully-planned tree (no `planLater`
-  * placeholders) is the supported way to take over whole-query
-  * planning; the outer `QueryExecution` applies its preparations
-  * (EnsureRequirements, codegen collapse) once, on that unprepared
-  * plan. */
+  * decision and hands it, with the winner's variant plan it already
+  * holds, to the one planning function that also serves every
+  * choice-cache hit (which re-derives the variant by index). The
+  * executed plan is therefore planned exactly like the scored
+  * candidate, on the first sight and on every repeat, and a first
+  * sight derives the query's variants once. Returning a
+  * fully-planned tree (no `planLater` placeholders) is the supported
+  * way to take over whole-query planning; the outer `QueryExecution`
+  * applies its preparations (EnsureRequirements, codegen collapse)
+  * once, on that unprepared plan. */
 case class LearnedPlanStrategy(session: SparkSession) extends SparkStrategy {
   import Candidates.{optimizePinned, planUnder}
+  import PlanChoice.Remembered.{Declined, Routed}
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = {
     val modelOpt = PlanChoice.current
@@ -252,53 +255,50 @@ case class LearnedPlanStrategy(session: SparkSession) extends SparkStrategy {
         return Seq(planUnder(session, query, None)(p => p))
       }
       val cacheKey = Candidates.canonicalKey(query)
-      val gateOn =
-        session.conf.get(PlanChoice.GateEnabledKey, "true") != "false"
-      // A cached decline is a GATE decision, so the gate kill-switch
-      // bypasses it (a fresh, ungated sweep overwrites the entry).
-      Option(PlanChoice.choiceCache.get(cacheKey))
-        .filterNot(r => r.variantIdx == PlanChoice.Remembered.Declined && !gateOn)
-        .flatMap(planRemembered(query, _))
-        .getOrElse {
-          val (remembered, choice) = sweep(query, model, gen, gateOn)
-          PlanChoice.choiceCache.put(cacheKey, remembered)
-          // the variant list is deterministic per query, so the
-          // winner's index always resolves here
-          val planned = planRemembered(query, remembered).getOrElse(Nil)
-          choice.foreach(c => PlanChoice.lastChoice.set(Some(c)))
-          planned
+      Option(PlanChoice.choiceCache.get(cacheKey)).flatMap { d =>
+        // a routed hit re-derives its join-order variant (deterministic
+        // per query); a decline and variant 0 plan the query itself
+        val variant = d match {
+          case Routed(idx, _) if idx > 0 => JoinOrders.variants(query).lift(idx)
+          case _ => Some(query)
         }
+        variant.map(planDecision(d, _, None))
+      }.getOrElse {
+        val (d, variant, choice) = sweep(query, model, gen)
+        PlanChoice.choiceCache.put(cacheKey, d)
+        planDecision(d, variant, choice)
+      }
     } finally PlanChoice.replanning.set(false)
   }
 
-  /** Plan `query` under a remembered choice on the live session: the
-    * session-native plan (variant 0, no knobs) for a gate decline, else
-    * the chosen variant under its knobs — either way planned exactly as
-    * the sweep planned the scored candidate. The whole query is planned
-    * here, so its fragments never reach the strategy. None when the
-    * remembered join-order variant no longer exists. */
-  private def planRemembered(query: LogicalPlan,
-                             r: PlanChoice.Remembered): Option[Seq[SparkPlan]] = {
-    val label = r.knobs.map(_.label).getOrElse("session-default")
-    def hit(p: SparkPlan): Option[Seq[SparkPlan]] = {
-      PlanChoice.lastChoice.set(Some(PlanChoice.Choice(label, 1, "", Nil)))
-      Some(Seq(p))
-    }
-    if (r.variantIdx == PlanChoice.Remembered.Declined) {
+  /** Plan decision `d` on the live session from `variant`, the logical
+    * plan of its join-order variant (the query itself for a decline or
+    * variant 0): the session-native plan for a decline, else the
+    * variant under its knobs — re-optimized with the order pinned when
+    * it is a rewrite — exactly as the sweep planned the scored
+    * candidate. The first sight and every hit plan through here, so
+    * both execute the same plan. A routed planning records `swept`,
+    * the sweep's choice on a first sight, or a 1-candidate choice on a
+    * hit. */
+  private def planDecision(d: PlanChoice.Remembered, variant: LogicalPlan,
+                           swept: Option[PlanChoice.Choice]): Seq[SparkPlan] = Seq(d match {
+    case Declined =>
       PlanChoice.gateDeclineCount.incrementAndGet()
-      Some(Seq(planUnder(session, query, None)(p => p)))
-    } else if (r.variantIdx == 0) hit(planUnder(session, query, r.knobs)(p => p))
-    else JoinOrders.variants(query).lift(r.variantIdx).flatMap { vq =>
-      hit(optimizePinned(session, vq)(planUnder(session, _, r.knobs)(p => p)))
-    }
-  }
+      planUnder(session, variant, None)(p => p)
+    case Routed(idx, knobs) =>
+      PlanChoice.lastChoice.set(swept.orElse(Some(
+        PlanChoice.Choice(knobs.fold("session-default")(_.label), 1, "", Nil))))
+      if (idx == 0) planUnder(session, variant, knobs)(p => p)
+      else optimizePinned(session, variant)(planUnder(session, _, knobs)(p => p))
+  })
 
   /** Score every [[Candidates.sweep]] candidate of a first-seen
-    * `query` and decide: the remembered choice, plus the observability
-    * record when the choice routes. */
+    * `query` and decide: the decision, the logical plan it plans from
+    * (the winner's variant, which the sweep already holds) and, when
+    * it routes, the observability record. */
   private def sweep(query: LogicalPlan, model: LeroModelPairWise,
-                    gen: PlanFeatures.FeatureGenerator,
-                    gateOn: Boolean): (PlanChoice.Remembered, Option[PlanChoice.Choice]) = {
+                    gen: PlanFeatures.FeatureGenerator)
+      : (PlanChoice.Remembered, LogicalPlan, Option[PlanChoice.Choice]) = {
     val cands = Candidates.sweep(session, JoinOrders.variants(query))
     val trees = cands.map(c => gen.transform(c.plan))
     val scores = model.predict(trees)
@@ -311,15 +311,15 @@ case class LearnedPlanStrategy(session: SparkSession) extends SparkStrategy {
     // cache the decision and plan the session-native plan (repeats
     // cost one cache lookup and one native planning). A best pick that
     // IS the native plan declines too — it is the same plan.
-    val declined = gateOn && PlanChoice.gate.exists { case (bm, thr, gapThr) =>
+    val declined = PlanChoice.gate.exists { case (bm, thr, gapThr) =>
       bestIdx == 0 || scores(0) - scores(bestIdx) <= gapThr || {
         val (p, v) = bm.predictPair(trees.head, trees(bestIdx))
         val z = (p - 0.5) / math.sqrt(math.max(v, 1e-12))
         z <= thr
       }
     }
-    if (declined) (PlanChoice.Remembered(PlanChoice.Remembered.Declined, None), None)
-    else (PlanChoice.Remembered(best.variantIdx, best.knobs), Some(PlanChoice.Choice(
+    if (declined) (Declined, query, None)
+    else (Routed(best.variantIdx, best.knobs), best.variant, Some(PlanChoice.Choice(
       best.knobLabel, cands.size, best.canonical, scores.toSeq,
       nOrders = cands.map(_.variantIdx).distinct.size, keys = cands.map(_.canonical))))
   }

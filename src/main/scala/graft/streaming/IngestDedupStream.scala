@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.engine.CheckpointBlocks
 import graft.pipeline.Dedup
 
 /** Streaming ingest dedup — the streaming twin of dd7's incremental
@@ -55,19 +56,6 @@ object IngestDedupStream {
                  histSets: DataFrame, tau: Double = 0.8): DataFrame =
     probeBatchTracked(newDocs, histBanded, histSets, tau)._1
 
-  /** The checkpointed block-holding RDDs reachable from `df`'s
-    * physical plan — for an eagerly localCheckpointed frame that is
-    * exactly its own checkpoint RDD (lineage is truncated, so the
-    * walk cannot reach persists belonging to other datasets). Used to
-    * free a trigger's blocks WITHOUT diffing the context-global
-    * persistent-RDD set, which would unpersist frames a concurrent
-    * query or the caller's sink persisted during the trigger (for a
-    * localCheckpointed frame those blocks are the only copy). Shared
-    * with pr2's converged-PageRank loop via
-    * [[graft.engine.CheckpointBlocks]]. */
-  private def persistedRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
-    graft.engine.CheckpointBlocks.persistedRdds(df)
-
   /** [[probeBatch]] plus the trigger-scoped checkpoint RDDs the caller
     * must unpersist once the result is consumed. */
   private[graft] def probeBatchTracked(
@@ -100,7 +88,7 @@ object IngestDedupStream {
       // doc_id rows in histSets fan the verify joins); the result is
       // probe-sized, so this dedup shuffle is negligible
       .dropDuplicates("new_id", "hist_id")
-    (result, Seq(newSets, cand, touched).flatMap(persistedRdds))
+    (result, Seq(newSets, cand, touched).flatMap(CheckpointBlocks.persistedRdds))
   }
 
   /** Wire a parquet document stream through [[probeBatch]], handing

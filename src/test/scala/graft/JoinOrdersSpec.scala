@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.planopt.JoinOrders
+import graft.planopt.{Candidates, JoinOrders}
 import graft.queries.Relational
 
 /** Unit contract of the join-order variant generator
@@ -40,7 +40,7 @@ class JoinOrdersSpec extends AnyFunSuite {
         assert(j.condition.isDefined,
           s"cross product introduced:\n${j.simpleString(3)}")
       }
-      // rebuild() parks unplaceable conditions in a Filter directly
+      // the rebuild parks unplaceable conditions in a Filter directly
       // above a Join — connected orders must never need one (filters
       // above other operators, e.g. scan predicates, are fine)
       v.foreach {
@@ -123,6 +123,24 @@ class JoinOrdersSpec extends AnyFunSuite {
     val a = JoinOrders.variants(q).map(_.canonicalized.toString)
     val b = JoinOrders.variants(q).map(_.canonicalized.toString)
     assert(a == b)
+  }
+
+  test("variant shapes are pinned for the 5-, 7-, 10-way and 17-relation joins") {
+    // SHA-256 of every variant's canonical key, joined by newlines: a
+    // change to the enumerator that moves ANY variant (a losing or
+    // declined one included) shows here, not only a routed winner
+    def shapes(name: String): String = {
+      val keys = JoinOrders.variants(optimized(name)).map(Candidates.canonicalKey)
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(keys.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        .map(b => f"${b & 0xff}%02x").mkString
+    }
+    val pinned = Seq(
+      "j1_join_5way" -> "8374c8c65797fc2fb0a4ae0b67f8e964dfb042164bbadb07e76a5f5b4599867f",
+      "j1_join_7way" -> "09e4bf3738f00196a09b57d2023c03168b6831eadae0949ab4053a28b18f4a5e",
+      "j1_join_10way" -> "f7c4630d55320c7837a119faa097e4fefad777168dc6ccd65636c1f007fad430",
+      "j1_join_17rel" -> "9f2bdb43682ccc23bc0138de5521fad85624d3b85fbc25d639e5c8b626c2b5c8")
+    pinned.foreach { case (name, want) => assert(shapes(name) == want, name) }
   }
 
   test("plans without inner joins are untouched") {

@@ -191,12 +191,15 @@ class MarginGateSpec extends AnyFunSuite {
       assert(build(s2).collect()(0).getLong(0) == n)
       assert(PlanChoice.gateDeclineCount.get() > cached,
         "cached decline not taken")
-      // kill switch restores ungated routing without reinstalling
-      s2.conf.set(PlanChoice.GateEnabledKey, "false")
+      // re-installing the same model without a gate drops the cached
+      // decline, and the query routes ungated
+      val key = Candidates.canonicalKey(build(s2).queryExecution.optimizedPlan)
+      assert(PlanChoice.choiceCache.get(key) == PlanChoice.Remembered.Declined)
+      PlanChoice.install(model, gen)
+      assert(!PlanChoice.choiceCache.containsKey(key), "the cached decline survived re-install")
       PlanChoice.lastChoice.set(None)
       build(s2).collect()
-      assert(PlanChoice.lastChoice.get().isDefined,
-        "gate kill-switch ignored")
+      assert(PlanChoice.lastChoice.get().isDefined, "the ungated model did not route")
     } finally PlanChoice.uninstall()
 
     // (b) permissive threshold: the non-native pick routes

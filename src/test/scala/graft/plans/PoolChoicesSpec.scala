@@ -78,9 +78,11 @@ object PoolChoices {
         val choice = PlanChoice.lastChoice.get()
         val root = Option(PlanChoice.choiceCache.get(Candidates.canonicalKey(cold.optimizedPlan)))
         val hitPlan = s.sql(sql).queryExecution.executedPlan
-        val decision = root.map(r =>
-          if (r.variantIdx == PlanChoice.Remembered.Declined) "declined" else "routed")
-        val routed = root.filter(_.variantIdx != PlanChoice.Remembered.Declined)
+        val decision = root.map {
+          case PlanChoice.Remembered.Declined => "declined"
+          case _: PlanChoice.Remembered.Routed => "routed"
+        }
+        val routed = root.collect { case r: PlanChoice.Remembered.Routed => r }
         s.conf.set(PlanChoice.EnabledKey, "false")
         val nativeSha = try sha(s.sql(sql).queryExecution.executedPlan)
           finally s.conf.unset(PlanChoice.EnabledKey)
