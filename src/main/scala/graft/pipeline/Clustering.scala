@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.ArraySeq
+
 import graft.engine.Tables
 
 /** Embedding-space clustering + cluster-scoped semantic dedup — the
@@ -477,7 +479,7 @@ object Clustering {
       .collect().map(_.getLong(0))
     val seedRank = seedIds.zipWithIndex.map { case (id, i) => (id, i + 1L) }.toMap
     var centroids: Seq[(Long, Array[Long])] = q
-      .filter(col("vec_id").isin(seedIds: _*))
+      .filter(col("vec_id").isin(ArraySeq.unsafeWrapArray(seedIds): _*))
       .select(col("vec_id"), col("qv"))
       .collect()
       .map(r => (seedRank(r.getLong(0)), r.getSeq[Long](1).toArray))

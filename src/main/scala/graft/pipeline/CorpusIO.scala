@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
+import scala.collection.immutable.ArraySeq
+
 import graft.engine.Tables
 
 /** Source/sink fidelity gates: write the documents corpus to a text
@@ -731,7 +733,7 @@ object CorpusIO {
     // scale it cuts one of the source scans to a 1-2 group read.
     val touched = groups.filter(bktOf(_) >= cutBkt)
     val tail = spark.read.parquet(touched: _*)
-      .select(docs.columns.map(col): _*)
+      .select(ArraySeq.unsafeWrapArray(docs.columns.map(col)): _*)
     val updated = tail
       .withColumn("text", when(col("doc_id") >= cut,
         concat(col("text"), lit("+rev2"))).otherwise(col("text")))

@@ -527,7 +527,7 @@ object Dedup {
     // id-magnitude this can meet. None = empty frame (also the
     // empty-graph early exit, id signs irrelevant).
     def labelSum(df: DataFrame): Option[java.math.BigDecimal] =
-      Option(df.agg(sum(col("comp").cast("decimal(38,0)"))).head.getDecimal(0))
+      Option(df.agg(sum(col("comp").cast("decimal(38,0)"))).head().getDecimal(0))
     var prevSum = labelSum(labels)
     var iter = 0
     var converged = prevSum.isEmpty

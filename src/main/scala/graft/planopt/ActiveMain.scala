@@ -99,7 +99,7 @@ object ActiveMain {
     val lFeats =
       m0.interFeatures(seedLabeled.map(lq => fg0.transform(lq.plans.head)))
         .map(_.toArray)
-    def toMat(rows: Seq[Array[Double]]) = {
+    def toMat(rows: Array[Array[Double]]) = {
       val m = DenseMatrix.zeros[Double](rows.length, rows.head.length)
       rows.zipWithIndex.foreach { case (r, i) =>
         r.indices.foreach(j => m(i, j) = r(j))

@@ -135,3 +135,64 @@ final class BayesianModelPairWise(val featureDim: Int, seed: Long = 23L,
     (prob, math.exp(logVar))
   }
 }
+
+/** The calibrated margin gate a model artifact carries (r17 verdict
+  * #2) and the one route rule that serving
+  * (`plans.LearnedPlanStrategy`), calibration
+  * ([[Pipelines.calibrateThreshold]]) and recalibration
+  * ([[GateRecalMain]]) share, so the guard that is calibrated is the
+  * guard that serves. `threshold` is on the Bayesian z-score,
+  * `scoreGapThreshold` on the comparator's predicted gain — see
+  * [[Pipelines.GateCalibration]]. */
+final case class Gate(bm: BayesianModelPairWise, threshold: Double,
+                      scoreGapThreshold: Double) {
+
+  /** Whether serving routes to `pick`'s argmin: never when it IS the
+    * native plan, else only when its gap and then its z clear the
+    * thresholds. The Bayesian forward runs only once the gap clears. */
+  def routes(pick: Gate.Pick): Boolean =
+    pick.best != 0 && Gate.clears(pick.gap, pick.z(bm), threshold, scoreGapThreshold)
+}
+
+object Gate {
+
+  /** The comparator's pick among one query's candidate trees (the
+    * native plan first) under its `scores`: the argmin, lowest score
+    * and first index on ties (`lero_test.py:97`). */
+  final class Pick(val trees: Seq[FeatTree], val scores: Array[Double]) {
+    val best: Int = scores.indices.minBy(scores)
+
+    /** Predicted gain of routing: score(native) − score(best). */
+    def gap: Double = scores(0) - scores(best)
+
+    /** z = (P(native slower) − 0.5)/σ of (native, best) under `bm`. */
+    def z(bm: BayesianModelPairWise): Double = {
+      val (p, v) = bm.predictPair(trees.head, trees(best))
+      (p - 0.5) / math.sqrt(math.max(v, 1e-12))
+    }
+  }
+
+  /** Featurize `plans` (the native plan first) and score them in one
+    * stacked forward of `model`. */
+  def pick(model: LeroModelPairWise, gen: PlanFeatures.FeatureGenerator,
+           plans: Seq[PlanFeatures.PlanNode]): Pick = {
+    val trees = plans.map(gen.transform)
+    new Pick(trees, model.predict(trees))
+  }
+
+  /** The route predicate, strict on both axes: a gap or z AT its
+    * threshold declines. `z` is by name, so a gap that declines never
+    * pays the Bayesian forward. */
+  def clears(gap: Double, z: => Double, threshold: Double,
+             scoreGapThreshold: Double): Boolean =
+    gap > scoreGapThreshold && z > threshold
+
+  /** Realized net gain of routing exactly the (z, scoreGap, gainMs)
+    * `pairs` that clear the thresholds, `overheadMs` charged per
+    * routed pair. */
+  def netGainMs(pairs: Seq[(Double, Double, Double)], threshold: Double,
+                scoreGapThreshold: Double, overheadMs: Double): Double =
+    pairs.collect {
+      case (z, g, gain) if clears(g, z, threshold, scoreGapThreshold) => gain - overheadMs
+    }.sum
+}

@@ -33,35 +33,30 @@ object GateRecalMain {
 
     val modelDir = s"$artDir/stable_model"
     val (model, fg) = ModelIO.load(modelDir)
-    val (bm, oldThr, oldGapThr) = ModelIO.loadGate(modelDir)
+    val old = ModelIO.loadGate(modelDir)
       .getOrElse(sys.error(s"no gate artifact in $modelDir"))
 
     val (trainQ, _) = StableMain.assembleWorkload(sfDir,
       StableMain.poolSample(poolFile, numGen, log))
     val calib = trainQ.take(nCalib)
-    log.info(s"recalibrating gate threshold (was $oldThr) on " +
+    log.info(s"recalibrating gate threshold (was ${old.threshold}) on " +
       s"${calib.size} train-split queries, overhead charge " +
       f"$overheadMs%.1fms/routed query " +
       s"(label_repeats=${Pipelines.LabelRepeats}, " +
       s"adaptive_max=${Pipelines.LabelAdaptiveMax})")
     val labeled = Pipelines.labelWorkload(spark, calib, log).head
-    val pairs = Pipelines.gatePairs(labeled, fg, model, bm)
-    val (thr, gapThr, net) = Pipelines.calibrateThreshold(pairs, overheadMs)
-    val cal = Pipelines.GateCalibration(thr, pairs.size,
-      pairs.count(t => t._1 > thr && t._2 > gapThr), net,
-      pairs.map(_._3).sum, gapThr)
+    val pairs = Pipelines.gatePairs(labeled, fg, model, old.bm)
+    val cal = Pipelines.calibrateThreshold(pairs, overheadMs)
     // evidence either way: what the OLD thresholds would net under the
     // same overhead charge, on the same fresh pairs
-    val oldNet = pairs.collect {
-      case (z, g, gain) if z > oldThr && g > oldGapThr => gain - overheadMs
-    }.sum
+    val oldNet = Gate.netGainMs(pairs, old.threshold, old.scoreGapThreshold, overheadMs)
     log.info(f"recalibrated: z threshold=${cal.threshold}%.4f, score-gap " +
       f"threshold=${cal.scoreGapThreshold}%.5f routes " +
       f"${cal.nRouted}/${cal.nPairs} proposed deviations " +
       f"(overhead-charged net ${cal.netGainMs}%.1fms vs " +
-      f"${oldNet}%.1fms at the old thresholds ($oldThr%.4f, $oldGapThr%.5f); " +
+      f"${oldNet}%.1fms at the old thresholds (${old.threshold}%.4f, ${old.scoreGapThreshold}%.5f); " +
       f"ungated label gain ${cal.gainAllMs}%.1fms)")
-    ModelIO.saveGate(modelDir, bm, cal)
+    ModelIO.saveGate(modelDir, old.bm, cal)
     log.info(s"rewrote $modelDir/bayes_meta.json; replay E2E with " +
       s"StableE2EMain $sfDir $numGen $artDir $poolFile")
     log.close()

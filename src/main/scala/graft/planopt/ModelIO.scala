@@ -81,12 +81,12 @@ object ModelIO {
     writeWeights(Paths.get(dir, GateWeightsFile), bm.net.paramGrads ++ bm.head.paramGrads)
   }
 
-  /** Load the margin gate if the artifact carries one; None for
+  /** Load the margin [[Gate]] if the artifact carries one; None for
     * pre-gate artifacts (the strategy then routes ungated, the pre-r18
-    * behavior). Returns (model, zThreshold, scoreGapThreshold); a
-    * z-only artifact (no gap field) loads with gap threshold 0 —
-    * every proposed gap clears it, the one-axis behavior. */
-  def loadGate(dir: String): Option[(BayesianModelPairWise, Double, Double)] = {
+    * behavior). A z-only artifact (no gap field) loads with score-gap
+    * threshold 0 — every positive gap clears it, the one-axis
+    * behavior. */
+  def loadGate(dir: String): Option[Gate] = {
     val meta = Paths.get(dir, GateMetaFile)
     val weights = Paths.get(dir, GateWeightsFile)
     if (!Files.exists(meta) || !Files.exists(weights)) return None
@@ -101,7 +101,7 @@ object ModelIO {
       .map(_.asDouble()).getOrElse(0.0)
     val bm = new BayesianModelPairWise(dim)
     readWeights(weights, bm.net.paramGrads ++ bm.head.paramGrads)
-    Some((bm, thr, gapThr))
+    Some(Gate(bm, thr, gapThr))
   }
 
   def load(dir: String): (LeroModelPairWise, FeatureGenerator) = {
@@ -120,7 +120,7 @@ object ModelIO {
     }
     def bounds(field: String): Map[String, Double] = {
       val node = root.get(field)
-      val it = node.fields()
+      val it = node.properties().iterator()
       val buf = Map.newBuilder[String, Double]
       while (it.hasNext) {
         val e = it.next()

@@ -295,7 +295,7 @@ object Pipelines {
   final case class GateCalibration(threshold: Double, nPairs: Int,
                                    nRouted: Int, netGainMs: Double,
                                    gainAllMs: Double,
-                                   scoreGapThreshold: Double = 0.0)
+                                   scoreGapThreshold: Double)
 
   /** Gate calibration over (z, scoreGap, gainMs) triples: jointly
     * pick the (zThr, gapThr) maximizing the REALIZED net routing gain
@@ -310,41 +310,35 @@ object Pipelines {
     * prediction; ties prefer the more conservative (larger) pair —
     * route less, the no-lose direction. The gap axis is what
     * transfers across deployment confs — see [[GateCalibration]].
+    * Each grid point is scored by [[Gate.netGainMs]], the serving
+    * rule's own predicate; no triples calibrate to all zeros.
     * Pure; unit-tested. */
   private[graft] def calibrateThreshold(
       triples: Seq[(Double, Double, Double)], overheadMs: Double = 0.0)
-      : (Double, Double, Double) = {
-    if (triples.isEmpty) return (0.0, 0.0, 0.0)
+      : GateCalibration = {
     val zCands = (0.0 +: triples.map(_._1).filter(_ > 0)).distinct
     val gCands = (0.0 +: triples.map(_._2).filter(_ > 0)).distinct
-    val best = (for (zt <- zCands; gt <- gCands) yield {
-      val net = triples.collect {
-        case (z, g, gain) if z > zt && g > gt => gain - overheadMs
-      }.sum
-      (zt, gt, net)
-    }).maxBy { case (zt, gt, net) => (net, zt + gt) }
-    best
+    val (thr, gapThr, net) = (for (zt <- zCands; gt <- gCands)
+      yield (zt, gt, Gate.netGainMs(triples, zt, gt, overheadMs)))
+      .maxBy { case (zt, gt, net) => (net, zt + gt) }
+    GateCalibration(thr, triples.size,
+      triples.count { case (z, g, _) => Gate.clears(g, z, thr, gapThr) },
+      net, triples.map(_._3).sum, gapThr)
   }
 
   /** The (z, scoreGap, gainMs) calibration triples for the gate: for
     * each labeled query where `mainModel`'s argmin is NOT the default
     * plan, the Bayesian z-score of (default, proposed), the main
     * model's predicted-gain score delta, and the realized label gain
-    * of routing. */
+    * of routing. The argmin, gap and z are [[Gate.Pick]]'s, the
+    * numbers serving acts on for the same plans. */
   def gatePairs(labeled: Seq[LabeledQuery], fg: FeatureGenerator,
                 mainModel: LeroModelPairWise, bm: BayesianModelPairWise)
       : Seq[(Double, Double, Double)] =
     labeled.filter(_.plans.length >= 2).flatMap { q =>
-      val trees = q.plans.map(fg.transform)
-      val scores = mainModel.predict(trees)
-      val best = scores.indices.minBy(scores)
-      if (best == 0) None
-      else {
-        val (p, v) = bm.predictPair(trees(0), trees(best))
-        val z = (p - 0.5) / math.sqrt(math.max(v, 1e-12))
-        Some((z, scores(0) - scores(best),
-          q.latenciesMs(0) - q.latenciesMs(best)))
-      }
+      val pick = Gate.pick(mainModel, fg, q.plans)
+      Option.when(pick.best != 0)((pick.z(bm), pick.gap,
+        q.latenciesMs(0) - q.latenciesMs(pick.best)))
     }
 
   /** Train the uncertainty-aware pairwise comparator (M15) on the same
@@ -356,9 +350,10 @@ object Pipelines {
     * the thresholds that maximize realized net gain, charging no
     * routing overhead (`GateRecalMain` re-calibrates with one).
     * Deployed via [[ModelIO.saveGate]] → `plans.PlanChoice`: the
-    * in-engine strategy routes only when z clears the threshold,
-    * otherwise it declines and the session plans natively — the
-    * no-lose guarantee at stock conf that the r17 E2E(A) arm lacked. */
+    * in-engine strategy routes only when [[Gate.routes]], the rule
+    * the thresholds were chosen under, otherwise it declines and the
+    * session plans natively — the no-lose guarantee at stock conf
+    * that the r17 E2E(A) arm lacked. */
   def trainBayesGate(labeled: Seq[LabeledQuery], fg: FeatureGenerator,
                      mainModel: LeroModelPairWise, epochs: Int = 60,
                      seed: Long = 23L, log: Logger = new Logger(None))
@@ -368,11 +363,7 @@ object Pipelines {
     val (x1, x2, y1, y2) = trainingTensors(trainable, fg)
     val bm = new BayesianModelPairWise(fg.featureDim, seed)
     bm.fit(x1, x2, y1, y2, epochs = epochs)
-    val pairs = gatePairs(trainable, fg, mainModel, bm)
-    val (thr, gapThr, net) = calibrateThreshold(pairs)
-    val cal = GateCalibration(thr, pairs.size,
-      pairs.count(t => t._1 > thr && t._2 > gapThr), net,
-      pairs.map(_._3).sum, gapThr)
+    val cal = calibrateThreshold(gatePairs(trainable, fg, mainModel, bm))
     log.info(f"bayes gate calibration: z threshold=${cal.threshold}%.4f, " +
       f"score-gap threshold=${cal.scoreGapThreshold}%.5f routes " +
       f"${cal.nRouted}/${cal.nPairs} proposed deviations on train " +
@@ -388,20 +379,19 @@ object Pipelines {
 
   /** Evaluate on labeled queries: score candidates, Spearman ranking
     * loss, argmin selection vs candidate-0 default (the reference's
-    * PG baseline, `lero_test.py:56-78`). */
+    * PG baseline, `lero_test.py:56-78`). The selection is
+    * [[Gate.Pick]]'s argmin, UNGATED — the reference's test-time
+    * semantics that `lero_dict.json` keeps; the gated counterpart on
+    * the train split is [[GateCalibration.netGainMs]]. */
   def evaluate(fg: FeatureGenerator, model: LeroModelPairWise,
                testSet: Seq[LabeledQuery]): EvalResult = {
-    val scored = testSet.filter(_.plans.length >= 2).map { q =>
-      val scores = model.predict(q.plans.map(fg.transform)).toSeq
-      (q, scores)
-    }
-    val loss = Ranking.rankingLoss(scored.map(_._2), scored.map(_._1.latenciesMs))
+    val scored = testSet.filter(_.plans.length >= 2).map(q => (q, Gate.pick(model, fg, q.plans)))
+    val loss = Ranking.rankingLoss(scored.map(_._2.scores.toSeq), scored.map(_._1.latenciesMs))
     val dict = scala.collection.mutable.LinkedHashMap[String, Double]()
     var sum = 0.0
     var defSum = 0.0
-    scored.foreach { case (q, scores) =>
-      val pick = scores.indices.minBy(scores)
-      val sec = q.latenciesMs(pick) / 1000.0
+    scored.foreach { case (q, pick) =>
+      val sec = q.latenciesMs(pick.best) / 1000.0
       dict(q.qid) = sec
       sum += sec
       defSum += q.latenciesMs.head / 1000.0

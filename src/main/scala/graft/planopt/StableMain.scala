@@ -239,9 +239,9 @@ private[planopt] object E2EPhases {
           modelDir: String, log: Pipelines.Logger): Unit = {
     graft.plans.PlanChoice.installFrom(modelDir)
     log.info(graft.plans.PlanChoice.gate match {
-      case Some((_, thr, gapThr)) =>
-        f"margin gate ACTIVE (z threshold=$thr%.4f, score-gap " +
-          f"threshold=$gapThr%.5f): routing deviates from the " +
+      case Some(g) =>
+        f"margin gate ACTIVE (z threshold=${g.threshold}%.4f, score-gap " +
+          f"threshold=${g.scoreGapThreshold}%.5f): routing deviates from the " +
           "session-native plan only when predicted gain clears the " +
           "Bayesian head's uncertainty AND the comparator's own " +
           "predicted-gain margin"

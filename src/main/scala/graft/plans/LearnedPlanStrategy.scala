@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{Command, Join, LogicalPlan, ReturnAnswer}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
-import graft.planopt.{Candidates, JoinOrders, LeroModelPairWise, PlanFeatures}
+import graft.planopt.{Candidates, Gate, JoinOrders, LeroModelPairWise, PlanFeatures}
 
 /** In-engine learned plan choice (SURVEY §7.4; selection semantics of
   * the reference's test-time argmin, `Lero/lero_test.py:97`): a
@@ -76,7 +76,7 @@ object PlanChoice {
                           nOrders: Int = 1, keys: Seq[String] = Nil)
 
   @volatile private var installed: Option[(LeroModelPairWise, PlanFeatures.FeatureGenerator)] = None
-  @volatile private var gateInstalled: Option[(graft.planopt.BayesianModelPairWise, Double, Double)] = None
+  @volatile private var gateInstalled: Option[Gate] = None
   val lastChoice = new AtomicReference[Option[Choice]](None)
 
   /** The strategy's decision for one query, remembered per canonical
@@ -134,16 +134,15 @@ object PlanChoice {
 
   /** Install the calibrated Bayesian margin gate (r17 verdict #2): a
     * routing deviation from the session-native plan fires only when
-    * the gate's z-score (P(native slower) − 0.5)/σ exceeds
-    * `threshold` AND the main comparator's predicted-gain score delta
-    * exceeds `scoreGapThreshold` (the conf-invariant gain axis — see
-    * Pipelines.GateCalibration). The gate applies exactly while it is
-    * installed; [[install]] without this call serves the model
+    * [[Gate.routes]] — the main comparator's predicted-gain score
+    * delta exceeds `scoreGapThreshold` (the conf-invariant gain axis —
+    * see Pipelines.GateCalibration) AND the gate's z-score
+    * (P(native slower) − 0.5)/σ exceeds `threshold`, the rule the
+    * thresholds were calibrated under. The gate applies exactly while
+    * it is installed; [[install]] without this call serves the model
     * ungated. Choices are gate-specific, so the cache clears. */
-  def installGate(bm: graft.planopt.BayesianModelPairWise,
-                  threshold: Double,
-                  scoreGapThreshold: Double = 0.0): Unit = {
-    gateInstalled = Some((bm, threshold, scoreGapThreshold))
+  def installGate(g: Gate): Unit = {
+    gateInstalled = Some(g)
     gateDeclineCount.set(0)
     choiceCache.clear()
   }
@@ -157,9 +156,7 @@ object PlanChoice {
   def installFrom(dir: String): Unit = {
     val (model, gen) = graft.planopt.ModelIO.load(dir)
     install(model, gen)
-    graft.planopt.ModelIO.loadGate(dir).foreach { case (bm, thr, gapThr) =>
-      installGate(bm, thr, gapThr)
-    }
+    graft.planopt.ModelIO.loadGate(dir).foreach(installGate)
   }
 
   def uninstall(): Unit = {
@@ -168,7 +165,7 @@ object PlanChoice {
 
   def current: Option[(LeroModelPairWise, PlanFeatures.FeatureGenerator)] = installed
 
-  def gate: Option[(graft.planopt.BayesianModelPairWise, Double, Double)] = gateInstalled
+  def gate: Option[Gate] = gateInstalled
 }
 
 /** The planner strategy behind [[PlanChoice]]. Extra planning
@@ -300,27 +297,16 @@ case class LearnedPlanStrategy(session: SparkSession) extends SparkStrategy {
                     gen: PlanFeatures.FeatureGenerator)
       : (PlanChoice.Remembered, LogicalPlan, Option[PlanChoice.Choice]) = {
     val cands = Candidates.sweep(session, JoinOrders.variants(query))
-    val trees = cands.map(c => gen.transform(c.plan))
-    val scores = model.predict(trees)
-    val bestIdx = scores.indices.minBy(scores)
-    val best = cands(bestIdx)
+    val pick = Gate.pick(model, gen, cands.map(_.plan))
+    val best = cands(pick.best)
     // MARGIN GATE (r17 verdict #2): with a calibrated gate installed,
-    // deviate from the session-native plan only when the Bayesian
-    // head's predicted gain clears its own uncertainty —
-    // z = (P(native slower) − 0.5)/σ > threshold. Otherwise DECLINE:
-    // cache the decision and plan the session-native plan (repeats
-    // cost one cache lookup and one native planning). A best pick that
-    // IS the native plan declines too — it is the same plan.
-    val declined = PlanChoice.gate.exists { case (bm, thr, gapThr) =>
-      bestIdx == 0 || scores(0) - scores(bestIdx) <= gapThr || {
-        val (p, v) = bm.predictPair(trees.head, trees(bestIdx))
-        val z = (p - 0.5) / math.sqrt(math.max(v, 1e-12))
-        z <= thr
-      }
-    }
-    if (declined) (Declined, query, None)
+    // deviate from the session-native plan only when the gate routes
+    // the argmin. Otherwise DECLINE: cache the decision and plan the
+    // session-native plan (repeats cost one cache lookup and one
+    // native planning). Ungated, the argmin routes, native included.
+    if (PlanChoice.gate.exists(!_.routes(pick))) (Declined, query, None)
     else (Routed(best.variantIdx, best.knobs), best.variant, Some(PlanChoice.Choice(
-      best.knobLabel, cands.size, best.canonical, scores.toSeq,
+      best.knobLabel, cands.size, best.canonical, pick.scores.toSeq,
       nOrders = cands.map(_.variantIdx).distinct.size, keys = cands.map(_.canonical))))
   }
 }

@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.collection.immutable.ArraySeq
+
 import graft.engine.Tables
 
 /** Catalog-metadata harvester (SURVEY.md §2.2 M20–M23) — the Spark
@@ -75,7 +77,7 @@ object Harvester {
           case _ => Nil
         }
       }
-      val row = if (aggs.nonEmpty) Some(df.agg(aggs.head, aggs.tail: _*).head()) else None
+      val row = if (aggs.nonEmpty) Some(df.agg(aggs.head, ArraySeq.unsafeWrapArray(aggs.tail): _*).head()) else None
       val ranges = fields.flatMap { f =>
         f.dataType match {
           case _: IntegerType | _: LongType | _: ShortType =>

@@ -16,6 +16,34 @@ class MarginGateSpec extends AnyFunSuite {
 
   // ---- pure pieces ----
 
+  /** A calibration's chosen (z threshold, score-gap threshold, net
+    * gain) — the triple the calibrator cases assert on. */
+  private def chosen(c: Pipelines.GateCalibration) =
+    (c.threshold, c.scoreGapThreshold, c.netGainMs)
+
+  private val DeployedDir = "results/r18_stable_1000/stable_model"
+
+  /** The bit-pinned fixture: the native sort-merge plan, its
+    * broadcast rewrite, and a 3-way join. */
+  private def threeJoinPlans: Seq[PlanFeatures.PlanNode] = {
+    import PlanFeatures.PlanNode
+    def scan(rel: String, rows: Double, width: Int) = PlanNode("FileScan", rows, width, Some(rel), Nil)
+    def op(name: String, rows: Double, width: Int, kids: PlanNode*) = PlanNode(name, rows, width, None, kids)
+    def shuffle(c: PlanNode) = op("ShuffleExchange", c.rowsEst, c.width, c)
+    def sorted(c: PlanNode) = op("Sort", c.rowsEst, c.width, shuffle(c))
+    val orders = op("Filter", 7500, 16, scan("orders", 15000, 16))
+    val customer = scan("customer", 1500, 8)
+    val smj = op("HashAggregate", 1, 8, op("HashAggregate", 1, 8,
+      op("SortMergeJoin", 7500, 24, sorted(orders), sorted(customer))))
+    val bhj = op("HashAggregate", 1, 8, op("HashAggregate", 1, 8,
+      op("BroadcastHashJoin", 7500, 24, orders, op("BroadcastExchange", 1500, 8, customer))))
+    val threeWay = op("HashAggregate", 1, 8, op("HashAggregate", 1, 8,
+      op("BroadcastHashJoin", 30000, 32,
+        op("SortMergeJoin", 30000, 24, sorted(scan("lineitem", 60000, 16)), sorted(orders)),
+        op("BroadcastExchange", 10, 8, scan("supplier", 10, 8)))))
+    Seq(smj, bhj, threeWay)
+  }
+
   test("ambiguousIdxs flags exactly the candidates in the gap band") {
     // gaps: (100,110) ~9% in-band; (100,150)=33% out; (100,102)=2% under
     val amb = Candidates.ambiguousIdxs(Seq(100.0, 110.0, 150.0), 0.04, 0.25)
@@ -36,25 +64,25 @@ class MarginGateSpec extends AnyFunSuite {
     // two confident wins (z=3, gain +100), one confident loss (z=0.5,
     // gain -80): the best thresholds exclude the loss
     val mixed = Seq((3.0, 0.3, 100.0), (3.0, 0.3, 100.0), (0.5, 0.05, -80.0))
-    val (zm, gm, netm) = Pipelines.calibrateThreshold(mixed)
+    val (zm, gm, netm) = chosen(Pipelines.calibrateThreshold(mixed))
     assert(netm == 200.0)
     assert(!(0.5 > zm && 0.05 > gm) && 3.0 > zm && 0.3 > gm,
       s"thresholds (zt=$zm gt=$gm) should route both wins and exclude the loss")
     // ties pick the more conservative pair: routing everything and
     // routing only the first triple both net 100, so the larger
     // thresholds that drop the zero-gain triple win
-    assert(Pipelines.calibrateThreshold(Seq((3.0, 0.3, 100.0), (1.0, 0.1, 0.0))) ==
+    assert(chosen(Pipelines.calibrateThreshold(Seq((3.0, 0.3, 100.0), (1.0, 0.1, 0.0)))) ==
       (1.0, 0.1, 100.0))
     // all-negative: route nothing
     val losers = Seq((1.0, 0.1, -5.0), (2.0, 0.2, -5.0))
-    val (zl, gl, netl) = Pipelines.calibrateThreshold(losers)
+    val (zl, gl, netl) = chosen(Pipelines.calibrateThreshold(losers))
     assert(netl == 0.0 && losers.forall { case (z, g, _) => !(z > zl && g > gl) },
       s"an all-negative set routed something (zt=$zl gt=$gl)")
     // empty: conservative default
-    assert(Pipelines.calibrateThreshold(Nil) == (0.0, 0.0, 0.0))
+    assert(chosen(Pipelines.calibrateThreshold(Nil)) == (0.0, 0.0, 0.0))
     // z < 0 never routes: the z threshold is never negative, so a
     // sub-coin-flip winner stays declined however large its gain
-    val (zn, _, netn) = Pipelines.calibrateThreshold(Seq((-1.0, 0.5, 50.0)))
+    val (zn, _, netn) = chosen(Pipelines.calibrateThreshold(Seq((-1.0, 0.5, 50.0))))
     assert(zn >= 0.0 && netn == 0.0)
   }
 
@@ -66,14 +94,14 @@ class MarginGateSpec extends AnyFunSuite {
     val triples = Seq(
       (2.0, 0.005, 20.0), (2.5, 0.004, 15.0), (1.8, 0.006, 25.0), // small wins
       (0.6, 0.090, 400.0))                                        // broadcast win
-    val (zt, gt, net) = Pipelines.calibrateThreshold(triples, overheadMs = 40.0)
+    val (zt, gt, net) = chosen(Pipelines.calibrateThreshold(triples, overheadMs = 40.0))
     // routing only the big-gap pair nets 360; routing everything nets
     // 300; routing none nets 0
     assert(net == 360.0, s"net=$net (zt=$zt gt=$gt)")
     assert(zt < 0.6 && gt >= 0.006 && gt < 0.09,
       s"thresholds (zt=$zt gt=$gt) should route only the big-gap pair")
     // empty: conservative default
-    assert(Pipelines.calibrateThreshold(Nil) == (0.0, 0.0, 0.0))
+    assert(chosen(Pipelines.calibrateThreshold(Nil)) == (0.0, 0.0, 0.0))
   }
 
   test("snapResolutionTies merges sub-resolution groups, keeps resolved order") {
@@ -99,29 +127,58 @@ class MarginGateSpec extends AnyFunSuite {
       "snapped tie still penalized")
   }
 
+  // ---- the one route rule ----
+
+  test("the route rule is strict on both axes and a failing gap never evaluates z") {
+    assert(Gate.clears(0.3, 2.0, threshold = 1.0, scoreGapThreshold = 0.2))
+    assert(!Gate.clears(0.2, 2.0, 1.0, 0.2), "gap == gapThr must decline")
+    assert(!Gate.clears(0.3, 1.0, 1.0, 0.2), "z == thr must decline")
+    assert(!Gate.clears(0.2, sys.error("z evaluated"), 1.0, 0.2))
+    assert(!Gate.clears(-0.1, sys.error("z evaluated"), 1.0, 0.2))
+    // the calibrator's net gain counts exactly the pairs that route:
+    // only the first clears both axes (the second sits at thr, the
+    // third at gapThr)
+    val pairs = Seq((2.0, 0.3, 50.0), (1.0, 0.3, 70.0), (2.0, 0.2, 90.0))
+    assert(Gate.netGainMs(pairs, 1.0, 0.2, overheadMs = 10.0) == 40.0)
+  }
+
+  test("serving declines a native argmin and a failing gap without the Bayesian forward") {
+    // picks without trees: evaluating z would throw on the missing
+    // native tree, so a decline that returns proves z was not reached
+    def pickOf(scores: Double*) = new Gate.Pick(Nil, scores.toArray)
+    val bm = new BayesianModelPairWise(8)
+    val permissive = Gate(bm, -1e9, -1e9)
+    assert(pickOf(1.0, 2.0, 1.0).best == 0, "ties go to the first index")
+    assert(!permissive.routes(pickOf(1.0, 2.0, 1.0)), "a native argmin must decline")
+    assert(pickOf(3.0, 1.0, 1.0).best == 1)
+    assert(!Gate(bm, -1e9, 2.0).routes(pickOf(3.0, 1.0)), "gap == gapThr must decline")
+    // a gap that clears does reach z
+    intercept[NoSuchElementException](permissive.routes(pickOf(3.0, 1.0)))
+  }
+
+  test("serving's argmin, gap and z are the calibrator's, bit for bit, on the deployed gate") {
+    val (model, gen) = ModelIO.load(DeployedDir)
+    val gate = ModelIO.loadGate(DeployedDir).get
+    val pick = Gate.pick(model, gen, threeJoinPlans)
+    val Seq((z, gap, gainMs)) = Pipelines.gatePairs(
+      Seq(Pipelines.LabeledQuery("q", threeJoinPlans, Seq(30.0, 20.0, 10.0))), gen, model, gate.bm)
+    val bits = java.lang.Double.doubleToLongBits _
+    assert(pick.best == 1 && gainMs == 10.0)
+    assert(bits(pick.gap) == bits(gap) && bits(pick.z(gate.bm)) == bits(z))
+    // ...and both are the pinned numbers of the test below: the
+    // scores' gap and z of the (smj, bhj) pair's (p, v)
+    val d = java.lang.Double.longBitsToDouble _
+    assert(bits(gap) == bits(d(0x3ff52cb5fab7f476L) - d(0xc00d712c0682436dL)))
+    assert(bits(z) == bits((d(0x3fef8a5f75b493bdL) - 0.5) / math.sqrt(d(0x3ff0000006870cb5L))))
+    assert(gate.routes(pick), s"the deployed gate (thr ${gate.threshold}) declined z=$z gap=$gap")
+  }
+
   // ---- the deployed gate's numbers ----
 
   test("deployed r18 gate and comparator score three join trees bit for bit") {
-    import PlanFeatures.PlanNode
-    def scan(rel: String, rows: Double, width: Int) = PlanNode("FileScan", rows, width, Some(rel), Nil)
-    def op(name: String, rows: Double, width: Int, kids: PlanNode*) = PlanNode(name, rows, width, None, kids)
-    def shuffle(c: PlanNode) = op("ShuffleExchange", c.rowsEst, c.width, c)
-    def sorted(c: PlanNode) = op("Sort", c.rowsEst, c.width, shuffle(c))
-    val orders = op("Filter", 7500, 16, scan("orders", 15000, 16))
-    val customer = scan("customer", 1500, 8)
-    // the native sort-merge plan, its broadcast rewrite, and a 3-way join
-    val smj = op("HashAggregate", 1, 8, op("HashAggregate", 1, 8,
-      op("SortMergeJoin", 7500, 24, sorted(orders), sorted(customer))))
-    val bhj = op("HashAggregate", 1, 8, op("HashAggregate", 1, 8,
-      op("BroadcastHashJoin", 7500, 24, orders, op("BroadcastExchange", 1500, 8, customer))))
-    val threeWay = op("HashAggregate", 1, 8, op("HashAggregate", 1, 8,
-      op("BroadcastHashJoin", 30000, 32,
-        op("SortMergeJoin", 30000, 24, sorted(scan("lineitem", 60000, 16)), sorted(orders)),
-        op("BroadcastExchange", 10, 8, scan("supplier", 10, 8)))))
-    val dir = "results/r18_stable_1000/stable_model"
-    val (model, gen) = ModelIO.load(dir)
-    val (bm, _, _) = ModelIO.loadGate(dir).get
-    val trees = Seq(smj, bhj, threeWay).map(gen.transform)
+    val (model, gen) = ModelIO.load(DeployedDir)
+    val bm = ModelIO.loadGate(DeployedDir).get.bm
+    val trees = threeJoinPlans.map(gen.transform)
     val scores = model.predict(trees).toSeq
     val pairs = Seq(bm.predictPair(trees(0), trees(1)), bm.predictPair(trees(0), trees(2)))
     val got = (scores ++ pairs.flatMap(pv => Seq(pv._1, pv._2))).map(java.lang.Double.doubleToLongBits)
@@ -146,7 +203,7 @@ class MarginGateSpec extends AnyFunSuite {
     assert(ModelIO.loadGate(dir).isEmpty, "missing gate files must load as None")
     ModelIO.saveGate(dir, bm,
       Pipelines.GateCalibration(1.25, 10, 4, 123.0, 100.0, 0.017))
-    val (bm2, thr, gapThr) = ModelIO.loadGate(dir).get
+    val Gate(bm2, thr, gapThr) = ModelIO.loadGate(dir).get
     assert(thr == 1.25 && gapThr == 0.017)
     val (p1, v1) = bm.predictPair(t1, t2)
     val (p2, v2) = bm2.predictPair(t1, t2)
@@ -176,7 +233,7 @@ class MarginGateSpec extends AnyFunSuite {
 
     // (a) prohibitive threshold: every query declines, decline is cached
     PlanChoice.install(model, gen)
-    PlanChoice.installGate(bm, 1e9)
+    PlanChoice.installGate(Gate(bm, 1e9, 0.0))
     try withExtensionSession { s2 =>
       graft.engine.Tables.registerAll(s2, sf)
       PlanChoice.lastChoice.set(None)
@@ -204,7 +261,7 @@ class MarginGateSpec extends AnyFunSuite {
 
     // (b) permissive threshold: the non-native pick routes
     PlanChoice.install(model, gen)
-    PlanChoice.installGate(bm, -1e9)
+    PlanChoice.installGate(Gate(bm, -1e9, 0.0))
     try withExtensionSession { s2 =>
       graft.engine.Tables.registerAll(s2, sf)
       PlanChoice.lastChoice.set(None)
@@ -222,7 +279,7 @@ class MarginGateSpec extends AnyFunSuite {
     val base = build(spark).collect()(0).getLong(0)
     // prohibitive threshold: the gate declines every query
     PlanChoice.install(new LeroModelPairWise(gen.featureDim, seed = 13), gen)
-    PlanChoice.installGate(new BayesianModelPairWise(gen.featureDim, seed = 5), 1e9)
+    PlanChoice.installGate(Gate(new BayesianModelPairWise(gen.featureDim, seed = 5), 1e9, 0.0))
     try withExtensionSession { s2 =>
       graft.engine.Tables.registerAll(s2, sf)
       s2.conf.set(PlanChoice.EnabledKey, "false")
@@ -258,12 +315,12 @@ class MarginGateSpec extends AnyFunSuite {
     val bm = new BayesianModelPairWise(gen.featureDim, seed = 9)
     val dir = java.nio.file.Files.createTempDirectory("graft_gate_art").toString
     ModelIO.save(dir, model, gen)
-    ModelIO.saveGate(dir, bm, Pipelines.GateCalibration(0.5, 1, 1, 1.0, 1.0))
+    ModelIO.saveGate(dir, bm, Pipelines.GateCalibration(0.5, 1, 1, 1.0, 1.0, 0.0))
     PlanChoice.uninstall()
     PlanChoice.installFrom(dir)
     try {
       assert(PlanChoice.gate.isDefined, "installFrom dropped the gate")
-      assert(PlanChoice.gate.get._2 == 0.5)
+      assert(PlanChoice.gate.get.threshold == 0.5)
     } finally PlanChoice.uninstall()
   }
 

@@ -173,75 +173,6 @@ class PlannerInjectionSpec extends AnyFunSuite {
     } finally PlanChoice.uninstall()
   }
 
-  test("AQE cost evaluator: heuristic without model, learned with") {
-    import org.apache.spark.sql.execution.adaptive.SimpleCost
-    PlanChoice.uninstall()
-    val ev = new graft.plans.GraftCostEvaluator
-    // force a shuffling plan (SMJ) so the heuristic cost is nonzero
-    val plan = Candidates.withConfs(spark, Seq(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.enabled" -> "false")) {
-      Relational.defs("j1_join_2way")(spark, sf).queryExecution.executedPlan
-    }
-    val heuristic = ev.evaluateCost(plan)
-    assert(heuristic.isInstanceOf[SimpleCost])
-    assert(heuristic.asInstanceOf[SimpleCost].value > 0, "SMJ plan must count shuffles")
-    // install a model: cost becomes the (deterministic) model score
-    val cands = Candidates.ofQuery(spark,
-      s => Relational.defs("j1_join_2way")(s, sf))
-    val gen = PlanFeatures.FeatureGenerator.fit(cands.map(_.plan))
-    val model = new LeroModelPairWise(gen.featureDim, seed = 11)
-    PlanChoice.install(model, gen)
-    try {
-      val learned = ev.evaluateCost(plan).asInstanceOf[SimpleCost].value
-      // model costs are shifted +1e12 (and clamped >= 0) so they stay
-      // strictly below the unfeaturizable fallback's 1e13 offset —
-      // the two cost domains must order sensibly when AQE compares a
-      // featurizable plan against one whose featurization threw
-      val expected = graft.plans.GraftCostEvaluator.modelCost(
-        model.predict(Seq(gen.transform(
-          PlanFeatures.fromSparkPlan(plan)))).head)
-      assert(learned == expected)
-      assert(learned < 10_000_000_000_000L,
-        "model cost must stay below the unfeaturizable fallback band")
-      assert(ev.evaluateCost(plan).asInstanceOf[SimpleCost].value == learned,
-        "deterministic")
-    } finally PlanChoice.uninstall()
-  }
-
-  test("cost clamp: a diverged score saturates worst-in-band, never wraps to best") {
-    import graft.plans.GraftCostEvaluator.modelCost
-    val top = 9_999_999_999_999L // band ceiling, below the 1e13 fallback
-    // overflow regression: (score*1e6).toLong saturates at
-    // Long.MaxValue; adding the offset to THAT wrapped negative and
-    // the old post-offset max() mapped the worst plan to cost 0
-    Seq(Double.PositiveInfinity, Double.MaxValue, 9.3e12, 1e18).foreach { s =>
-      assert(modelCost(s) == top, s"score $s must saturate at the band top")
-    }
-    Seq(Double.NegativeInfinity, -Double.MaxValue, -9.3e12).foreach { s =>
-      assert(modelCost(s) == 0L, s"score $s must saturate at the band floor")
-    }
-    // monotone in the normal range, inside [0, 1e13)
-    val xs = Seq(-1e6, -1.0, 0.0, 1.0, 1e6).map(modelCost)
-    assert(xs == xs.sorted && xs.distinct == xs, "monotone over normal scores")
-    assert(xs.forall(c => c >= 0L && c < 10_000_000_000_000L))
-    // NaN: indifferent midpoint, not an extreme
-    assert(modelCost(Double.NaN) == 1_000_000_000_000L)
-  }
-
-  test("AQE session with the custom cost evaluator returns correct results") {
-    PlanChoice.uninstall()
-    val base = Relational.defs("j1_join_2way")(spark, sf).collect()(0).getLong(0)
-    val got = Candidates.withConfs(spark, Seq(
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.adaptive.forceApply" -> "true",
-      "spark.sql.adaptive.customCostEvaluatorClass" ->
-        "graft.plans.GraftCostEvaluator")) {
-      Relational.defs("j1_join_2way")(spark, sf).collect()(0).getLong(0)
-    }
-    assert(got == base)
-  }
-
   test("join-order variants give the comparator a real order choice on the 7-way family") {
     // unit level: the variant generator finds >=2 connected orders of
     // the optimized plan's join region (r4 verdict item 8)
