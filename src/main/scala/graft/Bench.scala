@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import graft.engine.GraftSession
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
@@ -14,12 +16,16 @@ import graft.engine.GraftSession
   *    first-query JVM warmup;
   *  - failures are recorded in an "errors" field instead of being
   *    silently swallowed as fast timings.
+  *
+  * Besides the stdout line it writes `bench_out.json` (every query's
+  * cold and warm time) and `bench_diag.json` (per-query task and JVM
+  * counters) into the working directory, so a local run belongs in a
+  * scratch directory: run from the repo root, it overwrites the
+  * committed copies.
   */
 object Bench {
-  // locale-fixed: the JSON line is machine-parsed by the driver, and
-  // the default-locale `f` interpolator renders "12,34" under de_DE
-  private def num3(d: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
+  /** Seconds as the artifacts carry them: 3 decimals. */
+  private def sec3(d: Double) = Json.fixed(d, 3)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -76,7 +82,7 @@ object Bench {
     // per-(pass, query) diagnostics JSON objects for bench_diag.json,
     // plus the warm pass's structured metrics for the contention
     // classifier (BenchEnv)
-    val diagRows = scala.collection.mutable.ArrayBuffer[String]()
+    val diagRows = scala.collection.mutable.ArrayBuffer[ListMap[String, Any]]()
     val warmMetrics = scala.collection.mutable.Map[String, BenchDiag#Snap]()
     val coldMetrics = scala.collection.mutable.Map[String, BenchDiag#Snap]()
     def timeAll(pass: String, recordErrors: Boolean): Seq[(String, Double)] =
@@ -91,15 +97,14 @@ object Bench {
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case scala.util.control.NonFatal(e) =>
           if (recordErrors)
-            errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-              .replaceAll("[\"\\\\\n\r\t]", " ").take(200)
+            errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
         }
         val sec = (System.nanoTime() - t0) / 1e9
         val m = diag.snapshotDelta(spark.sparkContext)
         if (pass == "warm") warmMetrics(name) = m
         if (pass == "cold") coldMetrics(name) = m
-        diagRows += s"""{"pass":"$pass","query":"$name","sec":${num3(sec)},""" +
-          s""""m":${m.toJson}}"""
+        diagRows += ListMap("pass" -> pass, "query" -> name, "sec" -> sec3(sec),
+          "m" -> m.toJson)
         name -> sec
       }
     // primary (cold) pass — the round-over-round comparable number;
@@ -124,29 +129,18 @@ object Bench {
           cm.jvmGcMs, cm.memSpill + cm.diskSpill,
           cm.shuffleWrite + cm.shuffleRead, wm.shuffleWrite + wm.shuffleRead)
     }.toMap
-    def toJson(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + "\":" + num3(v) }
-        .mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
+    def secs(rs: Seq[(String, Double)]) = ListMap.from(rs.map { case (k, v) => k -> sec3(v) })
     val total = results.map(_._2).sum
     val warmTotal = warm.map(_._2).sum
     // value_raw/warm_total_raw equal value/warm_total: the keys stay so
     // readers of earlier artifacts (where a re-measure substitution
     // could lower `value`) parse every round the same way.
-    val envVerdict = BenchEnv.envJson(samples)
-    val json =
-      "{" +
-        "\"metric\":\"total\",\"value\":" + num3(total) + "," +
-        "\"value_raw\":" + num3(total) + "," +
-        "\"unit\":\"sec\",\"queries\":" + toJson(results) + "," +
-        "\"warm_total\":" + num3(warmTotal) + "," +
-        "\"warm_total_raw\":" + num3(warmTotal) + "," +
-        "\"queries_warm\":" + toJson(warm) + "," +
-        "\"errors\":" + errJson + "," +
-        "\"env\":" + envVerdict + "," +
-        "\"local_dir\":\"" + localDirStamp + "\"," +
-        "\"sf\":\"" + sfDir + "\"}"
+    val json = ListMap(
+      "metric" -> "total", "value" -> sec3(total), "value_raw" -> sec3(total),
+      "unit" -> "sec", "queries" -> secs(results),
+      "warm_total" -> sec3(warmTotal), "warm_total_raw" -> sec3(warmTotal),
+      "queries_warm" -> secs(warm), "errors" -> errors,
+      "env" -> BenchEnv.envJson(samples), "local_dir" -> localDirStamp, "sf" -> sfDir)
     // The driver captures only a bounded TAIL of stdout (~2000 chars);
     // a 106-query map blows through it and every round's BENCH_r*.json
     // lands with parsed:null. The stdout line therefore carries the
@@ -161,34 +155,25 @@ object Bench {
       "j1_join_2way", "j1_join_5way", "j1_join_7way",
       "a2_min_join", "o1_sort", "o2_limit",
       "q1_group_agg", "q2_join_group_topn")
-    val stdoutJson =
-      "{" +
-        "\"metric\":\"total\",\"value\":" + num3(total) + "," +
-        "\"value_raw\":" + num3(total) + "," +
-        "\"unit\":\"sec\"," +
-        "\"n_queries\":" + results.size + "," +
-        "\"queries\":" + toJson(results.filter(r => headline(r._1))) + "," +
-        "\"warm_total\":" + num3(warmTotal) + "," +
-        "\"warm_total_raw\":" + num3(warmTotal) + "," +
-        "\"errors\":" + errJson + "," +
-        "\"env_contention\":\"" + BenchEnv.verdictFull(samples)._1 + "\"," +
-        "\"local_dir\":\"" + localDirStamp + "\"," +
-        "\"full\":\"bench_out.json\"," +
-        "\"sf\":\"" + sfDir + "\"}"
-    println(stdoutJson)
-    // The full JSON goes next to the cwd so the driver (or a human) can
+    println(Json.write(ListMap(
+      "metric" -> "total", "value" -> sec3(total), "value_raw" -> sec3(total),
+      "unit" -> "sec", "n_queries" -> results.size,
+      "queries" -> secs(results.filter(r => headline(r._1))),
+      "warm_total" -> sec3(warmTotal), "warm_total_raw" -> sec3(warmTotal),
+      "errors" -> errors, "env_contention" -> BenchEnv.verdictFull(samples)._1,
+      "local_dir" -> localDirStamp, "full" -> "bench_out.json", "sf" -> sfDir)))
+    // The full JSON goes to the cwd so the driver (or a human) can
     // pick it up without scraping sbt log noise.
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("bench_out.json"), json + "\n")
+      java.nio.file.Paths.get("bench_out.json"), Json.write(json) + "\n")
     catch { case _: Throwable => () }
     // Extended per-query diagnostics (spill / shuffle / GC / code-cache
     // deltas) go to a SEPARATE file: the stdout contract is one compact
     // JSON line, and the driver's capture window is bounded.
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("bench_diag.json"),
-      diagRows.mkString("{\"per_query\":[\n", ",\n", "\n],\n") +
-        s""""code_cache_used":${diag.codeCacheUsed},""" +
-        s""""code_cache_max":${diag.codeCacheMax}}\n""")
+      java.nio.file.Paths.get("bench_diag.json"), Json.write(ListMap(
+        "per_query" -> diagRows, "code_cache_used" -> diag.codeCacheUsed,
+        "code_cache_max" -> diag.codeCacheMax)) + "\n")
     catch { case _: Throwable => () }
     spark.stop()
   }

@@ -2,6 +2,7 @@ package graft
 
 import java.lang.management.ManagementFactory
 
+import scala.collection.immutable.ListMap
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -57,11 +58,12 @@ final class BenchDiag extends SparkListener {
   case class Snap(memSpill: Long, diskSpill: Long, shuffleWrite: Long,
                   shuffleRead: Long, taskGcMs: Long, jvmGcMs: Long,
                   peakExecMem: Long, codeCache: Long = 0L) {
-    def toJson: String =
-      s"""{"spill_mem":$memSpill,"spill_disk":$diskSpill,""" +
-        s""""shuffle_write":$shuffleWrite,"shuffle_read":$shuffleRead,""" +
-        s""""task_gc_ms":$taskGcMs,"jvm_gc_ms":$jvmGcMs,""" +
-        s""""peak_exec_mem":$peakExecMem,"code_cache":$codeCache}"""
+    /** This snapshot's `bench_diag.json` object, in key order. */
+    def toJson: ListMap[String, Long] = ListMap(
+      "spill_mem" -> memSpill, "spill_disk" -> diskSpill,
+      "shuffle_write" -> shuffleWrite, "shuffle_read" -> shuffleRead,
+      "task_gc_ms" -> taskGcMs, "jvm_gc_ms" -> jvmGcMs,
+      "peak_exec_mem" -> peakExecMem, "code_cache" -> codeCache)
   }
 
   private def snap(): Snap = synchronized {

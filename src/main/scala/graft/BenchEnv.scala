@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 /** Machine-readable contention attribution for bench artifacts
   * (r14 verdict #6, extended r16): a hypervisor-contended run has a
   * signature the artifact itself can carry — one pass much slower than
@@ -103,18 +105,15 @@ object BenchEnv {
 
   /** The `env` block for bench_out.json: the verdict and both anomaly
     * lists, computed from the samples exactly as measured. */
-  def envJson(samples: Map[String, Sample]): String = {
+  def envJson(samples: Map[String, Sample]): ListMap[String, Any] = {
     val (v, w, c) = verdictFull(samples)
-    def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString(",")
-    s"""{"contention":"$v",""" +
-      s""""warm_regressions":${w.size},""" +
-      s""""anomalous":[${arr(w)}],""" +
-      s""""cold_regressions":${c.size},"anomalous_cold":[${arr(c)}],""" +
-      s""""rule":"warm: warm>=${WarmRegressionRatio}x cold, cold>=${MinColdSec}s, """ +
-      s"""warm gc<=${(MaxBenignGcFrac * 100).toInt}% wall, zero spill; """ +
-      s"""cold: cold>=${ColdRegressionRatio}x warm, excess>=${MinColdExcessSec}s, """ +
-      s"""cold gc<=${(MaxBenignGcFrac * 100).toInt}% wall, zero spill, """ +
-      s"""shuffle parity ${ShuffleParityTol}; """ +
-      s"""contended at >=$ContendedMinAnomalies either side"}"""
+    ListMap("contention" -> v, "warm_regressions" -> w.size, "anomalous" -> w,
+      "cold_regressions" -> c.size, "anomalous_cold" -> c,
+      "rule" -> (s"warm: warm>=${WarmRegressionRatio}x cold, cold>=${MinColdSec}s, " +
+        s"warm gc<=${(MaxBenignGcFrac * 100).toInt}% wall, zero spill; " +
+        s"cold: cold>=${ColdRegressionRatio}x warm, excess>=${MinColdExcessSec}s, " +
+        s"cold gc<=${(MaxBenignGcFrac * 100).toInt}% wall, zero spill, " +
+        s"shuffle parity ${ShuffleParityTol}; " +
+        s"contended at >=$ContendedMinAnomalies either side"))
   }
 }

@@ -1,7 +1,10 @@
 package graft.planopt
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Json
 import graft.engine.{GraftSession, Tables}
 import graft.workload.{Harvester, WorkloadGen}
 
@@ -149,27 +152,18 @@ object DynamicMain {
           f"default=${r.defaultTotalSec}%.3fs " +
           f"(resolution-qualified: loss=$sLoss%.4f floor=$sFloor%.4f [$sVerdict])")
       }
-      val latencyList = results.map(r => f"${r.selectedTotalSec}%.6f")
-        .mkString("[", ", ", "]")
-      val defaultList = results.map(r => f"${r.defaultTotalSec}%.6f")
-        .mkString("[", ", ", "]")
+      def fixed6(xs: Seq[Double]) = xs.map(Json.fixed(_, 6))
       val suffix = if (mode == "scratch") "" else "_accum"
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$outDir/lero_latency_list$suffix.json"),
-        s"""{"lero_latency_list": $latencyList,
-           | "default_latency_list": $defaultList,
-           | "mode": "$mode",
-           | "batch_noise_floors": ${floors.map(f =>
-               // an undefined floor (all qids dropped, or all-tie
-               // Spearman) must serialize as JSON null — a bare NaN
-               // token makes the whole artifact unparseable
-               if (f.isNaN) "null" else f"$f%.6f")
-             .mkString("[", ", ", "]")},
-           | "batch_noise_floors_snapped": ${snapFloors.map(f =>
-               if (f.isNaN) "null" else f"$f%.6f")
-             .mkString("[", ", ", "]")},
-           | "tie_snap_eps": ${graft.planopt.Ranking.TieSnapEps}}
-           |""".stripMargin)
+        Json.pretty(ListMap(
+          "lero_latency_list" -> fixed6(results.map(_.selectedTotalSec)),
+          "default_latency_list" -> fixed6(results.map(_.defaultTotalSec)),
+          "mode" -> mode,
+          // an undefined floor (no qids, or all-tie Spearman) is null
+          "batch_noise_floors" -> fixed6(floors),
+          "batch_noise_floors_snapped" -> fixed6(snapFloors),
+          "tie_snap_eps" -> graft.planopt.Ranking.TieSnapEps)) + "\n")
       log.info(f"[$mode] totals: selected=${results.map(_.selectedTotalSec).sum}%.3fs " +
         f"default=${results.map(_.defaultTotalSec).sum}%.3fs " +
         s"over ${results.length} evaluation batches")

@@ -3,9 +3,9 @@ package graft.planopt
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, FileInputStream, FileOutputStream}
 import java.nio.file.{Files, Path, Paths}
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.databind.node.ObjectNode
+import scala.jdk.CollectionConverters._
 
+import graft.Json
 import graft.planopt.PlanFeatures.{FeatureGenerator, Normalizer}
 
 /** Save/load for a trained comparator — the Spark-native counterpart
@@ -38,8 +38,7 @@ object ModelIO {
       s"model dim ${model.featureDim} != featurizer dim ${gen.featureDim}")
     Files.createDirectories(Paths.get(dir))
 
-    val mapper = new ObjectMapper()
-    val root = mapper.createObjectNode()
+    val root = Json.mapper.createObjectNode()
     root.put("format_version", FormatVersion)
     root.put("input_feature_dim", model.featureDim)
     val ops = root.putArray("op_types")
@@ -52,8 +51,7 @@ object ModelIO {
     }
     putBounds("normalizer_mins", gen.normalizer.mins)
     putBounds("normalizer_maxs", gen.normalizer.maxs)
-    Files.write(Paths.get(dir, MetaFile),
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
+    Files.writeString(Paths.get(dir, MetaFile), Json.pretty(root))
 
     writeWeights(Paths.get(dir, WeightsFile), model.net.paramGrads)
   }
@@ -66,8 +64,7 @@ object ModelIO {
   def saveGate(dir: String, bm: BayesianModelPairWise,
                cal: Pipelines.GateCalibration): Unit = {
     Files.createDirectories(Paths.get(dir))
-    val mapper = new ObjectMapper()
-    val root = mapper.createObjectNode()
+    val root = Json.mapper.createObjectNode()
     root.put("format_version", FormatVersion)
     root.put("input_feature_dim", bm.featureDim)
     root.put("threshold", cal.threshold)
@@ -76,8 +73,7 @@ object ModelIO {
     root.put("calibration_routed", cal.nRouted)
     root.put("calibration_net_gain_ms", cal.netGainMs)
     root.put("calibration_ungated_gain_ms", cal.gainAllMs)
-    Files.write(Paths.get(dir, GateMetaFile),
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
+    Files.writeString(Paths.get(dir, GateMetaFile), Json.pretty(root))
     writeWeights(Paths.get(dir, GateWeightsFile), bm.net.paramGrads ++ bm.head.paramGrads)
   }
 
@@ -90,8 +86,7 @@ object ModelIO {
     val meta = Paths.get(dir, GateMetaFile)
     val weights = Paths.get(dir, GateWeightsFile)
     if (!Files.exists(meta) || !Files.exists(weights)) return None
-    val mapper = new ObjectMapper()
-    val root = mapper.readTree(Files.readAllBytes(meta)).asInstanceOf[ObjectNode]
+    val root = Json.readFile(meta)
     val version = root.get("format_version").asInt()
     require(version == FormatVersion,
       s"unsupported gate format version $version (expected $FormatVersion)")
@@ -105,29 +100,15 @@ object ModelIO {
   }
 
   def load(dir: String): (LeroModelPairWise, FeatureGenerator) = {
-    val mapper = new ObjectMapper()
-    val root = mapper.readTree(
-      Files.readAllBytes(Paths.get(dir, MetaFile))).asInstanceOf[ObjectNode]
+    val root = Json.readFile(Paths.get(dir, MetaFile))
     val version = root.get("format_version").asInt()
     require(version == FormatVersion,
       s"unsupported model format version $version (expected $FormatVersion)")
     val dim = root.get("input_feature_dim").asInt()
-    def strings(field: String): Vector[String] = {
-      val it = root.get(field).elements()
-      val buf = Vector.newBuilder[String]
-      while (it.hasNext) buf += it.next().asText()
-      buf.result()
-    }
-    def bounds(field: String): Map[String, Double] = {
-      val node = root.get(field)
-      val it = node.properties().iterator()
-      val buf = Map.newBuilder[String, Double]
-      while (it.hasNext) {
-        val e = it.next()
-        buf += e.getKey -> e.getValue.asDouble()
-      }
-      buf.result()
-    }
+    def strings(field: String): Vector[String] =
+      root.get(field).elements().asScala.map(_.asText()).toVector
+    def bounds(field: String): Map[String, Double] =
+      root.get(field).properties().asScala.map(e => e.getKey -> e.getValue.asDouble()).toMap
     val gen = FeatureGenerator.restore(
       Normalizer(bounds("normalizer_mins"), bounds("normalizer_maxs")),
       strings("input_relations"), strings("op_types"))

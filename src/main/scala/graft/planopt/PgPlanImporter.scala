@@ -2,7 +2,9 @@ package graft.planopt
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
+
+import graft.Json
 
 import graft.planopt.PlanFeatures.PlanNode
 
@@ -24,11 +26,9 @@ import graft.planopt.PlanFeatures.PlanNode
   */
 object PgPlanImporter {
 
-  private val mapper = new ObjectMapper()
-
   /** One EXPLAIN JSON candidate → (plan tree, execution time ms). */
   def parseCandidate(json: String): (PlanNode, Double) = {
-    val root0 = mapper.readTree(json)
+    val root0 = Json.read(json)
     val root = if (root0.isArray) root0.get(0) else root0
     val execMs = Option(root.get("Execution Time")).map(_.asDouble())
       .getOrElse(throw new IllegalArgumentException("no Execution Time in plan JSON"))

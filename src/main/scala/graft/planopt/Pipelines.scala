@@ -1,7 +1,10 @@
 package graft.planopt
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Json
 import graft.planopt.Candidates.Candidate
 import graft.planopt.PlanFeatures.{FeatureGenerator, PlanNode}
 
@@ -401,12 +404,10 @@ object Pipelines {
 
   /** lero_dict.json writer (`lero_test.py:99-112` layout). */
   def writeLeroDict(result: EvalResult, path: String): Unit = {
-    val entries = result.leroDict.map { case (k, v) => s"""  "$k": $v""" } ++
-      Seq(s"""  "sum": ${result.selectedTotalSec}""")
     val f = new java.io.File(path)
     Option(f.getParentFile).foreach(_.mkdirs())
-    java.nio.file.Files.writeString(f.toPath,
-      entries.mkString("{\n", ",\n", "\n}\n"))
+    java.nio.file.Files.writeString(f.toPath, Json.pretty(
+      ListMap.from(result.leroDict.toSeq :+ ("sum" -> result.selectedTotalSec))) + "\n")
   }
 
   /** Everything the stable pipeline produced — the result plus the

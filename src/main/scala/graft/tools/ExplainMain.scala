@@ -1,5 +1,13 @@
 package graft.tools
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.JsonNode
+
+import graft.Json
+
 /** Plan-audit dump + MECHANICAL checklist over the whole query surface
   * (r9 verdict #3).
   *
@@ -68,17 +76,12 @@ object ExplainMain {
                           // bounded top-K probe side
 
   /** Mechanically extracted plan properties; all counts from the
-    * FORMATTED explain's per-node detail blocks. */
+    * FORMATTED explain's per-node detail blocks. The fields, in this
+    * order, are a pin's JSON keys. */
   final case class PlanProps(cartesian: Int, bnlj: Int, bhj: Int, smj: Int,
                              shj: Int, exchanges: Int, partialAggs: Int,
                              finalAggs: Int, scans: Int, pushedScans: Int,
-                             fullWidthScans: Int) {
-    def toJson: String =
-      s"""{"cartesian":$cartesian,"bnlj":$bnlj,"bhj":$bhj,"smj":$smj,""" +
-        s""""shj":$shj,"exchanges":$exchanges,"partialAggs":$partialAggs,""" +
-        s""""finalAggs":$finalAggs,"scans":$scans,"pushedScans":$pushedScans,""" +
-        s""""fullWidthScans":$fullWidthScans}"""
-  }
+                             fullWidthScans: Int)
 
   /** Count top-level fields of a `struct<...>` simpleString — commas
     * inside nested struct/array/map generics must not split. */
@@ -155,23 +158,19 @@ object ExplainMain {
 
   private val PinPath = "tools/plan_expectations.json"
 
-  private def readPins(): Map[String, String] = {
-    val f = new java.io.File(PinPath)
-    if (!f.exists) Map.empty
-    else {
-      // one `"name": {...},` line per query — written by this tool,
-      // parsed by this tool; values compared as canonical JSON strings
-      val Line = """^\s*"([^"]+)":\s*(\{[^}]*\}),?\s*$""".r
-      scala.io.Source.fromFile(f).getLines().collect {
-        case Line(name, json) => name -> json
-      }.toMap
-    }
+  /** The committed pins: query name → its plan properties, parsed. */
+  private def readPins(): Map[String, JsonNode] = {
+    val f = Paths.get(PinPath)
+    if (!Files.exists(f)) Map.empty
+    else Json.readFile(f).properties().asScala.map(e => e.getKey -> e.getValue).toMap
   }
 
+  /** One `"name": {...}` line per query, so a re-pin with no drift is
+    * byte-identical and a re-pin diff is one line per changed query. */
   private def writePins(rows: Seq[(String, PlanProps)]): Unit = {
-    val body = rows.map { case (n, p) => s"""  "$n": ${p.toJson}""" }
+    val body = rows.map { case (n, p) => s"  ${Json.write(n)}: ${Json.write(p)}" }
       .mkString("{\n", ",\n", "\n}\n")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(PinPath), body)
+    Files.writeString(Paths.get(PinPath), body)
   }
 
   def main(args: Array[String]): Unit = {
@@ -239,9 +238,9 @@ object ExplainMain {
     val pins = readPins()
     if (!pin) rows.foreach { case (name, p) =>
       pins.get(name) match {
-        case Some(expected) if expected != p.toJson =>
+        case Some(expected) if expected != Json.mapper.valueToTree[JsonNode](p) =>
           violations += s"$name: plan-shape drift vs $PinPath\n" +
-            s"    pinned: $expected\n    actual: ${p.toJson}"
+            s"    pinned: ${Json.write(expected)}\n    actual: ${Json.write(p)}"
         case None =>
           violations += s"$name: no pinned expectation in $PinPath " +
             "(new query? run with --pin after reviewing its plan)"
@@ -265,7 +264,7 @@ object ExplainMain {
         s"| ${p.partialAggs}/${p.finalAggs} | ${p.cartesian} |\n"
     }
 
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.toString)
+    Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote $out (${rows.size} queries audited" +
       (if (pin) s"; pinned to $PinPath" else "") + ")")
     spark.stop()

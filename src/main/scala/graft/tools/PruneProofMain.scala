@@ -1,7 +1,10 @@
 package graft.tools
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.execution.FileSourceScanExec
 
+import graft.Json
 import graft.engine.GraftSession
 
 /** Partition-pruning PROOF at an arbitrary scale factor (r17 verdict
@@ -38,13 +41,12 @@ object PruneProofMain {
       scan.partitionFilters, scan.dataFilters)
     val total = scan.relation.location.listFiles(Nil, Nil)
     val rows = df.count()
-    val filters = scan.partitionFilters.mkString(" AND ")
-      .replaceAll("[\"\\\\\n\r\t]", " ")
-    println(s"""{"partitions_read":${read.length},""" +
-      s""""partitions_total":${total.length},""" +
-      s""""files_read":${read.map(_.files.length).sum},""" +
-      s""""files_total":${total.map(_.files.length).sum},""" +
-      s""""partition_filters":"$filters","rows":$rows,"sf":"$sfDir"}""")
+    println(Json.write(ListMap(
+      "partitions_read" -> read.length, "partitions_total" -> total.length,
+      "files_read" -> read.map(_.files.length).sum,
+      "files_total" -> total.map(_.files.length).sum,
+      "partition_filters" -> scan.partitionFilters.mkString(" AND "),
+      "rows" -> rows, "sf" -> sfDir)))
     spark.stop()
   }
 }

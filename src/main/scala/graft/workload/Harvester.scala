@@ -7,8 +7,9 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import scala.collection.immutable.ArraySeq
+import scala.collection.immutable.{ArraySeq, ListMap}
 
+import graft.Json
 import graft.engine.Tables
 
 /** Catalog-metadata harvester (SURVEY.md §2.2 M20–M23) — the Spark
@@ -207,52 +208,36 @@ object Harvester {
 
   // --- JSON artifact output (infos/ layout, pg.py:477-511) -----------
 
-  private def jStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  /** A harvested numeric bound as written: an integral value below
+    * 1e15 as a whole number, anything else as a double. */
+  private def bound(d: Double): Any =
+    if (d == d.floor && math.abs(d) < 1e15) d.toLong else d
 
-  private def jNum(d: Double): String =
-    if (d == d.floor && math.abs(d) < 1e15) d.toLong.toString else d.toString
-
-  private def rangeJson(r: ColRange): String = r match {
-    case NumRange(lo, hi, true) => s"[${lo.toLong}, ${hi.toLong}]"
-    case NumRange(lo, hi, false) => s"[${jNum(lo)}, ${jNum(hi)}]"
-    case TsRange(lo, hi) => s"[$lo, $hi]"
-    case StrValues(vs) => vs.map(jStr).mkString("[", ", ", "]")
+  private def rangeValue(r: ColRange): Seq[Any] = r match {
+    case NumRange(lo, hi, true) => Seq(lo.toLong, hi.toLong)
+    case NumRange(lo, hi, false) => Seq(bound(lo), bound(hi))
+    case TsRange(lo, hi) => Seq(lo, hi)
+    case StrValues(vs) => vs
   }
-
-  private def objJson(entries: Seq[(String, String)]): String =
-    entries.map { case (k, v) => s"${jStr(k)}: $v" }.mkString("{", ", ", "}")
 
   /** Write the infos/-layout JSON artifacts (alias_map, rev_alias_map,
     * columns, range_dict, filter_columns) for the testdata schema. */
   def writeInfos(spark: SparkSession, sfDir: String, outDir: String,
                  workload: Seq[String]): Unit = {
-    val dir = new java.io.File(outDir)
-    dir.mkdirs()
-    def write(name: String, content: String): Unit =
+    new java.io.File(outDir).mkdirs()
+    def write(name: String, value: Any): Unit =
       java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(outDir, name), content + "\n")
-    write("alias_map", objJson(relationalTables.map(t => t -> jStr(aliasMap(t)))))
-    write("rev_alias_map", objJson(
-      relationalTables.map(t => aliasMap(t) -> jStr(t))))
+        java.nio.file.Paths.get(outDir, name), Json.write(value) + "\n")
+    val aliases = relationalTables.map(aliasMap)
+    write("alias_map", ListMap.from(relationalTables.zip(aliases)))
+    write("rev_alias_map", ListMap.from(aliases.zip(relationalTables)))
     val cols = columns(spark, sfDir)
-    write("columns", objJson(relationalTables.map(t =>
-      aliasMap(t) -> cols(aliasMap(t)).map(jStr).mkString("[", ", ", "]"))))
+    write("columns", ListMap.from(aliases.map(a => a -> cols(a))))
     val rd = rangeDict(spark, sfDir)
-    write("range_dict", objJson(relationalTables.map { t =>
-      val a = aliasMap(t)
-      a -> objJson(rd(a).toSeq.sortBy(_._1).map { case (c, r) => c -> rangeJson(r) })
+    write("range_dict", ListMap.from(aliases.map { a =>
+      a -> ListMap.from(rd(a).toSeq.sortBy(_._1).map { case (c, r) => c -> rangeValue(r) })
     }))
     val fc = filterColumns(spark, workload)
-    write("filter_columns", objJson(relationalTables.flatMap { t =>
-      val a = aliasMap(t)
-      fc.get(a).map(s => a -> s.toSeq.sorted.map(jStr).mkString("[", ", ", "]"))
-    }))
+    write("filter_columns", ListMap.from(aliases.flatMap(a => fc.get(a).map(s => a -> s.toSeq.sorted))))
   }
 }

@@ -1,7 +1,10 @@
 package graft.workload
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.SparkSession
 
+import graft.Json
 import graft.engine.{GraftSession, Tables}
 
 /** Workload-scale parity artifact (r13 verdict #5): the reference
@@ -56,7 +59,7 @@ object PoolMain {
 
     val stats = PoolStats.compute(spark, pool, h)
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/pool_stats.json"), stats.toJson)
+      java.nio.file.Paths.get(s"$outDir/pool_stats.json"), Json.write(stats.toJson))
     println(s"wrote $outDir/pool_stats.json")
     println(f"joins TV=${stats.joinsTv}%.4f filters TV=${stats.filtersTv}%.4f " +
       s"accepted=${stats.accepted}/${stats.n} templates=${stats.nTemplates} " +
@@ -100,18 +103,18 @@ object PoolStats {
                          expectedFilters: Map[Int, Double],
                          joinsTv: Double, filtersTv: Double,
                          nTemplates: Int, accepted: Int, fullMatches: Int) {
-    def toJson: String = {
-      def hist(m: Map[Int, Int]) =
-        m.toSeq.sorted.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-      def dist(m: Map[Int, Double]) =
-        m.toSeq.sorted.map { case (k, v) => f""""$k":$v%.6f""" }.mkString("{", ",", "}")
-      s"""{"n":$n,"joins_hist":${hist(joinsHist)},""" +
-        s""""filters_hist":${hist(filtersHist)},""" +
-        s""""expected_joins_dist":${dist(expectedJoins)},""" +
-        s""""expected_filters_dist":${dist(expectedFilters)},""" +
-        f""""joins_tv":$joinsTv%.6f,"filters_tv":$filtersTv%.6f,""" +
-        s""""n_templates":$nTemplates,"accepted":$accepted,""" +
-        s""""full_matches":$fullMatches}"""
+    /** The `pool_stats.json` object, in key order; distributions and
+      * distances at 6 decimals. */
+    def toJson: ListMap[String, Any] = {
+      def byKey(m: Map[Int, Any]) =
+        ListMap.from(m.toSeq.sortBy(_._1).map { case (k, v) => k.toString -> v })
+      def dist(m: Map[Int, Double]) = byKey(m.map { case (k, p) => k -> Json.fixed(p, 6) })
+      ListMap("n" -> n, "joins_hist" -> byKey(joinsHist), "filters_hist" -> byKey(filtersHist),
+        "expected_joins_dist" -> dist(expectedJoins),
+        "expected_filters_dist" -> dist(expectedFilters),
+        "joins_tv" -> Json.fixed(joinsTv, 6), "filters_tv" -> Json.fixed(filtersTv, 6),
+        "n_templates" -> nTemplates, "accepted" -> accepted,
+        "full_matches" -> fullMatches)
     }
   }
 

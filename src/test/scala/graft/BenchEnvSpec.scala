@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the bench contention classifier (r14 verdict #6) against the
@@ -79,12 +81,14 @@ class BenchEnvSpec extends AnyFunSuite {
   }
 
   test("envJson carries the verdict, count, names and rule") {
-    val j = BenchEnv.envJson(contendedRun)
-    assert(j.contains("\"contention\":\"contended\""))
-    assert(j.contains("\"warm_regressions\":9"))
-    assert(j.contains("txt2_lang_id") && j.contains("dd7_incremental_dedup"))
-    assert(j.contains("\"rule\":"))
-    assert(j.contains("\"cold_regressions\":"))
+    val j = Json.read(Json.write(BenchEnv.envJson(contendedRun)))
+    assert(j.get("contention").asText == "contended")
+    assert(j.get("warm_regressions").asInt == 9)
+    val names = Seq("anomalous", "anomalous_cold")
+      .flatMap(k => j.get(k).elements().asScala.map(_.asText))
+    assert(names.contains("txt2_lang_id") && names.contains("dd7_incremental_dedup"))
+    assert(j.get("rule").isTextual)
+    assert(j.get("cold_regressions").isInt)
   }
 
   // ---- r15 calibration: the COLD-side rule (r15 verdict #1) ----

@@ -96,8 +96,8 @@ class CoresetPipelineSpec extends AnyFunSuite {
     assert(res.selectedTotalSec > 0 && res.defaultTotalSec > 0)
     val path = "/tmp/graft_results/lero_dict.json"
     Pipelines.writeLeroDict(res, path)
-    val txt = scala.io.Source.fromFile(path).mkString
-    assert(txt.contains("\"sum\":"))
+    val dict = Json.readFile(java.nio.file.Paths.get(path))
+    assert(dict.get("sum").asDouble == res.selectedTotalSec)
   }
 
   test("deployment loop retrains per batch") {

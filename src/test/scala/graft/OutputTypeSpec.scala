@@ -23,7 +23,7 @@ class OutputTypeSpec extends AnyFunSuite {
     dt match {
       case _: DecimalType => Seq(path)
       case s: StructType =>
-        s.fields.flatMap(f => decimalLeaves(f.dataType, s"$path.${f.name}"))
+        s.fields.toSeq.flatMap(f => decimalLeaves(f.dataType, s"$path.${f.name}"))
       case a: org.apache.spark.sql.types.ArrayType =>
         decimalLeaves(a.elementType, s"$path[]")
       case m: org.apache.spark.sql.types.MapType =>

@@ -46,7 +46,7 @@ class StreamingSpec extends AnyFunSuite {
       .select(xxhash64(col("term")).as("k"))
       .agg(expr(s"graft_cms(k, ${graft.pipeline.TextAnalysis.CmsDepth}, " +
         s"${graft.pipeline.TextAnalysis.CmsWidth})").as("cms"),
-        count(lit(1)).as("n_total")).head
+        count(lit(1)).as("n_total")).head()
     val (batchCms, batchN) = (batchRow.getSeq[Long](0), batchRow.getLong(1))
     // stream the same corpus one file per trigger: 4 micro-batches,
     // each updating the ONE sketch buffer in the state store
@@ -61,7 +61,7 @@ class StreamingSpec extends AnyFunSuite {
         .start()
       q.awaitTermination(120000)
       q.stop()
-      val got = spark.sql("SELECT * FROM cms_stream_test").head
+      val got = spark.sql("SELECT * FROM cms_stream_test").head()
       // element-wise-sum merge is associative+commutative, so ANY
       // micro-batch slicing must produce the bit-identical sketch
       assert(got.getLong(1) == batchN, "term count diverged")
